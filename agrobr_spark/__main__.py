@@ -117,10 +117,11 @@ def cmd_sla(args) -> int:
 
 
 def cmd_freshness(args) -> int:
+    from agrobr_spark.io import read_parquet
     from agrobr_spark.sla import freshness_report
 
     spark = _spark()
-    hist = spark.read.parquet(args.history)
+    hist = read_parquet(spark, args.history)
     for row in freshness_report(
         hist, source_col=args.source_col, date_col=args.date_col
     ).collect():
@@ -130,9 +131,10 @@ def cmd_freshness(args) -> int:
 
 def cmd_validate(args) -> int:
     from agrobr_spark.contracts import get_contract
+    from agrobr_spark.io import read_parquet
 
     contract = get_contract(args.contract)
-    df = _spark().read.parquet(args.path)
+    df = read_parquet(_spark(), args.path)
     missing = contract.missing_columns(df)
     if missing:
         print(json.dumps({"valid": False, "missing_columns": missing}))
@@ -159,6 +161,7 @@ def cmd_index(args) -> int:
     directories into a fresh generation, or answer a BM25 query from
     the bucket-pruned read — the retrieval-store counterpart of the
     store-facing `doctor`/`freshness` commands."""
+    from agrobr_spark.io import read_parquet
     from agrobr_spark.queries.pipeline_text import BM25_B, BM25_K1
     from agrobr_spark.store.posting import (
         bm25_topk_indexed,
@@ -174,7 +177,7 @@ def cmd_index(args) -> int:
         return 0
     if args.action in ("build", "update"):
         src = args.docs or f"{args.sf}/documents.parquet"
-        docs = spark.read.parquet(src).select("doc_id", "text")
+        docs = read_parquet(spark, src).select("doc_id", "text")
         if args.action == "build":
             build_posting_index(docs, args.path, n_buckets=args.buckets)
             print(f"built {args.path} (n_buckets={args.buckets})")

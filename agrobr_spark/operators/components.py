@@ -88,6 +88,8 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
+from agrobr_spark.io import checkpoint_parquet
+
 #: propagation rounds before switching to star contraction: covers
 #: the dense quasi-clique graphs (2-4 rounds incl. the confirming
 #: round) without ever paying a star round for them
@@ -184,8 +186,10 @@ def connected_components(
     Returns (id, componente): one row per distinct node appearing in
     ``edges``, where ``componente`` is the smallest node id reachable
     from ``id`` — the canonical cluster representative. The returned
-    frame is materialized (localCheckpoint) so it stays valid after
-    the scratch directory is cleaned up.
+    frame never reads the scratch directory (the distributed loop
+    returns a localCheckpoint, the driver finish a frame built from a
+    driver list), so it stays valid after the scratch directory is
+    cleaned up.
 
     ``shortcut`` enables the acceleration machinery: one
     pointer-jump per propagation round
@@ -261,7 +265,7 @@ def connected_components(
     if shortcut and driver_max_sym_edges and (
         sym.count() <= driver_max_sym_edges
     ):
-        return _driver_components(sym).localCheckpoint(eager=True)
+        return _driver_components(sym)
     labels = sym.select(F.col("a").alias("id")).distinct().withColumn(
         "componente", F.col("id")
     )
@@ -345,9 +349,8 @@ def connected_components(
         """Write ``df`` with the given Observation metrics riding the
         write job; return (read-back frame, metric row)."""
         obs = Observation()
-        df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
-        got = obs.get
-        return spark.read.parquet(path), got
+        back = checkpoint_parquet(df.observe(obs, *metrics), path)
+        return back, obs.get
 
     changed_metric = [
         F.sum((F.col("componente") != F.col("_old")).cast("long")).alias(

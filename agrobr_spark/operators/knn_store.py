@@ -85,6 +85,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from agrobr_spark.io import checkpoint_parquet, read_parquet
 from agrobr_spark.operators.allpairs import _dot
 from agrobr_spark.store.table import ParquetStore
 
@@ -281,11 +282,9 @@ def knn_graph_frozen_edges(
     # member and probe legs both consume the ranked assignment — pin
     # it so the scored crossJoin+window runs once (the store build's
     # checkpoint, applied to the one-shot twin)
-    ranked = (
-        _assign(_base(emb, id_col, vec_col), cent, n_probe)
-        .drop("_cv", "_cos")
-        .localCheckpoint(eager=True)
-    )
+    ranked = _assign(
+        _base(emb, id_col, vec_col), cent, n_probe
+    ).localCheckpoint(eager=True)
     return _topk_edges(
         _candidates(_probe_rows(ranked), _member_rows(ranked)),
         k,
@@ -335,8 +334,7 @@ def build_knn_graph_index(
             .limit(int(n_centroids))
             .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
         )
-    centroids.write.mode("overwrite").parquet(f"{store_dir}/centroids")
-    cent = spark.read.parquet(f"{store_dir}/centroids")
+    cent = checkpoint_parquet(centroids, f"{store_dir}/centroids")
     # materialize the assignment ONCE: members, probes and the
     # candidate join all consume the same ranked frame, and without
     # the checkpoint each overwrite re-ran the full crossJoin+window
@@ -471,7 +469,7 @@ def update_knn_graph_frame(
                 ]
             ),
         )
-    cent = spark.read.parquet(f"{store_dir}/centroids")
+    cent = read_parquet(spark, f"{store_dir}/centroids")
     # the legs below read the very stores the MERGEs rewrite — sever
     # ONCE at the assignment (r13: members_new and probes_new were
     # checkpointed separately, running the assignment crossJoin twice
@@ -875,7 +873,7 @@ def _replay_pending_label_delta(
     if not path_exists(spark, pending):
         return
     if path_exists(spark, f"{pending}/_SUCCESS"):
-        delta = spark.read.parquet(pending)
+        delta = read_parquet(spark, pending)
         st = _delta_stats(delta, nb)
         if st["n"]:
             _apply_label_delta(labels, byc, delta, nb, st)
@@ -1065,8 +1063,7 @@ def update_graph_labels_frame(
     # buckets — comes out of ONE aggregate over the journaled frame
     # (r12 paid five jobs for the same facts; VERDICT r12 next #3).
     pending = _pending_delta_dir(store_dir)
-    delta_plan.write.mode("overwrite").parquet(pending)
-    delta = spark.read.parquet(pending)
+    delta = checkpoint_parquet(delta_plan, pending)
     st = _delta_stats(delta, nb)
     if probe is not None:
         probe["touched_components"] = list(touched)

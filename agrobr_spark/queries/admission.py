@@ -54,7 +54,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from agrobr_spark.io import load
+from agrobr_spark.io import checkpoint_parquet, load, read_parquet
 from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.operators.components import connected_components
 from agrobr_spark.queries import register
@@ -223,8 +223,7 @@ def build_admission_index(
     sh = _doc_shingles(docs)
 
     def _embed_branch() -> DataFrame:
-        cent.write.mode("overwrite").parquet(f"{store_dir}/centroids")
-        cread = spark.read.parquet(f"{store_dir}/centroids")
+        cread = checkpoint_parquet(cent, f"{store_dir}/centroids")
         # three consumers (both pair-join sides, the survivor join)
         # would each re-run the scored assignment — pin it once
         return assign_to_centroids(base, cread).localCheckpoint(
@@ -237,8 +236,7 @@ def build_admission_index(
             .select("shingle")
             .distinct()
         )
-        bench.write.mode("overwrite").parquet(f"{store_dir}/bench_shingles")
-        return spark.read.parquet(f"{store_dir}/bench_shingles")
+        return checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -315,8 +313,8 @@ def admit_frame(
     stream for free."""
     store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
     surv = store.read()
-    cent = spark.read.parquet(f"{store_dir}/centroids")
-    bench = spark.read.parquet(f"{store_dir}/bench_shingles")
+    cent = read_parquet(spark, f"{store_dir}/centroids")
+    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
 
     contaminado = (
         _doc_shingles(docs_b)
@@ -644,8 +642,7 @@ def build_text_admission_index(
 
     sh = _doc_shingles(docs)
     bench = sh.filter(F.col("doc_id") < _BENCH_DOCS).select("shingle").distinct()
-    bench.write.mode("overwrite").parquet(f"{store_dir}/bench_shingles")
-    bench = spark.read.parquet(f"{store_dir}/bench_shingles")
+    bench = checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
     contaminado = (
         sh.filter(F.col("doc_id") >= _BENCH_DOCS)
         .join(F.broadcast(bench), "shingle")
@@ -671,7 +668,7 @@ def admit_text_frame(
     then MERGE the accepted docs' signatures back."""
     store = ParquetStore(spark, f"{store_dir}/text_signatures", ("doc_id",))
     surv_sigs = store.read()
-    bench = spark.read.parquet(f"{store_dir}/bench_shingles")
+    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
 
     contaminado = (
         _doc_shingles(docs_b)
@@ -992,8 +989,7 @@ def build_lsh_admission_index(
 
     sh = _doc_shingles(docs)
     bench = sh.filter(F.col("doc_id") < _BENCH_DOCS).select("shingle").distinct()
-    bench.write.mode("overwrite").parquet(f"{store_dir}/bench_shingles")
-    bench = spark.read.parquet(f"{store_dir}/bench_shingles")
+    bench = checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
     contaminado = (
         sh.filter(F.col("doc_id") >= _BENCH_DOCS)
         .join(F.broadcast(bench), "shingle")
@@ -1073,7 +1069,7 @@ def admit_lsh_frame(
 
     store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
     surv = store.read()
-    bench = spark.read.parquet(f"{store_dir}/bench_shingles")
+    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
     meta = read_text(spark, f"{store_dir}/lsh_meta.json")
     if meta is None:
         raise ValueError(
@@ -1367,8 +1363,7 @@ def build_semdedup_index(
         .limit(k)
         .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
     )
-    cent.write.mode("overwrite").parquet(f"{store_dir}/centroids")
-    cent = spark.read.parquet(f"{store_dir}/centroids")
+    cent = checkpoint_parquet(cent, f"{store_dir}/centroids")
 
     # three consumers (both victim-join sides, the keeper anti-join)
     # — pin the scored assignment once
@@ -1431,7 +1426,7 @@ def admit_semdedup_frame(
     and the MERGE is PK-idempotent."""
     store = ParquetStore(spark, f"{store_dir}/sem_seen", ("vec_id",))
     seen = store.read().withColumn("_n", F.sqrt(_dot("embedding", "embedding")))
-    cent = spark.read.parquet(f"{store_dir}/centroids")
+    cent = read_parquet(spark, f"{store_dir}/centroids")
 
     # five consumers (corpus/prev/intra veto joins ×2 sides, the
     # decision projection) — pin the batch assignment once

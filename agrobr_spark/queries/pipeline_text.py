@@ -14,7 +14,7 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from agrobr_spark.io import load
+from agrobr_spark.io import load, read_parquet
 from agrobr_spark.queries import register
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -3229,7 +3229,7 @@ def text_bm25_rm3_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.store.posting import query_postings
 
     path = _bm25_index_dir(spark, sf_dir)
-    stats = spark.read.parquet(f"{path}/stats")
+    stats = read_parquet(spark, f"{path}/stats")
     idf = F.log(
         1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )

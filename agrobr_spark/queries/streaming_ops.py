@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from agrobr_spark.io import read_parquet, write_parquet
 from agrobr_spark.queries import register
 from agrobr_spark.streaming.windows import (
     drain_or_raise,
@@ -88,7 +89,7 @@ def _stage_id_ranged_chunks(
         shutil.rmtree(tmp)
         os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
         if i == 0 and capture_first:
-            first = spark.read.parquet(dst).localCheckpoint(eager=True)
+            first = read_parquet(spark, dst).localCheckpoint(eager=True)
     return first
 
 
@@ -1519,9 +1520,10 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # id-ranged files, one per micro-batch (the family convention)
         _stage_id_ranged_chunks(docs, ingest, "doc_id")
 
-        spark.createDataFrame([], "termo string, cnt bigint").write.mode(
-            "overwrite"
-        ).parquet(f"{counters}_init")
+        write_parquet(
+            spark.createDataFrame([], "termo string, cnt bigint"),
+            f"{counters}_init",
+        )
         _commit_state(
             manifest, {"applied_batch_ids": [], "current": "counters_init"}
         )
@@ -1539,7 +1541,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("termo")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("bc"))
             )
-            prev = spark.read.parquet(f"{store_dir}/{man['current']}")
+            prev = read_parquet(spark, f"{store_dir}/{man['current']}")
             merged = (
                 prev.join(bc, "termo", "full_outer")
                 .select(
@@ -1568,9 +1570,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             # versioned state dir + one atomic commit: state publish
             # and replay-guard flip happen together (see _commit_state)
             nxt = f"counters_s{int(batch_id)}"
-            merged.localCheckpoint(eager=True).write.mode(
-                "overwrite"
-            ).parquet(f"{store_dir}/{nxt}")
+            write_parquet(
+                merged.localCheckpoint(eager=True), f"{store_dir}/{nxt}"
+            )
             man["applied_batch_ids"].append(int(batch_id))
             man["current"] = nxt
             _commit_state(manifest, man)
@@ -1592,7 +1594,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur = _json.load(fh)["current"]
         cands = [
             r["termo"]
-            for r in spark.read.parquet(f"{store_dir}/{cur}").collect()
+            for r in read_parquet(spark, f"{store_dir}/{cur}").collect()
         ]
         toks = docs.select(
             F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
@@ -1771,15 +1773,14 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             pontos = db.join(F.broadcast(modelo), "balde", "left").select(
                 "doc_id", "n", contrib.alias("p")
             )
-            (
-                pontos.groupBy("doc_id")
-                .agg(
+            write_parquet(
+                pontos.groupBy("doc_id").agg(
                     F.sum("n").cast("bigint").alias("n_tokens"),
                     F.sum("p").cast("double").alias("pontuacao_dsir"),
                     (F.sum("p").cast("double") > 0).alias("selecionado"),
-                )
-                .write.mode("append")
-                .parquet(scores_dir)
+                ),
+                scores_dir,
+                mode="append",
             )
 
         stream = (
@@ -1793,7 +1794,7 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         drain_or_raise(q, "stream_dsir_weights", 180)
-        out = spark.read.parquet(scores_dir).dropDuplicates(["doc_id"])
+        out = read_parquet(spark, scores_dir).dropDuplicates(["doc_id"])
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(ingest, ignore_errors=True)
@@ -2055,9 +2056,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             " soma_verificacao decimal(38,0), min_doc bigint,"
             " max_doc bigint"
         )
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            f"{table}_init"
-        )
+        write_parquet(spark.createDataFrame([], schema), f"{table}_init")
         _commit_state(
             manifest, {"applied_batch_ids": [], "current": "manifest_init"}
         )
@@ -2087,7 +2086,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("doc_id").cast("bigint").alias("b_max"),
                 )
             )
-            prev = spark.read.parquet(f"{state}/{man['current']}")
+            prev = read_parquet(spark, f"{state}/{man['current']}")
             merged = (
                 prev.join(parcial, "shard", "full_outer")
                 .select(
@@ -2122,7 +2121,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # versioned state dir + one atomic commit (see _commit_state)
             nxt = f"manifest_s{int(batch_id)}"
-            merged.write.mode("overwrite").parquet(f"{state}/{nxt}")
+            write_parquet(merged, f"{state}/{nxt}")
             man["applied_batch_ids"].append(int(batch_id))
             man["current"] = nxt
             _commit_state(manifest, man)
@@ -2147,7 +2146,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(manifest, encoding="utf-8") as fh:
             cur = _json.load(fh)["current"]
         return (
-            spark.read.parquet(f"{state}/{cur}")
+            read_parquet(spark, f"{state}/{cur}")
             .withColumn(
                 "soma_verificacao",
                 F.col("soma_verificacao").cast("string"),

@@ -19,6 +19,7 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from agrobr_spark.io import read_parquet
 from agrobr_spark.store.fs import read_text, write_text
 
 PROVENANCE_VERSION = "1.0"
@@ -90,7 +91,7 @@ def read_verified(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     meta = json.loads(raw)
     fmt = meta.get("format", "parquet")
     if fmt == "parquet":
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     elif fmt == "csv":
         df = spark.read.option("header", "true").csv(path)
     else:
@@ -344,7 +345,7 @@ def read_training_shards(
         raise FileNotFoundError(_meta_path(path, "_manifest.json"))
     manifest = json.loads(raw)
     fmt = manifest.get("format", "parquet")
-    df = spark.read.parquet(path) if fmt == "parquet" else spark.read.json(path)
+    df = read_parquet(spark, path) if fmt == "parquet" else spark.read.json(path)
     if shards is not None:
         df = df.filter(F.col("shard").isin([int(s) for s in shards]))
     cols = manifest["columns"]

@@ -19,6 +19,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from agrobr_spark.io import read_parquet, write_parquet
+
 HISTORY_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType(), False),
@@ -42,7 +44,7 @@ class HistoryStore:
 
         if not (self._exists or path_exists(self.spark, self.path)):
             return self.spark.createDataFrame([], HISTORY_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
     def append(self, batch: DataFrame) -> int:
         """Insert-only MERGE: rows whose unique key already exists are
@@ -55,7 +57,7 @@ class HistoryStore:
         fresh = batch.join(existing, on=list(UNIQUE_KEY), how="left_anti")
         n = fresh.count()
         if n:
-            fresh.write.mode("append").parquet(self.path)
+            write_parquet(fresh, self.path, mode="append")
             self._exists = True
         return n
 

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import SparkSession
 
+from agrobr_spark.io import checkpoint_parquet, read_parquet, write_parquet
 from agrobr_spark.store.policies import POLICIES, next_expiry
 
 CACHE_SCHEMA = T.StructType(
@@ -52,7 +53,7 @@ class KVCache:
 
         if not path_exists(self.spark, self.path):
             return self.spark.createDataFrame([], CACHE_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
     def set(
         self,
@@ -75,14 +76,9 @@ class KVCache:
         ]
         # last-writer-wins on key: drop the old row, append the new one
         rest = self._read().filter(F.col("key") != key)
-        rest.unionByName(self.spark.createDataFrame(row, CACHE_SCHEMA)).write.mode(
-            "overwrite"
-        ).parquet(self.path + "._new")
-        final = self.spark.read.parquet(self.path + "._new")
-        final.write.mode("overwrite").parquet(self.path)
-        from agrobr_spark.store.fs import delete_path
-
-        delete_path(self.spark, self.path + "._new")
+        self._replace(
+            rest.unionByName(self.spark.createDataFrame(row, CACHE_SCHEMA))
+        )
 
     def get(
         self,
@@ -107,10 +103,14 @@ class KVCache:
         return bytes(rows[0]["payload"]) if rows else None
 
     def invalidate(self, key: str) -> None:
-        rest = self._read().filter(F.col("key") != key)
-        rest.write.mode("overwrite").parquet(self.path + "._new")
-        final = self.spark.read.parquet(self.path + "._new")
-        final.write.mode("overwrite").parquet(self.path)
+        self._replace(self._read().filter(F.col("key") != key))
+
+    def _replace(self, df) -> None:
+        """Overwrite the table with ``df``, a plan that reads it: stage
+        to a sibling path first so the overwrite never deletes the
+        files it is reading."""
         from agrobr_spark.store.fs import delete_path
 
+        staged = checkpoint_parquet(df, self.path + "._new")
+        write_parquet(staged, self.path)
         delete_path(self.spark, self.path + "._new")

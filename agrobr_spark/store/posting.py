@@ -71,6 +71,8 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from agrobr_spark.io import read_parquet, write_parquet
+
 TOKENIZER_VERSION = 1
 DEFAULT_BUCKETS = 64
 
@@ -140,7 +142,7 @@ def _written_dir_stats(spark: SparkSession, postings_dir: str,
     if not has_rows:
         return {"n": 0, "sum_dl": None}
     row = (
-        spark.read.parquet(postings_dir)
+        read_parquet(spark, postings_dir)
         .groupBy(id_col)
         .agg(F.first("dl").alias("dl"))
         .groupBy()
@@ -178,7 +180,7 @@ def _write_stats_row(
         )
         cols.append(F.lit(avgdl).cast("double").alias("avgdl"))
     df = spark.range(1).select(*cols)
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+    write_parquet(df.coalesce(1), path)
 
 
 def build_posting_index(
@@ -198,13 +200,18 @@ def build_posting_index(
     data — the driver-side artifacts are two scalars and the manifest
     dict."""
     obs = Observation()
+    # precondition of stats_obs: ``docs`` holds ONE row per ``id_col``.
+    # The observation counts input rows, so a duplicated id would count
+    # twice in n and sum_dl while the tf aggregate folds it into one
+    # posting doc. Catalog corpora are keyed on doc_id; the listing
+    # fallback (_written_dir_stats) derives the stats per distinct id
+    # from the written postings, so it matches them either way.
     postings = tokenize_postings(docs, id_col, text_col, stats_obs=obs)
     bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
-    (
-        postings.withColumn("bucket", bucket.cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
+    write_parquet(
+        postings.withColumn("bucket", bucket.cast("int")),
+        f"{path}/postings",
+        ("bucket",),
     )
     got = _obs_metrics(obs) or _written_dir_stats(
         docs.sparkSession, f"{path}/postings", id_col
@@ -275,6 +282,8 @@ def update_posting_index(
     bid = int(batch_id) if batch_id is not None else _next_local_batch(man)
     nb = int(man["n_buckets"])
     obs = Observation()
+    # same one-row-per-id precondition as build_posting_index (the
+    # docstring's contract: ids are new AND unique within the batch)
     postings = tokenize_postings(docs_new, id_col, text_col, stats_obs=obs)
     bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(nb))
     bdir = _batch_dir(path, bid)
@@ -286,11 +295,10 @@ def update_posting_index(
     # (n == 0 — committing a rows-free directory would brick every
     # later read, a replayed empty epoch records only its batch_id
     # guard) and the stats sidecar both come from the write job itself.
-    (
-        postings.withColumn("bucket", bucket.cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{bdir}/postings")
+    write_parquet(
+        postings.withColumn("bucket", bucket.cast("int")),
+        f"{bdir}/postings",
+        ("bucket",),
     )
     spark = docs_new.sparkSession
     got = _obs_metrics(obs) or _written_dir_stats(
@@ -478,10 +486,10 @@ def _postings_frame(
     pruning applies per leg — a query still touches only its terms'
     buckets in every generation."""
     man = man or read_manifest(path)
-    df = spark.read.parquet(f"{path}/{man['postings_dir']}")
+    df = read_parquet(spark, f"{path}/{man['postings_dir']}")
     for bid in man["active_batches"]:
         df = df.unionByName(
-            spark.read.parquet(f"{_batch_dir(path, int(bid))}/postings")
+            read_parquet(spark, f"{_batch_dir(path, int(bid))}/postings")
         )
     return df
 
@@ -494,12 +502,12 @@ def read_stats(
     batch's delta — one aggregation over |active_batches| + 1 rows,
     never a corpus read."""
     man = man or read_manifest(path)
-    df = spark.read.parquet(f"{path}/{man['stats_dir']}").select(
+    df = read_parquet(spark, f"{path}/{man['stats_dir']}").select(
         "n", "sum_dl"
     )
     for bid in man["active_batches"]:
         df = df.unionByName(
-            spark.read.parquet(f"{_batch_dir(path, int(bid))}/stats")
+            read_parquet(spark, f"{_batch_dir(path, int(bid))}/stats")
         )
     return df.groupBy().agg(
         F.sum("n").cast("bigint").alias("n"),
@@ -579,20 +587,19 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
         delete_path(spark, f"{path}/{d}")
     ver = int(man["version"]) + 1
     new_post = f"postings_v{ver}"
-    (
-        _postings_frame(spark, path, man)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/{new_post}")
+    write_parquet(
+        _postings_frame(spark, path, man).repartition("bucket"),
+        f"{path}/{new_post}",
+        ("bucket",),
     )
     old_dirs = [man["postings_dir"]]
     has_stats = path_exists(spark, f"{path}/{man['stats_dir']}")
     if has_stats:
         new_stats = f"stats_v{ver}"
-        read_stats(spark, path, man).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/{new_stats}")
+        write_parquet(
+            read_stats(spark, path, man).coalesce(1),
+            f"{path}/{new_stats}",
+        )
         old_dirs.append(man["stats_dir"])
     # RE-READ the manifest before committing: an ingest epoch may have
     # committed while the rewrite ran, and building the new manifest
@@ -769,11 +776,10 @@ def build_positional_index(
     manifest."""
     rows = tokenize_positional(docs, id_col, text_col)
     bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
-    (
-        rows.withColumn("bucket", bucket.cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
+    write_parquet(
+        rows.withColumn("bucket", bucket.cast("int")),
+        f"{path}/postings",
+        ("bucket",),
     )
     _write_manifest(path, {
         "n_buckets": int(n_buckets),
@@ -819,11 +825,10 @@ def update_positional_index(
     rows = tokenize_positional(docs_new, id_col, text_col, count_obs=obs)
     bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(nb))
     bdir = _batch_dir(path, bid)
-    (
-        rows.withColumn("bucket", bucket.cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{bdir}/postings")
+    write_parquet(
+        rows.withColumn("bucket", bucket.cast("int")),
+        f"{bdir}/postings",
+        ("bucket",),
     )
     got = _obs_metrics(obs)
     if got is None:

@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from agrobr_spark.io import read_parquet, write_parquet
+
 _MAX_PARTITIONS_PER_MERGE = 10_000
 
 
@@ -83,19 +85,19 @@ class ParquetStore:
         files, so this does not mask corruption — a corrupt-but-
         present file still fails loudly."""
         self._recover_staged_swap()
-        return self.spark.read.option(
-            "ignoreMissingFiles", "true"
-        ).parquet(self.path)
+        return read_parquet(
+            self.spark, self.path, ignoreMissingFiles="true"
+        )
 
     def overwrite(self, df: DataFrame) -> None:
         # resolve any crashed rewrite's stage FIRST: an uncleared
         # committed stage left pending here would be rolled forward by
         # a later read, clobbering this overwrite
         self._recover_staged_swap(clean_torn=True)
-        w = df.write.mode("overwrite")
-        if self.partition_col:
-            w = w.partitionBy(self.partition_col)
-        w.parquet(self.path)
+        write_parquet(df, self.path, self._partition_by())
+
+    def _partition_by(self) -> tuple:
+        return (self.partition_col,) if self.partition_col else ()
 
     def _staged_dir(self) -> str:
         return self.path.rstrip("/") + "._staged"
@@ -224,13 +226,12 @@ class ParquetStore:
         AFTER the stage is durably complete."""
         self._recover_staged_swap(clean_torn=True)
         tmp = self._staged_dir()
-        w = df.write.mode("overwrite")
-        if self.partition_col:
-            w = w.partitionBy(self.partition_col)
-        w.parquet(tmp)
+        write_parquet(df, tmp, self._partition_by())
         # commit point: tmp/_SUCCESS exists from here on — this swap
         # (or any racing reader's roll-forward; the lock serializes
-        # them and each re-checks inside it) finishes the rewrite
+        # them and each re-checks inside it) finishes the rewrite.
+        # The rename keeps the stage's footer-schema pin (io.py keys
+        # pins by what a directory holds, not by its name)
         self._swap_committed_stage()
 
     def _merged(self, target: DataFrame, staging: DataFrame) -> DataFrame:
@@ -333,7 +334,7 @@ class ParquetStore:
                 emptied = [
                     p for p in set(extra_partitions) - present if p in parts
                 ]
-            (
+            write_parquet(
                 # one shuffle on the partition column so each
                 # rewritten partition gets ONE data file instead of
                 # one per task holding its rows: fewer files to
@@ -348,11 +349,10 @@ class ParquetStore:
                 # of INDEPENDENT stores racy — one thread's restore
                 # to "static" could flip another thread's in-flight
                 # write into a whole-table overwrite
-                merged.repartition(self.partition_col)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(self.partition_col)
-                .parquet(self.path)
+                merged.repartition(self.partition_col),
+                self.path,
+                self._partition_by(),
+                partitionOverwriteMode="dynamic",
             )
             if emptied:
                 from agrobr_spark.store.fs import delete_path

@@ -86,23 +86,21 @@ def read_events_stream(
     the batch loader (io._normalize_events_ts), so streaming results
     hash-compare against the same DuckDB oracles.
     """
-    from agrobr_spark.io import _normalize_events_ts
+    from agrobr_spark.io import (
+        _normalize_events_ts,
+        nanos_as_long,
+        read_parquet,
+    )
 
     # With nanosAsLong set, the footer peek yields exactly the type the
     # stream schema must declare: bigint (nanos), timestamp_ntz (tz-less
-    # micros), or timestamp. Scoped save/restore like io.load so the
-    # legacy flag never leaks into later batch reads in the session.
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
+    # micros), or timestamp. Scoped like io.load so the legacy flag
+    # never leaks into later batch reads in the session, and pinned
+    # like every parquet read: a warm peek submits no job.
+    with nanos_as_long(spark):
         raw_kind = dict(
-            spark.read.parquet(f"{sf_dir}/events.parquet").dtypes
+            read_parquet(spark, f"{sf_dir}/events.parquet").dtypes
         ).get("ts")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     ts_type: T.DataType = {
         "bigint": T.LongType(),
         "timestamp_ntz": T.TimestampNTZType(),

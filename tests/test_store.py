@@ -886,6 +886,46 @@ def test_posting_index_empty_epoch_is_guarded_noop(spark, tmp_path):
     assert read_stats(spark, path).collect()[0]["n"] == 2
 
 
+def test_posting_stats_fallback_matches_postings_with_duplicate_doc_id(
+    spark, tmp_path, monkeypatch
+):
+    """The stats Observation counts INPUT rows, so it is exact only
+    for one row per doc_id (the precondition stated at its call
+    sites). The listing fallback, taken when the observation does not
+    fire, derives (n, sum_dl) per distinct doc_id from the written
+    postings: with a duplicated doc_id it still equals them, on build
+    and on update."""
+    import agrobr_spark.store.posting as P
+
+    monkeypatch.setattr(P, "_obs_metrics", lambda obs: None)
+    schema = "doc_id bigint, text string"
+
+    def assert_stats_match_postings(n, sum_dl):
+        written = (
+            P._postings_frame(spark, path).select("doc_id", "dl").distinct()
+        )
+        dls = [r["dl"] for r in written.collect()]
+        st = P.read_stats(spark, path).collect()[0]
+        assert (st["n"], st["sum_dl"]) == (len(dls), sum(dls)) == (n, sum_dl)
+
+    path = str(tmp_path / "idx")
+    P.build_posting_index(
+        spark.createDataFrame(
+            [(1, "alpha beta"), (1, "alpha beta"), (2, "gamma delta eps")],
+            schema,
+        ),
+        path,
+        n_buckets=4,
+    )
+    assert_stats_match_postings(2, 5)
+    P.update_posting_index(
+        spark.createDataFrame([(7, "zeta"), (7, "zeta")], schema),
+        path,
+        batch_id=0,
+    )
+    assert_stats_match_postings(3, 6)
+
+
 def test_compaction_preserves_epoch_committed_during_rewrite(
     spark, tmp_path, monkeypatch
 ):
