@@ -111,11 +111,12 @@ STAR_AFTER = 4
 #: ID-WIDTH ASSUMPTION (r13 VERDICT What's wrong #3): the default is
 #: sized for NUMERIC ids — ~16 B/row framed through Arrow, so 2M
 #: symmetric rows ≈ 32 MB on the driver, the session
-#: broadcast-threshold order. The gate is byte-aware for wider ids:
-#: non-numeric id types (strings, binary) divide the effective
-#: row ceiling by ``_WIDE_ID_DIVISOR`` rather than trusting the row
-#: count alone, so a misconfigured override on a string-keyed graph
-#: cannot quietly collect GBs to the driver. Raising the env var
+#: broadcast-threshold order. The gate does NOT measure bytes: for
+#: non-numeric id types (strings, binary) it divides the effective
+#: row ceiling by ``_WIDE_ID_DIVISOR``, a fixed heuristic row-ceiling
+#: divisor, rather than trusting the row count alone, so a
+#: misconfigured override on a string-keyed graph cannot quietly
+#: collect GBs to the driver. Raising the env var
 #: states "my driver has the memory for ~16 B × this many rows".
 DRIVER_MAX_SYM_EDGES = int(
     os.environ.get("AGROBR_CC_DRIVER_MAX_SYM_EDGES", 2_000_000)
@@ -254,9 +255,9 @@ def connected_components(
     # equality tests compare against.
     if driver_max_sym_edges is None:
         driver_max_sym_edges = DRIVER_MAX_SYM_EDGES
-    # byte-aware gate: the ceiling is sized for ~16 B/row numeric ids
-    # (module constant docstring); non-numeric id types get a divided
-    # row ceiling so a wide-id graph can't blow the driver at the
+    # the ceiling is sized for ~16 B/row numeric ids (module constant
+    # docstring); non-numeric id types get the heuristic row-ceiling
+    # divisor so a wide-id graph can't blow the driver at the
     # boundary (r13 VERDICT What's wrong #3)
     from pyspark.sql import types as T
 

@@ -360,6 +360,15 @@ def build_knn_graph_index(
             f"{stats['mn']}): the store's bucket layout and the "
             "componente=min(vec_id) labeling both assume it"
         )
+    # zero assigned vectors from a non-empty corpus means no centroid
+    # took any (e.g. an empty centroid frame): n_corpus=0 would
+    # silently collapse the bucket widths. The emptiness probe is one
+    # job, paid only on this path.
+    if n_corpus == 0 and not emb_corpus.isEmpty():
+        raise ValueError(
+            "knn_store assigned no corpus vector to a centroid (empty "
+            "centroid frame?): bucket widths would collapse to n_corpus=0"
+        )
     members, probes, edges = _stores(spark, store_dir)
     nb = (
         int(edge_buckets)
@@ -373,11 +382,10 @@ def build_knn_graph_index(
     # the three tables are independent projections of the checkpointed
     # assignment — overlap the two trivial writes with the heavy
     # candidate-join/topk write (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    writes = [
+    run_concurrently(
+        spark,
         lambda: members.overwrite(_member_rows(ranked, ncb)),
         lambda: probes.overwrite(_probe_rows(ranked, ncb)),
         lambda: edges.overwrite(
@@ -389,14 +397,7 @@ def build_knn_graph_index(
                 nb,
             )
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(thread_target(spark, w))
-            for w in writes
-        ]
-        for f in futs:
-            f.result()
+    )
     from agrobr_spark.store.fs import write_text
 
     write_text(spark, f"{store_dir}/meta.json", json.dumps(
@@ -572,11 +573,10 @@ def update_knn_graph_frame(
     # thread pool so the later merges' tasks back-fill the earlier
     # ones' commit tails (guide §2.6; merge_upsert's dynamic
     # overwrite is a per-writer option, so no shared session state)
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    jobs = [
+    run_concurrently(
+        spark,
         lambda: edges.merge_upsert(
             new_edges,
             staged_count=int(estats["n"]),
@@ -592,14 +592,7 @@ def update_knn_graph_frame(
             staged_count=int(bstats["n_probes"] or 0),
             staging_partitions=sorted({c % ncb for c in probe_cids}),
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(thread_target(spark, j))
-            for j in jobs
-        ]
-        for f in futs:
-            f.result()
+    )
     return new_edges
 
 
@@ -763,25 +756,17 @@ def build_graph_labels(
     # the two layouts are independent projections of the checkpointed
     # labels frame — overlap their overwrites (guide §2.6, the same
     # pattern as the index build's three stores)
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    writes = [
+    run_concurrently(
+        spark,
         lambda: _labels_store(spark, store_dir).overwrite(
             _with_balde(labels, nb)
         ),
         lambda: _comp_labels_store(spark, store_dir).overwrite(
             _with_cbalde(labels, nb)
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(thread_target(spark, w))
-            for w in writes
-        ]
-        for f in futs:
-            f.result()
+    )
     return labels
 
 
@@ -825,12 +810,10 @@ def _apply_label_delta(
     durable journal, and a crash leaving any subset applied is
     repaired identically whether the merges ran in sequence or
     overlapped."""
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    spark = delta.sparkSession
-    jobs = [
+    run_concurrently(
+        delta.sparkSession,
         lambda: labels.merge_upsert(
             _with_balde(delta.drop("_old"), nb),
             staged_count=st["n"],
@@ -842,14 +825,7 @@ def _apply_label_delta(
             staged_count=st["n"],
             staging_partitions=list(st["cbaldes"]),
         ),
-    ]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(thread_target(spark, j))
-            for j in jobs
-        ]
-        for f in futs:
-            f.result()
+    )
 
 
 def _replay_pending_label_delta(

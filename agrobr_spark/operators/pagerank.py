@@ -80,7 +80,12 @@ def pagerank_mass(
     calls this loop once per micro-batch. (The REDISTRIBUTED variant
     in queries/similarity.py composes lazily too since r14: its
     dangling quota rides the contribution pass as the left join's
-    unmatched rows, so each rank frame is referenced once.) At 100 TB
+    unmatched rows, so each rank frame is referenced once. "Once"
+    holds per rank frame, not per aggregate: that loop reads each
+    step's contribution aggregate twice (in-edge sums and dangling
+    quota), so its static plan doubles per iteration, and its cost at
+    PR_ITER=5 relies on AQE runtime exchange reuse; raising PR_ITER or
+    disabling reuse makes execution O(2^iters).) At 100 TB
     with many iterations, per-step persisted tables remain the
     standard Pregel-style fallback; at the fixed PR_ITER-step
     trajectory the linear chain is strictly cheaper."""

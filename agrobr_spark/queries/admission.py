@@ -238,15 +238,9 @@ def build_admission_index(
         )
         return checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
 
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(thread_target(spark, _embed_branch))
-        fb = pool.submit(thread_target(spark, _bench_branch))
-        assigned = fa.result()
-        bench = fb.result()
+    assigned, bench = run_concurrently(spark, _embed_branch, _bench_branch)
     pares = _block_self_pairs(assigned)
     comp = connected_components(pares, "id_a", "id_b")
     perdedor = comp.filter(F.col("componente") < F.col("id")).select(

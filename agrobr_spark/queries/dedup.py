@@ -1389,33 +1389,20 @@ def corpus_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the later methods' tasks back-fill executors freed by the
     # earlier ones' stage tails (guide §2.6 overlap-independent-jobs;
     # actions are only sequential because driver code calls them
-    # sequentially). thread_target (session.py) keeps job
+    # sequentially). run_concurrently (session.py) keeps job
     # descriptions/groups correct per thread; plans touch no shared
     # mutable state beyond idempotent memo dicts.
-    from concurrent.futures import ThreadPoolExecutor
+    from agrobr_spark.session import run_concurrently
 
-    from agrobr_spark.session import thread_target
-
-    builders = {
-        "minhash_lsh": lambda: dedup_minhash_lsh(
-            spark, sf_dir
-        ).localCheckpoint(eager=True),
-        "ngram_jaccard": lambda: dedup_ngram_jaccard(
-            spark, sf_dir
-        ).localCheckpoint(eager=True),
-        "embedding_ivf": lambda: near_dup_embeddings(
-            spark, sf_dir
-        ).localCheckpoint(eager=True),
-    }
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = {
-            k: pool.submit(thread_target(spark, fn))
-            for k, fn in builders.items()
-        }
-        frames = {k: f.result() for k, f in futs.items()}
-    mh = linha("minhash_lsh", frames["minhash_lsh"], "doc_a", "doc_b")
-    ng = linha("ngram_jaccard", frames["ngram_jaccard"], "doc_a", "doc_b")
-    nd = linha("embedding_ivf", frames["embedding_ivf"], "vec_a", "vec_b")
+    f_mh, f_ng, f_nd = run_concurrently(
+        spark,
+        lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: dedup_ngram_jaccard(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: near_dup_embeddings(spark, sf_dir).localCheckpoint(eager=True),
+    )
+    mh = linha("minhash_lsh", f_mh, "doc_a", "doc_b")
+    ng = linha("ngram_jaccard", f_ng, "doc_a", "doc_b")
+    nd = linha("embedding_ivf", f_nd, "vec_a", "vec_b")
     out = ex.unionByName(mh).unionByName(ng).unionByName(nd)
     return out.select(
         "metodo",

@@ -1632,9 +1632,7 @@ def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # they ran sequentially at ~0.65 s each warm). Results are
         # order-free: active_batches ordering only affects union
         # order, and compaction folds the full set either way.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from agrobr_spark.session import thread_target
+        from agrobr_spark.session import run_concurrently
 
         def fold(e: int) -> None:
             lo, hi = cut + e * span, cut + (e + 1) * span
@@ -1647,13 +1645,7 @@ def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_id=e,
             )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(thread_target(spark, lambda e=e: fold(e)))
-                for e in range(3)
-            ]
-            for f in futs:
-                f.result()
+        run_concurrently(spark, *(lambda e=e: fold(e) for e in range(3)))
         compact_posting_index(spark, path)
         man = read_manifest(path)
         if man["active_batches"] or man["version"] < 1:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import read_parquet, write_parquet
 from agrobr_spark.queries import register
+from agrobr_spark.session import run_concurrently
 from agrobr_spark.streaming.windows import (
     drain_or_raise,
     read_events_stream,
@@ -23,36 +24,32 @@ from agrobr_spark.streaming.windows import (
 
 _COUNTER = [0]
 
-
-def _commit_state(manifest_path: str, man: dict) -> None:
-    """Atomic manifest commit (the shared ``store/fs.commit_json``
-    primitive) for foreachBatch handlers that fold state: the
-    manifest carries BOTH the applied_batch_ids replay guard AND the
-    ``current`` state-dir pointer, so 'publish new state' and 'mark
-    epoch applied' are one atomic step. A crash after the state write
-    but before this commit leaves the old state current, and the
-    replay recomputes from it — exactly-once without assuming two
-    separate writes are atomic together (r9 ADVICE; the
-    store/posting.py protocol applied to folded streaming state)."""
-    from agrobr_spark.store.fs import commit_json
-
-    commit_json(manifest_path, man)
+#: files (= micro-batches) every ingest stream is staged into. The
+#: ``stream_source_divergence`` oracle hard-codes this 3-way split (its
+#: ``span`` and ``least(2, ...)`` lot key in pure SQL).
+_INGEST_FILES = 3
 
 
-def _stage_id_ranged_chunks(
-    df: DataFrame,
-    ingest: str,
+def _fold_stream(
+    spark: SparkSession,
+    staged: DataFrame,
+    handle,
+    name: str,
+    *,
     id_col: str,
     cut: int = 0,
-    n_files: int = 3,
-    capture_first: bool = False,
-) -> DataFrame | None:
-    """Write ``df`` (rows with ``id_col`` >= ``cut``) as ``n_files``
-    id-ranged SINGLE-FILE parquet chunks under ``ingest`` — the
-    family's deterministic micro-batch split for availableNow streams.
-    Invariants every streamed catalog entry relies on (kept in ONE
-    place, r10 review finding — this block previously existed as 11
-    copies):
+    build=None,
+    replay: bool = False,
+    timeout_s: int = 180,
+) -> None:
+    """The family's ingest-stream harness: stage ``staged`` (rows with
+    ``id_col`` >= ``cut``) as ``_INGEST_FILES`` id-ranged SINGLE-FILE
+    parquet chunks in a temp ingest dir, feed them one file per
+    micro-batch through a file-source stream into
+    ``foreachBatch(handle)`` under Trigger.AvailableNow, and drain with
+    ``drain_or_raise(name, timeout_s)``. The ingest dir is removed on
+    every exit path. Staging invariants every streamed catalog entry
+    relies on (kept in ONE place, r10 review finding):
 
     - chunk i covers ids [cut + i·span, cut + (i+1)·span), with the
       TAIL chunk open-ended (< 1<<62) so integer division never drops
@@ -64,52 +61,113 @@ def _stage_id_ranged_chunks(
       delivery is what makes smaller-id-wins admission predicates
       replay- and split-stable.
 
-    Returns chunk 0's frame (localCheckpointed — usable after the
-    caller deletes ``ingest``) when ``capture_first``, for in-line
-    epoch-replay checks."""
+    ``build`` (a store-build thunk) runs CONCURRENTLY with the staging
+    writes (guide §2.6 overlap independent jobs): they touch disjoint
+    directories, and the staging frame depends only on the source
+    table — the stream can't start before both finish anyway, so the
+    staging's small single-file writes back-fill the build's stage
+    tails instead of serializing after them.
+
+    ``replay=True`` feeds chunk 0 through ``handle`` again as batch 0
+    after the drain — the in-line proof that the fold is idempotent.
+    Chunk 0 is localCheckpointed at staging, so it outlives the ingest
+    dir."""
     import os
     import shutil
+    import tempfile
 
-    spark = df.sparkSession
-    max_id = df.agg(F.max(id_col)).collect()[0][0] or cut
-    span = max(1, (int(max_id) - int(cut) + n_files) // n_files)
-    t0 = 1_000_000_000
-    first = None
-    for i in range(n_files):
-        lo, hi = cut + i * span, cut + (i + 1) * span
-        chunk = df.filter(
-            (F.col(id_col) >= lo)
-            & (F.col(id_col) < (hi if i < n_files - 1 else 1 << 62))
+    ingest = tempfile.mkdtemp(prefix=f"{name}_in_")
+
+    def stage() -> DataFrame | None:
+        n = _INGEST_FILES
+        max_id = staged.agg(F.max(id_col)).collect()[0][0] or cut
+        span = max(1, (int(max_id) - int(cut) + n) // n)
+        t0 = 1_000_000_000
+        first = None
+        for i in range(n):
+            lo, hi = cut + i * span, cut + (i + 1) * span
+            chunk = staged.filter(
+                (F.col(id_col) >= lo)
+                & (F.col(id_col) < (hi if i < n - 1 else 1 << 62))
+            )
+            tmp = f"{ingest}/.stage{i}"
+            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            dst = f"{ingest}/chunk{i:05d}.parquet"
+            shutil.move(f"{tmp}/{part}", dst)
+            shutil.rmtree(tmp)
+            os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
+            if i == 0 and replay:
+                first = read_parquet(spark, dst).localCheckpoint(eager=True)
+        return first
+
+    try:
+        if build is None:
+            first = stage()
+        else:
+            first = run_concurrently(spark, build, stage)[1]
+        q = (
+            spark.readStream.schema(staged.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(ingest)
+            .writeStream.foreachBatch(handle)
+            .trigger(availableNow=True)
+            .start()
         )
-        tmp = f"{ingest}/.stage{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = f"{ingest}/chunk{i:05d}.parquet"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
-        if i == 0 and capture_first:
-            first = read_parquet(spark, dst).localCheckpoint(eager=True)
-    return first
+        drain_or_raise(q, name, timeout_s)
+        if replay:
+            handle(first, 0)
+    finally:
+        shutil.rmtree(ingest, ignore_errors=True)
 
 
-def _overlap_build_and_stage(spark, build, stage):
-    """Run a store-build chain and the ingest staging writes
-    CONCURRENTLY (guide §2.6 overlap independent jobs): they touch
-    disjoint directories, and the staging frame depends only on the
-    source table — the stream can't start before both finish anyway,
-    so the staging's small single-file writes back-fill the build's
-    stage tails instead of serializing after them. Returns ``stage``'s
-    result (the captured first chunk, when requested)."""
-    from concurrent.futures import ThreadPoolExecutor
+def _versioned_state(
+    spark: SparkSession, state_dir: str, stem: str, schema: str, step
+):
+    """Folded foreachBatch state as versioned parquet dirs under
+    ``state_dir`` (``{stem}_init``, then ``{stem}_s{batch_id}``) plus
+    ONE manifest committed atomically (the shared
+    ``store/fs.commit_json`` primitive). The manifest carries BOTH the
+    applied_batch_ids replay guard AND the ``current`` state-dir
+    pointer, so 'publish new state' and 'mark epoch applied' are one
+    atomic step. A crash after the state write but before the commit
+    leaves the old state current, and the replay recomputes from it —
+    exactly-once without assuming two separate writes are atomic
+    together (r9 ADVICE; the store/posting.py protocol applied to
+    folded streaming state).
 
-    from agrobr_spark.session import thread_target
+    Returns ``(handle, current)``: the foreachBatch handler, which
+    skips an applied ``batch_id`` and otherwise commits
+    ``step(batch, prev_state)`` as the next version, and a reader of
+    the current state."""
+    import json
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb = pool.submit(thread_target(spark, build))
-        fs = pool.submit(thread_target(spark, stage))
-        fb.result()
-        return fs.result()
+    from agrobr_spark.store.fs import commit_json
+
+    manifest = f"{state_dir}/manifest.json"
+    init = f"{stem}_init"
+    write_parquet(spark.createDataFrame([], schema), f"{state_dir}/{init}")
+    commit_json(manifest, {"applied_batch_ids": [], "current": init})
+
+    def applied() -> dict:
+        with open(manifest, encoding="utf-8") as fh:
+            return json.load(fh)
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        man = applied()
+        if int(batch_id) in man["applied_batch_ids"]:
+            return
+        prev = read_parquet(spark, f"{state_dir}/{man['current']}")
+        nxt = f"{stem}_s{int(batch_id)}"
+        write_parquet(step(batch, prev), f"{state_dir}/{nxt}")
+        man["applied_batch_ids"].append(int(batch_id))
+        man["current"] = nxt
+        commit_json(manifest, man)
+
+    def current() -> DataFrame:
+        return read_parquet(spark, f"{state_dir}/{applied()['current']}")
+
+    return handle, current
 
 
 @register(
@@ -165,7 +223,6 @@ def stream_stateful_dod(spark: SparkSession, sf_dir: str) -> DataFrame:
     state surviving micro-batches; on fully-arrived data the result
     equals the batch lag window the oracle runs."""
     from agrobr_spark.streaming.stateful import day_over_day_flags
-    from agrobr_spark.streaming.windows import read_events_stream, run_available_now
 
     _COUNTER[0] += 1
     events = read_events_stream(spark, sf_dir).select(
@@ -216,8 +273,6 @@ def stream_sliding_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion (SURVEY §2.12: overlapping-window coverage beyond the
     tumbling case). Window starts emitted as epoch-µs ints so the
     cross-engine hash is timezone-proof."""
-    from agrobr_spark.streaming.windows import read_events_stream, run_available_now
-
     _COUNTER[0] += 1
     name = f"stream_sliding_daily_{_COUNTER[0]}"
     events = read_events_stream(spark, sf_dir)
@@ -278,8 +333,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of the batch w7 lag-gap sessionize (SURVEY §2.12).
     State is bounded by the watermark; at scale the session store
     shards on user_id like any keyed state."""
-    from agrobr_spark.streaming.windows import read_events_stream, run_available_now
-
     _COUNTER[0] += 1
     name = f"stream_session_windows_{_COUNTER[0]}"
     events = read_events_stream(spark, sf_dir).withColumn(
@@ -432,8 +485,6 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     own survivor and gets flagged duplicado_corpus
     (tests/test_admission.py::test_admit_batch_replay_is_idempotent).
     """
-    import os
-    import shutil
     import tempfile
 
     from agrobr_spark.io import load
@@ -445,9 +496,7 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_admit_idx_")
-    ingest = tempfile.mkdtemp(prefix="stream_admit_in_")
     try:
         build_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
@@ -457,13 +506,6 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb_b.select(F.col("vec_id").alias("doc_id"), "embedding"),
             "doc_id",
             "left",
-        )
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
         )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
@@ -476,12 +518,10 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 store_dir,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, staged, handle, "stream_admit_batch",
+            id_col="doc_id", cut=cut,
         )
-        drain_or_raise(q, "stream_admit_batch", 180)
         # each micro-batch MERGE accreted one file set; compact before
         # handing the table to readers (the Delta OPTIMIZE analog —
         # small files are the dominant scan cost of an always-on
@@ -496,7 +536,6 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         delete_path(spark, store_dir)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 def _stream_admit_lsh_oracle() -> str:
@@ -533,8 +572,6 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins: corpus survivors ∪ admitted batch docs from pure
     SQL over corpus ∪ batch (recursive-CTE components fixpoints, the
     same hyperplane constants)."""
-    import os
-    import shutil
     import tempfile
 
     from agrobr_spark.io import load
@@ -546,9 +583,7 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore, compact
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_lsh_idx_")
-    ingest = tempfile.mkdtemp(prefix="stream_lsh_in_")
     try:
         build_lsh_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
@@ -558,13 +593,6 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb_b.select(F.col("vec_id").alias("doc_id"), "embedding"),
             "doc_id",
             "left",
-        )
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
         )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
@@ -577,19 +605,16 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 store_dir,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, staged, handle, "stream_admit_lsh",
+            id_col="doc_id", cut=cut,
         )
-        drain_or_raise(q, "stream_admit_lsh", 180)
         store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
         compact(store)
         out = store.read().select("doc_id", "n_chars")
         return out.localCheckpoint(eager=True)
     finally:
         delete_path(spark, store_dir)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 def _stream_admit_semdedup_oracle() -> str:
@@ -622,8 +647,6 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     when a vector is judged — so the oracle recomputes the identical
     decision in one non-recursive SQL query. Per micro-batch the cost
     is O(|batch| · cluster density): the corpus is never re-read."""
-    import os
-    import shutil
     import tempfile
 
     from agrobr_spark.io import load
@@ -635,32 +658,21 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore, compact
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_sem_idx_")
-    ingest = tempfile.mkdtemp(prefix="stream_sem_in_")
     try:
         build_semdedup_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         staged = load(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") >= cut
         )
-        _stage_id_ranged_chunks(staged, ingest, "vec_id", cut)
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
-        )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             admit_semdedup_frame(spark, batch, store_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, staged, handle, "stream_admit_semdedup",
+            id_col="vec_id", cut=cut,
         )
-        drain_or_raise(q, "stream_admit_semdedup", 180)
         store = ParquetStore(spark, f"{store_dir}/sem_seen", ("vec_id",))
         compact(store)
         out = store.read().filter(F.col("origem") == "lote").select(
@@ -669,7 +681,6 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         delete_path(spark, store_dir)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 def _stream_knn_graph_oracle() -> str:
@@ -750,7 +761,6 @@ def stream_graph_clusters_update(
     components run bounded by the touched components' size — at
     100 TB a batch relabels its semantic neighborhoods, never the
     corpus."""
-    import os
     import shutil
     import tempfile
 
@@ -765,9 +775,7 @@ def stream_graph_clusters_update(
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_knn_lbl_")
-    ingest = tempfile.mkdtemp(prefix="stream_knn_lbl_in_")
     try:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
@@ -785,21 +793,6 @@ def stream_graph_clusters_update(
             )
             build_graph_labels(spark, store_dir, corpus.select("vec_id"))
 
-        staged = emb.filter(F.col("vec_id") >= cut)
-        first_chunk = _overlap_build_and_stage(
-            spark,
-            _build,
-            lambda: _stage_id_ranged_chunks(
-                staged, ingest, "vec_id", cut, capture_first=True
-            ),
-        )
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
-        )
-
         def handle(batch: DataFrame, batch_id: int) -> None:
             staged_edges = update_knn_graph_frame(
                 spark, batch, store_dir, k=GRAPH_K, n_probe=GRAPH_PROBE
@@ -812,20 +805,17 @@ def stream_graph_clusters_update(
                 store_dir,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_graph_clusters_update", 240)
         # replay epoch 0: both folds must be no-ops by construction
-        handle(first_chunk, 0)
+        _fold_stream(
+            spark, emb.filter(F.col("vec_id") >= cut), handle,
+            "stream_graph_clusters_update", id_col="vec_id", cut=cut,
+            build=_build, replay=True, timeout_s=240,
+        )
         return read_graph_clusters(spark, store_dir).localCheckpoint(
             eager=True
         )
     finally:
         shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 def _stream_pagerank_oracle() -> str:
@@ -893,9 +883,7 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_knn_pr_")
-    ingest = tempfile.mkdtemp(prefix="stream_knn_pr_in_")
     try:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
@@ -918,21 +906,6 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             # instead of re-reading the table just written (r14)
             build_graph_pageranks(spark, store_dir, labels=labels)
 
-        staged = emb.filter(F.col("vec_id") >= cut)
-        first_chunk = _overlap_build_and_stage(
-            spark,
-            _build,
-            lambda: _stage_id_ranged_chunks(
-                staged, ingest, "vec_id", cut, capture_first=True
-            ),
-        )
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
-        )
-
         def handle(batch: DataFrame, batch_id: int) -> None:
             staged_edges = update_knn_graph_frame(
                 spark, batch, store_dir, k=GRAPH_K, n_probe=GRAPH_PROBE
@@ -946,20 +919,17 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             update_graph_pageranks_frame(spark, relabeled, store_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_pagerank_update", 240)
         # replay epoch 0: all three folds must be no-ops by construction
-        handle(first_chunk, 0)
+        _fold_stream(
+            spark, emb.filter(F.col("vec_id") >= cut), handle,
+            "stream_pagerank_update", id_col="vec_id", cut=cut,
+            build=_build, replay=True, timeout_s=240,
+        )
         return read_graph_pageranks(spark, store_dir).localCheckpoint(
             eager=True
         )
     finally:
         shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 from agrobr_spark.operators.pagerank import PR_ITER as _PR_ITER  # noqa: E402
@@ -1002,7 +972,6 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's incremental accumulate property (fetch only what's
     missing, never recompute the store; ref:
     agrobr/cepea/api.py:119-187) for the graph family."""
-    import os
     import shutil
     import tempfile
 
@@ -1015,33 +984,11 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_knn_idx_")
-    ingest = tempfile.mkdtemp(prefix="stream_knn_in_")
     try:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
-        )
-        staged = emb.filter(F.col("vec_id") >= cut)
-        first_chunk = _overlap_build_and_stage(
-            spark,
-            lambda: build_knn_graph_index(
-                emb.filter(F.col("vec_id") < cut),
-                store_dir,
-                k=GRAPH_K,
-                n_probe=GRAPH_PROBE,
-                n_centroids=max(4, int(GRAPH_PROBE * n_corp**0.5)),
-            ),
-            lambda: _stage_id_ranged_chunks(
-                staged, ingest, "vec_id", cut, capture_first=True
-            ),
-        )
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
         )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
@@ -1049,19 +996,23 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, batch, store_dir, k=GRAPH_K, n_probe=GRAPH_PROBE
             )
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_knn_graph_update", 180)
         # replay epoch 0: must be a no-op by construction, or the
         # oracle hash below fails with duplicated neighbors
-        handle(first_chunk, 0)
+        _fold_stream(
+            spark, emb.filter(F.col("vec_id") >= cut), handle,
+            "stream_knn_graph_update", id_col="vec_id", cut=cut,
+            build=lambda: build_knn_graph_index(
+                emb.filter(F.col("vec_id") < cut),
+                store_dir,
+                k=GRAPH_K,
+                n_probe=GRAPH_PROBE,
+                n_centroids=max(4, int(GRAPH_PROBE * n_corp**0.5)),
+            ),
+            replay=True,
+        )
         return read_knn_graph(spark, store_dir).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 @register(
@@ -1104,9 +1055,7 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from agrobr_spark.store.fs import path_exists
 
-    _COUNTER[0] += 1
     out_dir = tempfile.mkdtemp(prefix="stream_shards_out_") + "/shards"
-    ingest = tempfile.mkdtemp(prefix="stream_shards_in_")
     try:
         cut = _split_params(spark, sf_dir)[0]
         staged = (
@@ -1120,13 +1069,6 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                     r"ELSE size(split(trim(text), '\\s+')) END AS BIGINT)"
                 ).alias("n_tokens"),
             )
-        )
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
         )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
@@ -1147,19 +1089,16 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                     batch_id=batch_id,
                 )
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, staged, handle, "stream_export_shards",
+            id_col="doc_id", cut=cut,
         )
-        drain_or_raise(q, "stream_export_shards", 180)
         verified, _ = read_training_shards(spark, out_dir)
         return verified.select(
             "doc_id", "source", "n_tokens"
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 def _stream_bm25_oracle() -> str:
@@ -1195,7 +1134,6 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one-shot full-corpus BM25 — build+update ≡ rebuild is the
     driver-hash-checked identity, and the corpus split is never
     re-tokenized after its build."""
-    import os
     import shutil
     import tempfile
 
@@ -1213,38 +1151,25 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_posting_index,
     )
 
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_bm25_idx_")
-    ingest = tempfile.mkdtemp(prefix="stream_bm25_in_")
     try:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         cut = _split_params(spark, sf_dir)[0]
         build_posting_index(docs.filter(F.col("doc_id") < cut), store_dir)
-        staged = docs.filter(F.col("doc_id") >= cut)
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
-        )
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             update_posting_index(batch, store_dir, batch_id=batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, docs.filter(F.col("doc_id") >= cut), handle,
+            "stream_bm25_index_update", id_col="doc_id", cut=cut,
         )
-        drain_or_raise(q, "stream_bm25_index_update", 180)
         out = bm25_topk_indexed(
             spark, store_dir, BM25_QUERY, BM25_TOPK, BM25_K1, BM25_B
         )
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 @register(
@@ -1276,11 +1201,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     — duplicates are suppressed by state while keys are in-horizon and
     by the watermark drop once they are not.
     """
-    from agrobr_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
-
     _COUNTER[0] += 1
     name = f"stream_dedup_exact_{_COUNTER[0]}"
     events = read_events_stream(spark, sf_dir)
@@ -1365,94 +1285,79 @@ def stream_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism is ``corpus_source_divergence``'s: exact bigint
     counts, identical division/log expression, 8dp-rounded terms
     summed as DECIMAL."""
-    import os
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import _split_params
 
-    _COUNTER[0] += 1
-    ingest = tempfile.mkdtemp(prefix="stream_kl_in_")
-    try:
-        cut = _split_params(spark, sf_dir)[0]
-        docs = load(spark, sf_dir, "documents")
+    cut = _split_params(spark, sf_dir)[0]
+    docs = load(spark, sf_dir, "documents")
 
-        # frozen blend: top-500 corpus vocabulary + totals
-        toks_all = (
-            docs.filter(F.length(F.trim("text")) > 0)
+    # frozen blend: top-500 corpus vocabulary + totals
+    toks_all = (
+        docs.filter(F.length(F.trim("text")) > 0)
+        .select(
+            "doc_id",
+            F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
+        )
+        .select("doc_id", F.lower("tok").alias("termo"))
+    )
+    vocab = (
+        toks_all.groupBy("termo")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cc"))
+        .orderBy(F.desc("cc"), "termo")
+        .limit(500)
+        .localCheckpoint(eager=True)
+    )
+    total_corpus = int(
+        vocab.agg(F.sum("cc")).collect()[0][0] or 0
+    )
+
+    relatorio: list[tuple[int, int, int, float]] = []
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        head = batch.agg(F.min("doc_id")).collect()[0][0]
+        if head is None:
+            return
+        counts = (
+            batch.filter(F.length(F.trim("text")) > 0)
             .select(
-                "doc_id",
-                F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
+                F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
             )
-            .select("doc_id", F.lower("tok").alias("termo"))
+            .select(F.lower("tok").alias("termo"))
+            .groupBy("termo")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cs"))
+            .join(F.broadcast(vocab), "termo")
         )
-        vocab = (
-            toks_all.groupBy("termo")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cc"))
-            .orderBy(F.desc("cc"), "termo")
-            .limit(500)
-            .localCheckpoint(eager=True)
-        )
-        total_corpus = int(
-            vocab.agg(F.sum("cc")).collect()[0][0] or 0
-        )
+        tot = counts.agg(
+            F.count(F.lit(1)).alias("n_termos"), F.sum("cs").alias("ts")
+        ).collect()[0]
+        if not tot["ts"]:
+            return
+        ts = int(tot["ts"])
+        p = F.col("cs").cast("double") / F.lit(float(ts))
+        q = F.col("cc").cast("double") / F.lit(float(total_corpus))
+        kl = counts.select(
+            F.round(p * F.log2(p / q), 8)
+            .cast("decimal(18,8)")
+            .alias("termo_kl")
+        ).agg(
+            F.round(F.sum("termo_kl").cast("double"), 6).alias("kl")
+        ).collect()[0]["kl"]
+        relatorio.append((int(head), int(tot["n_termos"]), ts, float(kl)))
 
-        staged = docs.filter(F.col("doc_id") >= cut).select("doc_id", "text")
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
-
-        relatorio: list[tuple[int, int, int, float]] = []
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            head = batch.agg(F.min("doc_id")).collect()[0][0]
-            if head is None:
-                return
-            counts = (
-                batch.filter(F.length(F.trim("text")) > 0)
-                .select(
-                    F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
-                )
-                .select(F.lower("tok").alias("termo"))
-                .groupBy("termo")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("cs"))
-                .join(F.broadcast(vocab), "termo")
-            )
-            tot = counts.agg(
-                F.count(F.lit(1)).alias("n_termos"), F.sum("cs").alias("ts")
-            ).collect()[0]
-            if not tot["ts"]:
-                return
-            ts = int(tot["ts"])
-            p = F.col("cs").cast("double") / F.lit(float(ts))
-            q = F.col("cc").cast("double") / F.lit(float(total_corpus))
-            kl = counts.select(
-                F.round(p * F.log2(p / q), 8)
-                .cast("decimal(18,8)")
-                .alias("termo_kl")
-            ).agg(
-                F.round(F.sum("termo_kl").cast("double"), 6).alias("kl")
-            ).collect()[0]["kl"]
-            relatorio.append((int(head), int(tot["n_termos"]), ts, float(kl)))
-
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_source_divergence", 180)
-        out = spark.createDataFrame(
-            relatorio,
-            "lote_inicio bigint, n_termos bigint, "
-            "n_tokens_vocab bigint, kl_bits double",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(ingest, ignore_errors=True)
+    _fold_stream(
+        spark,
+        docs.filter(F.col("doc_id") >= cut).select("doc_id", "text"),
+        handle,
+        "stream_source_divergence",
+        id_col="doc_id",
+        cut=cut,
+    )
+    out = spark.createDataFrame(
+        relatorio,
+        "lote_inicio bigint, n_termos bigint, "
+        "n_tokens_vocab bigint, kl_bits double",
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def _stream_hh_oracle() -> str:
@@ -1497,8 +1402,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     point is state: per-batch cost is O(batch tokens + cap), the
     counter table never exceeds cap rows however large the corpus
     grows, and no corpus re-scan happens until someone asks."""
-    import json as _json
-    import os
     import shutil
     import tempfile
 
@@ -1506,33 +1409,15 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.pipeline_text import HH_SUPPORT
 
     cap = int(4 / HH_SUPPORT)
-    _COUNTER[0] += 1
     store_dir = tempfile.mkdtemp(prefix="stream_hh_")
-    ingest = tempfile.mkdtemp(prefix="stream_hh_in_")
-    counters = f"{store_dir}/counters"
-    manifest = f"{store_dir}/manifest.json"
     try:
         docs = (
             load(spark, sf_dir, "documents")
             .filter(F.length(F.trim("text")) > 0)
             .select("doc_id", "text")
         )
-        # id-ranged files, one per micro-batch (the family convention)
-        _stage_id_ranged_chunks(docs, ingest, "doc_id")
 
-        write_parquet(
-            spark.createDataFrame([], "termo string, cnt bigint"),
-            f"{counters}_init",
-        )
-        _commit_state(
-            manifest, {"applied_batch_ids": [], "current": "counters_init"}
-        )
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            with open(manifest, encoding="utf-8") as fh:
-                man = _json.load(fh)
-            if int(batch_id) in man["applied_batch_ids"]:
-                return
+        def step(batch: DataFrame, prev: DataFrame) -> DataFrame:
             bc = (
                 batch.select(
                     F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
@@ -1541,7 +1426,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("termo")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("bc"))
             )
-            prev = read_parquet(spark, f"{store_dir}/{man['current']}")
             merged = (
                 prev.join(bc, "termo", "full_outer")
                 .select(
@@ -1567,35 +1451,18 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 merged = merged.select(
                     "termo", (F.col("cnt") - F.lit(kth)).alias("cnt")
                 ).filter(F.col("cnt") > 0)
-            # versioned state dir + one atomic commit: state publish
-            # and replay-guard flip happen together (see _commit_state)
-            nxt = f"counters_s{int(batch_id)}"
-            write_parquet(
-                merged.localCheckpoint(eager=True), f"{store_dir}/{nxt}"
-            )
-            man["applied_batch_ids"].append(int(batch_id))
-            man["current"] = nxt
-            _commit_state(manifest, man)
+            return merged.localCheckpoint(eager=True)
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
+        # state publish and replay-guard flip in one atomic commit
+        handle, current = _versioned_state(
+            spark, store_dir, "counters", "termo string, cnt bigint", step
         )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
+        _fold_stream(
+            spark, docs, handle, "stream_heavy_hitters", id_col="doc_id"
         )
-        drain_or_raise(q, "stream_heavy_hitters", 180)
 
         # read-time exact verify: ≤ cap candidates, one counting pass
-        with open(manifest, encoding="utf-8") as fh:
-            cur = _json.load(fh)["current"]
-        cands = [
-            r["termo"]
-            for r in read_parquet(spark, f"{store_dir}/{cur}").collect()
-        ]
+        cands = [r["termo"] for r in current().collect()]
         toks = docs.select(
             F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
         ).select(F.lower("t").alias("termo"))
@@ -1621,7 +1488,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.rmtree(ingest, ignore_errors=True)
 
 
 # -- streaming DSIR: frozen importance models score each micro-batch --
@@ -1700,7 +1566,6 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, so the final whole-row dedupe makes a replayed epoch
     harmless. The score itself is batch-independent by construction —
     which is exactly what the one-shot oracle proves."""
-    import os
     import shutil
     import tempfile
 
@@ -1712,8 +1577,6 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         DSIR_TARGET_LANG,
     )
 
-    _COUNTER[0] += 1
-    ingest = tempfile.mkdtemp(prefix="stream_dsir_in_")
     scores_dir = tempfile.mkdtemp(prefix="stream_dsir_out_")
     try:
         cut = _split_params(spark, sf_dir)[0]
@@ -1745,9 +1608,6 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cr").alias("r"), F.sum("ct").alias("t")
         ).collect()[0]
         r_total, t_total = int(tot["r"] or 0), int(tot["t"] or 0)
-
-        staged = docs.filter(F.col("doc_id") >= cut).select("doc_id", "text")
-        _stage_id_ranged_chunks(staged, ingest, "doc_id", cut)
 
         p_t = (F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double") / F.lit(
             t_total + DSIR_BUCKETS
@@ -1783,21 +1643,17 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mode="append",
             )
 
-        stream = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
+        _fold_stream(
+            spark,
+            docs.filter(F.col("doc_id") >= cut).select("doc_id", "text"),
+            handle,
+            "stream_dsir_weights",
+            id_col="doc_id",
+            cut=cut,
         )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_dsir_weights", 180)
         out = read_parquet(spark, scores_dir).dropDuplicates(["doc_id"])
         return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ingest, ignore_errors=True)
         shutil.rmtree(scores_dir, ignore_errors=True)
 
 
@@ -1850,10 +1706,6 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     _COUNTER[0] += 1
     name = f"stream_approx_distinct_{_COUNTER[0]}"
     from agrobr_spark.io import load
-    from agrobr_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
 
     events = read_events_stream(spark, sf_dir)
     agg = (
@@ -1942,11 +1794,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and the driver hash pins the exact pairs. The events fixture
     is append-only with event times, the same replay discipline as
     the other stream entries."""
-    from agrobr_spark.streaming.windows import (
-        read_events_stream,
-        run_available_now,
-    )
-
     _COUNTER[0] += 1
     name = f"stream_stream_join_{_COUNTER[0]}"
     views = (
@@ -2025,8 +1872,6 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-batch cost is O(batch) + a {n}-row manifest rewrite,
     independent of corpus size; the same oracle string as the batch
     twin pins stream ≡ one-shot."""
-    import json as _json
-    import os
     import shutil
     import tempfile
 
@@ -2038,34 +1883,13 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         N_TOKENS_EXPR,
     )
 
-    _COUNTER[0] += 1
-    ingest = tempfile.mkdtemp(prefix="stream_manifest_in_")
     state = tempfile.mkdtemp(prefix="stream_manifest_st_")
-    table = f"{state}/manifest"
-    manifest = f"{state}/applied.json"
     try:
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        first_chunk = _stage_id_ranged_chunks(
-            docs, ingest, "doc_id", capture_first=True
-        )
 
-        schema = (
-            "shard int, n_docs bigint, n_tokens bigint,"
-            " soma_verificacao decimal(38,0), min_doc bigint,"
-            " max_doc bigint"
-        )
-        write_parquet(spark.createDataFrame([], schema), f"{table}_init")
-        _commit_state(
-            manifest, {"applied_batch_ids": [], "current": "manifest_init"}
-        )
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            with open(manifest, encoding="utf-8") as fh:
-                man = _json.load(fh)
-            if int(batch_id) in man["applied_batch_ids"]:
-                return
+        def step(batch: DataFrame, prev: DataFrame) -> DataFrame:
             parcial = (
                 batch.select(
                     F.expr(f"pmod({_SHARD_H_ID}, {N_SHARDS})")
@@ -2086,8 +1910,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("doc_id").cast("bigint").alias("b_max"),
                 )
             )
-            prev = read_parquet(spark, f"{state}/{man['current']}")
-            merged = (
+            return (
                 prev.join(parcial, "shard", "full_outer")
                 .select(
                     "shard",
@@ -2119,34 +1942,28 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .localCheckpoint(eager=True)
             )
-            # versioned state dir + one atomic commit (see _commit_state)
-            nxt = f"manifest_s{int(batch_id)}"
-            write_parquet(merged, f"{state}/{nxt}")
-            man["applied_batch_ids"].append(int(batch_id))
-            man["current"] = nxt
-            _commit_state(manifest, man)
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ingest)
+        # versioned state dir + one atomic commit (see _versioned_state)
+        handle, current = _versioned_state(
+            spark,
+            state,
+            "manifest",
+            "shard int, n_docs bigint, n_tokens bigint,"
+            " soma_verificacao decimal(38,0), min_doc bigint,"
+            " max_doc bigint",
+            step,
         )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_or_raise(q, "stream_shard_manifest", 180)
         # replay batch 0: the guard must no-op, or the driver hash
         # check against the one-shot oracle fails with doubled sums
-        handle(first_chunk, 0)
+        _fold_stream(
+            spark, docs, handle, "stream_shard_manifest",
+            id_col="doc_id", replay=True,
+        )
         # the store keeps the checksum as DECIMAL(38,0) (mergeable);
         # the report emits its exact STRING (the batch twin's
         # pandas-transport rule)
-        with open(manifest, encoding="utf-8") as fh:
-            cur = _json.load(fh)["current"]
         return (
-            read_parquet(spark, f"{state}/{cur}")
+            current()
             .withColumn(
                 "soma_verificacao",
                 F.col("soma_verificacao").cast("string"),
@@ -2154,7 +1971,6 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(ingest, ignore_errors=True)
         shutil.rmtree(state, ignore_errors=True)
 
 

@@ -71,19 +71,33 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def thread_target(spark, fn):
-    """``inheritable_thread_target(spark)(fn)`` with a fallback for
-    non-pinned-thread mode (r13 ADVICE): under ``PYSPARK_PIN_THREAD=
-    false`` pyspark's non-pinned branch returns the session argument
-    UNCHANGED, so the curried call raises ``TypeError: 'SparkSession'
-    object is not callable``. On the default pinned mode this is
-    exactly the warning-free tag-inheriting wrapper; on non-pinned
-    mode the raw function is returned (thread-locals are shared
-    there, so there is nothing to inherit). One shared helper so the
-    engine's eight thread-pool sites cannot drift."""
+def run_concurrently(spark, *thunks) -> list:
+    """Run each thunk on its own worker thread and return their
+    results in submission order (guide §2.6 overlap independent jobs:
+    independent actions are only sequential because driver code calls
+    them sequentially). Every site that overlaps Spark actions goes
+    through here, so the policy cannot drift:
+
+    - each thunk is wrapped by its own ``inheritable_thread_target(
+      spark)`` (a copy of the caller's local properties), so its jobs
+      carry the caller's job group and description;
+    - non-pinned-thread mode (r13 ADVICE): under ``PYSPARK_PIN_THREAD=
+      false`` pyspark's non-pinned branch returns the session argument
+      UNCHANGED, so the curried call would raise ``TypeError:
+      'SparkSession' object is not callable``; there the raw thunk
+      runs. py4j does not pin Python threads to JVM threads in that
+      mode, so no wrapper can carry the job group: a worker's jobs
+      may land outside it;
+    - every thunk is joined before anything is raised, then the first
+      failure in submission order is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from pyspark import inheritable_thread_target
 
-    wrapped = inheritable_thread_target(spark)
-    if not callable(wrapped):
-        return fn
-    return wrapped(fn)
+    def target(fn):
+        wrapped = inheritable_thread_target(spark)
+        return wrapped(fn) if callable(wrapped) else fn
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [pool.submit(target(t)) for t in thunks]
+    return [f.result() for f in futs]

@@ -2716,3 +2716,22 @@ def test_knn_store_rejects_negative_ids(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="non-negative"):
         update_knn_graph_frame(spark, neg_batch, store, k=1, n_probe=1)
+
+
+def test_knn_store_rejects_empty_centroids(spark, tmp_path):
+    """A non-empty corpus that no centroid takes (an empty centroid
+    frame) must raise, not build with n_corpus=0 bucket widths."""
+    import pytest
+
+    from agrobr_spark.operators.knn_store import build_knn_graph_index
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    no_centroids = spark.createDataFrame([], "_cid long, _cv array<float>")
+    with pytest.raises(ValueError, match="no corpus vector"):
+        build_knn_graph_index(
+            corpus, str(tmp_path / "s"), k=1, n_probe=1,
+            centroids=no_centroids,
+        )
