@@ -363,12 +363,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COS_THRESHOLD = 0.45
 
-_DOT_SQL = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-
-
 @register(
     "dedup_embedding_cosine",
     oracle=f"""

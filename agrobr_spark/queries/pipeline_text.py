@@ -1396,24 +1396,14 @@ BM25_SCORES_CTE = rf"""docs AS (
       FROM pontos_t GROUP BY doc_id)"""
 
 
-def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc BM25 score frame ``(doc_id, n_termos, pontos)`` for the
-    fixed ``BM25_QUERY`` — the single scoring definition behind both
-    ``text_bm25_topk`` and the RRF hybrid fusion in ``similarity.py``
-    (SQL twin: ``BM25_SCORES_CTE``). See ``text_bm25_topk`` for the
-    scoring math and the plan/scale argument."""
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = d.select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-    ).select(
-        "doc_id",
-        F.size("t").alias("dl"),
-        F.explode("t").alias("tok"),
-    ).select("doc_id", "dl", F.lower("tok").alias("termo"))
-    # N docs + average doc length as ONE broadcast row, folded from
-    # the per-doc frame (no eager count() job)
+def _bm25_scan_rows(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The BM25 scan twins' row source: lowered tokens ``(doc_id, dl,
+    termo)`` of the non-blank documents, and the corpus stats
+    ``(n, avgdl)`` as ONE row folded from the per-doc frame (no eager
+    count() job)."""
+    toks = _lowered_tokens(_doc_tokens(spark, sf_dir))
     stats = (
         toks.groupBy("doc_id").agg(F.first("dl").alias("dl"))
         .groupBy()
@@ -1424,35 +1414,45 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    tf = (
-        toks.filter(F.col("termo").isin(*BM25_QUERY))
-        .groupBy("doc_id", "dl", "termo")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    return toks, stats
+
+
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, t)``: each non-blank document's raw token array."""
+    return (
+        load(spark, sf_dir, "documents")
+        .filter(F.length(F.trim("text")) > 0)
+        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
     )
-    df_tab = tf.groupBy("termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
+
+
+def _lowered_tokens(docs: DataFrame, *keep: str) -> DataFrame:
+    """``(doc_id, *keep, dl, termo)``: one lower-cased row per entry of
+    the token array ``t``; ``dl`` is the doc's token count."""
+    return docs.select(
+        "doc_id", *keep, F.size("t").alias("dl"), F.explode("t").alias("tok")
+    ).select("doc_id", *keep, "dl", F.lower("tok").alias("termo"))
+
+
+def _tf(toks: DataFrame) -> DataFrame:
+    """Posting rows ``(doc_id, dl, termo, tf)``, one per (doc, term)."""
+    return toks.groupBy("doc_id", "dl", "termo").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    idf = F.log(
-        1
-        + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + BM25_K1 * (
-        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    pontos = (
-        tf.join(df_tab, "termo")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(idf * (F.col("tf") * (BM25_K1 + 1)) / denom, 6)
-            .cast("decimal(18,6)")
-            .alias("p"),
-        )
-    )
-    return pontos.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_termos"),
-        F.round(F.sum("p").cast("double"), 6).alias("pontos"),
-    )
+
+
+def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc BM25 score frame ``(doc_id, n_termos, pontos)`` for the
+    fixed ``BM25_QUERY`` — the scan row source behind both
+    ``text_bm25_topk`` and the RRF hybrid fusion in ``similarity.py``
+    (SQL twin: ``BM25_SCORES_CTE``), scored by the shared
+    ``store/posting.bm25_score``. See ``text_bm25_topk`` for the
+    scoring math and the plan/scale argument."""
+    from agrobr_spark.store.posting import bm25_score
+
+    toks, stats = _bm25_scan_rows(spark, sf_dir)
+    tf = _tf(toks.filter(F.col("termo").isin(*BM25_QUERY)))
+    return bm25_score(tf, stats, BM25_K1, BM25_B)
 
 
 @register(
@@ -1990,32 +1990,12 @@ def text_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap-unambiguous; a start position can satisfy an offset at
     most once, so HAVING count = |phrase| is exact for repeated-token
     phrases too."""
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos", "tok")
+    from agrobr_spark.store.posting import phrase_vote
+
+    toks = load(spark, sf_dir, "documents").select(
+        "doc_id", F.posexplode(_tokens()).alias("pos", "termo")
     )
-    termdf = spark.createDataFrame(
-        _PHRASE_TERMS, "frase string, termo string, deslocamento int"
-    )
-    lens = termdf.groupBy("frase").agg(
-        F.count(F.lit(1)).alias("comprimento")
-    )
-    m = toks.join(
-        F.broadcast(termdf), toks["tok"] == termdf["termo"]
-    ).select(
-        "doc_id",
-        "frase",
-        (F.col("pos") - F.col("deslocamento")).alias("inicio"),
-    )
-    cheio = m.groupBy("doc_id", "frase", "inicio").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    hits = cheio.join(F.broadcast(lens), "frase").filter(
-        F.col("c") == F.col("comprimento")
-    )
-    return hits.groupBy("doc_id", "frase").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_ocorrencias")
-    )
+    return phrase_vote(toks, _PHRASE_TERMS)
 
 
 _PHRASE_INDEX_CACHE: dict[tuple, str] = {}
@@ -2406,10 +2386,7 @@ def text_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: positions are exact integers, counts are exact, the
     ordering carries (n_termos, n_hits, inicio) with no floats — the
     oracle pins the exact snippet rows."""
-    d = load(spark, sf_dir, "documents")
-    docs = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-    )
+    docs = _doc_tokens(spark, sf_dir)
     hits = (
         docs.select(
             "doc_id", F.posexplode("t").alias("pos", "tok")
@@ -2421,14 +2398,22 @@ def text_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("termo").isin(*BM25_QUERY))
     )
-    h1 = hits.select(
-        "doc_id", F.col("pos").alias("inicio")
-    ).alias("h1")
+    return _best_snippets(hits, docs)
+
+
+def _best_snippets(hits: DataFrame, docs: DataFrame) -> DataFrame:
+    """The snippet twins' shared core: query-term hits ``(doc_id, pos,
+    termo)`` → one candidate window per hit start (a hits x hits
+    equi-join on ``doc_id`` with the window range as a post-join
+    filter) → the best window per doc (a ``row_number`` over candidate
+    rows only) → its slice of the doc's token array ``t`` from
+    ``docs``."""
+    h1 = hits.select("doc_id", F.col("pos").alias("inicio"))
     h2 = hits.select(
         F.col("doc_id").alias("d2"),
         F.col("pos").alias("pos2"),
         F.col("termo").alias("termo2"),
-    ).alias("h2")
+    )
     cand = (
         h1.join(
             h2,
@@ -2452,9 +2437,7 @@ def text_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
     )
     trecho = F.array_join(
-        F.expr(
-            f"slice(t, cast(inicio + 1 as int), {SNIPPET_WINDOW})"
-        ),
+        F.expr(f"slice(t, cast(inicio + 1 as int), {SNIPPET_WINDOW})"),
         " ",
     )
     return melhor.join(docs, "doc_id").select(
@@ -2567,36 +2550,34 @@ def text_bm25_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap cuts carry explicit tie-breaks ((w DESC, termo) and
     (pontos DESC, doc_id)); stage-2 scores reuse the 6dp decimal-sum
     discipline of ``text_bm25_topk``."""
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .select(
-            "doc_id", F.size("t").alias("dl"), F.explode("t").alias("tok")
-        )
-        .select("doc_id", "dl", F.lower("tok").alias("termo"))
-    )
-    stats = (
-        toks.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias(
-                "avgdl"
-            ),
-        )
-    )
+    from agrobr_spark.store.posting import bm25_score
+
+    toks, stats = _bm25_scan_rows(spark, sf_dir)
     fb = (
         bm25_scores(spark, sf_dir)
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(RM3_FB_DOCS)
         .select("doc_id", "pontos")
     )
+    pesos = _rm3_pesos(spark, toks.join(F.broadcast(fb), "doc_id"))
+    tf2 = _tf(toks.join(F.broadcast(pesos.select("termo")), "termo"))
+    return (
+        bm25_score(tf2, stats, BM25_K1, BM25_B, peso=pesos)
+        .orderBy(F.desc("pontos"), F.asc("doc_id"))
+        .limit(BM25_TOPK)
+    )
+
+
+def _rm3_pesos(spark: SparkSession, fb_toks: DataFrame) -> DataFrame:
+    """The RM3 twins' shared query weights ``(termo, peso)`` from the
+    feedback docs' tokens ``(doc_id, dl, termo, pontos)``: feedback tf
+    (stopwords, original terms and short tokens dropped) → relevance
+    model ``w`` (sum over feedback docs of 6dp-rounded tf/dl x score,
+    DECIMAL-summed) → top-``RM3_EXP_TERMS`` expansion terms by
+    (w DESC, termo) → their ``total`` → ``RM3_ALPHA`` spread evenly
+    over the original terms and the rest by normalized ``w``."""
     fbtf = (
-        toks.join(F.broadcast(fb), "doc_id")
-        .filter(
+        fb_toks.filter(
             ~F.col("termo").isin(*BM25_QUERY)
             & ~F.col("termo").isin(*STOPWORDS)
             & (F.length("termo") >= RM3_MIN_LEN)
@@ -2630,50 +2611,13 @@ def text_bm25_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     orig = spark.createDataFrame(
         [(t,) for t in BM25_QUERY], "termo string"
     ).select("termo", F.round(F.lit(peso_orig), 6).alias("peso"))
-    pesos = orig.unionByName(
+    return orig.unionByName(
         expn.crossJoin(total).select(
             "termo",
             F.round(F.lit(beta) * F.col("w") / F.col("total"), 6).alias(
                 "peso"
             ),
         )
-    )
-    tf2 = (
-        toks.join(F.broadcast(pesos.select("termo")), "termo")
-        .groupBy("doc_id", "dl", "termo")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    df2 = tf2.groupBy("termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    idf = F.log(
-        1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + BM25_K1 * (
-        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    pontos2 = (
-        tf2.join(df2, "termo")
-        .join(F.broadcast(pesos), "termo")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(
-                F.col("peso") * idf * (F.col("tf") * (BM25_K1 + 1)) / denom,
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("p"),
-        )
-    )
-    return (
-        pontos2.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_termos"),
-            F.round(F.sum("p").cast("double"), 6).alias("pontos"),
-        )
-        .orderBy(F.desc("pontos"), F.asc("doc_id"))
-        .limit(BM25_TOPK)
     )
 
 
@@ -3140,46 +3084,7 @@ def text_snippets_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = query_postings(spark, path, tuple(sorted(BM25_QUERY))).select(
         "doc_id", F.col("pos").cast("bigint").alias("pos"), "termo"
     )
-    h1 = hits.select("doc_id", F.col("pos").alias("inicio"))
-    h2 = hits.select(
-        F.col("doc_id").alias("d2"),
-        F.col("pos").alias("pos2"),
-        F.col("termo").alias("termo2"),
-    )
-    cand = (
-        h1.join(
-            h2,
-            (F.col("doc_id") == F.col("d2"))
-            & F.col("pos2").between(
-                F.col("inicio"), F.col("inicio") + SNIPPET_WINDOW - 1
-            ),
-        )
-        .groupBy("doc_id", "inicio")
-        .agg(
-            F.countDistinct("termo2").cast("int").alias("n_termos"),
-            F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("n_termos"), F.desc("n_hits"), F.asc("inicio")
-    )
-    melhor = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    docs = (
-        load(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-    )
-    trecho = F.array_join(
-        F.expr(f"slice(t, cast(inicio + 1 as int), {SNIPPET_WINDOW})"),
-        " ",
-    )
-    return melhor.join(docs, "doc_id").select(
-        "doc_id", "inicio", "n_termos", "n_hits", trecho.alias("trecho")
-    )
+    return _best_snippets(hits, _doc_tokens(spark, sf_dir))
 
 
 from agrobr_spark.queries import _REGISTRY as _PT_REG  # noqa: E402
@@ -3218,108 +3123,31 @@ def text_bm25_rm3_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same oracle string as the scan path, so indexed ≡ scan —
     including identical expansion-term selection and weights — is
     driver-hash-checked every round."""
-    from agrobr_spark.store.posting import query_postings
+    from agrobr_spark.store.posting import bm25_score, query_postings
 
     path = _bm25_index_dir(spark, sf_dir)
     stats = read_parquet(spark, f"{path}/stats")
-    idf = F.log(
-        1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + BM25_K1 * (
-        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
-    )
-
-    def pontuar(tf: DataFrame, peso=None) -> DataFrame:
-        df_tab = tf.groupBy("termo").agg(
-            F.count(F.lit(1)).cast("bigint").alias("df")
-        )
-        base = tf.join(F.broadcast(df_tab), "termo").crossJoin(
-            F.broadcast(stats)
-        )
-        termo_p = idf * (F.col("tf") * (BM25_K1 + 1)) / denom
-        if peso is not None:
-            base = base.join(F.broadcast(peso), "termo")
-            termo_p = F.col("peso") * termo_p
-        return base.select(
-            "doc_id",
-            F.round(termo_p, 6).cast("decimal(18,6)").alias("p"),
-        ).groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("int").alias("n_termos"),
-            F.round(F.sum("p").cast("double"), 6).alias("pontos"),
-        )
-
     fb = (
-        pontuar(query_postings(spark, path, tuple(sorted(BM25_QUERY))))
+        bm25_score(
+            query_postings(spark, path, tuple(sorted(BM25_QUERY))),
+            stats,
+            BM25_K1,
+            BM25_B,
+        )
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(RM3_FB_DOCS)
         .select("doc_id", "pontos")
     )
-    fbdocs = (
-        load(spark, sf_dir, "documents")
-        .join(F.broadcast(fb), "doc_id")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            "pontos",
-            F.split(F.trim("text"), r"\s+").alias("t"),
-        )
+    fb_toks = _lowered_tokens(
+        _doc_tokens(spark, sf_dir).join(F.broadcast(fb), "doc_id"), "pontos"
     )
-    fbtf = (
-        fbdocs.select(
-            "doc_id",
-            "pontos",
-            F.size("t").alias("dl"),
-            F.explode("t").alias("tok"),
-        )
-        .select("doc_id", "pontos", "dl", F.lower("tok").alias("termo"))
-        .filter(
-            ~F.col("termo").isin(*BM25_QUERY)
-            & ~F.col("termo").isin(*STOPWORDS)
-            & (F.length("termo") >= RM3_MIN_LEN)
-        )
-        .groupBy("doc_id", "termo")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf"),
-            F.first("dl").alias("dl"),
-            F.first("pontos").alias("pontos"),
-        )
-    )
-    rmw = fbtf.groupBy("termo").agg(
-        F.round(
-            F.sum(
-                F.round(
-                    F.col("tf").cast("double")
-                    / F.col("dl").cast("double")
-                    * F.col("pontos"),
-                    6,
-                ).cast("decimal(18,6)")
-            ).cast("double"),
-            6,
-        ).alias("w")
-    )
-    expn = rmw.orderBy(F.desc("w"), F.asc("termo")).limit(RM3_EXP_TERMS)
-    total = expn.groupBy().agg(
-        F.sum(F.col("w").cast("decimal(18,6)")).cast("double").alias("total")
-    )
-    beta = round(1.0 - RM3_ALPHA, 6)
-    peso_orig = RM3_ALPHA / len(BM25_QUERY)
-    orig = spark.createDataFrame(
-        [(t,) for t in BM25_QUERY], "termo string"
-    ).select("termo", F.round(F.lit(peso_orig), 6).alias("peso"))
-    pesos = orig.unionByName(
-        expn.crossJoin(total).select(
-            "termo",
-            F.round(F.lit(beta) * F.col("w") / F.col("total"), 6).alias(
-                "peso"
-            ),
-        )
-    ).localCheckpoint(eager=True)
+    pesos = _rm3_pesos(spark, fb_toks).localCheckpoint(eager=True)
     # data-dependent expansion terms -> bounded (<= 3 + 3 row) collect
     # feeding the index reader's term->bucket pruning
     termos2 = tuple(sorted(r["termo"] for r in pesos.collect()))
     tf2 = query_postings(spark, path, termos2)
     return (
-        pontuar(tf2, peso=pesos.select("termo", "peso"))
+        bm25_score(tf2, stats, BM25_K1, BM25_B, peso=pesos)
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(BM25_TOPK)
     )

@@ -16,15 +16,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
+from agrobr_spark.operators.allpairs import _DOT
 from agrobr_spark.queries import register
 
 N_QUERIES = 5
 TOP_K = 10
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
 _NORM = (
     "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE),"
     " (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"

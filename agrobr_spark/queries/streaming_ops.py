@@ -140,21 +140,15 @@ def _versioned_state(
     skips an applied ``batch_id`` and otherwise commits
     ``step(batch, prev_state)`` as the next version, and a reader of
     the current state."""
-    import json
-
-    from agrobr_spark.store.fs import commit_json
+    from agrobr_spark.store.fs import commit_json, read_json
 
     manifest = f"{state_dir}/manifest.json"
     init = f"{stem}_init"
     write_parquet(spark.createDataFrame([], schema), f"{state_dir}/{init}")
     commit_json(manifest, {"applied_batch_ids": [], "current": init})
 
-    def applied() -> dict:
-        with open(manifest, encoding="utf-8") as fh:
-            return json.load(fh)
-
     def handle(batch: DataFrame, batch_id: int) -> None:
-        man = applied()
+        man = read_json(manifest)
         if int(batch_id) in man["applied_batch_ids"]:
             return
         prev = read_parquet(spark, f"{state_dir}/{man['current']}")
@@ -165,7 +159,8 @@ def _versioned_state(
         commit_json(manifest, man)
 
     def current() -> DataFrame:
-        return read_parquet(spark, f"{state_dir}/{applied()['current']}")
+        cur = read_json(manifest)["current"]
+        return read_parquet(spark, f"{state_dir}/{cur}")
 
     return handle, current
 

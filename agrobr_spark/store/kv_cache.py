@@ -20,8 +20,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import SparkSession
 
-from agrobr_spark.io import checkpoint_parquet, read_parquet, write_parquet
 from agrobr_spark.store.policies import POLICIES, next_expiry
+from agrobr_spark.store.table import ParquetStore
 
 CACHE_SCHEMA = T.StructType(
     [
@@ -47,13 +47,15 @@ class KVCache:
         self.spark = spark
         self.path = path
         self.version = version
+        # replacing the table is ParquetStore.rewrite: one write to a
+        # staged sibling, then a directory swap that the next open
+        # rolls forward if the writer dies mid-swap
+        self._store = ParquetStore(spark, path, ("key",))
 
     def _read(self):
-        from agrobr_spark.store.fs import path_exists
-
-        if not path_exists(self.spark, self.path):
+        if not self._store.exists():
             return self.spark.createDataFrame([], CACHE_SCHEMA)
-        return read_parquet(self.spark, self.path)
+        return self._store.read()
 
     def set(
         self,
@@ -76,7 +78,7 @@ class KVCache:
         ]
         # last-writer-wins on key: drop the old row, append the new one
         rest = self._read().filter(F.col("key") != key)
-        self._replace(
+        self._store.rewrite(
             rest.unionByName(self.spark.createDataFrame(row, CACHE_SCHEMA))
         )
 
@@ -103,14 +105,4 @@ class KVCache:
         return bytes(rows[0]["payload"]) if rows else None
 
     def invalidate(self, key: str) -> None:
-        self._replace(self._read().filter(F.col("key") != key))
-
-    def _replace(self, df) -> None:
-        """Overwrite the table with ``df``, a plan that reads it: stage
-        to a sibling path first so the overwrite never deletes the
-        files it is reading."""
-        from agrobr_spark.store.fs import delete_path
-
-        staged = checkpoint_parquet(df, self.path + "._new")
-        write_parquet(staged, self.path)
-        delete_path(self.spark, self.path + "._new")
+        self._store.rewrite(self._read().filter(F.col("key") != key))

@@ -58,15 +58,15 @@ cluster the same frame can instead go through
 but disk partitioning keeps the index a plain portable parquet
 directory here.
 
-The scoring helper is shared with the scan path
-(``queries/pipeline_text.bm25_scores``) so both are pinned to the
-same DuckDB oracle CTE — indexed ≡ scan is an oracle-checked
-identity, not a convention.
+``bm25_score`` is the one BM25 scorer and ``phrase_vote`` the one
+phrase matcher. The scan twins in ``queries/pipeline_text.py`` feed
+them rows tokenized from ``documents``; the indexed twins feed them
+``query_postings`` rows. Each pair shares one DuckDB oracle string,
+so indexed ≡ scan is the same code over a different row source, and
+oracle-checked.
 """
 
 from __future__ import annotations
-
-import json
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -81,9 +81,13 @@ def tokenize_postings(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       stats_obs: Observation | None = None) -> DataFrame:
     """Whitespace-lowered posting rows ``(doc_id, dl, termo, tf)`` —
-    the single tokenizer behind both the BM25 scan path and the
-    posting-index build (they must agree byte-for-byte for the
-    indexed ≡ scan identity to hold).
+    the BM25 index's tokenizer. The scan path (``bm25_scores``) splits
+    with the same token semantics (indexed ≡ scan needs them to agree
+    byte-for-byte) but keeps its own split: it filters to the query
+    terms BEFORE the tf aggregation, where this function aggregates
+    every term. A prototype that routed the scan through here kept the
+    oracle green and raised ``text_bm25_rm3`` from 21 to 24 warm Spark
+    jobs (sf0.01, local[3]).
 
     ``stats_obs``: an Observation attached at the ONE-ROW-PER-DOC
     point of the plan (after the empty-text filter, before the
@@ -127,47 +131,51 @@ def _obs_metrics(obs: Observation) -> dict | None:
         return None
 
 
-def _written_dir_stats(spark: SparkSession, postings_dir: str,
-                       id_col: str) -> dict:
-    """Fallback stats when the observation did not fire: emptiness
-    from the directory listing, (n, sum_dl) from the written rows —
-    byte-identical to the r13 read-back semantics."""
+def _written_dir_stats(spark: SparkSession, postings_dir: str) -> dict:
+    """Fallback when the observation did not fire: emptiness from the
+    directory listing, ``{"n": 0 | 1}`` — all the empty-epoch decision
+    needs. The BM25 sidecar re-derives its (n, sum_dl) from the written
+    rows (:func:`_write_stats_row`)."""
     from agrobr_spark.store.fs import hadoop_fs
 
     fs, hdir = hadoop_fs(spark, postings_dir)
-    has_rows = any(
+    return {"n": int(any(
         s.getPath().getName().startswith("bucket=")
         for s in fs.listStatus(hdir)
-    )
-    if not has_rows:
-        return {"n": 0, "sum_dl": None}
-    row = (
-        read_parquet(spark, postings_dir)
-        .groupBy(id_col)
-        .agg(F.first("dl").alias("dl"))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-        )
-        .first()
-    )
-    return {"n": row["n"], "sum_dl": row["sum_dl"]}
+    ))}
 
 
-def _write_stats_row(
-    spark: SparkSession, path: str, n: int, sum_dl, with_avgdl: bool
-) -> None:
-    """One-row stats sidecar from DRIVER-held observation values: a
-    no-input local-relation write instead of the r13 read-back scan
-    of the just-written postings. ``sum_dl`` is None when n == 0
-    (SUM over zero rows — matches the old aggregate's NULL).
+def _write_stats_row(spark: SparkSession, gen_dir: str, id_col: str,
+                     got: dict, with_avgdl: bool) -> None:
+    """The BM25 index's one-row stats sidecar ``gen_dir/stats`` from
+    DRIVER-held observation values ``got``: a no-input local-relation
+    write instead of the r13 read-back scan of the just-written
+    postings. ``sum_dl`` is None when n == 0 (SUM over zero rows —
+    matches the old aggregate's NULL). When the observation did not
+    fire but rows were written (``got`` carries no ``sum_dl``), (n,
+    sum_dl) are re-derived per distinct id from ``gen_dir/postings`` —
+    the r13 read-back semantics, which match the postings even when an
+    id is duplicated.
 
     Built over ``spark.range(1)`` rather than a Python createDataFrame
     local relation: measured on this very write, coalesce(1) over a
     pickled LocalTableScan costs 5-9 s per call while the range-backed
     equivalent is ~0.2 s — the entire saving of skipping the read-back
     would have been handed straight back."""
+    n, sum_dl = got["n"], got.get("sum_dl")
+    if n and "sum_dl" not in got:
+        row = (
+            read_parquet(spark, f"{gen_dir}/postings")
+            .groupBy(id_col)
+            .agg(F.first("dl").alias("dl"))
+            .groupBy()
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                F.sum("dl").cast("bigint").alias("sum_dl"),
+            )
+            .first()
+        )
+        n, sum_dl = row["n"], row["sum_dl"]
     cols = [
         F.lit(int(n)).cast("bigint").alias("n"),
         F.lit(None if sum_dl is None else int(sum_dl))
@@ -180,7 +188,95 @@ def _write_stats_row(
         )
         cols.append(F.lit(avgdl).cast("double").alias("avgdl"))
     df = spark.range(1).select(*cols)
-    write_parquet(df.coalesce(1), path)
+    write_parquet(df.coalesce(1), f"{gen_dir}/stats")
+
+
+def _write_postings(docs: DataFrame, postings_dir: str, n_buckets: int,
+                    id_col: str, text_col: str, tokenize) -> dict:
+    """The one postings write behind both index kinds' build and
+    update: ``tokenize(docs, id_col, text_col, obs)`` (the kind's
+    tokenizer, ``obs`` attached at its one-row-per-doc point),
+    bucket-partitioned at ``n_buckets``. ONE tokenizer execution (r13:
+    the emptiness probe, the postings write and the stats write each
+    re-ran it) and ZERO read-back jobs (r14): the doc count (and, for
+    BM25, the summed dl) rides the write job as an Observation.
+    Returns the observation's metrics, or the listing fallback's
+    ``{"n": 0 | 1}`` when it did not fire.
+
+    Precondition of the observation: ``docs`` holds ONE row per
+    ``id_col``. It counts input rows, so a duplicated id would count
+    twice in n and sum_dl while the tf aggregate folds it into one
+    posting doc. Catalog corpora are keyed on doc_id."""
+    obs = Observation()
+    rows = tokenize(docs, id_col, text_col, obs)
+    bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
+    write_parquet(
+        rows.withColumn("bucket", bucket.cast("int")),
+        postings_dir,
+        ("bucket",),
+    )
+    return _obs_metrics(obs) or _written_dir_stats(
+        docs.sparkSession, postings_dir
+    )
+
+
+def _build_index(docs: DataFrame, path: str, n_buckets: int, id_col: str,
+                 text_col: str, kind: str, tokenize, write_stats) -> None:
+    """The one build path: postings write, then the kind's stats
+    sidecar (``write_stats``; None for positions, which carry no
+    corpus aggregate, so ``stats_dir`` stays absent on disk), then the
+    version-0 manifest."""
+    got = _write_postings(
+        docs, f"{path}/postings", n_buckets, id_col, text_col, tokenize
+    )
+    if write_stats is not None:
+        write_stats(docs.sparkSession, path, id_col, got, with_avgdl=True)
+    _write_manifest(path, {
+        "n_buckets": int(n_buckets),
+        "tokenizer_version": TOKENIZER_VERSION,
+        "id_col": id_col,
+        "kind": kind,
+        "version": 0,
+        "postings_dir": "postings",
+        "stats_dir": "stats",
+        "active_batches": [],
+        "applied_batch_ids": [],
+    })
+
+
+def _update_index(docs_new: DataFrame, path: str, id_col: str,
+                  text_col: str, batch_id: int | None, tokenize,
+                  write_stats) -> None:
+    """The one staged-epoch update path (protocol in
+    :func:`update_posting_index`'s docstring): replay guard, staged
+    ``batches/b<id>/`` write at the manifest-frozen n_buckets, the
+    kind's stats delta (``write_stats``, None for positions), then the
+    atomic manifest commit."""
+    _require_valid_epoch_id(batch_id)
+    man = read_manifest(path)
+    if batch_id is not None and int(batch_id) in man.get(
+        "applied_batch_ids", []
+    ):
+        return
+    bid = int(batch_id) if batch_id is not None else _next_local_batch(man)
+    bdir = _batch_dir(path, bid)
+    got = _write_postings(
+        docs_new, f"{bdir}/postings", int(man["n_buckets"]), id_col,
+        text_col, tokenize,
+    )
+    spark = docs_new.sparkSession
+    if not got["n"]:
+        # committing a rows-free directory would brick every later
+        # read: drop it, and a replayed empty epoch records only its
+        # batch_id guard
+        from agrobr_spark.store.fs import delete_path
+
+        delete_path(spark, bdir)
+        _record_empty_epoch(path, batch_id)
+        return
+    if write_stats is not None:
+        write_stats(spark, bdir, id_col, got, with_avgdl=False)
+    _commit_batch(path, bid, batch_id is not None)
 
 
 def build_posting_index(
@@ -199,37 +295,8 @@ def build_posting_index(
     — one extra columnar scan per build). No collect of corpus-sized
     data — the driver-side artifacts are two scalars and the manifest
     dict."""
-    obs = Observation()
-    # precondition of stats_obs: ``docs`` holds ONE row per ``id_col``.
-    # The observation counts input rows, so a duplicated id would count
-    # twice in n and sum_dl while the tf aggregate folds it into one
-    # posting doc. Catalog corpora are keyed on doc_id; the listing
-    # fallback (_written_dir_stats) derives the stats per distinct id
-    # from the written postings, so it matches them either way.
-    postings = tokenize_postings(docs, id_col, text_col, stats_obs=obs)
-    bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
-    write_parquet(
-        postings.withColumn("bucket", bucket.cast("int")),
-        f"{path}/postings",
-        ("bucket",),
-    )
-    got = _obs_metrics(obs) or _written_dir_stats(
-        docs.sparkSession, f"{path}/postings", id_col
-    )
-    _write_stats_row(
-        docs.sparkSession, f"{path}/stats",
-        got["n"] or 0, got["sum_dl"], with_avgdl=True,
-    )
-    _write_manifest(path, {
-        "n_buckets": int(n_buckets),
-        "tokenizer_version": TOKENIZER_VERSION,
-        "id_col": id_col,
-        "version": 0,
-        "postings_dir": "postings",
-        "stats_dir": "stats",
-        "active_batches": [],
-        "applied_batch_ids": [],
-    })
+    _build_index(docs, path, n_buckets, id_col, text_col, "bm25",
+                 tokenize_postings, _write_stats_row)
 
 
 def update_posting_index(
@@ -255,8 +322,9 @@ def update_posting_index(
 
     Contract: ``docs_new`` holds ids not already indexed (the
     admission pipelines guarantee this — a doc is indexed at most
-    once); re-appending an id would double-count its postings, the
-    same append-only semantics as the survivor MERGE's staging input.
+    once) and unique within the batch; re-appending an id would
+    double-count its postings, the same append-only semantics as the
+    survivor MERGE's staging input.
 
     Durability paths (r9 ADVICE — the old append-then-manifest
     sequence was not crash-safe):
@@ -273,48 +341,8 @@ def update_posting_index(
       path. Nothing ever appends into a directory a reader may be
       mid-scan on.
     """
-    _require_valid_epoch_id(batch_id)
-    man = read_manifest(path)
-    if batch_id is not None and int(batch_id) in man.get(
-        "applied_batch_ids", []
-    ):
-        return
-    bid = int(batch_id) if batch_id is not None else _next_local_batch(man)
-    nb = int(man["n_buckets"])
-    obs = Observation()
-    # same one-row-per-id precondition as build_posting_index (the
-    # docstring's contract: ids are new AND unique within the batch)
-    postings = tokenize_postings(docs_new, id_col, text_col, stats_obs=obs)
-    bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(nb))
-    bdir = _batch_dir(path, bid)
-    # ONE tokenizer execution per epoch (r13: the emptiness probe, the
-    # postings write and the stats write each re-ran it — 3x the
-    # epoch's tokenization cost), and since r14 ZERO read-back jobs:
-    # the epoch's doc count and summed dl ride the postings write as an
-    # Observation at the one-per-doc point of the plan, so emptiness
-    # (n == 0 — committing a rows-free directory would brick every
-    # later read, a replayed empty epoch records only its batch_id
-    # guard) and the stats sidecar both come from the write job itself.
-    write_parquet(
-        postings.withColumn("bucket", bucket.cast("int")),
-        f"{bdir}/postings",
-        ("bucket",),
-    )
-    spark = docs_new.sparkSession
-    got = _obs_metrics(obs) or _written_dir_stats(
-        spark, f"{bdir}/postings", id_col
-    )
-    from agrobr_spark.store.fs import delete_path
-
-    if not got["n"]:
-        delete_path(spark, bdir)
-        _record_empty_epoch(path, batch_id)
-        return
-    _write_stats_row(
-        spark, f"{bdir}/stats", got["n"], got["sum_dl"] or 0,
-        with_avgdl=False,
-    )
-    _commit_batch(path, bid, batch_id is not None)
+    _update_index(docs_new, path, id_col, text_col, batch_id,
+                  tokenize_postings, _write_stats_row)
 
 
 def _batch_rel(bid: int) -> str:
@@ -467,12 +495,13 @@ def read_manifest(path: str) -> dict:
     # same loud local-posix scope as the write side (r10 ADVICE: a
     # remote index path must fail here, not silently read/write the
     # driver's local disk while the data lands remotely)
-    from agrobr_spark.store.fs import require_local_path
+    from agrobr_spark.store.fs import read_json
 
-    with open(
-        f"{require_local_path(path)}/manifest.json", encoding="utf-8"
-    ) as fh:
-        man = json.load(fh)
+    man = read_json(f"{path}/manifest.json")
+    if man is None:
+        raise FileNotFoundError(
+            f"posting-index manifest missing under {path!r}"
+        )
     return _normalize_manifest(man)
 
 
@@ -684,6 +713,60 @@ def query_postings(
     )
 
 
+def bm25_score(
+    tf: DataFrame,
+    stats: DataFrame,
+    k1: float,
+    b: float,
+    id_col: str = "doc_id",
+    peso: DataFrame | None = None,
+) -> DataFrame:
+    """Per-doc BM25 scores ``(id, n_termos, pontos)`` — the package's
+    one BM25 score expression, behind the scan twins (``tf`` tokenized
+    from the corpus) and the indexed twins (``tf`` from
+    ``query_postings``) alike.
+
+    ``tf`` holds posting rows ``(id, dl, termo, tf)`` of the query
+    terms; ``stats`` is the one-row corpus ``(n, avgdl)``. df folds
+    from ``tf`` (never re-touches the corpus) and joins without a
+    broadcast hint: forcing a broadcast of that derived aggregate can
+    re-run the tf lineage as a separate job, while AQE broadcasts the
+    |query|-row table at runtime anyway; ``stats`` joins broadcast.
+    Per (doc, term): ``idf · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))``
+    with ``idf = ln(1 + (n-df+0.5)/(df+0.5))``, rounded
+    to 6dp DECIMAL and summed per doc, so rankings and their tie cuts
+    are deterministic on both engines.
+
+    ``peso``: a ``(termo, peso)`` frame weighting the query terms (RM3
+    stage 2). The term score is then ``peso · idf · tf·(k1+1) /
+    denom``, multiplied left to right as the DuckDB oracle writes it."""
+    df_tab = tf.groupBy("termo").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df")
+    )
+    rows = tf.join(df_tab, "termo")
+    termo_p = F.log(
+        1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    if peso is not None:
+        rows = rows.join(F.broadcast(peso), "termo")
+        termo_p = F.col("peso") * termo_p
+    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+    return (
+        rows.crossJoin(F.broadcast(stats))
+        .select(
+            id_col,
+            F.round(termo_p * (F.col("tf") * (k1 + 1)) / denom, 6)
+            .cast("decimal(18,6)")
+            .alias("p"),
+        )
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("n_termos"),
+            F.round(F.sum("p").cast("double"), 6).alias("pontos"),
+        )
+    )
+
+
 def bm25_topk_indexed(
     spark: SparkSession,
     path: str,
@@ -693,34 +776,16 @@ def bm25_topk_indexed(
     b: float,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k BM25 answer from the posting index — identical scoring
-    (and therefore identical oracle) to the scan path's
-    ``bm25_scores``: df folds from the pruned posting read, (n, avgdl)
-    come from the one-row stats table, per-term contributions are
-    6dp-rounded and DECIMAL-summed, tie-break on doc id. The corpus is
-    never touched."""
-    tf = query_postings(spark, path, terms)
-    stats = read_stats(spark, path)
-    df_tab = tf.groupBy("termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    idf = F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    pontos = (
-        tf.join(F.broadcast(df_tab), "termo")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            id_col,
-            F.round(idf * (F.col("tf") * (k1 + 1)) / denom, 6)
-            .cast("decimal(18,6)")
-            .alias("p"),
-        )
-    )
+    """Top-k BM25 answer from the posting index: :func:`bm25_score`
+    over the pruned posting read, (n, avgdl) from the one-row stats
+    table, tie-break on doc id. The corpus is never touched."""
     return (
-        pontos.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_termos"),
-            F.round(F.sum("p").cast("double"), 6).alias("pontos"),
+        bm25_score(
+            query_postings(spark, path, terms),
+            read_stats(spark, path),
+            k1,
+            b,
+            id_col,
         )
         .orderBy(F.desc("pontos"), id_col)
         .limit(int(k))
@@ -774,24 +839,8 @@ def build_positional_index(
     the corpus grows — the inverted-index property extended with
     positions. One corpus pass, no driver-side data beyond the
     manifest."""
-    rows = tokenize_positional(docs, id_col, text_col)
-    bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
-    write_parquet(
-        rows.withColumn("bucket", bucket.cast("int")),
-        f"{path}/postings",
-        ("bucket",),
-    )
-    _write_manifest(path, {
-        "n_buckets": int(n_buckets),
-        "tokenizer_version": TOKENIZER_VERSION,
-        "id_col": id_col,
-        "kind": "positional",
-        "version": 0,
-        "postings_dir": "postings",
-        "stats_dir": "stats",  # absent on disk: positional has no stats
-        "active_batches": [],
-        "applied_batch_ids": [],
-    })
+    _build_index(docs, path, n_buckets, id_col, text_col, "positional",
+                 tokenize_positional, None)
 
 
 def update_positional_index(
@@ -808,81 +857,34 @@ def update_positional_index(
     ``update_posting_index`` (no stats sidecar: positions carry no
     corpus aggregate). Same append-only contract: ids must not
     already be indexed."""
-    _require_valid_epoch_id(batch_id)
-    man = read_manifest(path)
-    if batch_id is not None and int(batch_id) in man.get(
-        "applied_batch_ids", []
-    ):
-        return
-    bid = int(batch_id) if batch_id is not None else _next_local_batch(man)
-    nb = int(man["n_buckets"])
-    # ONE tokenizer execution per epoch (r14): the r13 emptiness probe
-    # (limit(1).count()) ran the split+posexplode a second time; the
-    # doc count now rides the write job as an Observation, and an
-    # empty epoch's staged directory is dropped after the fact exactly
-    # like update_posting_index's.
-    obs = Observation()
-    rows = tokenize_positional(docs_new, id_col, text_col, count_obs=obs)
-    bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(nb))
-    bdir = _batch_dir(path, bid)
-    write_parquet(
-        rows.withColumn("bucket", bucket.cast("int")),
-        f"{bdir}/postings",
-        ("bucket",),
-    )
-    got = _obs_metrics(obs)
-    if got is None:
-        # observation optimized away (provably-empty input): decide
-        # from the written directory like update_posting_index
-        from agrobr_spark.store.fs import hadoop_fs
-
-        fs, hdir = hadoop_fs(docs_new.sparkSession, f"{bdir}/postings")
-        got = {
-            "n": int(
-                any(
-                    s.getPath().getName().startswith("bucket=")
-                    for s in fs.listStatus(hdir)
-                )
-            )
-        }
-    if not got["n"]:
-        from agrobr_spark.store.fs import delete_path
-
-        delete_path(docs_new.sparkSession, bdir)
-        _record_empty_epoch(path, batch_id)
-        return
-    _commit_batch(path, bid, batch_id is not None)
+    _update_index(docs_new, path, id_col, text_col, batch_id,
+                  tokenize_positional, None)
 
 
-def phrase_match_indexed(
-    spark: SparkSession,
-    path: str,
-    phrases: tuple[str, ...],
+def phrase_vote(
+    rows: DataFrame,
+    terms: list[tuple[str, str, int]],
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact phrase occurrences answered from the positional index —
-    the scan path's candidate-start vote (token at position p
-    matching phrase offset o votes for start p − o; a start with ALL
-    offsets present is one occurrence) run over ONLY the pruned
-    posting read of the phrases' terms. Output
-    ``(doc_id, frase, n_ocorrencias)``, identical to
-    ``text_phrase_match`` — the catalog pins the identity against one
-    shared oracle."""
-    terms = [
-        (frase, termo, off)
-        for frase in phrases
-        for off, termo in enumerate(frase.split())
-    ]
-    postings = query_postings(
-        spark, path, tuple(sorted({t for _, t, _ in terms}))
-    )
-    termdf = spark.createDataFrame(
+    """Exact phrase occurrences ``(id, frase, n_ocorrencias)`` — the
+    one phrase matcher, behind the scan twin (``rows`` tokenized from
+    the corpus) and the indexed twin (``rows`` from
+    ``query_postings``) alike.
+
+    ``rows`` are positional tokens ``(id, pos, termo)``; ``terms`` is
+    each phrase's ``(frase, termo, deslocamento)`` decomposition. A
+    token at position p matching offset o votes for start p − o, and
+    a start with ALL offsets present is one occurrence. Both small
+    tables join broadcast, so only query-term tokens reach the
+    (doc, phrase, start) aggregation, whose groups hold at most
+    |phrase| rows."""
+    termdf = rows.sparkSession.createDataFrame(
         terms, "frase string, termo string, deslocamento int"
     )
     lens = termdf.groupBy("frase").agg(
         F.count(F.lit(1)).alias("comprimento")
     )
-    m = postings.join(F.broadcast(termdf), "termo").select(
+    m = rows.join(F.broadcast(termdf), "termo").select(
         id_col,
         "frase",
         (F.col("pos") - F.col("deslocamento")).alias("inicio"),
@@ -896,3 +898,25 @@ def phrase_match_indexed(
         .groupBy(id_col, "frase")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ocorrencias"))
     )
+
+
+def phrase_match_indexed(
+    spark: SparkSession,
+    path: str,
+    phrases: tuple[str, ...],
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Exact phrase occurrences answered from the positional index:
+    :func:`phrase_vote` over ONLY the pruned posting read of the
+    phrases' terms. Output ``(doc_id, frase, n_ocorrencias)``,
+    identical to ``text_phrase_match`` — the catalog pins the identity
+    against one shared oracle."""
+    terms = [
+        (frase, termo, off)
+        for frase in phrases
+        for off, termo in enumerate(frase.split())
+    ]
+    postings = query_postings(
+        spark, path, tuple(sorted({t for _, t, _ in terms}))
+    )
+    return phrase_vote(postings, terms, id_col)

@@ -1,0 +1,67 @@
+"""Scan and indexed retrieval twins share one core.
+
+Each retrieval surface ships as a scan twin (rows tokenized from
+``documents``) and an indexed twin (rows read from the posting index)
+that call the same scorer, phrase vote, snippet window and RM3
+weights. The default oracle smoke subset runs none of these pairs, so
+the equality is checked here directly, plus a guard that keeps the
+BM25 idf term and the Spark dot product in their one definition."""
+
+from __future__ import annotations
+
+import re
+
+import pytest
+
+from tests.conftest import SF_SMOKE
+from tests.test_concurrency import PACKAGE, _enclosing_functions
+
+_TWINS = [
+    ("text_bm25_topk", "text_bm25_indexed"),
+    ("text_bm25_rm3", "text_bm25_rm3_indexed"),
+    ("text_phrase_match", "text_phrase_indexed"),
+    ("text_snippets", "text_snippets_indexed"),
+]
+
+
+@pytest.mark.parametrize("scan,indexed", _TWINS)
+def test_scan_and_indexed_twins_return_the_same_rows(spark, scan, indexed):
+    from agrobr_spark.queries import catalog
+
+    cat = catalog()
+    a = cat[scan].fn(spark, SF_SMOKE).localCheckpoint(eager=True)
+    b = cat[indexed].fn(spark, SF_SMOKE).localCheckpoint(eager=True)
+    assert a.columns == b.columns
+    assert a.count() > 0, f"{scan}: empty result weakens the check"
+    assert a.exceptAll(b).count() == 0, (scan, a.exceptAll(b).collect())
+    assert b.exceptAll(a).count() == 0, (indexed, b.exceptAll(a).collect())
+
+
+#: the BM25 idf term ``(n - df + 0.5)``; allowed only in bm25_score
+_IDF = re.compile(r"-\s*F\.col\(\s*[\"']df[\"']\s*\)\s*\+\s*0\.5")
+#: a Spark dot definition ``aggregate(zip_with(a, b, (x, y) -> ...``;
+#: allowed only in operators/allpairs.py
+_DOT = re.compile(r"aggregate\(\s*zip_with\(\s*[^(),]+,\s*[^(),]+,\s*\(")
+
+
+def test_bm25_idf_and_spark_dot_have_one_definition():
+    """The BM25 score lives in store/posting.bm25_score and the Spark
+    dot product in operators/allpairs.py; a copy elsewhere fails with
+    its file:line."""
+    offenders = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        rel = f.relative_to(PACKAGE).as_posix()
+        src = f.read_text(encoding="utf-8")
+        owner = _enclosing_functions(src)
+        for pattern, allowed in (
+            (_IDF, lambda fn: (rel, fn) == ("store/posting.py", "bm25_score")),
+            (_DOT, lambda fn: rel == "operators/allpairs.py"),
+        ):
+            for m in pattern.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                if not allowed(owner.get(line)):
+                    offenders.append(f"agrobr_spark/{rel}:{line}")
+    assert not offenders, (
+        "BM25 idf term outside store/posting.bm25_score or Spark dot "
+        "definition outside operators/allpairs.py: " + ", ".join(offenders)
+    )

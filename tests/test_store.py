@@ -413,6 +413,39 @@ def test_rewrite_staged_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(staged)
 
 
+def test_kv_cache_survives_replacement_killed_after_live_delete(
+    spark, tmp_path, monkeypatch
+):
+    """A KVCache table replacement killed after the live directory was
+    removed loses nothing: a new KVCache on that path rolls the
+    completed stage forward, so a key set before the crash is still
+    served. (An overwrite in place had no recovery here: the cache
+    read as empty and the good copy stayed unread in a sibling.)"""
+    import os
+
+    import agrobr_spark.store.fs as fs
+    from agrobr_spark.store.kv_cache import KVCache
+
+    path = str(tmp_path / "kv")
+    KVCache(spark, path).set("a", b"1")
+    real_delete = fs.delete_path
+
+    def killed_after_live_delete(sp, p):
+        out = real_delete(sp, p)
+        if p == path:
+            raise RuntimeError("writer killed after removing the live table")
+        return out
+
+    monkeypatch.setattr(fs, "delete_path", killed_after_live_delete)
+    with pytest.raises(RuntimeError, match="killed"):
+        KVCache(spark, path).set("b", b"2")
+    monkeypatch.undo()
+    assert not os.path.exists(path)  # the live table really was removed
+    kv = KVCache(spark, path)
+    assert kv.get("a") == b"1"
+    assert kv.get("b") == b"2"
+
+
 def test_overwrite_resolves_pending_stage(spark, tmp_path):
     """An uncleared committed stage pending at overwrite() time must
     be resolved BEFORE the overwrite — otherwise the next read's
