@@ -929,11 +929,12 @@ def update_graph_labels_frame(
     # must land in both layouts before this fold reads either
     _replay_pending_label_delta(spark, labels, byc, store_dir, nb)
     e_all = edges.read().select("vec_id", "neighbor_id", "balde")
-    # lazy checkpoint + count: ONE job materializes the frame AND
-    # answers the empty-fold probe (r14, VERDICT #7 — the eager form
-    # paid a dedicated materialization job before the count)
+    # lazy checkpoint + isEmpty: the probe is the first action, and
+    # under AQE the checkpoint has already run the distinct's shuffle,
+    # so the probe is ONE job (a count() was two: its own aggregate
+    # adds a stage)
     changed = changed.select("vec_id").distinct().localCheckpoint(eager=False)
-    if not changed.count():
+    if changed.isEmpty():
         # EMPTY fold input (empty epoch / replay of an empty batch):
         # no seeds, no touched components, no delta — the whole
         # seed/members/journal chain below would be no-op jobs. The
@@ -1162,12 +1163,12 @@ def update_graph_pageranks_frame(
     re-ranks its semantic neighborhoods, never the corpus.
     Replay-idempotent: same labels + same edges → the same
     deterministic trajectory, and the MERGE is PK-last-writer-wins."""
-    # lazy checkpoint + count: one job for materialization AND the
-    # empty-fold probe (r14, VERDICT #7)
+    # lazy checkpoint + isEmpty: ONE job for the empty-fold probe
+    # (a count() on a non-empty frame was two)
     relabeled = relabeled.select(
         "vec_id", "componente"
     ).localCheckpoint(eager=False)
-    if not relabeled.count():
+    if relabeled.isEmpty():
         # EMPTY relabel set: no component's induced subgraph changed,
         # so the fixed-iteration loop, the delta compare and the
         # merge are all no-ops — skip their jobs (empty epochs and
@@ -1181,9 +1182,10 @@ def update_graph_pageranks_frame(
     e_s = _pruned_by_ids(edges.read(), ids, nb).select(
         "vec_id", "neighbor_id"
     )
-    # lazy: the merge's staging count is the first action and
-    # materializes the re-ranked frame before the store is touched
-    # (merge_upsert counts staging before reading/writing the table)
+    # lazy: the merge's first action materializes the re-ranked frame
+    # (into an existing partitioned store that is its grouped staging
+    # count, run before the table is read or written; into a new store
+    # it is the one staged write)
     ranked = _component_pageranks(relabeled, e_s).localCheckpoint(
         eager=False
     )

@@ -85,7 +85,8 @@ def pagerank_mass(
     step's contribution aggregate twice (in-edge sums and dangling
     quota), so its static plan doubles per iteration, and its cost at
     PR_ITER=5 relies on AQE runtime exchange reuse; raising PR_ITER or
-    disabling reuse makes execution O(2^iters).) At 100 TB
+    disabling reuse makes execution O(2^iters), so that frame raises
+    when AQE or exchange reuse is off.) At 100 TB
     with many iterations, per-step persisted tables remain the
     standard Pregel-style fallback; at the fixed PR_ITER-step
     trajectory the linear chain is strictly cheaper."""

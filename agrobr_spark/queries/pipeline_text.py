@@ -1563,7 +1563,8 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     so indexed ≡ scan is driver-hash-checked, not asserted.
 
     Plan: the query's terms map to buckets via the build's own
-    xxhash64 (one |query|-row job); the posting read lists and scans
+    xxhash64 (over a |query|-row local relation the optimizer folds:
+    no job); the posting read lists and scans
     ONLY those partitions (`bucket IN` partition pruning + `termo IN`
     pushed filter), df folds from that pruned read, (n, avgdl) come
     from the one-row stats table. Query cost is O(posting rows of the

@@ -1336,7 +1336,26 @@ def _pagerank_frame(
     the identical expression. A graph with NO dangling nodes yields no
     null group: the broadcast left join leaves ``quota`` NULL and the
     update coalesces it to 0.0, matching the old coalesced empty-sum
-    aggregate."""
+    aggregate.
+
+    The chain reads each step's aggregate twice, so its static plan
+    doubles per step (2^PR_ITER); only AQE's runtime exchange reuse
+    executes each step once. The redistributed frame therefore raises
+    ``ValueError`` up front when ``spark.sql.adaptive.enabled`` or
+    ``spark.sql.exchange.reuse`` is off, instead of running an
+    exponential plan."""
+    if redistribute:
+        off = [
+            k
+            for k in ("spark.sql.adaptive.enabled", "spark.sql.exchange.reuse")
+            if spark.conf.get(k, "true").strip().lower() != "true"
+        ]
+        if off:
+            raise ValueError(
+                "redistributed PageRank composes its "
+                f"{PR_ITER} steps lazily and needs runtime exchange reuse "
+                f"to run each step once; {', '.join(off)} must be true"
+            )
     g = (
         sim_knn_graph(spark, sf_dir)
         .select(F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"))

@@ -690,14 +690,21 @@ def query_postings(
     """Posting rows for ``terms`` read from only their buckets.
 
     The term→bucket map is computed with the SAME xxhash64 the build
-    used, via one |terms|-row Spark job (bounded collect — never a
-    Python re-implementation of the hash). The returned scan carries
+    used, by Spark itself (never a Python re-implementation of the
+    hash) over a |terms|-row local relation, which the optimizer folds
+    on the driver: the collect submits no job. The returned scan carries
     ``bucket IN (...)`` (partition pruning: untouched buckets are
     never listed or read) and ``termo IN (...)`` (pushed filter
     inside the pruned partitions)."""
+    import pandas as pd
+
     man = read_manifest(path)
     nb = int(man["n_buckets"])
-    tdf = spark.createDataFrame([(t,) for t in terms], ["termo"])
+    # from pandas, not a list: a list becomes a parallelized RDD whose
+    # collect is a job, a pandas frame a LocalRelation folded to zero
+    tdf = spark.createDataFrame(
+        pd.DataFrame({"termo": list(terms)}, dtype=object), "termo string"
+    )
     bkts = sorted(
         {
             r["b"]

@@ -18,7 +18,7 @@ Scale design (100 TB posture):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from agrobr_spark.io import read_parquet, write_parquet
 
@@ -224,22 +224,39 @@ class ParquetStore:
         is the redo record (present → roll forward; torn → a write
         entry point rolls it back), and the main dir is only deleted
         AFTER the stage is durably complete."""
-        self._recover_staged_swap(clean_torn=True)
-        tmp = self._staged_dir()
-        write_parquet(df, tmp, self._partition_by())
-        # commit point: tmp/_SUCCESS exists from here on — this swap
-        # (or any racing reader's roll-forward; the lock serializes
+        self._stage(df)
+        # commit point: the stage's _SUCCESS exists from here on — this
+        # swap (or any racing reader's roll-forward; the lock serializes
         # them and each re-checks inside it) finishes the rewrite.
         # The rename keeps the stage's footer-schema pin (io.py keys
         # pins by what a directory holds, not by its name)
         self._swap_committed_stage()
 
-    def _merged(self, target: DataFrame, staging: DataFrame) -> DataFrame:
+    def _stage(self, df: DataFrame) -> None:
+        """Write ``df`` to the staging sibling, after resolving any
+        crashed rewrite's stage: the first leg of :meth:`rewrite`."""
+        self._recover_staged_swap(clean_torn=True)
+        write_parquet(df, self._staged_dir(), self._partition_by())
+
+    def _merged(
+        self,
+        target: DataFrame,
+        staging: DataFrame,
+        obs: Observation | None = None,
+    ) -> DataFrame:
         tcols = target.columns
         staging = staging.select(*tcols)
         unioned = target.withColumn("_prio", F.lit(0)).unionByName(
             staging.withColumn("_prio", F.lit(1))
         )
+        if obs is not None:
+            # the staged row count, observed on the union rather than on
+            # ``staging``: an Observation fires only in the session that
+            # registered it, and the merged frame runs in the target's
+            # session, which a foreachBatch micro-batch's is not
+            unioned = unioned.observe(
+                obs, F.count(F.when(F.col("_prio") == 1, 1)).alias("n")
+            )
         # NULL-safe PK grouping: coalesce each key into a sentinel-tagged
         # string only for partitioning the window (values stay untouched)
         order = [F.col("_prio").desc()] + [F.col(c).desc() for c in self.precedence]
@@ -263,7 +280,9 @@ class ParquetStore:
 
         Returns the number of staged rows. Only partitions present in
         the staging batch are rewritten (dynamic partition overwrite);
-        an unpartitioned table falls back to full rewrite.
+        an unpartitioned table falls back to full rewrite. An empty
+        batch returns 0 and leaves the table as it was: a new store
+        stays absent, an existing one keeps its files.
 
         ``extra_partitions``: additional partition values to include
         in the rewrite even though no staged row lands there. Needed
@@ -277,21 +296,51 @@ class ParquetStore:
         written data, so an emptied one would otherwise keep its old
         files).
 
+        Without ``staged_count`` the row count rides an action the
+        merge runs anyway, so no standalone count job is paid: a new
+        store or an unpartitioned rewrite writes to the staging
+        sibling with the staged row count riding that write as an
+        Observation, and drops the stage instead of swapping it in
+        when the batch was empty; a partitioned merge into an existing
+        store takes the count and the partition list from ONE grouped
+        ``groupBy(partition_col).count()`` collect.
+
         ``staged_count`` / ``staging_partitions``: caller-precomputed
         row count and COMPLETE distinct partition-value list of the
         staging frame, when the caller already paid for them (the
         label fold derives both from one aggregate over its
         checkpointed delta — r12 measured the per-merge count +
         partition-listing jobs as the dominant fixed fold cost at toy
-        scale). Correctness leans on completeness: a partition value
-        present in ``staging`` but missing from ``staging_partitions``
-        would skip the dedup and leave a duplicate PK — pass them only
-        from the same frame the staging plan reads.
+        scale). ``staging_partitions`` is read only together with
+        ``staged_count``; a count passed without it still pays the
+        grouped collect on a partitioned merge. Correctness leans on completeness: a
+        partition value present in ``staging`` but missing from
+        ``staging_partitions`` would skip the dedup and leave a
+        duplicate PK — pass them only from the same frame the staging
+        plan reads.
         """
-        n = staging.count() if staged_count is None else int(staged_count)
+        exists = self.exists()
+        partitioned = bool(exists and self.partition_col)
+        if staged_count is None and not partitioned:
+            return self._observed_merge(staging, exists, extra_partitions)
+        if partitioned and (
+            staged_count is None or staging_partitions is None
+        ):
+            # one grouped action: the partition list AND the row count
+            # (the guard below fires on the limit's extra row)
+            counts = (
+                staging.groupBy(self.partition_col)
+                .count()
+                .limit(_MAX_PARTITIONS_PER_MERGE + 1)
+                .collect()
+            )
+            staging_partitions = [r[0] for r in counts]
+            n = sum(r[1] for r in counts)
+        else:
+            n = int(staged_count)
         if n == 0 and not extra_partitions:
             return 0
-        if not self.exists():
+        if not exists:
             self.overwrite(staging)
             return n
         target = self.read()
@@ -301,11 +350,6 @@ class ParquetStore:
             # (produto: ~6). A high-cardinality partition column would
             # make both this collect and the file layout pathological,
             # so guard it explicitly rather than degrade silently.
-            if staging_partitions is None:
-                parts_df = staging.select(
-                    self.partition_col
-                ).distinct().limit(_MAX_PARTITIONS_PER_MERGE + 1)
-                staging_partitions = [r[0] for r in parts_df.collect()]
             parts = sorted(
                 set(staging_partitions) | set(extra_partitions or [])
             )
@@ -364,6 +408,28 @@ class ParquetStore:
                     )
         else:
             self.rewrite(self._merged(target, staging))
+        return n
+
+    def _observed_merge(
+        self, staging: DataFrame, exists: bool, extra_partitions: list | None
+    ) -> int:
+        """:meth:`merge_upsert` into a new store or an unpartitioned one
+        when the caller passed no count: ONE staged write, with the row
+        count of ``staging`` riding it as an Observation. An empty
+        batch drops the stage instead of swapping it in."""
+        from agrobr_spark.store.fs import delete_path
+
+        obs = Observation()
+        self._stage(
+            self._merged(self.read(), staging, obs)
+            if exists
+            else staging.observe(obs, F.count(F.lit(1)).alias("n"))
+        )
+        n = obs.get["n"]
+        if n == 0 and not extra_partitions:
+            delete_path(self.spark, self._staged_dir())
+            return 0
+        self._swap_committed_stage()
         return n
 
 

@@ -659,6 +659,44 @@ def test_connected_components_driver_gate_edges(spark, tmp_path):
     assert not ran_distributed(sdf, 4 * _WIDE_ID_DIVISOR, "wide_ok")
 
 
+def test_connected_components_driver_path_folds_raw_pairs(spark, tmp_path):
+    """The driver finish reads the RAW pair rows: duplicate pairs,
+    reversed duplicates and self-loops (an isolated looped node
+    included) must give the distributed loop's answer, and the gate
+    must count them as the symmetric distinct list does. The gate's
+    bounded collect takes ceiling + 1 raw rows, so a raw list longer
+    than the ceiling runs distributed even when its symmetric distinct
+    list would fit. Which path ran shows in the scratch dir."""
+    import os
+
+    from agrobr_spark.operators.components import connected_components
+
+    def run(rows, ceiling, tag):
+        scratch = str(tmp_path / tag)
+        os.makedirs(scratch)
+        out = connected_components(
+            spark.createDataFrame(rows, "a long, b long"), "a", "b",
+            scratch_dir=scratch, driver_max_sym_edges=ceiling,
+        )
+        got = {(r["id"], r["componente"]) for r in out.collect()}
+        return got, bool(os.listdir(scratch))
+
+    raw = [
+        (1, 2), (1, 2), (2, 1), (2, 3), (3, 3), (7, 7), (9, 8), (8, 9),
+        (5, 5), (5, 6),
+    ]
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 8), (9, 8), (5, 5), (6, 5)}
+    # 10 raw rows; symmetric distinct: {1-2, 2-3, 8-9, 5-6} x 2 + 3
+    # self-loops = 11 rows
+    assert run(raw, 0, "dist") == (want, True)
+    assert run(raw, 11, "at") == (want, False)
+    assert run(raw, 10, "past") == (want, True)
+    # 6 raw rows, 2 symmetric rows
+    dup = [(1, 2)] * 6
+    assert run(dup, 5, "raw_past") == ({(1, 1), (2, 1)}, True)
+    assert run(dup, 6, "raw_at") == ({(1, 1), (2, 1)}, False)
+
+
 def test_rp_lsh_recall_on_fixture(spark):
     """Multi-table random-hyperplane LSH on the near-isotropic fixture
     corpus (top-10 neighbors at cos≈0.3 — close to the hardest case
@@ -1825,6 +1863,28 @@ def test_pagerank_invariants(spark):
     ]
     mediana = masses[len(masses) // 2]
     assert top_mass > mediana, (top_mass, mediana)
+
+
+def test_redistributed_pagerank_requires_exchange_reuse(spark):
+    """The redistributed chain's static plan doubles per step; only
+    AQE's runtime exchange reuse runs each step once. With either conf
+    off, the frame must refuse up front rather than run 2^PR_ITER."""
+    import pytest
+
+    from agrobr_spark.queries import catalog as _catalog
+
+    fn = _catalog()["graph_pagerank_redistributed"].fn
+    for key in ("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled"):
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            with pytest.raises(ValueError, match=key):
+                fn(spark, SF_SMOKE)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def test_admission_evidence_agrees_with_keep_set(spark):

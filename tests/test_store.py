@@ -252,6 +252,143 @@ def test_merge_upsert_extra_partitions_dedups_moved_pk(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "t1" / "p=0"))
 
 
+def _files_and_mtimes(root):
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(
+            os.path.join(d, f)
+        ).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+@pytest.mark.parametrize("part", [None, "p"])
+def test_merge_upsert_empty_batch_leaves_store_as_it_was(
+    spark, tmp_path, part
+):
+    """An empty batch returns 0 whichever way the merge counts it: a
+    new store stays absent (no table, no stage), and an existing one
+    keeps every file with its mtime. Both an empty filter and an empty
+    local relation (a plan the optimizer folds to nothing) are
+    covered."""
+    import os
+
+    from agrobr_spark.store.table import ParquetStore
+
+    df = spark.range(30).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p")
+    )
+    empties = [df.filter("k < 0"), spark.createDataFrame([], df.schema)]
+
+    new = ParquetStore(spark, str(tmp_path / "new"), ("k",), part)
+    for empty in empties:
+        assert new.merge_upsert(empty) == 0
+        assert not os.path.exists(new.path)
+        assert not os.path.exists(new._staged_dir())
+        assert not new.exists()
+
+    old = ParquetStore(spark, str(tmp_path / "old"), ("k",), part)
+    assert old.merge_upsert(df) == 30
+    before = _files_and_mtimes(old.path)
+    for empty in empties:
+        assert old.merge_upsert(empty) == 0
+        assert _files_and_mtimes(old.path) == before
+        assert not os.path.exists(old._staged_dir())
+    assert old.read().count() == 30
+
+
+@pytest.mark.parametrize("part", [None, "p"])
+def test_merge_upsert_into_new_store_costs_no_more_than_a_write(
+    spark, tmp_path, part
+):
+    """Without a caller count, the row count of a merge into a new
+    store rides its one write: it submits no more Spark jobs than
+    ``write_parquet`` of the same frame. The merge into the existing
+    store then returns the staged row count too."""
+    from agrobr_spark.io import write_parquet
+    from agrobr_spark.store.table import ParquetStore
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        before = sched.nextJobId()
+        out = fn()
+        return out, sched.nextJobId() - before
+
+    df = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p"),
+        F.lit("a").alias("v"),
+    )
+    _, write_jobs = jobs(lambda: write_parquet(
+        df, str(tmp_path / "w"), (part,) if part else ()
+    ))
+    store = ParquetStore(spark, str(tmp_path / "s"), ("k",), part)
+    n, merge_jobs = jobs(lambda: store.merge_upsert(df))
+    assert n == 40
+    assert merge_jobs <= write_jobs, (merge_jobs, write_jobs)
+    upd = df.filter("k < 10").withColumn("v", F.lit("b"))
+    assert store.merge_upsert(upd) == 10
+    got = sorted((r["k"], r["v"]) for r in store.read().collect())
+    assert got == [(k, "b" if k < 10 else "a") for k in range(40)]
+
+
+def test_merge_upsert_count_without_partition_list(spark, tmp_path):
+    """A caller count passed without ``staging_partitions`` into an
+    existing partitioned store: the grouped collect still lists the
+    touched partitions, so every staged PK is deduped against its old
+    copy and untouched partitions keep their files."""
+    import os
+
+    from agrobr_spark.store.table import ParquetStore
+
+    df = spark.range(12).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p"),
+        F.lit("a").alias("v"),
+    )
+    store = ParquetStore(spark, str(tmp_path / "t"), ("k",), "p")
+    assert store.merge_upsert(df) == 12
+    untouched = _files_and_mtimes(os.path.join(store.path, "p=2"))
+    upd = df.filter("p < 2").withColumn("v", F.lit("b"))
+    assert store.merge_upsert(upd, staged_count=8) == 8
+    got = sorted((r["k"], r["v"]) for r in store.read().collect())
+    assert got == [(k, "b" if k % 3 < 2 else "a") for k in range(12)]
+    assert _files_and_mtimes(os.path.join(store.path, "p=2")) == untouched
+
+
+@pytest.mark.parametrize("part", [None, "p"])
+def test_merge_upsert_staging_from_another_session(spark, tmp_path, part):
+    """A foreachBatch micro-batch runs in the stream's own session, not
+    the store's. A merge whose row count rides an Observation must
+    still return (an observation registered in the staging frame's
+    session would never fire on a write run in the store's session,
+    and ``Observation.get`` would block), so each merge runs in a
+    thread with a deadline."""
+    import threading
+
+    from agrobr_spark.store.table import ParquetStore
+
+    other = spark.newSession()
+    store = ParquetStore(spark, str(tmp_path / "t"), ("k",), part)
+
+    def batch(lo):
+        return other.range(lo, lo + 10).select(
+            F.col("id").alias("k"), (F.col("id") % 2).alias("p")
+        )
+
+    empty = batch(0).filter("k < 0")
+    for frame, want in ((batch(0), 10), (batch(5), 10), (empty, 0)):
+        got = []
+        t = threading.Thread(
+            target=lambda: got.append(store.merge_upsert(frame)), daemon=True
+        )
+        t.start()
+        t.join(120)
+        assert got == [want], "merge_upsert did not return"
+    assert sorted(r["k"] for r in store.read().collect()) == list(range(15))
+
+
 def test_exists_via_hadoop_fs(spark, tmp_path):
     from agrobr_spark.store.table import ParquetStore
 
