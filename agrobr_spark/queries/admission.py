@@ -59,6 +59,7 @@ from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.operators.components import connected_components
 from agrobr_spark.queries import register
 from agrobr_spark.queries.dedup import _COS_THRESHOLD
+from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.store.table import ParquetStore
 
 _CUT_FRAC = 0.8
@@ -508,18 +509,11 @@ def pipeline_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental path — frozen centroids, survivor-only dup checks,
     batch-internal components, min-id survivorship — is hash-verified
     end to end."""
-    import tempfile
-
-    from agrobr_spark.store.fs import delete_path
-
-    store_dir = tempfile.mkdtemp(prefix="admit_idx_")
-    try:
+    with scratch_dir(spark, "admit_idx_") as store_dir:
         build_admission_index(spark, sf_dir, store_dir)
         dec = admit_batch(spark, sf_dir, store_dir)
         # materialize before the scratch index vanishes
         return dec.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 # ---- text-signature admission: the MinHash-index variant ----
@@ -825,12 +819,7 @@ def pipeline_admit_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complementary to pipeline_admit_batch's embedding gates — a real
     pipeline runs the cheap text pass first, the vector pass on what
     survives."""
-    import tempfile
-
-    from agrobr_spark.store.fs import delete_path
-
-    store_dir = tempfile.mkdtemp(prefix="admit_txt_")
-    try:
+    with scratch_dir(spark, "admit_txt_") as store_dir:
         build_text_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         docs_b = load(spark, sf_dir, "documents").filter(
@@ -838,8 +827,6 @@ def pipeline_admit_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dec = admit_text_frame(spark, docs_b, store_dir)
         return dec.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 # ---- LSH-embedding admission: the fit-free variant ----
@@ -1288,20 +1275,13 @@ def pipeline_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical decision in pure SQL (recursive CTEs for
     both components fixpoints, the same hyperplane constants baked
     into the query text)."""
-    import tempfile
-
-    from agrobr_spark.store.fs import delete_path
-
-    store_dir = tempfile.mkdtemp(prefix="admit_lsh_")
-    try:
+    with scratch_dir(spark, "admit_lsh_") as store_dir:
         build_lsh_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
         emb_b = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= cut)
         dec = admit_lsh_frame(spark, docs_b, emb_b, store_dir)
         return dec.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 # -- SemDeDup incremental admission (r8 VERDICT next #3) ------------

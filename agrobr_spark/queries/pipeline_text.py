@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load, read_parquet
 from agrobr_spark.queries import register
+from agrobr_spark.store.fs import scratch_dir
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -1606,10 +1607,7 @@ def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count and read-latency evidence lives in SCALING.md round
     10 (242 → 22 files, 3.2 → 0.9 s at sf0.1) and
     tests/test_store.py::test_posting_index_compaction."""
-    import tempfile
-
     from agrobr_spark.queries.admission import _split_params
-    from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.posting import (
         bm25_topk_indexed,
         build_posting_index,
@@ -1618,8 +1616,7 @@ def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_posting_index,
     )
 
-    path = tempfile.mkdtemp(prefix="bm25_compact_")
-    try:
+    with scratch_dir(spark, "bm25_compact_") as path:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         cut = _split_params(spark, sf_dir)[0]
         build_posting_index(docs.filter(F.col("doc_id") < cut), path)
@@ -1657,8 +1654,6 @@ def text_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, BM25_QUERY, BM25_TOPK, BM25_K1, BM25_B
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, path)
 
 
 # -- fuzzy decontamination: rank-fused lexical + semantic sweep ------

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from agrobr_spark.io import read_parquet, write_parquet
 from agrobr_spark.queries import register
 from agrobr_spark.session import run_concurrently
+from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.streaming.windows import (
     drain_or_raise,
     read_events_stream,
@@ -126,21 +127,16 @@ def _versioned_state(
 ):
     """Folded foreachBatch state as versioned parquet dirs under
     ``state_dir`` (``{stem}_init``, then ``{stem}_s{batch_id}``) plus
-    ONE manifest committed atomically (the shared
-    ``store/fs.commit_json`` primitive). The manifest carries BOTH the
-    applied_batch_ids replay guard AND the ``current`` state-dir
-    pointer, so 'publish new state' and 'mark epoch applied' are one
-    atomic step. A crash after the state write but before the commit
-    leaves the old state current, and the replay recomputes from it —
-    exactly-once without assuming two separate writes are atomic
-    together (r9 ADVICE; the store/posting.py protocol applied to
-    folded streaming state).
+    ONE manifest carrying the ``current`` state-dir pointer. Each
+    epoch is a ``store/fs.commit_epoch`` epoch: the new state is
+    written beside the current one, and publishing the pointer and
+    marking the epoch applied are one locked manifest commit.
 
     Returns ``(handle, current)``: the foreachBatch handler, which
     skips an applied ``batch_id`` and otherwise commits
     ``step(batch, prev_state)`` as the next version, and a reader of
     the current state."""
-    from agrobr_spark.store.fs import commit_json, read_json
+    from agrobr_spark.store.fs import commit_epoch, commit_json, read_json
 
     manifest = f"{state_dir}/manifest.json"
     init = f"{stem}_init"
@@ -148,15 +144,14 @@ def _versioned_state(
     commit_json(manifest, {"applied_batch_ids": [], "current": init})
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        man = read_json(manifest)
-        if int(batch_id) in man["applied_batch_ids"]:
-            return
-        prev = read_parquet(spark, f"{state_dir}/{man['current']}")
-        nxt = f"{stem}_s{int(batch_id)}"
-        write_parquet(step(batch, prev), f"{state_dir}/{nxt}")
-        man["applied_batch_ids"].append(int(batch_id))
-        man["current"] = nxt
-        commit_json(manifest, man)
+        def stage(man: dict) -> str:
+            prev = read_parquet(spark, f"{state_dir}/{man['current']}")
+            nxt = f"{stem}_s{int(batch_id)}"
+            write_parquet(step(batch, prev), f"{state_dir}/{nxt}")
+            return nxt
+
+        commit_epoch(manifest, batch_id, stage,
+                     lambda cur, nxt: dict(cur, current=nxt))
 
     def current() -> DataFrame:
         cur = read_json(manifest)["current"]
@@ -373,79 +368,78 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic on purpose: the per-key value is max(value) (not
     last-by-timestamp, whose ties an engine may break arbitrarily).
     """
-    import tempfile
-
     from agrobr_spark.store.indicadores import SCHEMA, IndicadoresStore
     from agrobr_spark.streaming.windows import read_events_stream
 
-    store = IndicadoresStore(spark, tempfile.mkdtemp(prefix="stream_merge_"))
-    events = read_events_stream(spark, sf_dir)
+    with scratch_dir(spark, "stream_merge_") as store_dir:
+        # the store's swap lock is a sibling of its path: inside the
+        # scratch dir, it is deleted with it
+        store = IndicadoresStore(spark, f"{store_dir}/indicadores")
+        events = read_events_stream(spark, sf_dir)
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch.filter(F.col("value").isNotNull())
-            .groupBy(
-                F.col("event_type").alias("produto"),
-                F.col("ts").cast("date").alias("data"),
-            )
-            .agg(
-                F.max(F.col("value").cast("decimal(18,4)")).alias("valor"),
-                F.max("ts").alias("collected_at"),
-            )
-        )
-        if store.table.exists():
-            # MERGE-combine, not last-writer-wins: a key seen in an
-            # earlier micro-batch folds its running max into this
-            # batch's row, so any batch split converges to the same
-            # final state (the upsert would otherwise keep only the
-            # newest batch's per-batch max)
-            prev = store.table.read().select(
-                "produto",
-                "data",
-                F.col("valor").alias("_pv"),
-                F.col("collected_at").alias("_pc"),
-            )
+        def merge_batch(batch: DataFrame, batch_id: int) -> None:
             rows = (
-                rows.join(prev, ["produto", "data"], "left")
-                .select(
-                    "produto",
-                    "data",
-                    F.greatest("valor", "_pv").alias("valor"),
-                    F.greatest("collected_at", "_pc").alias("collected_at"),
+                batch.filter(F.col("value").isNotNull())
+                .groupBy(
+                    F.col("event_type").alias("produto"),
+                    F.col("ts").cast("date").alias("data"),
+                )
+                .agg(
+                    F.max(F.col("value").cast("decimal(18,4)"))
+                    .alias("valor"),
+                    F.max("ts").alias("collected_at"),
                 )
             )
-        rows = rows.select(
+            if store.table.exists():
+                # MERGE-combine, not last-writer-wins: a key seen in an
+                # earlier micro-batch folds its running max into this
+                # batch's row, so any batch split converges to the same
+                # final state (the upsert would otherwise keep only the
+                # newest batch's per-batch max)
+                prev = store.table.read().select(
+                    "produto",
+                    "data",
+                    F.col("valor").alias("_pv"),
+                    F.col("collected_at").alias("_pc"),
+                )
+                rows = (
+                    rows.join(prev, ["produto", "data"], "left")
+                    .select(
+                        "produto",
+                        "data",
+                        F.greatest("valor", "_pv").alias("valor"),
+                        F.greatest("collected_at", "_pc")
+                        .alias("collected_at"),
+                    )
+                )
+            rows = rows.select(
+                "produto",
+                F.lit(None).cast("string").alias("praca"),
+                "data",
+                F.lit("events").alias("fonte"),
+                "valor",
+                F.lit(None).cast("double").alias("variacao"),
+                F.lit(None).cast("string").alias("unidade"),
+                "collected_at",
+            ).select(*SCHEMA.fieldNames())
+            store.upsert(rows)
+
+        q = (
+            events.writeStream.foreachBatch(merge_batch)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain_or_raise(q, "stream_upsert_merge", 180)
+        out = store.table.read().select(
             "produto",
-            F.lit(None).cast("string").alias("praca"),
             "data",
-            F.lit("events").alias("fonte"),
-            "valor",
-            F.lit(None).cast("double").alias("variacao"),
-            F.lit(None).cast("string").alias("unidade"),
-            "collected_at",
-        ).select(*SCHEMA.fieldNames())
-        store.upsert(rows)
-
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_or_raise(q, "stream_upsert_merge", 180)
-    out = store.table.read().select(
-        "produto",
-        "data",
-        F.col("valor").cast("double").alias("valor"),
-        F.unix_micros("collected_at").alias("coletado_us"),
-    )
-    # materialize off the temp files, then delete the scratch store —
-    # repeated bench/correctness runs must not accrete orphaned table
-    # copies (r5 ADVICE)
-    out = out.localCheckpoint(eager=True)
-    from agrobr_spark.store.fs import delete_path
-
-    delete_path(spark, store.table.path)
-    return out
+            F.col("valor").cast("double").alias("valor"),
+            F.unix_micros("collected_at").alias("coletado_us"),
+        )
+        # materialize off the scratch store before it is deleted —
+        # repeated bench/correctness runs must not accrete orphaned
+        # table copies (r5 ADVICE)
+        return out.localCheckpoint(eager=True)
 
 
 def _stream_admit_oracle() -> str:
@@ -480,19 +474,15 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     own survivor and gets flagged duplicado_corpus
     (tests/test_admission.py::test_admit_batch_replay_is_idempotent).
     """
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
         _split_params,
         admit_frame,
         build_admission_index,
     )
-    from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore
 
-    store_dir = tempfile.mkdtemp(prefix="stream_admit_idx_")
-    try:
+    with scratch_dir(spark, "stream_admit_idx_") as store_dir:
         build_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
@@ -529,8 +519,6 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_chars", F.col("_blk").alias("bloco")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 def _stream_admit_lsh_oracle() -> str:
@@ -567,19 +555,15 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins: corpus survivors ∪ admitted batch docs from pure
     SQL over corpus ∪ batch (recursive-CTE components fixpoints, the
     same hyperplane constants)."""
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
         _split_params,
         admit_lsh_frame,
         build_lsh_admission_index,
     )
-    from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore, compact
 
-    store_dir = tempfile.mkdtemp(prefix="stream_lsh_idx_")
-    try:
+    with scratch_dir(spark, "stream_lsh_idx_") as store_dir:
         build_lsh_admission_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
@@ -608,8 +592,6 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact(store)
         out = store.read().select("doc_id", "n_chars")
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 def _stream_admit_semdedup_oracle() -> str:
@@ -642,19 +624,15 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     when a vector is judged — so the oracle recomputes the identical
     decision in one non-recursive SQL query. Per micro-batch the cost
     is O(|batch| · cluster density): the corpus is never re-read."""
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
         _split_params,
         admit_semdedup_frame,
         build_semdedup_index,
     )
-    from agrobr_spark.store.fs import delete_path
     from agrobr_spark.store.table import ParquetStore, compact
 
-    store_dir = tempfile.mkdtemp(prefix="stream_sem_idx_")
-    try:
+    with scratch_dir(spark, "stream_sem_idx_") as store_dir:
         build_semdedup_index(spark, sf_dir, store_dir)
         cut = _split_params(spark, sf_dir)[0]
         staged = load(spark, sf_dir, "embeddings").filter(
@@ -674,8 +652,6 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "cluster", "sim_centroide", "motivo", "mantido"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 def _stream_knn_graph_oracle() -> str:
@@ -756,9 +732,6 @@ def stream_graph_clusters_update(
     components run bounded by the touched components' size — at
     100 TB a batch relabels its semantic neighborhoods, never the
     corpus."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.operators.knn_store import (
         build_graph_labels,
@@ -770,8 +743,7 @@ def stream_graph_clusters_update(
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    store_dir = tempfile.mkdtemp(prefix="stream_knn_lbl_")
-    try:
+    with scratch_dir(spark, "stream_knn_lbl_") as store_dir:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
@@ -809,8 +781,6 @@ def stream_graph_clusters_update(
         return read_graph_clusters(spark, store_dir).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
 
 
 def _stream_pagerank_oracle() -> str:
@@ -862,9 +832,6 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold (touched components) + {it} equi-join/aggregate rounds over
     |touched| rows and ONE balde-pruned edge read — at 100 TB a batch
     re-ranks its semantic neighborhoods, never the corpus."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.operators.knn_store import (
         build_graph_labels,
@@ -878,8 +845,7 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    store_dir = tempfile.mkdtemp(prefix="stream_knn_pr_")
-    try:
+    with scratch_dir(spark, "stream_knn_pr_") as store_dir:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
@@ -923,8 +889,6 @@ def stream_pagerank_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         return read_graph_pageranks(spark, store_dir).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
 
 
 from agrobr_spark.operators.pagerank import PR_ITER as _PR_ITER  # noqa: E402
@@ -967,9 +931,6 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's incremental accumulate property (fetch only what's
     missing, never recompute the store; ref:
     agrobr/cepea/api.py:119-187) for the graph family."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.operators.knn_store import (
         build_knn_graph_index,
@@ -979,8 +940,7 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.similarity import GRAPH_K, GRAPH_PROBE
 
-    store_dir = tempfile.mkdtemp(prefix="stream_knn_idx_")
-    try:
+    with scratch_dir(spark, "stream_knn_idx_") as store_dir:
         cut, n_corp = _split_params(spark, sf_dir)
         emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
@@ -1006,8 +966,6 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             replay=True,
         )
         return read_knn_graph(spark, store_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
 
 
 @register(
@@ -1037,10 +995,6 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest→trainer handoff: per-batch cost is one shuffle on the
     shard id plus one accounting aggregation, independent of store
     size."""
-    import os
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.sources.sinks import (
@@ -1050,8 +1004,8 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from agrobr_spark.store.fs import path_exists
 
-    out_dir = tempfile.mkdtemp(prefix="stream_shards_out_") + "/shards"
-    try:
+    with scratch_dir(spark, "stream_shards_out_") as scratch:
+        out_dir = f"{scratch}/shards"
         cut = _split_params(spark, sf_dir)[0]
         staged = (
             load(spark, sf_dir, "documents")
@@ -1092,8 +1046,6 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         return verified.select(
             "doc_id", "source", "n_tokens"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
 
 
 def _stream_bm25_oracle() -> str:
@@ -1129,9 +1081,6 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one-shot full-corpus BM25 — build+update ≡ rebuild is the
     driver-hash-checked identity, and the corpus split is never
     re-tokenized after its build."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.pipeline_text import (
@@ -1146,8 +1095,7 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_posting_index,
     )
 
-    store_dir = tempfile.mkdtemp(prefix="stream_bm25_idx_")
-    try:
+    with scratch_dir(spark, "stream_bm25_idx_") as store_dir:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         cut = _split_params(spark, sf_dir)[0]
         build_posting_index(docs.filter(F.col("doc_id") < cut), store_dir)
@@ -1163,8 +1111,6 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, store_dir, BM25_QUERY, BM25_TOPK, BM25_K1, BM25_B
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
 
 
 @register(
@@ -1397,15 +1343,11 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     point is state: per-batch cost is O(batch tokens + cap), the
     counter table never exceeds cap rows however large the corpus
     grows, and no corpus re-scan happens until someone asks."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.pipeline_text import HH_SUPPORT
 
     cap = int(4 / HH_SUPPORT)
-    store_dir = tempfile.mkdtemp(prefix="stream_hh_")
-    try:
+    with scratch_dir(spark, "stream_hh_") as store_dir:
         docs = (
             load(spark, sf_dir, "documents")
             .filter(F.length(F.trim("text")) > 0)
@@ -1481,8 +1423,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
 
 
 # -- streaming DSIR: frozen importance models score each micro-batch --
@@ -1561,9 +1501,6 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, so the final whole-row dedupe makes a replayed epoch
     harmless. The score itself is batch-independent by construction —
     which is exactly what the one-shot oracle proves."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import _split_params
     from agrobr_spark.queries.training_prep import (
@@ -1572,8 +1509,7 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         DSIR_TARGET_LANG,
     )
 
-    scores_dir = tempfile.mkdtemp(prefix="stream_dsir_out_")
-    try:
+    with scratch_dir(spark, "stream_dsir_out_") as scores_dir:
         cut = _split_params(spark, sf_dir)[0]
         docs = load(spark, sf_dir, "documents")
 
@@ -1648,8 +1584,6 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = read_parquet(spark, scores_dir).dropDuplicates(["doc_id"])
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scores_dir, ignore_errors=True)
 
 
 from agrobr_spark.queries.training_prep import DSIR_BUCKETS as _DSIR_B
@@ -1867,9 +1801,6 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-batch cost is O(batch) + a {n}-row manifest rewrite,
     independent of corpus size; the same oracle string as the batch
     twin pins stream ≡ one-shot."""
-    import shutil
-    import tempfile
-
     from agrobr_spark.io import load
     from agrobr_spark.queries.training_prep import (
         _SHARD_H_ID,
@@ -1878,8 +1809,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         N_TOKENS_EXPR,
     )
 
-    state = tempfile.mkdtemp(prefix="stream_manifest_st_")
-    try:
+    with scratch_dir(spark, "stream_manifest_st_") as state:
         docs = load(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -1965,8 +1895,6 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
 
 
 from agrobr_spark.queries import _REGISTRY as _REG  # noqa: E402

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import load
 from agrobr_spark.queries import register
+from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.store.table import ParquetStore
 
 N_VOCAB_BUCKETS = 16
@@ -79,11 +80,11 @@ def update_df_index(
     update(batch) ≡ build(corpus ∪ batch), which
     tests/test_vocab.py asserts."""
     novo = _term_df(batch_docs)
-    if len(novo.take(1)) == 0:
-        return
     store = _df_store(spark, store_dir)
     if not store.exists():
-        store.overwrite(novo)
+        # an empty first batch creates no store (merge_upsert's
+        # empty-batch contract), where an overwrite would write one
+        store.merge_upsert(novo)
         return
     atual = store.read().select(
         "termo", F.col("df").alias("_df_atual")
@@ -124,23 +125,17 @@ def pipeline_df_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the final table. The oracle computes the one-shot DF over
     the FULL corpus in SQL — hash equality proves the incremental fold
     is exact, not approximately converged."""
-    import tempfile
-
     from agrobr_spark.queries.admission import _split_params
-    from agrobr_spark.store.fs import delete_path
 
     cut = _split_params(spark, sf_dir)[0]
     docs = load(spark, sf_dir, "documents")
-    store_dir = tempfile.mkdtemp(prefix="vocab_df_")
-    try:
+    with scratch_dir(spark, "vocab_df_") as store_dir:
         build_df_index(spark, docs.filter(F.col("doc_id") < cut), store_dir)
         update_df_index(
             spark, docs.filter(F.col("doc_id") >= cut), store_dir
         )
         out = _df_store(spark, store_dir).read().select("termo", "df", "balde")
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 def tfidf_from_index(
@@ -231,16 +226,12 @@ def pipeline_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the identical scoring in SQL — corpus-side
     DF, batch-side TF, same log formula — so the index read-back path
     is hash-verified, not just the build."""
-    import tempfile
-
     from agrobr_spark.queries.admission import _split_params
-    from agrobr_spark.store.fs import delete_path
 
     cut = _split_params(spark, sf_dir)[0]
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < cut)
-    store_dir = tempfile.mkdtemp(prefix="vocab_tfidf_")
-    try:
+    with scratch_dir(spark, "vocab_tfidf_") as store_dir:
         build_df_index(spark, corpus, store_dir)
         n_corpus = corpus.filter(F.length(F.trim("text")) > 0).count()
         out = tfidf_from_index(
@@ -250,8 +241,6 @@ def pipeline_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_corpus,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        delete_path(spark, store_dir)
 
 
 STOPWORD_DF_FRAC = 0.30  # a term in >=30% of docs is a stopword candidate

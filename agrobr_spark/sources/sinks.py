@@ -31,20 +31,34 @@ def _meta_path(path: str, name: str) -> str:
     return path.rstrip("/") + "/" + name
 
 
-def content_hash(df: DataFrame) -> str:
-    """Order-insensitive distributed content hash: per-row sha2/256
-    over unit-separator-joined canonical strings, folded with bit_xor
-    per 16-hex-digit word."""
+def _digest_words(cols: list[str]) -> list:
+    """The content digest as four aggregate columns ``w0..w3``:
+    per-row sha2/256 over unit-separator-joined canonical strings,
+    folded with bit_xor per 60-bit word (15 hex digits, so conv()
+    output fits a signed bigint)."""
     canon = F.sha2(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]), 256
+        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]), 256
     )
-    # 60-bit words (15 hex digits) so conv() output fits a signed bigint
-    words = [
-        F.bit_xor(F.conv(F.substring(canon, 1 + 15 * i, 15), 16, 10).cast("bigint"))
+    return [
+        F.bit_xor(
+            F.conv(F.substring(canon, 1 + 15 * i, 15), 16, 10).cast("bigint")
+        ).alias(f"w{i}")
         for i in range(4)
     ]
-    row = df.agg(*[w.alias(f"w{i}") for i, w in enumerate(words)]).collect()[0]
-    return "".join(format(int(row[i] or 0) & (2**60 - 1), "015x") for i in range(4))
+
+
+def _words_hex(row) -> str:
+    """The 60-hex-digit digest string of a row holding ``w0..w3``."""
+    return "".join(
+        format(int(row[f"w{i}"] or 0) & (2**60 - 1), "015x")
+        for i in range(4)
+    )
+
+
+def content_hash(df: DataFrame) -> str:
+    """Order-insensitive distributed content hash
+    (:func:`_digest_words`, folded to hex)."""
+    return _words_hex(df.agg(*_digest_words(df.columns)).collect()[0])
 
 
 def write_with_provenance(
@@ -112,16 +126,7 @@ def _shard_stats(df, key_col, n_shards, token_col):
     optional token sum, and the 4×60-bit xor-folded content words."""
     shard = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int")
     stamped = df.withColumn("shard", shard)
-    canon = F.sha2(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]), 256
-    )
-    words = [
-        F.bit_xor(F.conv(F.substring(canon, 1 + 15 * i, 15), 16, 10).cast("bigint"))
-        for i in range(4)
-    ]
-    aggs = [F.count(F.lit(1)).alias("rows")] + [
-        w.alias(f"w{i}") for i, w in enumerate(words)
-    ]
+    aggs = [F.count(F.lit(1)).alias("rows"), *_digest_words(df.columns)]
     if token_col is not None:
         aggs.append(F.sum(token_col).cast("long").alias("tokens"))
     stats = {
@@ -129,13 +134,6 @@ def _shard_stats(df, key_col, n_shards, token_col):
         for r in stamped.groupBy("shard").agg(*aggs).collect()
     }
     return stamped, stats
-
-
-def _words_hex(stats_row) -> str:
-    return "".join(
-        format(int(stats_row[f"w{i}"] or 0) & (2**60 - 1), "015x")
-        for i in range(4)
-    )
 
 
 def _xor_hex(a: str, b: str) -> str:
@@ -354,20 +352,10 @@ def read_training_shards(
         for k, v in manifest["shards"].items()
         if shards is None or int(k) in set(shards)
     }
-    canon = F.sha2(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]), 256
-    )
-    words = [
-        F.bit_xor(F.conv(F.substring(canon, 1 + 15 * i, 15), 16, 10).cast("bigint"))
-        for i in range(4)
-    ]
     got = {
         int(r["shard"]): r.asDict()
         for r in df.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            *[w.alias(f"w{i}") for i, w in enumerate(words)],
-        )
+        .agg(F.count(F.lit(1)).alias("rows"), *_digest_words(cols))
         .collect()
     }
     if set(got) != set(want):
@@ -376,9 +364,6 @@ def read_training_shards(
         g = got[k]
         if g["rows"] != w["rows"]:
             raise ValueError(f"shard {k}: row count {g['rows']} != {w['rows']}")
-        h = "".join(
-            format(int(g[f"w{i}"] or 0) & (2**60 - 1), "015x") for i in range(4)
-        )
-        if h != w["content_sha256_xor"]:
+        if _words_hex(g) != w["content_sha256_xor"]:
             raise ValueError(f"shard {k}: content hash mismatch")
     return df.select(*cols, "shard"), manifest

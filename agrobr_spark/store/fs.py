@@ -1,4 +1,5 @@
-"""Hadoop FileSystem helpers for store-path maintenance.
+"""Hadoop FileSystem helpers and the two commit primitives behind
+every persisted store.
 
 Store paths are plain strings that may point at any Hadoop-supported
 filesystem (file://, s3a://, hdfs://...); driver-side maintenance
@@ -6,6 +7,22 @@ filesystem (file://, s3a://, hdfs://...); driver-side maintenance
 API, never ``os``/``shutil`` — those silently only work on the local
 filesystem (round-2/round-3 review finding, completed here for the
 delete path).
+
+The stores commit in one of two ways, each spelled out once here:
+
+- **A staged directory with a ``_SUCCESS`` redo record**
+  (:func:`resolve_stage`): the parquet committer writes the marker
+  last, so a stage holding it is complete and is rolled forward,
+  and a stage without it is torn and is dropped by the writer.
+  ``ParquetStore.rewrite``'s staged swap and the kNN label-delta
+  journal commit this way.
+- **An exactly-once epoch recorded in a JSON manifest**
+  (:func:`commit_epoch`): an epoch's data is staged where no reader
+  looks, then published and its ``batch_id`` recorded in ONE locked
+  manifest update (:func:`locked_json_update` over
+  :func:`commit_json`). The posting index (both kinds, and its
+  compaction's pointer swap) and the folded streaming state commit
+  this way.
 """
 
 from __future__ import annotations
@@ -81,11 +98,11 @@ def write_text(spark: SparkSession, path: str, text: str) -> None:
 def commit_json(path: str, obj: dict) -> None:
     """ATOMIC manifest commit for store metadata: write a temp
     sibling, then ``os.replace`` — readers observe the old or the new
-    manifest, never a torn write. This is THE commit primitive behind
-    every exactly-once/crash-safe store protocol in the engine
-    (posting index epochs + compaction pointer swaps, folded
-    streaming-state pointers), so the semantics live in exactly one
-    place.
+    manifest, never a torn write. It is the write step of the
+    manifest primitive (:func:`locked_json_update`, under
+    :func:`commit_epoch`); the other commit primitive, the staged
+    directory's ``_SUCCESS`` redo record (:func:`resolve_stage`),
+    needs no manifest.
 
     Local/NFS-posix only by design: ``os.replace`` is atomic there
     (the container for these stores). On an object store, route the
@@ -141,7 +158,7 @@ def locked_json_update(path: str, mutate) -> dict:
     """SERIALIZED read-modify-write of a :func:`commit_json` manifest
     — the CAS primitive the posting-index manifest protocol names as
     its multi-committer escape hatch (r11 VERDICT next #3: the
-    re-read-and-merge in ``_commit_batch`` and compaction's pointer
+    re-read-and-merge of an epoch commit and compaction's pointer
     swap were individually atomic but unserialized against each
     other, so two overlapping read-modify-writes could drop one
     delta).
@@ -313,3 +330,87 @@ def read_json(path: str) -> dict | None:
         return None
     with open(path, encoding="utf-8") as fh:
         return json.load(fh)
+
+
+def resolve_stage(spark: SparkSession, stage: str, roll_forward, *,
+                  writer: bool) -> bool:
+    """The redo record of a staged directory write: a stage whose
+    ``_SUCCESS`` marker exists is COMMITTED — the parquet committer
+    writes the marker after every data file — so
+    ``roll_forward(stage)`` finishes what the crashed (or current)
+    writer started. A stage without the marker is TORN and is deleted
+    only when ``writer`` is set: under the single-writer contract a
+    writer at entry knows no write is in flight, while a reader cannot
+    tell a crash's debris from a live writer's in-progress stage, and
+    deleting it would tear that writer. Returns True when the stage
+    was committed."""
+    if path_exists(spark, f"{stage}/_SUCCESS"):
+        roll_forward(stage)
+        return True
+    if writer:
+        delete_path(spark, stage)
+    return False
+
+
+def commit_epoch(manifest: str, batch_id: int | None, stage, publish):
+    """Exactly-once epoch commit against a :func:`commit_json`
+    manifest. An epoch whose ``batch_id`` is already in the manifest's
+    ``applied_batch_ids`` is a no-op (returns None). Otherwise
+    ``stage(man)`` writes the epoch's data where no reader looks (the
+    entry-time manifest tells it where) and returns what it staged;
+    then ONE :func:`locked_json_update` applies ``publish(cur,
+    staged)`` to the manifest as it stands at commit time and appends
+    ``batch_id`` to ``applied_batch_ids``. So "publish the epoch" and
+    "mark it applied" are one atomic replace: a crash before it
+    leaves the staged data invisible and the replay re-stages it; a
+    crash after it makes the replay a no-op. ``batch_id=None`` is an
+    unguarded epoch (a one-shot update, a compaction): staged and
+    published the same way, recorded nowhere. Returns the committed
+    manifest.
+
+    ``publish`` merges only the epoch's own delta into ``cur`` —
+    never the entry-time snapshot, which a concurrent committer
+    (e.g. a compaction's pointer swap) may have superseded while the
+    epoch staged. An ABSENT manifest raises ``FileNotFoundError``, at
+    entry and at commit time: only the store's build creates one, so
+    fabricating a fresh manifest here would mask a broken or
+    mislocated store as an empty one."""
+
+    def missing():
+        return FileNotFoundError(
+            f"manifest missing at {manifest!r} — only the store's build "
+            "creates one; refusing to fabricate a fresh manifest over a "
+            "broken or mislocated store"
+        )
+
+    man = read_json(manifest)
+    if man is None:
+        raise missing()
+    if batch_id is not None and int(batch_id) in man.get(
+        "applied_batch_ids", []
+    ):
+        return None
+    staged = stage(man)
+
+    def mutate(cur: dict) -> dict:
+        if not cur:
+            raise missing()
+        cur = publish(cur, staged)
+        if batch_id is not None:
+            cur.setdefault("applied_batch_ids", []).append(int(batch_id))
+        return cur
+
+    return locked_json_update(manifest, mutate)
+
+
+@contextmanager
+def scratch_dir(spark: SparkSession, prefix: str):
+    """A fresh driver-local temp directory for a query's throwaway
+    stores, deleted on every exit path."""
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        delete_path(spark, path)

@@ -24,19 +24,17 @@ cost independent of history size). Layout at ``path``:
   ``stats_dir`` (the current base generation), ``active_batches``
   (streamed batches not yet compacted into the base), and
   ``applied_batch_ids`` (the exactly-once replay guard, never
-  cleared). Every manifest write goes through write-temp +
-  ``os.replace`` so readers observe either the old or the new index
-  state, never a half-commit.
+  cleared).
 - ``batches/b<batch_id>/`` — one directory per streamed update epoch
   (its posting rows, bucket-partitioned like the base, plus its
-  one-row stats delta). A batch directory is only VISIBLE once the
-  manifest commit lists it in ``active_batches``; the write itself is
-  ``overwrite`` into a batch_id-derived path, so a foreachBatch replay
-  after a mid-write crash rewrites the same directory and commits
-  once — effectively-exactly-once without assuming the data write and
-  the manifest write are atomic together (r9 ADVICE: the previous
-  append-then-manifest sequence double-counted on replay after a
-  crash between the two steps).
+  one-row stats delta), visible only once the manifest lists it in
+  ``active_batches``.
+
+Every update epoch and every compaction commits through
+``store/fs.commit_epoch`` (the exactly-once epoch protocol, described
+there once): the batch directory is staged where no reader looks, then
+listed in ``active_batches`` and its ``batch_id`` recorded in one
+locked manifest replace.
 
 ``compact_posting_index`` is the maintenance op: per-epoch batch
 directories and their stats-delta chain accrete forever (at 100 TB the
@@ -231,7 +229,9 @@ def _build_index(docs: DataFrame, path: str, n_buckets: int, id_col: str,
     )
     if write_stats is not None:
         write_stats(docs.sparkSession, path, id_col, got, with_avgdl=True)
-    _write_manifest(path, {
+    from agrobr_spark.store.fs import commit_json
+
+    commit_json(f"{path}/manifest.json", {
         "n_buckets": int(n_buckets),
         "tokenizer_version": TOKENIZER_VERSION,
         "id_col": id_col,
@@ -247,36 +247,49 @@ def _build_index(docs: DataFrame, path: str, n_buckets: int, id_col: str,
 def _update_index(docs_new: DataFrame, path: str, id_col: str,
                   text_col: str, batch_id: int | None, tokenize,
                   write_stats) -> None:
-    """The one staged-epoch update path (protocol in
-    :func:`update_posting_index`'s docstring): replay guard, staged
-    ``batches/b<id>/`` write at the manifest-frozen n_buckets, the
-    kind's stats delta (``write_stats``, None for positions), then the
-    atomic manifest commit."""
-    _require_valid_epoch_id(batch_id)
-    man = read_manifest(path)
-    if batch_id is not None and int(batch_id) in man.get(
-        "applied_batch_ids", []
-    ):
-        return
-    bid = int(batch_id) if batch_id is not None else _next_local_batch(man)
-    bdir = _batch_dir(path, bid)
-    got = _write_postings(
-        docs_new, f"{bdir}/postings", int(man["n_buckets"]), id_col,
-        text_col, tokenize,
-    )
-    spark = docs_new.sparkSession
-    if not got["n"]:
-        # committing a rows-free directory would brick every later
-        # read: drop it, and a replayed empty epoch records only its
-        # batch_id guard
-        from agrobr_spark.store.fs import delete_path
+    """The one staged-epoch update path, one ``store/fs.commit_epoch``
+    epoch (protocol in :func:`update_posting_index`'s docstring): the
+    stage writes ``batches/b<id>/`` at the manifest-frozen n_buckets
+    plus the kind's stats delta (``write_stats``, None for
+    positions); the publish lists the batch in ``active_batches``."""
+    from agrobr_spark.store.fs import commit_epoch, delete_path
 
-        delete_path(spark, bdir)
-        _record_empty_epoch(path, batch_id)
-        return
-    if write_stats is not None:
-        write_stats(spark, bdir, id_col, got, with_avgdl=False)
-    _commit_batch(path, bid, batch_id is not None)
+    _require_valid_epoch_id(batch_id)
+    spark = docs_new.sparkSession
+
+    def stage(man: dict) -> int | None:
+        bid = (int(batch_id) if batch_id is not None
+               else _next_local_batch(man))
+        bdir = _batch_dir(path, bid)
+        got = _write_postings(
+            docs_new, f"{bdir}/postings", int(man["n_buckets"]), id_col,
+            text_col, tokenize,
+        )
+        if not got["n"]:
+            # committing a rows-free directory would brick every later
+            # read: drop it, and the epoch publishes only its guard
+            delete_path(spark, bdir)
+            return None
+        if write_stats is not None:
+            write_stats(spark, bdir, id_col, got, with_avgdl=False)
+        return bid
+
+    def publish(cur: dict, bid: int | None) -> dict:
+        # only THIS epoch's delta merges into the manifest as it
+        # stands at commit time: a compaction may have swapped the
+        # generation pointer while the batch staged, and its
+        # uncommitted directory was invisible to that compaction, so
+        # the next one folds it
+        cur = _normalize_manifest(cur)
+        if bid is not None:
+            cur["active_batches"].append(bid)
+            if bid < 0:
+                # advance the local-id watermark so a post-compaction
+                # ingest can never reuse a folded id
+                cur["local_low"] = min(int(cur["local_low"]), bid)
+        return cur
+
+    commit_epoch(f"{path}/manifest.json", batch_id, stage, publish)
 
 
 def build_posting_index(
@@ -326,20 +339,14 @@ def update_posting_index(
     double-count its postings, the same append-only semantics as the
     survivor MERGE's staging input.
 
-    Durability paths (r9 ADVICE — the old append-then-manifest
-    sequence was not crash-safe):
-
-    - ``batch_id`` given (streaming foreachBatch): the epoch's rows
-      and stats delta are OVERWRITE-written into the batch_id-derived
-      ``batches/b<id>/`` directory and become visible only at the
-      atomic manifest commit. A replayed epoch either no-ops (already
-      committed) or cleanly rewrites an uncommitted directory —
-      effectively-exactly-once even when a crash lands between the
-      data write and the commit.
-    - ``batch_id`` omitted (one-shot maintenance caller): a local
-      epoch id is drawn below the streaming id space, same staged
-      path. Nothing ever appends into a directory a reader may be
-      mid-scan on.
+    Durability: one ``store/fs.commit_epoch`` epoch. The rows and
+    stats delta are OVERWRITE-written into ``batches/b<id>/`` and
+    become visible only at the manifest commit, so a replayed
+    ``batch_id`` (streaming foreachBatch) either no-ops or cleanly
+    rewrites an uncommitted directory. Without ``batch_id`` (one-shot
+    maintenance caller) a local epoch id is drawn below the streaming
+    id space, same staged path. Nothing ever appends into a directory
+    a reader may be mid-scan on.
     """
     _update_index(docs_new, path, id_col, text_col, batch_id,
                   tokenize_postings, _write_stats_row)
@@ -358,8 +365,8 @@ def _require_valid_epoch_id(batch_id: int | None) -> None:
     """The negative id space belongs to LOCAL epochs
     (:func:`_next_local_batch` counts down from -1, fenced by the
     ``local_low`` watermark). An EXPLICIT negative id would bypass
-    that watermark — ``_commit_batch``'s guarded branch never
-    advances it — so after a compaction folds the batch, the next
+    that watermark — only a local epoch's publish advances it —
+    so after a compaction folds the batch, the next
     local ingest could re-draw the same id while the deferred
     vacuum's garbage list still names its directory: the vacuum would
     delete the live batch (r13 review). Streaming epoch ids are >= 0
@@ -386,76 +393,12 @@ def _next_local_batch(man: dict) -> int:
     return min(int(man.get("local_low", 0)), min(locals_, default=0)) - 1
 
 
-def _record_empty_epoch(path: str, batch_id: int | None) -> None:
-    """Commit ONLY the replay guard for a rows-free epoch — no batch
-    directory exists, so it must never enter ``active_batches``.
-    Serialized read-modify-merge like :func:`_commit_batch`."""
-    if batch_id is not None:
-
-        def mut(cur: dict) -> dict:
-            cur = _normalize_manifest(cur)
-            cur["applied_batch_ids"].append(int(batch_id))
-            return cur
-
-        _locked_manifest_update(path, mut)
-
-
-def _commit_batch(path: str, bid: int, guarded: bool) -> None:
-    """Atomically publish a staged batch directory: one manifest
-    replace flips it into ``active_batches`` (and, for streaming
-    epochs, into the ``applied_batch_ids`` replay guard).
-
-    RE-READ-AND-MERGE, not write-back (r10 ADVICE): the entry-time
-    manifest snapshot is deliberately NOT a parameter here (r11
-    review dropped it) — a compaction may have swapped
-    the generation pointer while the batch staged, and writing the
-    entry snapshot back would resurrect the pre-compaction
-    ``postings_dir``/``version``, pointing readers at directories the
-    compaction just deleted. Instead only THIS epoch's delta (its
-    ``active_batches`` / replay-guard entry) is merged into the
-    manifest as it stands at commit time. That is safe in both
-    interleavings: an uncommitted staging directory is invisible to a
-    concurrent compaction (not in ``active_batches`` → neither folded
-    nor deleted), so committing it into the NEW generation's manifest
-    neither loses nor duplicates rows — the next compaction folds it.
-
-    The read-modify-merge itself runs under the manifest LOCK
-    (``store/fs.locked_json_update`` — r12, closing the r11 residual):
-    overlapping committers (two ingests, or an ingest racing
-    compaction's pointer swap) serialize on the ms-scale window
-    instead of honor-system single-COMMITTER coordination, so neither
-    delta can be dropped by a concurrent replace."""
-
-    def mut(cur: dict) -> dict:
-        cur = _normalize_manifest(cur)
-        cur["active_batches"].append(int(bid))
-        if guarded:
-            cur["applied_batch_ids"].append(int(bid))
-        elif int(bid) < 0:
-            # advance the local-id watermark so a post-compaction
-            # ingest can never reuse a folded id (see _next_local_batch)
-            cur["local_low"] = min(int(cur.get("local_low", 0)), int(bid))
-        return cur
-
-    _locked_manifest_update(path, mut)
-
-
-def _write_manifest(path: str, man: dict) -> None:
-    """Atomic manifest commit — the shared ``store/fs.commit_json``
-    primitive (see its docstring for the posix-atomicity scope and
-    the object-store conditional-put swap-out)."""
-    from agrobr_spark.store.fs import commit_json
-
-    commit_json(f"{path}/manifest.json", man)
-
-
 def _normalize_manifest(man: dict) -> dict:
     """Fill the commit-state defaults: pre-r10 manifests carry none
     and were built with the fixed layout."""
     man.setdefault("postings_dir", "postings")
     man.setdefault("stats_dir", "stats")
     man.setdefault("active_batches", [])
-    man.setdefault("applied_batch_ids", [])
     man.setdefault("version", 0)
     # superseded dirs awaiting the DEFERRED vacuum (r13); relative to
     # the index root so the manifest stays relocatable
@@ -464,31 +407,6 @@ def _normalize_manifest(man: dict) -> dict:
     # for the deferred vacuum (see _next_local_batch)
     man.setdefault("local_low", 0)
     return man
-
-
-def _locked_manifest_update(path: str, mutate) -> dict:
-    """All manifest read-modify-writes go through the ONE serialized
-    primitive (``store/fs.locked_json_update``); the loud local-posix
-    scope check rides the shared path.
-
-    An ABSENT manifest raises instead of being normalized from ``{}``
-    (r12 ADVICE #2): only ``build_posting_index`` creates a manifest,
-    so a commit/compaction finding none means the store is broken or
-    the path is wrong — fabricating a fresh version-0 manifest here
-    would mask that as an empty-but-healthy index."""
-    from agrobr_spark.store.fs import locked_json_update
-
-    def mut(cur: dict) -> dict:
-        if not cur:
-            raise FileNotFoundError(
-                f"posting-index manifest missing under {path!r} at "
-                "commit time — only build_posting_index creates one; "
-                "refusing to fabricate a fresh manifest over a broken "
-                "or mislocated store"
-            )
-        return mutate(cur)
-
-    return locked_json_update(f"{path}/manifest.json", mut)
 
 
 def read_manifest(path: str) -> dict:
@@ -572,9 +490,10 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
     Concurrency contract (narrowed, r10 ADVICE): ingest updates may
     now run CONCURRENTLY with a compaction in either direction —
     compaction's pre-commit re-read keeps an epoch that committed
-    during the rewrite, and ``_commit_batch``'s re-read-and-merge
-    keeps an update that started before the pointer swap from
-    resurrecting the old generation (its staged directory was never
+    during the rewrite, and an update's commit-time merge
+    (``store/fs.commit_epoch``'s publish) keeps an update that
+    started before the pointer swap from resurrecting the old
+    generation (its staged directory was never
     in the folded ``active_batches``, so the new base neither holds
     nor deletes it; the next compaction folds it). The ms-scale
     manifest read-modify-writes themselves are SERIALIZED by the
@@ -595,72 +514,65 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
     Returns the number of posting data files after compaction.
     Positional indexes (no stats sidecar) compact the same way.
     """
-    from agrobr_spark.store.fs import delete_path, path_exists
+    from agrobr_spark.store.fs import commit_epoch, delete_path, path_exists
 
-    man = read_manifest(path)
-    # vacuum the PREVIOUS compaction's garbage FIRST, before this
-    # generation is written or committed (r13 review): the old
-    # post-commit ordering removed the list from the manifest
-    # (garbage=new_garbage) and only then deleted the dirs, so a
-    # crash between the two leaked a full generation forever — no
-    # later compaction's prev_garbage ever named it again. Deleting
-    # up front is crash-safe in every position: a crash mid-vacuum
-    # leaves the manifest still naming the dirs (delete_path on a
-    # missing path is a no-op, so the retry re-vacuums cleanly), and
-    # the reader grace is unchanged — these dirs went stale at the
-    # PREVIOUS pointer swap, so a reader still needs to straddle two
-    # full compactions to lose its files. Only compaction writes
-    # ``garbage``, and the single-compactor contract above serializes
-    # it against itself.
-    for d in man.get("garbage", []):
-        delete_path(spark, f"{path}/{d}")
-    ver = int(man["version"]) + 1
-    new_post = f"postings_v{ver}"
-    write_parquet(
-        _postings_frame(spark, path, man).repartition("bucket"),
-        f"{path}/{new_post}",
-        ("bucket",),
-    )
-    old_dirs = [man["postings_dir"]]
-    has_stats = path_exists(spark, f"{path}/{man['stats_dir']}")
-    if has_stats:
-        new_stats = f"stats_v{ver}"
+    def stage(man: dict) -> tuple[dict, set]:
+        man = _normalize_manifest(man)
+        # vacuum the PREVIOUS compaction's garbage FIRST, before this
+        # generation is written or committed (r13 review): the old
+        # post-commit ordering removed the list from the manifest and
+        # only then deleted the dirs, so a crash between the two
+        # leaked a full generation forever. Deleting up front is
+        # crash-safe in every position: a crash mid-vacuum leaves the
+        # manifest still naming the dirs (delete_path on a missing
+        # path is a no-op, so the retry re-vacuums cleanly), and the
+        # reader grace is unchanged — these dirs went stale at the
+        # PREVIOUS pointer swap. Only compaction writes ``garbage``,
+        # and the single-compactor contract above serializes it
+        # against itself.
+        for d in man["garbage"]:
+            delete_path(spark, f"{path}/{d}")
+        ver = int(man["version"]) + 1
+        gen = {"version": ver, "postings_dir": f"postings_v{ver}"}
         write_parquet(
-            read_stats(spark, path, man).coalesce(1),
-            f"{path}/{new_stats}",
+            _postings_frame(spark, path, man).repartition("bucket"),
+            f"{path}/{gen['postings_dir']}",
+            ("bucket",),
         )
-        old_dirs.append(man["stats_dir"])
-    # RE-READ the manifest before committing: an ingest epoch may have
-    # committed while the rewrite ran, and building the new manifest
-    # from the stale snapshot would erase it — both its documents and
-    # its replay-guard entry (r10 review finding). Only the batches
-    # this compaction actually FOLDED leave active_batches; everything
-    # newer survives into the new generation's manifest untouched.
-    folded = {int(b) for b in man["active_batches"]}
-    # this generation's superseded dirs are only RECORDED as garbage;
-    # the vacuum below deletes the PREVIOUS compaction's garbage — an
-    # in-flight reader planned against the pre-swap generation keeps
-    # its files through the swap (deferred vacuum, r12 VERDICT #5)
-    new_garbage = list(old_dirs) + [
-        _batch_rel(int(b)) for b in man["active_batches"]
-    ]
+        old_dirs = [man["postings_dir"]]
+        if path_exists(spark, f"{path}/{man['stats_dir']}"):
+            gen["stats_dir"] = f"stats_v{ver}"
+            write_parquet(
+                read_stats(spark, path, man).coalesce(1),
+                f"{path}/{gen['stats_dir']}",
+            )
+            old_dirs.append(man["stats_dir"])
+        # this generation's superseded dirs are only RECORDED as
+        # garbage; the NEXT compaction's vacuum deletes them, so an
+        # in-flight reader planned against the pre-swap generation
+        # keeps its files through the swap (deferred vacuum)
+        gen["garbage"] = old_dirs + [
+            _batch_rel(int(b)) for b in man["active_batches"]
+        ]
+        return gen, {int(b) for b in man["active_batches"]}
 
-    def mut(cur: dict) -> dict:
+    def publish(cur: dict, staged: tuple[dict, set]) -> dict:
+        # the manifest as it stands at commit time: an ingest epoch
+        # may have committed while the rewrite ran, and building the
+        # new manifest from the stale snapshot would erase it — both
+        # its documents and its replay-guard entry (r10 review). Only
+        # the batches this compaction FOLDED leave active_batches.
+        gen, folded = staged
         cur = _normalize_manifest(cur)
-        new_man = dict(
+        return dict(
             cur,
-            version=ver,
-            postings_dir=new_post,
             active_batches=[
                 b for b in cur["active_batches"] if int(b) not in folded
             ],
-            garbage=new_garbage,
+            **gen,
         )
-        if has_stats:
-            new_man["stats_dir"] = new_stats
-        return new_man
 
-    _locked_manifest_update(path, mut)
+    commit_epoch(f"{path}/manifest.json", None, stage, publish)
     return posting_file_count(spark, path)
 
 

@@ -51,14 +51,14 @@ class ParquetStore:
         on s3a://, hdfs://, etc — not only the local filesystem
         (round-2 review finding on the ``os.listdir`` version).
         """
-        from agrobr_spark.store.fs import hadoop_fs
+        from agrobr_spark.store.fs import hadoop_fs, resolve_stage
 
         self._recover_staged_swap()
-        jvm = self.spark._jvm
         fs, hpath = hadoop_fs(self.spark, self.path)
         if not fs.exists(hpath):
             return False
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(self.path, "_SUCCESS")):
+        if resolve_stage(self.spark, self.path, lambda _: None,
+                         writer=False):
             return True
         for status in fs.listStatus(hpath):
             name = status.getPath().getName()
@@ -109,12 +109,12 @@ class ParquetStore:
     SWAP_LOCK_TIMEOUT_S = 600.0
 
     def _swap_committed_stage(self, wait: bool = True) -> bool:
-        """The staged-swap COMMIT: if a stage with its ``_SUCCESS``
-        marker exists, delete the main dir and rename the stage into
-        place. Serialized under the store's swap lock so a reader's
-        roll-forward and the writer's own swap can never interleave
-        (each re-checks the stage INSIDE the lock; whoever loses the
-        race finds no stage and no-ops). Rolling forward is correct
+        """The staged-swap COMMIT: if the stage is committed
+        (``store/fs.resolve_stage``), delete the main dir and rename
+        the stage into place. Serialized under the store's swap lock
+        so a reader's roll-forward and the writer's own swap can never
+        interleave (each re-checks the stage INSIDE the lock; whoever
+        loses the race finds no stage and no-ops). Rolling forward is correct
         from every crash position at or past the stage's completion:
         the staged data is the rewrite's full intended result, and a
         half-deleted main dir is indistinguishable from a
@@ -131,14 +131,10 @@ class ParquetStore:
             delete_path,
             hadoop_fs,
             path_exists,
+            resolve_stage,
         )
 
-        tmp = self._staged_dir()
-        with self._swap_lock(wait) as got:
-            if not got:
-                return False
-            if not path_exists(self.spark, f"{tmp}/_SUCCESS"):
-                return True
+        def swap(tmp: str) -> None:
             delete_path(self.spark, self.path)
             if path_exists(self.spark, self.path):
                 # a half-failed delete must not reach rename: Hadoop's
@@ -156,7 +152,12 @@ class ParquetStore:
                     f"staged swap: rename {tmp!r} -> {self.path!r} "
                     "failed"
                 )
-            return True
+
+        with self._swap_lock(wait) as got:
+            if got:
+                resolve_stage(self.spark, self._staged_dir(), swap,
+                              writer=False)
+            return got
 
     def _swap_lock(self, wait: bool):
         """The swap's critical section: flock on a driver-local
@@ -189,29 +190,23 @@ class ParquetStore:
         return _held()
 
     def _recover_staged_swap(self, clean_torn: bool = False) -> None:
-        """Repair a crashed :meth:`rewrite` at table open. A COMMITTED
-        stage (``_SUCCESS`` present) rolls FORWARD via
-        :meth:`_swap_committed_stage` — any caller may do this, reads
-        included. A TORN stage (dir without the marker) is dropped
-        only when ``clean_torn`` (write entry points): under the
-        single-writer contract a writer at entry knows no stage is
-        in flight, while a READER seeing a marker-less stage cannot
-        distinguish a crash's debris from a live rewrite's
-        in-progress write — deleting it would tear the active writer,
-        and it is harmless to reads (the main dir is untouched until
-        a stage commits)."""
-        from agrobr_spark.store.fs import delete_path, path_exists
+        """Repair a crashed :meth:`rewrite` at table open through
+        ``store/fs.resolve_stage``: a committed stage rolls FORWARD
+        via :meth:`_swap_committed_stage` — any caller may do this,
+        reads included; a torn stage is dropped only when
+        ``clean_torn`` (write entry points). A torn stage is harmless
+        to reads: the main dir is untouched until a stage commits."""
+        from agrobr_spark.store.fs import resolve_stage
 
-        tmp = self._staged_dir()
-        if not path_exists(self.spark, tmp):
-            return
-        if path_exists(self.spark, f"{tmp}/_SUCCESS"):
-            # write entry points must not proceed until the stage is
-            # resolved; a read behind a busy lock skips — the live
-            # holder is already finishing the same swap
-            self._swap_committed_stage(wait=clean_torn)
-        elif clean_torn:
-            delete_path(self.spark, tmp)
+        # write entry points must not proceed until the stage is
+        # resolved; a read behind a busy lock skips — the live holder
+        # is already finishing the same swap
+        resolve_stage(
+            self.spark,
+            self._staged_dir(),
+            lambda _: self._swap_committed_stage(wait=clean_torn),
+            writer=clean_torn,
+        )
 
     def rewrite(self, df: DataFrame) -> None:
         """Full rewrite of the table from a plan that may read lazily
@@ -220,9 +215,8 @@ class ParquetStore:
         version re-read the stage and wrote the whole table a SECOND
         time — 2x the write I/O of every compaction) and a crash at
         any point is repaired at the next open by
-        :meth:`_recover_staged_swap`: the stage's ``_SUCCESS`` marker
-        is the redo record (present → roll forward; torn → a write
-        entry point rolls it back), and the main dir is only deleted
+        :meth:`_recover_staged_swap` (the stage's redo record,
+        ``store/fs.resolve_stage``): the main dir is only deleted
         AFTER the stage is durably complete."""
         self._stage(df)
         # commit point: the stage's _SUCCESS exists from here on — this
@@ -417,7 +411,7 @@ class ParquetStore:
         when the caller passed no count: ONE staged write, with the row
         count of ``staging`` riding it as an Observation. An empty
         batch drops the stage instead of swapping it in."""
-        from agrobr_spark.store.fs import delete_path
+        from agrobr_spark.store.fs import delete_path, resolve_stage
 
         obs = Observation()
         self._stage(
@@ -427,7 +421,14 @@ class ParquetStore:
         )
         n = obs.get["n"]
         if n == 0 and not extra_partitions:
-            delete_path(self.spark, self._staged_dir())
+            # an empty batch commits nothing: its stage is dropped,
+            # never swapped in
+            resolve_stage(
+                self.spark,
+                self._staged_dir(),
+                lambda tmp: delete_path(self.spark, tmp),
+                writer=True,
+            )
             return 0
         self._swap_committed_stage()
         return n

@@ -2582,167 +2582,6 @@ def test_knn_store_no_file_accretion_across_folds(spark, tmp_path):
     assert max(counts) <= counts[0] + 6, counts
 
 
-def _split_merge_fixture(spark, tmp_path):
-    """The split/merge geometry (see
-    test_graph_labels_incremental_split_and_merge): batch vector C
-    lands between the mutual pair (A=4, B=5), splitting {4, 5} and
-    merging {5, 6} — node 5's relabel 4→5 MOVES its secondary row
-    across cbalde partitions (0→1 at edge_buckets=4), the exact shape
-    whose crash window r12 left unrepaired."""
-    from agrobr_spark.operators.knn_store import (
-        build_graph_labels,
-        build_knn_graph_index,
-        update_knn_graph_frame,
-    )
-
-    def vec(*xs):
-        return [float(x) for x in xs]
-
-    corpus = spark.createDataFrame(
-        [
-            (0, vec(3, 0, 0, 0)),
-            (1, vec(0, 3, 0, 0)),
-            (2, vec(0, 0, 3, 0)),
-            (3, vec(0, 0, 0, 3)),
-            (4, vec(2, 1, 0, 0)),
-            (5, vec(2, 1.1, 0, 0)),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    batch = spark.createDataFrame(
-        [(6, vec(2, 1.05, 0, 0))],
-        "vec_id long, embedding array<float>",
-    )
-    store = str(tmp_path / "knn")
-    build_knn_graph_index(
-        corpus, store, k=1, n_probe=2, n_centroids=4, edge_buckets=4
-    )
-    build_graph_labels(spark, store, corpus.select("vec_id"))
-    staged = update_knn_graph_frame(spark, batch, store, k=1, n_probe=2)
-    changed = staged.select("vec_id").unionByName(
-        batch.select("vec_id")
-    ).localCheckpoint(eager=True)
-    return store, changed
-
-
-def test_graph_labels_crash_between_merges(spark, tmp_path, monkeypatch):
-    """r12 VERDICT What's wrong #1 / next #1: a crash between the
-    primary and secondary label merges must be REPAIRABLE — batch
-    replay alone provably is not (the stale secondary row's old
-    component is gone from the already-merged primary, so no replay
-    leg ever reads it again). The fold now journals its delta durably
-    BEFORE the first merge and re-applies any uncleared journal at
-    fold entry; this forces a crash at each position of the window
-    and asserts the next fold converges both layouts."""
-    import os
-
-    import pytest
-
-    from agrobr_spark.operators.knn_store import (
-        _comp_labels_store,
-        _labels_store,
-        _pending_delta_dir,
-        update_graph_labels_frame,
-    )
-    from agrobr_spark.store.table import ParquetStore
-
-    store, changed = _split_merge_fixture(spark, tmp_path)
-    pending = _pending_delta_dir(store)
-
-    def labels():
-        return {
-            r["vec_id"]: r["componente"]
-            for r in _labels_store(spark, store).read().collect()
-        }
-
-    def secondary_rows():
-        return sorted(
-            (r["vec_id"], r["componente"], r["cbalde"])
-            for r in _comp_labels_store(spark, store).read().collect()
-        )
-
-    def primary_as_secondary():
-        return sorted(
-            (r["vec_id"], r["componente"], r["componente"] % 4)
-            for r in _labels_store(spark, store).read().collect()
-        )
-
-    want = {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 5}
-    real = ParquetStore.merge_upsert
-
-    # position 1: crash BETWEEN the merges (primary updated, secondary
-    # stale — the r12 gap: node 5's stale (comp 4, cbalde 0) row)
-    def crash_on_secondary(self, *a, **kw):
-        if self.path.endswith("labels_by_comp"):
-            raise RuntimeError("injected crash between label merges")
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(ParquetStore, "merge_upsert", crash_on_secondary)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        update_graph_labels_frame(spark, changed, store)
-    monkeypatch.setattr(ParquetStore, "merge_upsert", real)
-    assert labels() == want  # primary merged
-    assert secondary_rows() != primary_as_secondary()  # secondary stale
-    assert os.path.exists(os.path.join(pending, "_SUCCESS"))  # journal
-
-    # replay the batch: fold entry re-applies the journal to BOTH
-    # layouts before reading either — the stale cbalde=0 copy is
-    # deduped via the journal's _old bucket, never via the stores
-    update_graph_labels_frame(spark, changed, store)
-    assert labels() == want
-    assert secondary_rows() == primary_as_secondary()
-    assert not os.path.exists(pending)  # journal cleared
-
-    # position 2: crash BEFORE the first merge (journal written,
-    # neither layout touched) — rebuild the fixture state first
-    store2, changed2 = _split_merge_fixture(
-        spark, tmp_path.joinpath("p2")
-    )
-    pending2 = _pending_delta_dir(store2)
-
-    def crash_on_primary(self, *a, **kw):
-        if self.path.endswith("/labels"):
-            raise RuntimeError("injected crash before first merge")
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(ParquetStore, "merge_upsert", crash_on_primary)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        update_graph_labels_frame(spark, changed2, store2)
-    monkeypatch.setattr(ParquetStore, "merge_upsert", real)
-    assert os.path.exists(os.path.join(pending2, "_SUCCESS"))
-    update_graph_labels_frame(spark, changed2, store2)
-    lab2 = {
-        r["vec_id"]: r["componente"]
-        for r in _labels_store(spark, store2).read().collect()
-    }
-    assert lab2 == want
-    assert sorted(
-        (r["vec_id"], r["componente"], r["cbalde"])
-        for r in _comp_labels_store(spark, store2).read().collect()
-    ) == sorted(
-        (v, c, c % 4) for v, c in lab2.items()
-    )
-    assert not os.path.exists(pending2)
-
-    # position 3: a TORN journal (no _SUCCESS — crash mid-journal,
-    # before either merge) is dropped at fold entry, and the fold
-    # then completes normally
-    store3, changed3 = _split_merge_fixture(
-        spark, tmp_path.joinpath("p3")
-    )
-    pending3 = _pending_delta_dir(store3)
-    os.makedirs(pending3)
-    with open(os.path.join(pending3, "part-torn.parquet"), "wb") as fh:
-        fh.write(b"not parquet")
-    update_graph_labels_frame(spark, changed3, store3)
-    lab3 = {
-        r["vec_id"]: r["componente"]
-        for r in _labels_store(spark, store3).read().collect()
-    }
-    assert lab3 == want
-    assert not os.path.exists(pending3)
-
-
 def test_knn_store_rejects_negative_ids(spark, tmp_path):
     """r12 VERDICT What's wrong #3: the driver-side bucket arithmetic
     (`c % nb` over collected ids) and the componente=min(vec_id)

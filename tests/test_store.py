@@ -505,84 +505,6 @@ def test_compact_partitioned_plan_is_parallel(spark, tmp_path):
     assert got == list(range(60))
 
 
-def test_rewrite_staged_swap_crash_recovery(spark, tmp_path):
-    """rewrite()'s staged swap repairs every crash position at the
-    next open (r13: the previous rewrite wrote the table TWICE and a
-    crash during the second write lost data the staged copy held but
-    no code path recovered). The stage's _SUCCESS marker is the redo
-    record: torn stage -> roll back (write entry points only; a
-    reader can't distinguish crash debris from a live rewrite's
-    in-progress stage), committed stage -> ANY entry point rolls
-    forward."""
-    import os
-    import shutil
-
-    from agrobr_spark.store.table import ParquetStore
-
-    path = str(tmp_path / "t_swap")
-    store = ParquetStore(spark, path, primary_key=("k",))
-    store.overwrite(spark.createDataFrame([(1,), (2,)], "k int"))
-    staged = store._staged_dir()
-
-    # crash MID-STAGE-WRITE (torn: no _SUCCESS): reads serve main and
-    # leave the stage alone; the next write entry point drops it
-    os.makedirs(staged)
-    with open(os.path.join(staged, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"torn")
-    assert sorted(r[0] for r in store.read().collect()) == [1, 2]
-    assert os.path.isdir(staged)  # reader did NOT clean it
-    store.rewrite(spark.createDataFrame([(3,)], "k int"))
-    assert not os.path.exists(staged)
-    assert [r[0] for r in store.read().collect()] == [3]
-
-    # crash AFTER the stage committed, main still present: a plain
-    # read rolls the rewrite forward
-    spark.createDataFrame([(9,)], "k int").write.parquet(staged)
-    assert [r[0] for r in store.read().collect()] == [9]
-    assert not os.path.exists(staged)
-
-    # crash mid-swap, main already deleted: exists()/read() converge
-    # to the staged result
-    spark.createDataFrame([(7,)], "k int").write.parquet(staged)
-    shutil.rmtree(path)
-    assert store.exists()
-    assert [r[0] for r in store.read().collect()] == [7]
-    assert not os.path.exists(staged)
-
-
-def test_kv_cache_survives_replacement_killed_after_live_delete(
-    spark, tmp_path, monkeypatch
-):
-    """A KVCache table replacement killed after the live directory was
-    removed loses nothing: a new KVCache on that path rolls the
-    completed stage forward, so a key set before the crash is still
-    served. (An overwrite in place had no recovery here: the cache
-    read as empty and the good copy stayed unread in a sibling.)"""
-    import os
-
-    import agrobr_spark.store.fs as fs
-    from agrobr_spark.store.kv_cache import KVCache
-
-    path = str(tmp_path / "kv")
-    KVCache(spark, path).set("a", b"1")
-    real_delete = fs.delete_path
-
-    def killed_after_live_delete(sp, p):
-        out = real_delete(sp, p)
-        if p == path:
-            raise RuntimeError("writer killed after removing the live table")
-        return out
-
-    monkeypatch.setattr(fs, "delete_path", killed_after_live_delete)
-    with pytest.raises(RuntimeError, match="killed"):
-        KVCache(spark, path).set("b", b"2")
-    monkeypatch.undo()
-    assert not os.path.exists(path)  # the live table really was removed
-    kv = KVCache(spark, path)
-    assert kv.get("a") == b"1"
-    assert kv.get("b") == b"2"
-
-
 def test_overwrite_resolves_pending_stage(spark, tmp_path):
     """An uncleared committed stage pending at overwrite() time must
     be resolved BEFORE the overwrite — otherwise the next read's
@@ -744,61 +666,6 @@ def test_posting_index_batchid_replay_is_noop(spark, tmp_path):
     assert read_manifest(path)["applied_batch_ids"] == [0]
     update_posting_index(batch, path, batch_id=1)  # new epoch: applied
     assert state()[0] == s1[0] + 1
-
-
-def test_posting_index_replay_after_midwrite_crash(spark, tmp_path):
-    """Crash-safety of the staged-commit protocol (r9 ADVICE): a crash
-    AFTER the batch directory is written but BEFORE the manifest
-    commit must leave the epoch invisible, and the replay must land it
-    exactly once — the failure window where the old append-then-
-    manifest sequence double-counted."""
-    from agrobr_spark.store import posting as P
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha gamma")],
-        "doc_id bigint, text string",
-    )
-    batch = spark.createDataFrame(
-        [(3, "alpha alpha delta")], "doc_id bigint, text string"
-    )
-    path = str(tmp_path / "idx")
-    P.build_posting_index(corpus, path, n_buckets=8)
-
-    # simulated crash: the data write succeeds, the commit never runs
-    orig_commit = P._commit_batch
-    try:
-        P._commit_batch = lambda *a, **k: (_ for _ in ()).throw(
-            RuntimeError("crash before manifest commit")
-        )
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="crash"):
-            P.update_posting_index(batch, path, batch_id=7)
-    finally:
-        P._commit_batch = orig_commit
-
-    # orphan directory exists but is invisible to every reader
-    import os
-
-    assert os.path.isdir(f"{path}/batches")
-    assert P.read_manifest(path)["active_batches"] == []
-    assert P.read_stats(spark, path).collect()[0]["n"] == 2
-
-    # replay of the same epoch: applied exactly once
-    P.update_posting_index(batch, path, batch_id=7)
-    s = P.read_stats(spark, path).collect()[0]
-    assert (s["n"], s["sum_dl"]) == (3, 7)
-    rows = sorted(
-        (r["doc_id"], r["termo"], r["tf"])
-        for r in P._postings_frame(spark, path).collect()
-    )
-    assert rows == [
-        (1, "alpha", 1), (1, "beta", 1), (2, "alpha", 1),
-        (2, "gamma", 1), (3, "alpha", 2), (3, "delta", 1),
-    ]
-    # and a second replay after the successful commit is a no-op
-    P.update_posting_index(batch, path, batch_id=7)
-    assert P.read_stats(spark, path).collect()[0]["n"] == 3
 
 
 def test_posting_index_compaction(spark, tmp_path):
@@ -1122,10 +989,12 @@ def test_compaction_preserves_epoch_committed_during_rewrite(
         [(4, "epsilon zeta")], "doc_id bigint, text string"
     )
 
-    orig_lmu = P._locked_manifest_update
+    import agrobr_spark.store.fs as fs
+
+    orig_lju = fs.locked_json_update
     state = {"fired": False, "busy": False}
 
-    def lmu(p, mut):
+    def lju(p, mut):
         # the first locked update in this scope is compaction's
         # pointer swap — inject the late epoch BEFORE it takes the
         # lock (the injected update's own commit recurses here, hence
@@ -1133,13 +1002,13 @@ def test_compaction_preserves_epoch_committed_during_rewrite(
         if not state["busy"] and not state["fired"]:
             state["fired"] = True
             state["busy"] = True
-            P.update_posting_index(late, p, batch_id=42)
+            P.update_posting_index(late, path, batch_id=42)
             state["busy"] = False
-        return orig_lmu(p, mut)
+        return orig_lju(p, mut)
 
-    monkeypatch.setattr(P, "_locked_manifest_update", lmu)
+    monkeypatch.setattr(fs, "locked_json_update", lju)
     P.compact_posting_index(spark, path)
-    monkeypatch.setattr(P, "_locked_manifest_update", orig_lmu)
+    monkeypatch.setattr(fs, "locked_json_update", orig_lju)
 
     man = P.read_manifest(path)
     assert man["version"] == 1
@@ -1163,9 +1032,10 @@ def test_update_commit_straddling_compaction_survives(
     update that READS the manifest before a compaction's pointer swap
     and COMMITS after it must not write its stale entry snapshot back
     — that would resurrect the deleted generation's postings_dir and
-    brick the index. _commit_batch's re-read-and-merge lands only the
-    epoch's own delta in the NEW generation's manifest. Simulated by
-    running a real compaction just before the update's commit step."""
+    brick the index. The commit's re-read-and-merge
+    (store/fs.commit_epoch) lands only the epoch's own delta in the NEW
+    generation's manifest. Simulated by running a real compaction just
+    before the update's commit step."""
     from agrobr_spark.store import posting as P
 
     corpus = spark.createDataFrame(
@@ -1183,18 +1053,21 @@ def test_update_commit_straddling_compaction_survives(
         [(4, "epsilon zeta")], "doc_id bigint, text string"
     )
 
-    orig_commit = P._commit_batch
+    import agrobr_spark.store.fs as fs
+
+    orig_lju = fs.locked_json_update
     fired = {"done": False}
 
-    def commit_after_swap(p, bid, guarded):
+    def commit_after_swap(p, mut):
+        # the first locked update in this scope is the update's commit
         if not fired["done"]:
             fired["done"] = True
-            P.compact_posting_index(spark, p)  # swap happens first
-        orig_commit(p, bid, guarded)
+            P.compact_posting_index(spark, path)  # swap happens first
+        return orig_lju(p, mut)
 
-    monkeypatch.setattr(P, "_commit_batch", commit_after_swap)
+    monkeypatch.setattr(fs, "locked_json_update", commit_after_swap)
     P.update_posting_index(late, path, batch_id=7)
-    monkeypatch.setattr(P, "_commit_batch", orig_commit)
+    monkeypatch.setattr(fs, "locked_json_update", orig_lju)
 
     man = P.read_manifest(path)
     assert man["version"] == 1
@@ -1466,19 +1339,23 @@ def test_posting_compaction_deferred_vacuum_reader_survives(
     assert sorted(man2["garbage"]) == sorted(["postings_v1", "stats_v1"])
 
 
-def test_posting_commit_raises_on_missing_manifest(spark, tmp_path):
+def test_posting_commit_raises_on_missing_manifest(
+    spark, tmp_path, monkeypatch
+):
     """r12 ADVICE #2: a commit-time read-modify-write against a
     MISSING manifest must fail loudly, not fabricate a fresh
     version-0 manifest that masks a broken/mislocated store. Only
-    build_posting_index creates manifests."""
+    build_posting_index creates manifests. The manifest vanishes
+    between an epoch's stage and its commit, for a rows-bearing local
+    epoch and for an empty guarded one."""
     import os
 
     import pytest
 
+    import agrobr_spark.store.fs as fs
     from agrobr_spark.store.posting import (
-        _commit_batch,
-        _record_empty_epoch,
         build_posting_index,
+        update_posting_index,
     )
 
     path = str(tmp_path / "idx")
@@ -1489,13 +1366,32 @@ def test_posting_commit_raises_on_missing_manifest(spark, tmp_path):
         path,
         n_buckets=2,
     )
-    os.remove(os.path.join(path, "manifest.json"))
-    with pytest.raises(FileNotFoundError, match="manifest missing"):
-        _commit_batch(path, -1, False)
-    with pytest.raises(FileNotFoundError, match="manifest missing"):
-        _record_empty_epoch(path, 3)
-    assert not os.path.exists(os.path.join(path, "manifest.json"))
+    manifest = os.path.join(path, "manifest.json")
+    with open(manifest, encoding="utf-8") as fh:
+        saved = fh.read()
+    real = fs.locked_json_update
 
+    def lost_before_commit(p, mutate):
+        os.remove(p)
+        return real(p, mutate)
+
+    monkeypatch.setattr(fs, "locked_json_update", lost_before_commit)
+    with pytest.raises(FileNotFoundError, match="manifest missing"):
+        update_posting_index(
+            spark.createDataFrame(
+                [(2, "alpha gamma")], "doc_id bigint, text string"
+            ),
+            path,
+        )
+    with open(manifest, "w", encoding="utf-8") as fh:
+        fh.write(saved)
+    with pytest.raises(FileNotFoundError, match="manifest missing"):
+        update_posting_index(
+            spark.createDataFrame([], "doc_id bigint, text string"),
+            path,
+            batch_id=3,
+        )
+    assert not os.path.exists(manifest)
 
 def test_posting_local_ids_never_reused_after_compaction(spark, tmp_path):
     """The deferred vacuum makes local-id reuse FATAL (a reused id's
@@ -1545,66 +1441,6 @@ def test_posting_local_ids_never_reused_after_compaction(spark, tmp_path):
     compact_posting_index(spark, path)
     got = bm25_topk_indexed(spark, path, ("alpha",), 30, 1.2, 0.75)
     assert got.count() == 25
-
-
-def test_posting_compaction_vacuum_is_crash_safe(
-    spark, tmp_path, monkeypatch
-):
-    """r13 review: the vacuum runs BEFORE the generation write and
-    pointer swap. The old post-commit ordering removed the garbage
-    list from the manifest and only then deleted the dirs, so a crash
-    between the two leaked a generation forever. Now a crash at any
-    point leaves the manifest still naming the (possibly
-    already-deleted) dirs, and the retry re-vacuums them as a
-    no-op."""
-    import os
-
-    from agrobr_spark.store import posting as posting_mod
-    from agrobr_spark.store.posting import (
-        bm25_topk_indexed,
-        build_posting_index,
-        compact_posting_index,
-        read_manifest,
-        update_posting_index,
-    )
-
-    docs = [(i, f"alpha term{i % 7} beta") for i in range(20)]
-    path = str(tmp_path / "idx")
-    build_posting_index(
-        spark.createDataFrame(docs[:10], "doc_id bigint, text string"),
-        path,
-        n_buckets=4,
-    )
-    update_posting_index(
-        spark.createDataFrame(docs[10:], "doc_id bigint, text string"),
-        path,
-        batch_id=0,
-    )
-    compact_posting_index(spark, path)
-    g1 = read_manifest(path)["garbage"]
-    assert g1  # gen-1 debris awaiting the deferred vacuum
-
-    # crash the SECOND compaction just before its manifest commit
-    def boom(path_, mut):
-        raise RuntimeError("crash before pointer swap")
-
-    monkeypatch.setattr(posting_mod, "_locked_manifest_update", boom)
-    with pytest.raises(RuntimeError, match="crash before pointer swap"):
-        compact_posting_index(spark, path)
-    monkeypatch.undo()
-
-    # the vacuum already ran (dirs gone) but the manifest is
-    # untouched — it still names them, which must be harmless
-    man = read_manifest(path)
-    assert sorted(man["garbage"]) == sorted(g1)
-    for d in g1:
-        assert not os.path.exists(os.path.join(path, d)), d
-
-    # retry completes: re-vacuum no-ops, the torn generation dirs are
-    # overwritten (same version number), every document still served
-    compact_posting_index(spark, path)
-    got = bm25_topk_indexed(spark, path, ("alpha",), 30, 1.2, 0.75)
-    assert got.count() == 20
 
 
 def test_posting_update_rejects_explicit_negative_batch_id(
