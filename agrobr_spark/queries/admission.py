@@ -33,20 +33,45 @@ Semantics (deliberate, documented choices):
   centroid table read back from the index store — new data never
   reshuffles old blocking, so repeated admissions stay O(|batch|).
 
+Three survivor-index variants (centroid, MinHash text signature, LSH)
+run one path: ``_build_survivors`` at build, ``_admit_survivors`` per
+batch (contamination gate, min-id losers of the batch's self pairs,
+survivor hits of its cross pairs, precedence CASE, pin, MERGE). A
+variant supplies only its pair finder ``find(a, b) -> (id_a, id_b)``
+(every verified collision, equal ids included), the survivor table
+and its payload columns.
+
 Index layout (all under one scratch/store root):
 
-- ``survivors``  — (doc_id, n_chars, embedding, _blk): admitted docs
-  with their vectors and frozen block id; PK-MERGE target.
-- ``centroids``  — (_cid, _cv): the frozen blocking fit.
-- ``bench_shingles`` — distinct 5-gram shingle hashes of the benchmark
-  set (docs 0-9), broadcast into the contamination gate.
+- ``bench_shingles`` (every variant but SemDeDup) — distinct 5-word
+  shingle hashes of the benchmark set (docs 0-9), broadcast into the
+  contamination gate.
+- ``survivors`` (centroid, LSH) — (doc_id, n_chars, embedding), plus
+  the frozen block id ``_blk`` for the centroid variant: admitted docs
+  with their vectors; PK-MERGE target.
+- ``centroids`` (centroid, SemDeDup) — (_cid, _cv): the frozen
+  blocking fit.
+- ``text_signatures`` (text) — (doc_id, mh0..mh7): admitted docs'
+  MinHash signatures; PK-MERGE target.
+- ``lsh_meta.json`` (LSH) — the bucket width frozen at build.
+- ``sem_seen`` (SemDeDup) — every judged vector, corpus keepers and
+  arrivals alike, with its cluster and verdict; PK-MERGE target.
 
-The catalog entry builds the index from the corpus split (doc_id below
-the 80% id cutoff — both engines derive it from the data), then admits
-the remaining 20% against the persisted tables only, then MERGEs the
-accepted docs back. The DuckDB oracle recomputes the identical
-decision in one SQL query (recursive CTEs for both components
-fixpoints), so the whole incremental path is hash-verified.
+Replay contract (the three survivor variants): cross pairs keep equal
+ids, so a replayed batch meets its own survivor rows — every doc the
+first pass admitted comes back ``duplicado_corpus`` and the store is
+unchanged, which makes the foreachBatch streaming sinks
+effectively-exactly-once. Every other verdict repeats, except that a
+``duplicado_lote`` doc whose batch winner was admitted now meets that
+survivor and comes back ``duplicado_corpus``. SemDeDup has its own
+gate and its own replay argument (its section below).
+
+The catalog entries build the index from the corpus split (doc_id
+below the 80% id cutoff — both engines derive it from the data), then
+admit the remaining 20% against the persisted tables only, then MERGE
+the accepted docs back. The DuckDB oracles recompute the identical
+decision in one SQL query each (recursive CTEs for both components
+fixpoints), so every incremental path is hash-verified.
 """
 
 from __future__ import annotations
@@ -58,7 +83,12 @@ from agrobr_spark.io import checkpoint_parquet, load, read_parquet
 from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.operators.components import connected_components
 from agrobr_spark.queries import register
-from agrobr_spark.queries.dedup import _COS_THRESHOLD
+from agrobr_spark.queries.dedup import (
+    _COS_THRESHOLD,
+    band_keys,
+    minhash_cols,
+    word_shingles,
+)
 from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.store.table import ParquetStore
 
@@ -66,6 +96,7 @@ _CUT_FRAC = 0.8
 _MIN_TOKENS = 5
 _BENCH_DOCS = 10
 _CONTAM_HITS = 3
+_CONTAM_WORDS = 5  # words per contamination shingle
 
 # (cutoff, corpus embedding count) per fixture dir — two scalar jobs,
 # paid once per session like dedup._N_CACHE; mtime-keyed so a
@@ -91,9 +122,9 @@ def _split_params(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return _SPLIT_CACHE[key]
 
 
-def _vec_base(emb: DataFrame) -> DataFrame:
+def _vec_base(emb: DataFrame, id_col: str = "vec_id", *keep: str) -> DataFrame:
     return emb.select(
-        F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
+        F.col(id_col).alias("_id"), F.col("embedding").alias("_vec"), *keep
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
 
 
@@ -102,68 +133,56 @@ def _pair_cos(round_to: int = 6):
     return F.round(c, round_to)
 
 
-def _block_self_pairs(assigned: DataFrame) -> DataFrame:
-    """Within-block self pairs (id_a < id_b, cosseno >= threshold) —
-    the same equi-join-on-block-key shape as cluster_cosine_pairs;
-    at index scale add the skew sub-splitting from allpairs."""
-    a = assigned.select(
-        F.col("_id").alias("ida"),
-        F.col("_vec").alias("va"),
-        F.col("_norm").alias("na"),
-        "_blk",
-    )
-    b = assigned.select(
-        F.col("_id").alias("idb"),
-        F.col("_vec").alias("vb"),
-        F.col("_norm").alias("nb"),
-        "_blk",
-    )
-    return (
-        a.join(b, "_blk")
-        .filter(F.col("ida") < F.col("idb"))
-        .select(
-            F.col("ida").alias("id_a"),
-            F.col("idb").alias("id_b"),
-            _pair_cos().alias("cosseno"),
-        )
-        .filter(F.col("cosseno") >= _COS_THRESHOLD)
-    )
-
-
-def _doc_shingles(docs: DataFrame) -> DataFrame:
-    """Distinct 5-word shingle hashes per doc (text_contamination's
-    shape)."""
-    return (
-        docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(t) - 5), i -> md5(concat_ws("
-                    "' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4])))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
-
-
 def _n_tokens():
     return F.when(
         F.length(F.trim(F.col("text"))) == 0, F.lit(0)
     ).otherwise(F.size(F.split(F.trim(F.col("text")), r"\s+")))
 
 
+# ---- the contamination gate ----
+
+
+def bench_shingles(sh: DataFrame) -> DataFrame:
+    """The benchmark set's distinct shingles (docs below
+    ``_BENCH_DOCS`` stand in for the eval suite) from a (doc_id,
+    shingle) frame."""
+    return sh.filter(F.col("doc_id") < _BENCH_DOCS).select("shingle").distinct()
+
+
+def contaminated(sh: DataFrame, bench: DataFrame) -> DataFrame:
+    """(doc_id, n_comum) for every non-benchmark doc of a (doc_id,
+    shingle) frame sharing at least ``_CONTAM_HITS`` distinct shingles
+    with the benchmark set. The benchmark side is tiny by
+    construction, so it broadcasts and nothing shuffles on the corpus
+    side."""
+    return (
+        sh.filter(F.col("doc_id") >= _BENCH_DOCS)
+        .join(F.broadcast(bench), "shingle")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_comum"))
+        .filter(F.col("n_comum") >= _CONTAM_HITS)
+    )
+
+
+def _write_bench(docs: DataFrame, store_dir: str) -> DataFrame:
+    """Persist the benchmark shingle set every admission broadcasts."""
+    sh = word_shingles(docs, _CONTAM_WORDS, "doc_id")
+    return checkpoint_parquet(bench_shingles(sh), f"{store_dir}/bench_shingles")
+
+
+# ---- the one gate -> decide -> write path ----
+
+
 def _decisions(
     docs: DataFrame,
-    contaminado: DataFrame,
+    bench: DataFrame,
     duplicado_flags: list[tuple[str, DataFrame]],
 ) -> DataFrame:
     """Precedence CASE over independent gate flags: curto >
     contaminado > the duplicado flags in order > mantido."""
+    hits = contaminated(word_shingles(docs, _CONTAM_WORDS, "doc_id"), bench)
     out = docs.select("doc_id", _n_tokens().alias("n_tokens")).join(
-        contaminado.select("doc_id", F.lit(True).alias("_contaminado")),
+        hits.select("doc_id", F.lit(True).alias("_contaminado")),
         "doc_id",
         "left",
     )
@@ -182,6 +201,132 @@ def _decisions(
     )
 
 
+def _losers(find, side: DataFrame) -> DataFrame:
+    """Min-id survivorship over ``side``'s self pairs (each unordered
+    pair once): every component member but its smallest id loses."""
+    pairs = find(side, side).filter(F.col("id_a") < F.col("id_b"))
+    comp = connected_components(pairs, "id_a", "id_b")
+    return comp.filter(F.col("componente") < F.col("id")).select(
+        F.col("id").alias("doc_id")
+    )
+
+
+def _kept(dec: DataFrame, payload: list[DataFrame]) -> DataFrame:
+    out = dec.filter(F.col("mantido")).select("doc_id")
+    for cols in payload:
+        out = out.join(cols, "doc_id")
+    return out
+
+
+def _build_survivors(
+    store: ParquetStore,
+    docs: DataFrame,
+    bench: DataFrame,
+    find,
+    side: DataFrame,
+    payload: list[DataFrame],
+) -> None:
+    """Corpus side: gate the corpus split against itself and write the
+    survivors' ``payload`` (doc_id-keyed frames) as the new table."""
+    dec = _decisions(docs, bench, [("duplicado", _losers(find, side))])
+    store.overwrite(_kept(dec, payload))
+
+
+def _admit_survivors(
+    store: ParquetStore,
+    docs_b: DataFrame,
+    bench: DataFrame,
+    find,
+    batch: DataFrame,
+    surv: DataFrame,
+    payload: list[DataFrame],
+) -> DataFrame:
+    """Batch side: gate ``docs_b`` against the survivors (cross pairs
+    ``find(batch, surv)``) and itself, pin the decision, MERGE the
+    admitted docs' ``payload`` into ``store``. Returns (doc_id, motivo
+    in curto/contaminado/duplicado_corpus/duplicado_lote/mantido,
+    mantido)."""
+    dup_corpus = find(batch, surv).select(F.col("id_a").alias("doc_id")).distinct()
+    dec = _decisions(
+        docs_b,
+        bench,
+        [
+            ("duplicado_corpus", dup_corpus),
+            ("duplicado_lote", _losers(find, batch)),
+        ],
+    )
+    # the decision plan reads the store files the MERGE below will
+    # rewrite — pin the result before mutating the store
+    dec = dec.localCheckpoint(eager=True)
+    store.merge_upsert(_kept(dec, payload))
+    return dec
+
+
+def _vector_payload(docs: DataFrame, vecs: DataFrame, *keep: str) -> list:
+    return [
+        docs.select("doc_id", "n_chars"),
+        vecs.select(
+            F.col("_id").alias("doc_id"), F.col("_vec").alias("embedding"), *keep
+        ),
+    ]
+
+
+# ---- centroid admission: the frozen-blocking variant ----
+
+
+def _block_pairs(a_side: DataFrame, b_side: DataFrame) -> DataFrame:
+    """Pairs in the same frozen block at cosseno >= threshold — the
+    same equi-join-on-block-key shape as cluster_cosine_pairs; at
+    index scale add the skew sub-splitting from allpairs."""
+    a = a_side.select(
+        F.col("_id").alias("ida"),
+        F.col("_vec").alias("va"),
+        F.col("_norm").alias("na"),
+        "_blk",
+    )
+    b = b_side.select(
+        F.col("_id").alias("idb"),
+        F.col("_vec").alias("vb"),
+        F.col("_norm").alias("nb"),
+        "_blk",
+    )
+    return (
+        a.join(b, "_blk")
+        .filter(_pair_cos() >= _COS_THRESHOLD)
+        .select(F.col("ida").alias("id_a"), F.col("idb").alias("id_b"))
+    )
+
+
+def _frozen_centroids(
+    spark: SparkSession,
+    sf_dir: str,
+    store_dir: str,
+    cutoff: int | None,
+    n_centroids: int | None,
+):
+    """(cut, corpus vector base, freeze): ``freeze()`` writes the
+    corpus split's lowest-id centroids to ``store_dir`` and returns
+    them. Lowest-id, not k-means: the frozen fit must be replicable by
+    the pure-SQL oracle; swap fit_centroids_kmeans here when blocking
+    recall matters more than cross-engine verification."""
+    cut, n_corp = _split_params(spark, sf_dir)
+    if cutoff is not None:
+        cut = int(cutoff)
+        n_corp = (
+            load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut).count()
+        )
+    k = int(n_centroids) if n_centroids is not None else max(4, int(n_corp**0.5))
+    base = _vec_base(
+        load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut)
+    )
+    cent = (
+        base.orderBy("_id")
+        .limit(k)
+        .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
+    )
+    return cut, base, lambda: checkpoint_parquet(cent, f"{store_dir}/centroids")
+
+
 def build_admission_index(
     spark: SparkSession,
     sf_dir: str,
@@ -193,25 +338,12 @@ def build_admission_index(
     split (docs below ``cutoff``) and persist it under ``store_dir``.
     In production this ran yesterday; the catalog query runs it so the
     admission path has real on-disk state to read back."""
-    cut, n_corp = _split_params(spark, sf_dir)
-    if cutoff is not None:
-        cut = int(cutoff)
-        n_corp = (
-            load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut).count()
-        )
-    k = int(n_centroids) if n_centroids is not None else max(4, int(n_corp**0.5))
+    from agrobr_spark.session import run_concurrently
 
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < cut)
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut)
-    base = _vec_base(emb)
-    # lowest-id centroids: the frozen fit must be replicable by the
-    # pure-SQL oracle; swap fit_centroids_kmeans here when blocking
-    # recall matters more than cross-engine verification
-    cent = (
-        base.orderBy("_id")
-        .limit(k)
-        .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
+    cut, base, freeze = _frozen_centroids(
+        spark, sf_dir, store_dir, cutoff, n_centroids
     )
+    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < cut)
 
     # the embedding branch (centroid write -> pinned assignment) and
     # the text branch (benchmark-shingle write) are independent until
@@ -221,56 +353,21 @@ def build_admission_index(
     # tables). Measured breakdown r14: the branches are 1.5-2 s and
     # 0.3-0.7 s warm, all real work — this overlap is the one
     # composition-layer lever left after the r13/r14 assignment pins.
-    sh = _doc_shingles(docs)
-
     def _embed_branch() -> DataFrame:
-        cread = checkpoint_parquet(cent, f"{store_dir}/centroids")
         # three consumers (both pair-join sides, the survivor join)
         # would each re-run the scored assignment — pin it once
-        return assign_to_centroids(base, cread).localCheckpoint(
-            eager=True
-        )
+        return assign_to_centroids(base, freeze()).localCheckpoint(eager=True)
 
-    def _bench_branch() -> DataFrame:
-        bench = (
-            sh.filter(F.col("doc_id") < _BENCH_DOCS)
-            .select("shingle")
-            .distinct()
-        )
-        return checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
-
-    from agrobr_spark.session import run_concurrently
-
-    assigned, bench = run_concurrently(spark, _embed_branch, _bench_branch)
-    pares = _block_self_pairs(assigned)
-    comp = connected_components(pares, "id_a", "id_b")
-    perdedor = comp.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
+    assigned, bench = run_concurrently(
+        spark, _embed_branch, lambda: _write_bench(docs, store_dir)
     )
-    contaminado = (
-        sh.filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
-
-    dec = _decisions(docs, contaminado, [("duplicado", perdedor)])
-    survivors = (
-        dec.filter(F.col("mantido"))
-        .select("doc_id")
-        .join(docs.select("doc_id", "n_chars"), "doc_id")
-        .join(
-            assigned.select(
-                F.col("_id").alias("doc_id"),
-                F.col("_vec").alias("embedding"),
-                "_blk",
-            ),
-            "doc_id",
-        )
-    )
-    ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",)).overwrite(
-        survivors
+    _build_survivors(
+        ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",)),
+        docs,
+        bench,
+        _block_pairs,
+        assigned,
+        _vector_payload(docs, assigned, "_blk"),
     )
 
 
@@ -281,12 +378,7 @@ def admit_batch(
     cutoff: int | None = None,
 ) -> DataFrame:
     """Admit the batch split (docs at or above the cutoff) against the
-    PERSISTED index only: gates read the stored benchmark shingles,
-    centroids, and survivors — never the corpus documents — then MERGE
-    the accepted docs (with their vectors and frozen block ids) back
-    into the survivor table. Returns one decision row per batch doc:
-    (doc_id, motivo in curto/contaminado/duplicado_corpus/
-    duplicado_lote/mantido, mantido)."""
+    persisted centroid index with ``admit_frame``."""
     cut = int(cutoff) if cutoff is not None else _split_params(spark, sf_dir)[0]
     docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
     emb_b = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= cut)
@@ -299,78 +391,26 @@ def admit_frame(
     emb_b: DataFrame,
     store_dir: str,
 ) -> DataFrame:
-    """Frame-level admission: gate arbitrary (documents, embeddings)
-    frames against the persisted index and MERGE the accepted rows
-    back. ``admit_batch`` feeds it the cutoff split; the streaming
-    sink (queries/streaming_ops.stream_admit_batch) calls it once per
-    micro-batch — same code path, so replay idempotency (a re-admitted
-    doc is its own survivor and gets duplicado_corpus) holds for the
-    stream for free."""
+    """Gate arbitrary (documents, embeddings) frames against the
+    persisted centroid index — stored benchmark shingles, centroids
+    and survivors, never the corpus documents — and MERGE the accepted
+    docs (with their vectors and frozen block ids) back."""
     store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
-    surv = store.read()
     cent = read_parquet(spark, f"{store_dir}/centroids")
-    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
-
-    contaminado = (
-        _doc_shingles(docs_b)
-        .filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
-
     # four consumers (corpus-dup probe, both batch pair-join sides,
     # the admitted-rows merge) — pin the batch assignment once
     assigned_b = assign_to_centroids(_vec_base(emb_b), cent).localCheckpoint(
         eager=True
     )
-    sv = surv.select(
-        F.col("embedding").alias("vb"), "_blk"
-    ).withColumn("nb", F.sqrt(_dot("vb", "vb")))
-    dup_corpus = (
-        assigned_b.select(
-            F.col("_id").alias("doc_id"),
-            F.col("_vec").alias("va"),
-            F.col("_norm").alias("na"),
-            "_blk",
-        )
-        .join(sv, "_blk")
-        .filter(_pair_cos() >= _COS_THRESHOLD)
-        .select("doc_id")
-        .distinct()
-    )
-
-    pares_b = _block_self_pairs(assigned_b)
-    comp_b = connected_components(pares_b, "id_a", "id_b")
-    perdedor_lote = comp_b.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
-    )
-
-    dec = _decisions(
+    return _admit_survivors(
+        store,
         docs_b,
-        contaminado,
-        [("duplicado_corpus", dup_corpus), ("duplicado_lote", perdedor_lote)],
+        read_parquet(spark, f"{store_dir}/bench_shingles"),
+        _block_pairs,
+        assigned_b,
+        _vec_base(store.read(), "doc_id", "_blk"),
+        _vector_payload(docs_b, assigned_b, "_blk"),
     )
-    # the decision plan reads the survivor files the MERGE below will
-    # rewrite — pin the result before mutating the store
-    dec = dec.localCheckpoint(eager=True)
-
-    admitted = (
-        dec.filter(F.col("mantido"))
-        .select("doc_id")
-        .join(docs_b.select("doc_id", "n_chars"), "doc_id")
-        .join(
-            assigned_b.select(
-                F.col("_id").alias("doc_id"),
-                F.col("_vec").alias("embedding"),
-                "_blk",
-            ),
-            "doc_id",
-        )
-    )
-    store.merge_upsert(admitted)
-    return dec
 
 
 def _dotp(a: str, b: str) -> str:
@@ -516,6 +556,7 @@ def pipeline_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return dec.localCheckpoint(eager=True)
 
 
+
 # ---- text-signature admission: the MinHash-index variant ----
 #
 # The embedding pipeline above blocks on vectors; this one is the pure
@@ -538,56 +579,19 @@ _SIG_MATCH_MIN = 4  # of N_HASHES component-wise matches
 def _text_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh7) MinHash signatures from 3-word shingles —
     the dedup module's engine-independent md5 family."""
-    from agrobr_spark.queries.dedup import minhash_cols
-
-    sh = (
-        docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(t) - 3),"
-                    " i -> md5(concat_ws(' ', t[i], t[i+1], t[i+2])))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
+    return word_shingles(docs, 3, "doc_id").groupBy("doc_id").agg(
+        *minhash_cols()
     )
-    return sh.groupBy("doc_id").agg(*minhash_cols())
 
 
-def _sig_band_keys(sigs: DataFrame) -> DataFrame:
-    """Band keys recomputed from a stored signature table (cheap
-    expressions — the index persists only the signatures)."""
-    from agrobr_spark.queries.dedup import lsh_bands
-
-    out = None
-    for b, cols in lsh_bands():
-        banda = sigs.select(
-            "doc_id",
-            F.lit(b).alias("banda"),
-            F.md5(F.concat(*[F.col(c) for c in cols])).alias("chave"),
-        )
-        out = banda if out is None else out.unionByName(banda)
-    return out
-
-
-def _sig_match_pairs(
-    sigs_a: DataFrame, sigs_b: DataFrame, a_lt_b: bool
-) -> DataFrame:
+def _sig_match_pairs(sigs_a: DataFrame, sigs_b: DataFrame) -> DataFrame:
     """(id_a, id_b) pairs from band-key collision verified by
-    signature agreement (>= _SIG_MATCH_MIN matching minhashes).
-    ``a_lt_b`` restricts to id_a < id_b (self-join mode)."""
+    signature agreement (>= _SIG_MATCH_MIN matching minhashes)."""
     from agrobr_spark.queries.dedup import N_HASHES
 
-    ba = _sig_band_keys(sigs_a).withColumnRenamed("doc_id", "id_a")
-    bb = _sig_band_keys(sigs_b).withColumnRenamed("doc_id", "id_b")
+    ba = band_keys(sigs_a).withColumnRenamed("doc_id", "id_a")
+    bb = band_keys(sigs_b).withColumnRenamed("doc_id", "id_b")
     cand = ba.join(bb, ["banda", "chave"]).select("id_a", "id_b").distinct()
-    if a_lt_b:
-        cand = cand.filter(F.col("id_a") < F.col("id_b"))
-    else:
-        cand = cand.filter(F.col("id_a") != F.col("id_b"))
     sa = sigs_a.select(
         F.col("doc_id").alias("id_a"),
         *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_HASHES)],
@@ -615,35 +619,19 @@ def build_text_admission_index(
     store_dir: str,
     cutoff: int | None = None,
 ) -> None:
-    """Corpus-side text admission: gates + min-id survivorship over
-    signature-match components; persists admitted docs' SIGNATURES
-    (table ``text_signatures``) and the benchmark shingle set."""
+    """Corpus-side text admission: persists the survivors'
+    SIGNATURES (table ``text_signatures``) and the benchmark shingle
+    set."""
     cut = int(cutoff) if cutoff is not None else _split_params(spark, sf_dir)[0]
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < cut)
-
     sigs = _text_signatures(docs)
-    pares = _sig_match_pairs(sigs, sigs, a_lt_b=True)
-    comp = connected_components(pares, "id_a", "id_b")
-    perdedor = comp.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
-    )
-
-    sh = _doc_shingles(docs)
-    bench = sh.filter(F.col("doc_id") < _BENCH_DOCS).select("shingle").distinct()
-    bench = checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
-    contaminado = (
-        sh.filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
-    dec = _decisions(docs, contaminado, [("duplicado", perdedor)])
-    surv_sigs = (
-        dec.filter(F.col("mantido")).select("doc_id").join(sigs, "doc_id")
-    )
-    ParquetStore(spark, f"{store_dir}/text_signatures", ("doc_id",)).overwrite(
-        surv_sigs
+    _build_survivors(
+        ParquetStore(spark, f"{store_dir}/text_signatures", ("doc_id",)),
+        docs,
+        _write_bench(docs, store_dir),
+        _sig_match_pairs,
+        sigs,
+        [sigs],
     )
 
 
@@ -652,48 +640,18 @@ def admit_text_frame(
 ) -> DataFrame:
     """Admit a batch of documents against the TEXT index only: the
     batch's own signatures vs the persisted survivor signatures (one
-    band-key equi-join + agreement check), batch-internal components,
-    then MERGE the accepted docs' signatures back."""
+    band-key equi-join + agreement check)."""
     store = ParquetStore(spark, f"{store_dir}/text_signatures", ("doc_id",))
-    surv_sigs = store.read()
-    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
-
-    contaminado = (
-        _doc_shingles(docs_b)
-        .filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
     sigs_b = _text_signatures(docs_b)
-    dup_corpus = (
-        _sig_match_pairs(surv_sigs, sigs_b, a_lt_b=False)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    pares_b = _sig_match_pairs(sigs_b, sigs_b, a_lt_b=True)
-    comp_b = connected_components(pares_b, "id_a", "id_b")
-    perdedor_lote = comp_b.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
-    )
-    dec = _decisions(
+    return _admit_survivors(
+        store,
         docs_b,
-        contaminado,
-        [("duplicado_corpus", dup_corpus), ("duplicado_lote", perdedor_lote)],
+        read_parquet(spark, f"{store_dir}/bench_shingles"),
+        _sig_match_pairs,
+        sigs_b,
+        store.read(),
+        [sigs_b],
     )
-    dec = dec.localCheckpoint(eager=True)
-    admitted_sigs = (
-        dec.filter(F.col("mantido")).select("doc_id").join(sigs_b, "doc_id")
-    )
-    store.merge_upsert(admitted_sigs)
-    return dec
-
-
-def _sig_sql_cols(alias: str) -> str:
-    from agrobr_spark.queries.dedup import N_HASHES
-
-    return ", ".join(f"{alias}.mh{i}" for i in range(N_HASHES))
 
 
 def _text_admit_oracle() -> str:
@@ -829,6 +787,7 @@ def pipeline_admit_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         return dec.localCheckpoint(eager=True)
 
 
+
 # ---- LSH-embedding admission: the fit-free variant ----
 #
 # The centroid pipeline above must FREEZE a blocking fit (yesterday's
@@ -878,53 +837,39 @@ def _lsh_probes(base: DataFrame, n_planes: int) -> DataFrame:
     )
 
 
-def _lsh_candidates(
-    probe_side: DataFrame,
-    bucket_side: DataFrame,
-    self_mode: bool,
-    n_planes: int,
-) -> DataFrame:
-    """Distinct (ida, idb) bucket-collision candidates: probe rows of
-    one side meet bucket rows of the other on (tabela, key). Self mode
-    keeps ida < idb; cross mode keeps everything INCLUDING equal ids,
-    so a replayed doc collides with its own survivor row (cos 1.0) and
-    is rejected as duplicado_corpus — replay idempotency for free.
+def _lsh_pairs(a_side: DataFrame, b_side: DataFrame, n_planes: int) -> DataFrame:
+    """(id_a, id_b) pairs: probe rows of ``a_side`` meet bucket rows of
+    ``b_side`` on (tabela, key), and the distinct candidates are
+    verified by exact cosine.
 
     ``n_planes`` is the index's frozen bucket width (see
     ``lsh_planes_for``): both sides MUST hash with the width the index
     was built at or collisions are missed — which is why the width is
     persisted as index metadata, not recomputed per batch."""
-    p = _lsh_probes(probe_side, n_planes).select(
+    p = _lsh_probes(a_side, n_planes).select(
         F.col("_id").alias("ida"), "tabela", "sonda"
     )
-    b = _lsh_buckets(bucket_side, n_planes).select(
+    b = _lsh_buckets(b_side, n_planes).select(
         F.col("_id").alias("idb"), "tabela", "balde"
     )
-    cand = p.join(
-        b, (p["tabela"] == b["tabela"]) & (p["sonda"] == b["balde"])
-    ).select("ida", "idb")
-    if self_mode:
-        cand = cand.filter(F.col("ida") < F.col("idb"))
-    return cand.distinct()
-
-
-def _lsh_verified_pairs(
-    cand: DataFrame, base_a: DataFrame, base_b: DataFrame
-) -> DataFrame:
-    """Exact-cosine verification of candidate pairs."""
-    a = base_a.select(
+    cand = (
+        p.join(b, (p["tabela"] == b["tabela"]) & (p["sonda"] == b["balde"]))
+        .select("ida", "idb")
+        .distinct()
+    )
+    va = a_side.select(
         F.col("_id").alias("ida"),
         F.col("_vec").alias("va"),
         F.col("_norm").alias("na"),
     )
-    b = base_b.select(
+    vb = b_side.select(
         F.col("_id").alias("idb"),
         F.col("_vec").alias("vb"),
         F.col("_norm").alias("nb"),
     )
     return (
-        cand.join(a, "ida")
-        .join(b, "idb")
+        cand.join(va, "ida")
+        .join(vb, "idb")
         .filter(_pair_cos() >= _COS_THRESHOLD)
         .select(F.col("ida").alias("id_a"), F.col("idb").alias("id_b"))
     )
@@ -936,9 +881,10 @@ def build_lsh_admission_index(
     store_dir: str,
     cutoff: int | None = None,
 ) -> None:
-    """Corpus-side build: same gates as build_admission_index but with
-    LSH pair blocking and NO fitted state — the index is the survivor
-    table (doc_id, n_chars, embedding) plus the benchmark shingles."""
+    """Corpus-side build with LSH pair blocking and NO fitted state —
+    the index is the survivor table (doc_id, n_chars, embedding), the
+    benchmark shingles and the frozen bucket width."""
+    import functools
     import json
 
     from agrobr_spark.queries.similarity import lsh_planes_for
@@ -946,8 +892,7 @@ def build_lsh_admission_index(
 
     cut = int(cutoff) if cutoff is not None else _split_params(spark, sf_dir)[0]
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < cut)
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut)
-    base = _vec_base(emb)
+    base = _vec_base(load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut))
 
     # freeze the bucket width at build time from the corpus size and
     # persist it with the index: every later batch must hash with the
@@ -959,40 +904,13 @@ def build_lsh_admission_index(
     write_text(
         spark, f"{store_dir}/lsh_meta.json", json.dumps({"n_planes": n_planes})
     )
-
-    pares = _lsh_verified_pairs(
-        _lsh_candidates(base, base, True, n_planes), base, base
-    )
-    comp = connected_components(pares, "id_a", "id_b")
-    perdedor = comp.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
-    )
-
-    sh = _doc_shingles(docs)
-    bench = sh.filter(F.col("doc_id") < _BENCH_DOCS).select("shingle").distinct()
-    bench = checkpoint_parquet(bench, f"{store_dir}/bench_shingles")
-    contaminado = (
-        sh.filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
-
-    dec = _decisions(docs, contaminado, [("duplicado", perdedor)])
-    survivors = (
-        dec.filter(F.col("mantido"))
-        .select("doc_id")
-        .join(docs.select("doc_id", "n_chars"), "doc_id")
-        .join(
-            base.select(
-                F.col("_id").alias("doc_id"), F.col("_vec").alias("embedding")
-            ),
-            "doc_id",
-        )
-    )
-    ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",)).overwrite(
-        survivors
+    _build_survivors(
+        ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",)),
+        docs,
+        _write_bench(docs, store_dir),
+        functools.partial(_lsh_pairs, n_planes=n_planes),
+        base,
+        _vector_payload(docs, base),
     )
 
 
@@ -1039,18 +957,15 @@ def admit_lsh_frame(
     Survivor buckets are recomputed by pure projection at read time
     (cheap expressions; at 100 TB persist the survivor table bucketed
     by (tabela, balde) instead and the probe join partition-prunes).
-
-    Rebuild policy: the bucket width is frozen at index build, so a
-    store that has grown past TARGET_BUCKET * 2^p * 4 survivors emits
-    a RuntimeWarning — rebuild with ``build_lsh_admission_index`` to
-    re-derive the width before per-batch cost degrades linearly."""
+    The width comes from ``lsh_meta.json``; ``_lsh_occupancy_check``
+    warns once the store outgrows it."""
+    import functools
     import json
 
     from agrobr_spark.store.fs import read_text
 
     store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
     surv = store.read()
-    bench = read_parquet(spark, f"{store_dir}/bench_shingles")
     meta = read_text(spark, f"{store_dir}/lsh_meta.json")
     if meta is None:
         raise ValueError(
@@ -1059,60 +974,18 @@ def admit_lsh_frame(
             "freezes the LSH bucket width"
         )
     n_planes = int(json.loads(meta)["n_planes"])
-
     _lsh_occupancy_check(surv.count(), n_planes)
 
-    contaminado = (
-        _doc_shingles(docs_b)
-        .filter(F.col("doc_id") >= _BENCH_DOCS)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _CONTAM_HITS)
-    )
-
     base_b = _vec_base(emb_b)
-    base_s = _vec_base(
-        surv.select(
-            F.col("doc_id").alias("vec_id"), F.col("embedding")
-        )
-    )
-    dup_corpus = (
-        _lsh_verified_pairs(
-            _lsh_candidates(base_b, base_s, False, n_planes), base_b, base_s
-        )
-        .select(F.col("id_a").alias("doc_id"))
-        .distinct()
-    )
-
-    pares_b = _lsh_verified_pairs(
-        _lsh_candidates(base_b, base_b, True, n_planes), base_b, base_b
-    )
-    comp_b = connected_components(pares_b, "id_a", "id_b")
-    perdedor_lote = comp_b.filter(F.col("componente") < F.col("id")).select(
-        F.col("id").alias("doc_id")
-    )
-
-    dec = _decisions(
+    return _admit_survivors(
+        store,
         docs_b,
-        contaminado,
-        [("duplicado_corpus", dup_corpus), ("duplicado_lote", perdedor_lote)],
+        read_parquet(spark, f"{store_dir}/bench_shingles"),
+        functools.partial(_lsh_pairs, n_planes=n_planes),
+        base_b,
+        _vec_base(surv, "doc_id"),
+        _vector_payload(docs_b, base_b),
     )
-    dec = dec.localCheckpoint(eager=True)
-
-    admitted = (
-        dec.filter(F.col("mantido"))
-        .select("doc_id")
-        .join(docs_b.select("doc_id", "n_chars"), "doc_id")
-        .join(
-            base_b.select(
-                F.col("_id").alias("doc_id"), F.col("_vec").alias("embedding")
-            ),
-            "doc_id",
-        )
-    )
-    store.merge_upsert(admitted)
-    return dec
 
 
 def _lsh_oracle(final_select: str | None = None) -> str:
@@ -1284,6 +1157,7 @@ def pipeline_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return dec.localCheckpoint(eager=True)
 
 
+
 # -- SemDeDup incremental admission (r8 VERDICT next #3) ------------
 #
 # The streamed twin of queries/dedup.dedup_semdedup: corpus keepers
@@ -1319,25 +1193,10 @@ def build_semdedup_index(
     replicable, like build_admission_index), run the paper-rule prune
     over the corpus split, and persist centroids + the seen table
     (corpus keepers, origem='corpus') under ``store_dir``."""
-    cut, n_corp = _split_params(spark, sf_dir)
-    if cutoff is not None:
-        cut = int(cutoff)
-        n_corp = (
-            load(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") < cut)
-            .count()
-        )
-    k = int(n_centroids) if n_centroids is not None else max(4, int(n_corp**0.5))
-
-    base = _vec_base(
-        load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < cut)
+    _, base, freeze = _frozen_centroids(
+        spark, sf_dir, store_dir, cutoff, n_centroids
     )
-    cent = (
-        base.orderBy("_id")
-        .limit(k)
-        .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
-    )
-    cent = checkpoint_parquet(cent, f"{store_dir}/centroids")
+    cent = freeze()
 
     # three consumers (both victim-join sides, the keeper anti-join)
     # — pin the scored assignment once

@@ -37,31 +37,33 @@ BAND_SIZE = 2  # → 4 bands
 # tests/test_operators.py.
 
 
-def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 3-word shingles per doc (0-based Spark array subscripts)."""
-    d = load(spark, sf_dir, "documents")
+def word_shingles(frame: DataFrame, k: int, *keys: str) -> DataFrame:
+    """Distinct md5 hashes of the ``k``-word shingles of each row's
+    ``text``, one (``*keys``, shingle) row each; texts shorter than
+    ``k`` words give none. Every shuffle, distinct and join downstream
+    moves a fixed 32-char key instead of arbitrary-length n-gram text.
+    The DuckDB oracles spell the same shingle with 1-based subscripts."""
+    rest = "".join(f", t[i+{j}]" for j in range(1, int(k)))
     return (
-        d.select(
-            "doc_id",
-            "source",
-            F.split(F.trim(F.col("text")), r"\s+").alias("t"),
-        )
-        .filter(F.size("t") >= 3)
+        frame.select(*keys, F.split(F.trim("text"), r"\s+").alias("t"))
+        .filter(F.size("t") >= k)
         .select(
-            "doc_id",
-            "source",
-            # hash each shingle immediately: every downstream shuffle,
-            # distinct, and join moves a fixed 32-char key instead of
-            # arbitrary-length trigram text
+            *keys,
             F.explode(
                 F.expr(
-                    "transform(sequence(0, size(t) - 3),"
-                    " i -> md5(concat_ws(' ', t[i], t[i+1], t[i+2])))"
+                    f"transform(sequence(0, size(t) - {int(k)}),"
+                    f" i -> md5(concat_ws(' ', t[i]{rest})))"
                 )
             ).alias("shingle"),
         )
         .distinct()
     )
+
+
+def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct 3-word shingles per (doc_id, source)."""
+    docs = load(spark, sf_dir, "documents")
+    return word_shingles(docs, 3, "doc_id", "source")
 
 
 _SHINGLES_SQL = r"""
@@ -111,23 +113,30 @@ def lsh_candidate_probability(s: float, n_hashes: int, band_size: int) -> float:
     return 1.0 - (1.0 - float(s) ** r) ** b
 
 
-def minhash_band_keys(
-    shingles: DataFrame, n_hashes: int = N_HASHES, band_size: int = BAND_SIZE
+def band_keys(
+    sigs: DataFrame, n_hashes: int = N_HASHES, band_size: int = BAND_SIZE
 ) -> DataFrame:
-    """(doc_id, banda, chave) LSH band keys from a (doc_id, shingle)
-    frame — docs sharing any (banda, chave) are candidates. The band
-    key is one md5 over the band's concatenated minhashes, so shuffle
-    width stays one 32-char key regardless of signature width."""
-    assin = shingles.groupBy("doc_id").agg(*minhash_cols(n_hashes))
+    """(doc_id, banda, chave) LSH band keys from a (doc_id, mh0..)
+    signature frame — docs sharing any (banda, chave) are candidates.
+    The band key is one md5 over the band's concatenated minhashes, so
+    shuffle width stays one 32-char key regardless of signature width."""
     bandas = None
     for b, cols in lsh_bands(n_hashes, band_size):
-        banda = assin.select(
+        banda = sigs.select(
             "doc_id",
             F.lit(b).alias("banda"),
             F.md5(F.concat(*[F.col(c) for c in cols])).alias("chave"),
         )
         bandas = banda if bandas is None else bandas.unionByName(banda)
     return bandas
+
+
+def minhash_band_keys(
+    shingles: DataFrame, n_hashes: int = N_HASHES, band_size: int = BAND_SIZE
+) -> DataFrame:
+    """``band_keys`` of the signatures of a (doc_id, shingle) frame."""
+    assin = shingles.groupBy("doc_id").agg(*minhash_cols(n_hashes))
+    return band_keys(assin, n_hashes, band_size)
 
 
 _MINHASH_SQL_COLS = ",\n        ".join(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load, read_parquet
 from agrobr_spark.queries import register
+from agrobr_spark.queries.dedup import word_shingles
 from agrobr_spark.store.fs import scratch_dir
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -425,31 +426,10 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is scanned once, nothing shuffles on the corpus side,
     and at 100 TB this is the standard decontamination sweep shape
     (shingle → hash → semi-join against the benchmark index)."""
-    d = load(spark, sf_dir, "documents")
-    sh = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(t) - 5), i -> md5(concat_ws("
-                    "' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4])))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
-    bench = (
-        sh.filter(F.col("doc_id") < 10).select("shingle").distinct()
-    )
-    return (
-        sh.filter(F.col("doc_id") >= 10)
-        .join(F.broadcast(bench), "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_comum"))
-        .filter(F.col("n_comum") >= 3)
-    )
+    from agrobr_spark.queries.admission import bench_shingles, contaminated
+
+    sh = word_shingles(load(spark, sf_dir, "documents"), 5, "doc_id")
+    return contaminated(sh, bench_shingles(sh))
 
 
 def _gates_cte() -> str:
@@ -859,21 +839,7 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is at most |sources|²/2 per shingle — with the source dimension in
     the tens this stays a skew-free hash join at any corpus size. The
     two totals join on the tiny per-source frame (broadcast)."""
-    d = load(spark, sf_dir, "documents")
-    sh = (
-        d.select("source", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(t) - 5), i -> md5(concat_ws("
-                    "' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4])))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = word_shingles(load(spark, sf_dir, "documents"), 5, "source")
     tam = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("source").alias("fonte_a"), "shingle")
     b = sh.select(F.col("source").alias("fonte_b"), "shingle")
@@ -1749,21 +1715,7 @@ def text_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine floor), never over the corpus. At 100 TB the candidate
     generation scales as the exact sweep does (shingle semi-join /
     IVF-prunable cosine) and the fusion stays candidate-sized."""
-    d = load(spark, sf_dir, "documents")
-    sh = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(t) - 5), i -> md5(concat_ws("
-                    "' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4])))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = word_shingles(load(spark, sf_dir, "documents"), 5, "doc_id")
     bench_sh = sh.filter(F.col("doc_id") < FUZZY_BENCH_DOCS).select(
         F.col("doc_id").alias("bid"), "shingle"
     )

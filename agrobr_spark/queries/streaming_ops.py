@@ -442,6 +442,74 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
 
 
+def _stream_admission(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build,
+    staged,
+    handle,
+    table: str,
+    key: str,
+    read,
+) -> DataFrame:
+    """The streamed admission driver: ``build(spark, sf_dir,
+    store_dir)`` the index from the corpus split, fold the batch split
+    ``staged(cut)`` (rows keyed ``key``) into it one id-ranged
+    micro-batch at a time through ``handle(batch, store_dir)``, compact
+    the ``table`` the micro-batch MERGEs accreted (the Delta OPTIMIZE
+    analog — small files are the dominant scan cost of an always-on
+    incremental sink at 100 TB), and return ``read`` of the compacted
+    table, pinned before the scratch index vanishes."""
+    from agrobr_spark.queries.admission import _split_params
+    from agrobr_spark.store.table import ParquetStore, compact
+
+    with scratch_dir(spark, f"{name}_idx_") as store_dir:
+        build(spark, sf_dir, store_dir)
+        cut = _split_params(spark, sf_dir)[0]
+        _fold_stream(
+            spark, staged(cut), lambda batch, _: handle(batch, store_dir),
+            name, id_col=key, cut=cut,
+        )
+        store = ParquetStore(spark, f"{store_dir}/{table}", (key,))
+        compact(store)
+        return read(store.read()).localCheckpoint(eager=True)
+
+
+def _docs_with_vectors(spark: SparkSession, sf_dir: str):
+    """``staged`` for the survivor variants: batch documents left-joined
+    to their vectors (a doc without one still gets its decision)."""
+    from agrobr_spark.io import load
+
+    def staged(cut: int) -> DataFrame:
+        docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
+        emb_b = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= cut)
+        return docs_b.join(
+            emb_b.select(F.col("vec_id").alias("doc_id"), "embedding"),
+            "doc_id",
+            "left",
+        )
+
+    return staged
+
+
+def _split_vectors(spark: SparkSession, admit):
+    """``handle`` for the survivor variants: split a staged micro-batch
+    back into (documents, embeddings) for ``admit``."""
+
+    def handle(batch: DataFrame, store_dir: str) -> None:
+        admit(
+            spark,
+            batch.drop("embedding"),
+            batch.filter(F.col("embedding").isNotNull()).select(
+                F.col("doc_id").alias("vec_id"), "embedding"
+            ),
+            store_dir,
+        )
+
+    return handle
+
+
 def _stream_admit_oracle() -> str:
     from agrobr_spark.queries.admission import _STREAM_ADMIT_ORACLE
 
@@ -454,14 +522,11 @@ def _stream_admit_oracle() -> str:
     tags=("STREAM", "ADMISSION", "FOREACHBATCH", "INCREMENTAL"),
 )
 def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The admission pipeline as a STREAM (r5 VERDICT next #6): batch
-    documents land as id-ranged ingest files, a file-source stream
-    feeds them one file per micro-batch into foreachBatch, and every
-    micro-batch runs the full gate set against the persisted index —
-    broadcast benchmark-shingle contamination, frozen-centroid
-    assignment, survivor-join dup check, within-batch components — and
-    MERGEs its accepted docs back (queries/admission.admit_frame, the
-    identical code path the batch entry uses).
+    """The centroid admission pipeline as a STREAM (r5 VERDICT next
+    #6): batch documents land as id-ranged ingest files, a file-source
+    stream feeds them one file per micro-batch into foreachBatch, and
+    every micro-batch runs queries/admission.admit_frame — the code
+    path the batch entry uses — against the persisted index.
 
     Cross-micro-batch duplicates resolve through the index: doc Y
     arriving after its near-dup X finds X already a survivor and is
@@ -470,55 +535,17 @@ def stream_admit_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     every duplicate cluster arrives first, so the final survivor set
     equals the one-shot batch admission — which is what the oracle
     checks (corpus survivors ∪ admitted batch docs, from pure SQL over
-    corpus ∪ batch). Replays are idempotent: a re-delivered doc is its
-    own survivor and gets flagged duplicado_corpus
-    (tests/test_admission.py::test_admit_batch_replay_is_idempotent).
+    corpus ∪ batch). Replays follow the admission module's replay
+    contract (tests/test_admission.py::test_admit_replay_is_idempotent).
     """
-    from agrobr_spark.io import load
-    from agrobr_spark.queries.admission import (
-        _split_params,
-        admit_frame,
-        build_admission_index,
+    from agrobr_spark.queries.admission import admit_frame, build_admission_index
+
+    return _stream_admission(
+        spark, sf_dir, "stream_admit_batch", build_admission_index,
+        _docs_with_vectors(spark, sf_dir), _split_vectors(spark, admit_frame),
+        "survivors", "doc_id",
+        lambda surv: surv.select("doc_id", "n_chars", F.col("_blk").alias("bloco")),
     )
-    from agrobr_spark.store.table import ParquetStore
-
-    with scratch_dir(spark, "stream_admit_idx_") as store_dir:
-        build_admission_index(spark, sf_dir, store_dir)
-        cut = _split_params(spark, sf_dir)[0]
-        docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
-        emb_b = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= cut)
-        staged = docs_b.join(
-            emb_b.select(F.col("vec_id").alias("doc_id"), "embedding"),
-            "doc_id",
-            "left",
-        )
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            admit_frame(
-                spark,
-                batch.drop("embedding"),
-                batch.filter(F.col("embedding").isNotNull()).select(
-                    F.col("doc_id").alias("vec_id"), "embedding"
-                ),
-                store_dir,
-            )
-
-        _fold_stream(
-            spark, staged, handle, "stream_admit_batch",
-            id_col="doc_id", cut=cut,
-        )
-        # each micro-batch MERGE accreted one file set; compact before
-        # handing the table to readers (the Delta OPTIMIZE analog —
-        # small files are the dominant scan cost of an always-on
-        # incremental sink at 100 TB)
-        from agrobr_spark.store.table import compact
-
-        store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
-        compact(store)
-        out = store.read().select(
-            "doc_id", "n_chars", F.col("_blk").alias("bloco")
-        )
-        return out.localCheckpoint(eager=True)
 
 
 def _stream_admit_lsh_oracle() -> str:
@@ -537,16 +564,10 @@ def _stream_admit_lsh_oracle() -> str:
 )
 def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fit-free LSH admission pipeline as a STREAM — the streaming
-    twin of ``pipeline_admit_lsh``, completing the streaming admission
-    family (the centroid path streams via ``stream_admit_batch``).
-    Batch documents land as id-ranged ingest files, a file stream
-    feeds them one file per micro-batch into foreachBatch, and every
-    micro-batch runs ``admit_lsh_frame`` against the persisted index:
-    hyperplane buckets recomputed by projection at the width FROZEN in
-    ``lsh_meta.json`` (batch and index can never hash at different
-    widths), contamination vs the broadcast benchmark shingles,
-    survivor-vs-batch LSH candidates + exact-cosine verify, within-
-    micro-batch components, MERGE-back of accepted docs.
+    twin of ``pipeline_admit_lsh``: every micro-batch runs
+    ``admit_lsh_frame`` against the persisted index, hashing at the
+    width FROZEN in ``lsh_meta.json`` (batch and index can never hash
+    at different widths).
 
     Because blocking is data-independent (no fitted state) admission
     is split-independent, and with id-ranged oldest-first files the
@@ -555,43 +576,16 @@ def stream_admit_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins: corpus survivors ∪ admitted batch docs from pure
     SQL over corpus ∪ batch (recursive-CTE components fixpoints, the
     same hyperplane constants)."""
-    from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
-        _split_params,
         admit_lsh_frame,
         build_lsh_admission_index,
     )
-    from agrobr_spark.store.table import ParquetStore, compact
 
-    with scratch_dir(spark, "stream_lsh_idx_") as store_dir:
-        build_lsh_admission_index(spark, sf_dir, store_dir)
-        cut = _split_params(spark, sf_dir)[0]
-        docs_b = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= cut)
-        emb_b = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= cut)
-        staged = docs_b.join(
-            emb_b.select(F.col("vec_id").alias("doc_id"), "embedding"),
-            "doc_id",
-            "left",
-        )
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            admit_lsh_frame(
-                spark,
-                batch.drop("embedding"),
-                batch.filter(F.col("embedding").isNotNull()).select(
-                    F.col("doc_id").alias("vec_id"), "embedding"
-                ),
-                store_dir,
-            )
-
-        _fold_stream(
-            spark, staged, handle, "stream_admit_lsh",
-            id_col="doc_id", cut=cut,
-        )
-        store = ParquetStore(spark, f"{store_dir}/survivors", ("doc_id",))
-        compact(store)
-        out = store.read().select("doc_id", "n_chars")
-        return out.localCheckpoint(eager=True)
+    return _stream_admission(
+        spark, sf_dir, "stream_admit_lsh", build_lsh_admission_index,
+        _docs_with_vectors(spark, sf_dir), _split_vectors(spark, admit_lsh_frame),
+        "survivors", "doc_id", lambda surv: surv.select("doc_id", "n_chars"),
+    )
 
 
 def _stream_admit_semdedup_oracle() -> str:
@@ -607,12 +601,9 @@ def _stream_admit_semdedup_oracle() -> str:
 )
 def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup as a STREAM (r8 VERDICT next #3) — the frozen-centroid
-    incremental twin of ``dedup_semdedup``, completing the streaming
-    admission family alongside the centroid (`stream_admit_batch`) and
-    LSH (`stream_admit_lsh`) paths. The corpus split is pruned once
-    with the paper rule (lowest centroid-similarity keeper) and its
-    keepers persisted; batch embeddings land as id-ranged ingest files
-    processed oldest-first, and every micro-batch runs
+    incremental twin of ``dedup_semdedup``. The corpus split is pruned
+    once with the paper rule (lowest centroid-similarity keeper) and
+    its keepers persisted; every micro-batch of batch embeddings runs
     ``admit_semdedup_frame`` against the persisted state only:
     broadcast frozen-centroid assignment, corpus-keeper veto,
     smaller-id seen-arrival veto, MERGE-back of every judged arrival.
@@ -626,32 +617,21 @@ def stream_admit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(|batch| · cluster density): the corpus is never re-read."""
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
-        _split_params,
         admit_semdedup_frame,
         build_semdedup_index,
     )
-    from agrobr_spark.store.table import ParquetStore, compact
 
-    with scratch_dir(spark, "stream_sem_idx_") as store_dir:
-        build_semdedup_index(spark, sf_dir, store_dir)
-        cut = _split_params(spark, sf_dir)[0]
-        staged = load(spark, sf_dir, "embeddings").filter(
+    return _stream_admission(
+        spark, sf_dir, "stream_admit_semdedup", build_semdedup_index,
+        lambda cut: load(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") >= cut
-        )
-
-        def handle(batch: DataFrame, batch_id: int) -> None:
-            admit_semdedup_frame(spark, batch, store_dir)
-
-        _fold_stream(
-            spark, staged, handle, "stream_admit_semdedup",
-            id_col="vec_id", cut=cut,
-        )
-        store = ParquetStore(spark, f"{store_dir}/sem_seen", ("vec_id",))
-        compact(store)
-        out = store.read().filter(F.col("origem") == "lote").select(
+        ),
+        lambda batch, store_dir: admit_semdedup_frame(spark, batch, store_dir),
+        "sem_seen", "vec_id",
+        lambda seen: seen.filter(F.col("origem") == "lote").select(
             "vec_id", "cluster", "sim_centroide", "motivo", "mantido"
-        )
-        return out.localCheckpoint(eager=True)
+        ),
+    )
 
 
 def _stream_knn_graph_oracle() -> str:

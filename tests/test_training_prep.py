@@ -167,39 +167,41 @@ def test_mix_by_token_budget_custom_weights(spark):
 
 
 def test_admission_handles_empty_batch(spark, tmp_path):
-    """A daily pipeline hits empty batches; both admission variants
-    must return an empty decision frame without touching the store."""
+    """A daily pipeline hits empty batches; every survivor-index
+    admission variant must return an empty decision frame without
+    touching the store."""
     import pyspark.sql.functions as F
 
     from agrobr_spark.io import load
     from agrobr_spark.queries.admission import (
         admit_frame,
         admit_lsh_frame,
+        admit_text_frame,
         build_admission_index,
         build_lsh_admission_index,
+        build_text_admission_index,
     )
     from agrobr_spark.store.table import ParquetStore
 
     docs0 = load(spark, SF_ORACLE, "documents").filter(F.col("doc_id") < 0)
     emb0 = load(spark, SF_ORACLE, "embeddings").filter(F.col("vec_id") < 0)
 
-    d1 = str(tmp_path / "cent")
-    build_admission_index(spark, SF_ORACLE, d1)
-    before = ParquetStore(spark, f"{d1}/survivors", ("doc_id",)).read().count()
-    assert admit_frame(spark, docs0, emb0, d1).count() == 0
-    assert (
-        ParquetStore(spark, f"{d1}/survivors", ("doc_id",)).read().count()
-        == before
-    )
-
-    d2 = str(tmp_path / "lsh")
-    build_lsh_admission_index(spark, SF_ORACLE, d2)
-    before = ParquetStore(spark, f"{d2}/survivors", ("doc_id",)).read().count()
-    assert admit_lsh_frame(spark, docs0, emb0, d2).count() == 0
-    assert (
-        ParquetStore(spark, f"{d2}/survivors", ("doc_id",)).read().count()
-        == before
-    )
+    for name, build, admit, table in (
+        ("cent", build_admission_index, admit_frame, "survivors"),
+        (
+            "text",
+            build_text_admission_index,
+            lambda spark, docs, emb, d: admit_text_frame(spark, docs, d),
+            "text_signatures",
+        ),
+        ("lsh", build_lsh_admission_index, admit_lsh_frame, "survivors"),
+    ):
+        d = str(tmp_path / name)
+        build(spark, SF_ORACLE, d)
+        store = ParquetStore(spark, f"{d}/{table}", ("doc_id",))
+        before = store.read().count()
+        assert admit(spark, docs0, emb0, d).count() == 0, name
+        assert store.read().count() == before, name
 
 
 def test_containment_is_asymmetric_and_subset(spark):
