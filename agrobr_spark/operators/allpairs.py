@@ -34,7 +34,7 @@ this is part of the LLM-pipeline extension surface).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -181,6 +181,22 @@ def fit_centroids_kmeans(
     )
 
 
+def _centroids(
+    df: DataFrame, base: DataFrame, id_col: str, vec_col: str, k: int, fit: str
+) -> DataFrame:
+    """The ``centroid_fit`` switch of the IVF operators: a sampled
+    k-means fit of ``df`` or the ``k`` lowest-id rows of ``base``."""
+    if fit == "kmeans":
+        return fit_centroids_kmeans(df, id_col, vec_col, int(k))
+    if fit == "lowest_id":
+        return (
+            base.orderBy("_id")
+            .limit(int(k))
+            .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
+        )
+    raise ValueError(f"unknown centroid_fit: {fit!r}")
+
+
 def cluster_cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -200,13 +216,14 @@ def cluster_cosine_pairs(
 
     ``materialize`` (default on) pins the scored assignment with an
     eager ``localCheckpoint`` before the pair stage: the assignment —
-    an O(n·C) scored crossJoin plus a per-id ranking window, the same
-    ~n^1.5 element-work order as the pair join itself — feeds THREE
-    consumers (the sub-block size aggregate and both sides of the
-    self-join), and without the pin each consumer re-executes it from
-    the scan. Pass ``materialize=False`` to keep the operator fully
-    lazy (plan-shape tests; callers that persist the assignment
-    themselves).
+    O(n·C) scored dots, the same ~n^1.5 element-work order as the pair
+    join itself — feeds both sides of the self-join (and the sub-block
+    size aggregate), and without the pin each consumer re-executes it
+    from the scan. The pin's row count rides it as an ``Observation``;
+    when it is at most ``max_cluster_rows`` no cluster can exceed the
+    cap and the size aggregate is skipped. Pass ``materialize=False``
+    to keep the operator fully lazy (plan-shape tests; callers that
+    persist the assignment themselves).
 
     Every vector is assigned to its nearest centroid, then exact
     cosine runs ONLY within each cluster as a self equi-join on
@@ -234,14 +251,16 @@ def cluster_cosine_pairs(
     extra count job), giving ~n^1.5 total comparisons for any
     ``n_probe``; at 100 TB feed real k-means centroids and write the
     assigned table bucketed by ``centroid_id`` so repeated dedup runs
-    skip the assign shuffle.
+    skip the pair join's cluster-key shuffle.
 
     ``n_probe > 1`` assigns each vector to its ``n_probe`` nearest
     centroids (IVF multiprobe): a true pair is recovered when it
     shares ANY probed cluster, which is the recall lever for
     boundary-straddling near-dups. Combined with the auto-sizing it is
     work-neutral — the standard IVF trade of finer clusters + more
-    probes.
+    probes. A pair is scored only in the LOWEST cluster both
+    endpoints probe (``array_min(array_intersect(...))`` of their
+    probe lists), so every pair comes out once with no DISTINCT.
 
     Skew cap (VERDICT r3 #3): one pathological centroid attracting most
     vectors would re-create the n² blowup as a single straggler task.
@@ -255,7 +274,8 @@ def cluster_cosine_pairs(
     expectation (and ≤cap w.h.p.) without the per-cluster sort a strict
     bound would cost (see ``_with_subblocks``). The giant cluster
     spreads over B(B+1)/2 keys; cluster sizes come from one tiny
-    broadcast aggregate on the assignment.
+    broadcast aggregate on the assignment, paid only when the pinned
+    assignment has more rows than the cap.
     """
     if n_centroids is None:
         # auto-sizing scales with n_probe so multiprobe is work-neutral:
@@ -265,32 +285,24 @@ def cluster_cosine_pairs(
         # 600-vector manifold corpus, kmeans fit: p=1/C=sqrt(n) recall
         # 0.80; p=2/C=2·sqrt(n) recall 1.00 at equal wall clock)
         n_centroids = max(4, int(int(n_probe) * df.count() ** 0.5))
-    from pyspark.sql import Window
-
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
         *[F.col(c).alias(f"_x_{c}") for c in extra_cols],
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
-    if centroid_fit == "kmeans":
-        cent = fit_centroids_kmeans(df, id_col, vec_col, int(n_centroids))
-    elif centroid_fit == "lowest_id":
-        cent = (
-            base.orderBy("_id")
-            .limit(int(n_centroids))
-            .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
-        )
-    else:
-        raise ValueError(f"unknown centroid_fit: {centroid_fit!r}")
+    cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
     assigned = assign_to_centroids(base, cent, round_to, n_probe)
-    if materialize:
-        assigned = assigned.localCheckpoint(eager=True)
-    assigned = _with_subblocks(assigned, max_cluster_rows)
+    assigned, seen = (
+        _pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
+    )
+    assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
+    probes = ("_probes",) if int(n_probe) > 1 else ()
     left = assigned.select(
         F.col("_id").alias("ida"),
         F.col("_vec").alias("va"),
         F.col("_norm").alias("na"),
         *[F.col(f"_x_{c}").alias(f"_a_{c}") for c in extra_cols],
+        *[F.col(c).alias("pa") for c in probes],
         "_blk",
         F.col("_sb").alias("ki"),
         F.explode(F.sequence(F.col("_sb"), F.col("_nb") - 1)).alias("kj"),
@@ -300,6 +312,7 @@ def cluster_cosine_pairs(
         F.col("_vec").alias("vb"),
         F.col("_norm").alias("nb"),
         *[F.col(f"_x_{c}").alias(f"_b_{c}") for c in extra_cols],
+        *[F.col(c).alias("pb") for c in probes],
         "_blk",
         F.explode(F.sequence(F.lit(0), F.col("_sb"))).alias("ki"),
         F.col("_sb").alias("kj"),
@@ -311,6 +324,12 @@ def cluster_cosine_pairs(
         # meet once with arbitrary side assignment — canonicalize
         .filter((F.col("ki") != F.col("kj")) | (F.col("ida") < F.col("idb")))
     )
+    if probes:
+        # a pair sharing several probed clusters meets in each of them;
+        # only its lowest shared cluster scores it
+        pares = pares.filter(
+            F.col("_blk") == F.array_min(F.array_intersect("pa", "pb"))
+        )
     cos = _dot("va", "vb") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
     if round_to is not None:
         cos = F.round(cos, round_to)
@@ -328,12 +347,7 @@ def cluster_cosine_pairs(
             F.when(swap, F.col(f"_a_{c}")).otherwise(F.col(f"_b_{c}")).alias(f"{c}_b")
         )
     out_cols.append(cos.alias("cosseno"))
-    out = pares.select(*out_cols).filter(F.col("cosseno") >= threshold)
-    if int(n_probe) > 1:
-        # a pair sharing two probed clusters surfaces once per shared
-        # cluster with byte-identical columns — one distinct dedupes it
-        out = out.distinct()
-    return out
+    return pares.select(*out_cols).filter(F.col("cosseno") >= threshold)
 
 
 def assign_to_centroids(
@@ -341,75 +355,96 @@ def assign_to_centroids(
     cent: DataFrame,
     round_to: int | None = 6,
     n_probe: int = 1,
-    keep_score: bool = False,
 ) -> DataFrame:
     """Assign every row of ``base`` (``_id``, ``_vec``, ``_norm``, plus
     carried columns) to its ``n_probe`` nearest centroids from ``cent``
-    (``_cid``, ``_cv``) — broadcast the centroid table, score by cosine
-    (rounded + centroid-id tie-break, deterministic), keep the top
-    ``n_probe``. Returns ``base``'s columns plus ``_blk`` (the winning
-    centroid id); with ``n_probe > 1`` each ``_id`` appears once per
-    probed centroid (IVF multiprobe — a boundary-straddling true pair
-    is found when the two vectors share ANY probed cluster, which is
-    the standard recall lever for cluster blocking).
+    (``_cid``, ``_cv``): score by cosine (rounded, centroid-id
+    tie-break, deterministic), keep the top ``n_probe``. Returns
+    ``base``'s columns plus ``_blk`` (the probed centroid id), ``_rn``
+    (its rank, 1 = home cluster), ``_cos_cent`` (the assignment cosine)
+    and ``_probes`` (every probed centroid id of the row, best first).
+    With ``n_probe > 1`` each ``_id`` appears once per probed centroid
+    (IVF multiprobe — a boundary-straddling true pair is found when the
+    two vectors share ANY probed cluster, which is the standard recall
+    lever for cluster blocking). A zero-norm vector scores null against
+    every centroid; nulls rank last.
 
-    Shared by ``cluster_cosine_pairs`` and the incremental-admission
-    path (queries/admission.py), where the centroid table is FROZEN
-    state read back from the index store — assignment against an
-    existing fit is the same plan as against a fresh one.
+    The package's one centroid assignment: cluster blocking, SemDeDup,
+    the kNN graph, the persisted kNN store, the IVF ANN query and the
+    admission paths (where the centroid table is FROZEN state read
+    back from a store) all rank through it.
 
-    ``keep_score=True`` keeps the assignment cosine as ``_cos_cent``
-    (SemDeDup's keeper priority ranks by similarity TO the centroid,
-    so the pruning pass needs the score the assignment already
-    computed — re-deriving it would be a second broadcast join).
-
-    Shuffle shape (r14, guide §2.3 "shuffle keys and metadata instead
-    of payloads"): the per-id ranking window used to run directly on
-    the crossJoin output, so its hash(_id) exchange carried every
-    scored candidate's VECTOR — n·C payload rows (~90 MB at sf0.1;
-    C× the corpus bytes at any scale). The window now ranks a skinny
-    (_id, _cid, _cos) projection — n·C × ~24 B — and the winning
-    (id, centroid) rows join back to ``base`` on _id, so the payload
-    crosses an exchange once (n rows), not C times. Values and row
-    multiplicity are identical: same scores, same deterministic
-    (cos desc, _cid) ranking, one output row per kept probe.
-
-    Per-task work (r14, guide §1.2 step 2): the centroid's own norm is
-    computed once per centroid on the broadcast side — the HOF dot is
-    interpreted per element (no codegen), so recomputing it per scored
-    row doubled the sweep (measured 2.5→1.3 s at sf0.1; bit-identical
-    values, same sqrt on the same input)."""
-    from pyspark.sql import Window
-
-    cent = cent.withColumn("_cnrm", F.sqrt(_dot("_cv", "_cv")))
-    cos_cent = _dot("_cv", "_vec") / F.nullif(
-        F.col("_cnrm") * F.col("_norm"), F.lit(0.0)
+    Shape: no shuffle. The centroid table folds into ONE row of
+    ``(_cid, _cv, _cnrm)`` structs that is broadcast to every task;
+    each vector scores all centroids with a ``transform`` over that
+    array, sorts the scores with ``array_sort`` and keeps a
+    ``slice`` of the top ``n_probe``. The ranking happens in the
+    vector's own row, so there is no per-id window exchange and no
+    join back to the payload. The dot, the centroid norm (once per
+    centroid, on the broadcast side) and the rounding are the same
+    expressions a crossJoin + ``row_number`` ranking evaluates, so the
+    scores and the kept probes are bit-identical to it."""
+    cents = cent.select(
+        F.collect_list(
+            F.struct("_cid", "_cv", F.sqrt(_dot("_cv", "_cv")).alias("_cnrm"))
+        ).alias("_cents")
     )
+    cos = f"{_DOT.format(a='c._cv', b='_vec')} / nullif(c._cnrm * _norm, 0.0)"
     if round_to is not None:
-        cos_cent = F.round(cos_cent, round_to)
-    w = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), "_cid")
-    sel = (
-        base.select("_id", "_vec", "_norm")
-        .crossJoin(F.broadcast(cent))
-        .select("_id", "_cid", cos_cent.alias("_cos"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= int(n_probe))
-        .drop("_rn")
+        cos = f"round({cos}, {int(round_to)})"
+    top = F.expr(
+        "slice(array_sort(transform(_cents, c -> named_struct("
+        f"'_cid', c._cid, '_cos', {cos})), {_BY_COS_DESC}), 1, {int(n_probe)})"
     )
-    out = base.join(sel, "_id").withColumnRenamed("_cid", "_blk")
-    base_cols = [c for c in base.columns]
-    if keep_score:
-        return out.select(
-            *base_cols, "_blk", F.col("_cos").alias("_cos_cent")
+    return (
+        base.crossJoin(F.broadcast(cents))
+        .select(*base.columns, top.alias("_top"))
+        .select(
+            *base.columns,
+            F.posexplode("_top").alias("_pos", "_c"),
+            F.col("_top._cid").alias("_probes"),
         )
-    return out.select(*base_cols, "_blk")
+        .select(
+            *base.columns,
+            F.col("_c._cid").alias("_blk"),
+            (F.col("_pos") + 1).alias("_rn"),
+            F.col("_c._cos").alias("_cos_cent"),
+            "_probes",
+        )
+    )
 
 
-def _with_subblocks(assigned: DataFrame, max_cluster_rows: int) -> DataFrame:
+#: ``array_sort`` comparator of scored centroids: cosine descending
+#: with nulls last, then centroid id ascending
+_BY_COS_DESC = (
+    "(l, r) -> CASE"
+    " WHEN l._cos IS NULL AND r._cos IS NOT NULL THEN 1"
+    " WHEN r._cos IS NULL AND l._cos IS NOT NULL THEN -1"
+    " WHEN l._cos > r._cos THEN -1 WHEN l._cos < r._cos THEN 1"
+    " WHEN l._cid < r._cid THEN -1 WHEN l._cid > r._cid THEN 1"
+    " ELSE 0 END"
+)
+
+
+def _pin(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus the named aggregate
+    ``metrics`` over its rows, read off an ``Observation`` on the
+    checkpoint's own job — no aggregate job over the pin."""
+    obs = Observation()
+    pinned = df.observe(
+        obs, *[c.alias(name) for name, c in metrics.items()]
+    ).localCheckpoint(eager=True)
+    return pinned, obs.get
+
+
+def _with_subblocks(
+    assigned: DataFrame, max_cluster_rows: int, n_rows: int | None = None
+) -> DataFrame:
     """Attach ``_nb`` (sub-block count) and ``_sb`` (this row's
     sub-block) to a ``_blk``-assigned frame. Clusters at or under the
     cap get ``_nb = 1`` — the plan is then byte-identical in behavior
-    to the uncapped join.
+    to the uncapped join. A known total ``n_rows`` at or under the cap
+    bounds every cluster, so the size aggregate is skipped.
 
     Over-cap clusters hash rows into ``ceil(2·|cluster| / cap)``
     sub-blocks via ``xxhash64(_id)``: expected load cap/2 per
@@ -422,6 +457,8 @@ def _with_subblocks(assigned: DataFrame, max_cluster_rows: int) -> DataFrame:
     The sub-block split never changes the RESULT, only which join key
     a pair meets on."""
     cap = max(1, int(max_cluster_rows))
+    if n_rows is not None and n_rows <= cap:
+        return assigned.withColumn("_nb", F.lit(1)).withColumn("_sb", F.lit(0))
     sizes = assigned.groupBy("_blk").agg(F.count(F.lit(1)).alias("_cnt"))
     return (
         assigned.join(F.broadcast(sizes), "_blk")
@@ -483,23 +520,15 @@ def semdedup_flags(
     base = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
-    if centroid_fit == "kmeans":
-        cent = fit_centroids_kmeans(df, id_col, vec_col, int(n_centroids))
-    elif centroid_fit == "lowest_id":
-        cent = (
-            base.orderBy("_id")
-            .limit(int(n_centroids))
-            .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
-        )
-    else:
-        raise ValueError(f"unknown centroid_fit: {centroid_fit!r}")
-    assigned = assign_to_centroids(base, cent, round_to, 1, keep_score=True)
-    if materialize:
-        # four consumers (size aggregate, both pair-join sides, the
-        # final flag join) each re-execute the scored assignment
-        # without this pin — see cluster_cosine_pairs' rationale
-        assigned = assigned.localCheckpoint(eager=True)
-    assigned = _with_subblocks(assigned, max_cluster_rows)
+    cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
+    assigned = assign_to_centroids(base, cent, round_to, 1)
+    # three consumers (both pair-join sides, the final flag join) each
+    # re-execute the scored assignment without this pin — see
+    # cluster_cosine_pairs' rationale
+    assigned, seen = (
+        _pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
+    )
+    assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
     left = assigned.select(
         F.col("_id").alias("ida"),
         F.col("_vec").alias("va"),
@@ -598,63 +627,34 @@ def knn_graph_edges(
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
     if n_centroids is None:
         n_centroids = max(4, int(int(n_probe) * df.count() ** 0.5))
-    if centroid_fit == "kmeans":
-        cent = fit_centroids_kmeans(df, id_col, vec_col, int(n_centroids))
-    elif centroid_fit == "lowest_id":
-        cent = (
-            base.orderBy("_id")
-            .limit(int(n_centroids))
-            .select(F.col("_id").alias("_cid"), F.col("_vec").alias("_cv"))
-        )
-    else:
-        raise ValueError(f"unknown centroid_fit: {centroid_fit!r}")
-    # centroid norms once per centroid on the broadcast side (r14 —
-    # the HOF dot is interpreted per element; see assign_to_centroids)
-    cent = cent.withColumn("_cnrm", F.sqrt(_dot("_cv", "_cv")))
-    cos_cent = _dot("_cv", "_vec") / F.nullif(
-        F.col("_cnrm") * F.col("_norm"), F.lit(0.0)
-    )
-    if round_to is not None:
-        cos_cent = F.round(cos_cent, round_to)
-    # skinny-ranked assignment (assign_to_centroids' r14 shuffle shape):
-    # the window ranks (_id, _cid, _cos) rows only, the payload joins
-    # back once on _id — and the kept probes are filtered BEFORE the
-    # pin, so the checkpoint materializes n·n_probe rows, not the full
-    # n·C scored sweep (members/probes only ever read _rn <= n_probe)
-    w_assign = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), "_cid")
-    sel = (
-        base.select("_id", "_vec", "_norm")
-        .crossJoin(F.broadcast(cent))
-        .select("_id", "_cid", cos_cent.alias("_cos"))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") <= int(n_probe))
-        .drop("_cos")
-    )
-    ranked = base.join(sel, "_id")
+    cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
+    ranked = assign_to_centroids(base, cent, round_to, n_probe)
     if materialize:
         # members AND probes consume the ranked assignment; pin it so
-        # the scored crossJoin+window runs once, not once per side
-        # (the knn_store build applies the same pin)
+        # the scored sweep runs once, not once per side (the knn_store
+        # build applies the same pin)
         ranked = ranked.localCheckpoint(eager=True)
     members = ranked.filter(F.col("_rn") == 1).select(
         F.col("_id").alias("_mid"),
         F.col("_vec").alias("_mv"),
         F.col("_norm").alias("_mn"),
         *[F.col(f"_x_{c}").alias(f"_m_{c}") for c in extra_cols],
-        F.col("_cid"),
+        F.col("_blk").alias("_cid"),
     )
-    probes = ranked.filter(F.col("_rn") <= int(n_probe)).select(
+    probes = ranked.select(
         F.col("_id").alias("_qid"),
         F.col("_vec").alias("_qv"),
         F.col("_norm").alias("_qn"),
-        F.col("_cid"),
+        F.col("_blk").alias("_cid"),
     )
     cos = _dot("_qv", "_mv") / F.nullif(F.col("_qn") * F.col("_mn"), F.lit(0.0))
     if round_to is not None:
         cos = F.round(cos, round_to)
     w_rank = Window.partitionBy("id").orderBy(F.col("cosseno").desc(), "neighbor_id")
     return (
-        probes.join(members, "_cid")
+        # a sort-merge join whatever the pinned assignment's size
+        # estimate: the query side IS the corpus, never broadcast it
+        probes.join(members.hint("merge"), "_cid")
         .filter(F.col("_mid") != F.col("_qid"))
         .select(
             F.col("_qid").alias("id"),

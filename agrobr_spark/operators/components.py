@@ -18,9 +18,10 @@ under the ceiling, union-find on the collected rows finishes the
 graph. The distributed path builds its symmetric list from the same
 checkpoint, so no path computes the edges plan twice. (A lazy
 checkpoint is not free until its first action: AQE runs the plan's
-shuffle stages when the checkpoint is taken — measured 7 jobs on the
-dedup_components graph — and a ``count()`` of it adds 2 more, which
-is why the gate is the collect itself.)
+shuffle and broadcast stages when the checkpoint is taken, one job
+each — measured 1 job on the sf0.001 dedup_components pairs, whose
+centroid assignment is pinned upstream — and a ``count()`` of it adds
+2 more, which is why the gate is the collect itself.)
 
 Algorithm above the ceiling (r13, two phases — the guide's "fix the
 distributed algorithm first" lever):

@@ -86,7 +86,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from agrobr_spark.io import checkpoint_parquet, read_parquet
-from agrobr_spark.operators.allpairs import _dot
+from agrobr_spark.operators.allpairs import _dot, _pin, assign_to_centroids
 from agrobr_spark.store.table import ParquetStore
 
 #: target node count per edge bucket: buckets SCALE with the corpus
@@ -151,43 +151,6 @@ def _stores(
     return members, probes, edges
 
 
-def _assign(base: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
-    """Rank ``base`` (_id, _vec, _norm) against the broadcast frozen
-    centroids: one row per (vector, probed centroid), ``_rn`` 1..p,
-    6dp-rounded cosine with centroid-id tie-break (the exact
-    `sim_knn_graph` assignment semantics, so the pure-SQL oracle
-    replicates the bucketing).
-
-    Shuffle shape (r14, guide §2.3): the ranking window runs on a
-    skinny (_id, _cid, _cos) projection of the scored sweep and the
-    winners join back to ``base`` on _id — the vector payload crosses
-    one exchange once (n rows) instead of riding every scored
-    candidate through the window's hash(_id) exchange (n·C rows).
-    Per-task work (r14, guide §1.2 step 2): the centroid's own norm is
-    computed ONCE per centroid on the broadcast side, not once per
-    scored (vector, centroid) row — the `aggregate(zip_with(...))` dot
-    is interpreted per element (HOFs don't codegen), so the per-row
-    second dot literally doubled the sweep (measured 2.5→1.3 s at
-    sf0.1; bit-identical values, same sqrt on the same input).
-    Same scores, same deterministic ranking, identical output rows."""
-    cent = cent.withColumn("_cnrm", F.sqrt(_dot("_cv", "_cv")))
-    cos_cent = F.round(
-        _dot("_cv", "_vec")
-        / F.nullif(F.col("_cnrm") * F.col("_norm"), F.lit(0.0)),
-        6,
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), "_cid")
-    sel = (
-        base.select("_id", "_vec", "_norm")
-        .crossJoin(F.broadcast(cent))
-        .select("_id", "_cid", cos_cent.alias("_cos"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= int(n_probe))
-        .drop("_cos")
-    )
-    return base.join(sel, "_id")
-
-
 def _base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
@@ -200,7 +163,7 @@ def _cbalde(ncb: int):
 
 def _member_rows(ranked: DataFrame, ncb: int = 1) -> DataFrame:
     return ranked.filter(F.col("_rn") == 1).select(
-        F.col("_cid").alias("cid"),
+        F.col("_blk").alias("cid"),
         F.col("_id").alias("vec_id"),
         F.col("_vec").alias("ev"),
         F.col("_norm").alias("nrm"),
@@ -209,7 +172,7 @@ def _member_rows(ranked: DataFrame, ncb: int = 1) -> DataFrame:
 
 def _probe_rows(ranked: DataFrame, ncb: int = 1) -> DataFrame:
     return ranked.select(
-        F.col("_cid").alias("cid"),
+        F.col("_blk").alias("cid"),
         F.col("_id").alias("vec_id"),
         F.col("_vec").alias("qv"),
         F.col("_norm").alias("qn"),
@@ -280,10 +243,10 @@ def knn_graph_frozen_edges(
     store is oracle-pinned against (same assignment, same candidate
     join, same ranking code paths as the incremental fold)."""
     # member and probe legs both consume the ranked assignment — pin
-    # it so the scored crossJoin+window runs once (the store build's
-    # checkpoint, applied to the one-shot twin)
-    ranked = _assign(
-        _base(emb, id_col, vec_col), cent, n_probe
+    # it so the scored sweep runs once (the store build's checkpoint,
+    # applied to the one-shot twin)
+    ranked = assign_to_centroids(
+        _base(emb, id_col, vec_col), cent, 6, n_probe
     ).localCheckpoint(eager=True)
     return _topk_edges(
         _candidates(_probe_rows(ranked), _member_rows(ranked)),
@@ -337,22 +300,20 @@ def build_knn_graph_index(
     cent = checkpoint_parquet(centroids, f"{store_dir}/centroids")
     # materialize the assignment ONCE: members, probes and the
     # candidate join all consume the same ranked frame, and without
-    # the checkpoint each overwrite re-ran the full crossJoin+window
-    # assignment (r13: measured 9.6 -> 5.0 s on the sf0.1 build).
-    # LAZY + one aggregate (r14, VERDICT #7): the corpus count (for
-    # the bucket widths) and the id-sign guard now ride the
-    # materializing aggregate instead of a separate pre-assignment
-    # job — count of _rn==1 rows is exactly one per corpus vector.
-    # The id-sign guard context: the store's driver-side bucket
-    # arithmetic (`c % nb`) matches Spark's `pmod` for any int under
-    # a positive modulus, but componente = min(vec_id) >= 0 is a
-    # documented layout invariant, so negative ids are rejected at
-    # the door (r12 VERDICT What's wrong #3).
-    ranked = _assign(base, cent, n_probe).localCheckpoint(eager=False)
-    stats = ranked.agg(
-        F.sum((F.col("_rn") == 1).cast("long")).alias("n"),
-        F.min("_id").alias("mn"),
-    ).first()
+    # the checkpoint each overwrite re-ran the full assignment (r13:
+    # measured 9.6 -> 5.0 s on the sf0.1 build). The corpus count (for
+    # the bucket widths) and the id-sign guard ride the checkpoint's
+    # own job as observed metrics — count of _rn==1 rows is exactly
+    # one per corpus vector. The id-sign guard context: the store's
+    # driver-side bucket arithmetic (`c % nb`) matches Spark's `pmod`
+    # for any int under a positive modulus, but componente =
+    # min(vec_id) >= 0 is a documented layout invariant, so negative
+    # ids are rejected at the door (r12 VERDICT What's wrong #3).
+    ranked, stats = _pin(
+        assign_to_centroids(base, cent, 6, n_probe),
+        n=F.sum((F.col("_rn") == 1).cast("long")),
+        mn=F.min("_id"),
+    )
     n_corpus = int(stats["n"] or 0)
     if stats["mn"] is not None and stats["mn"] < 0:
         raise ValueError(
@@ -473,33 +434,22 @@ def update_knn_graph_frame(
     cent = read_parquet(spark, f"{store_dir}/centroids")
     # the legs below read the very stores the MERGEs rewrite — sever
     # ONCE at the assignment (r13: members_new and probes_new were
-    # checkpointed separately, running the assignment crossJoin twice
-    # and paying two materialization jobs; both are now cheap
-    # projections of the one checkpointed frame). LAZY checkpoint
-    # (r14, VERDICT #7): the bstats aggregate right below is the
-    # first action and materializes the checkpoint: 2 jobs per fold,
-    # measured with the job-id counter around it (three folds shaped
-    # like stream_knn_graph_update's, sf0.001 and sf0.01, local[3]).
-    ranked = _assign(
-        _base(emb_b, id_col, vec_col), cent, n_probe
-    ).localCheckpoint(eager=False)
+    # checkpointed separately, running the assignment twice and paying
+    # two materialization jobs; both are now cheap projections of the
+    # one checkpointed frame). Touched home clusters, probed clusters,
+    # batch sizes and the id-sign guard ride the checkpoint's own job
+    # as observed metrics (the merges below receive these counts and
+    # partition lists precomputed): no aggregate job over the pin.
+    ranked, bstats = _pin(
+        assign_to_centroids(_base(emb_b, id_col, vec_col), cent, 6, n_probe),
+        home_cids=F.collect_set(F.when(F.col("_rn") == 1, F.col("_blk"))),
+        probe_cids=F.collect_set("_blk"),
+        n_members=F.sum((F.col("_rn") == 1).cast("long")),
+        n_probes=F.count(F.lit(1)),
+        mn=F.min("_id"),
+    )
     members_new = _member_rows(ranked, ncb)
     probes_new = _probe_rows(ranked, ncb)
-
-    # touched home clusters + probed clusters + batch sizes + id-sign
-    # guard in ONE job over the checkpointed assignment (r13: this was
-    # three driver actions — a members agg, a probes distinct collect,
-    # and each merge's own staging count; the merges below now receive
-    # these counts/partition lists precomputed)
-    bstats = ranked.agg(
-        F.collect_set(
-            F.when(F.col("_rn") == 1, F.col("_cid"))
-        ).alias("home_cids"),
-        F.collect_set("_cid").alias("probe_cids"),
-        F.sum((F.col("_rn") == 1).cast("long")).alias("n_members"),
-        F.count(F.lit(1)).alias("n_probes"),
-        F.min("_id").alias("mn"),
-    ).first()
     touched = list(bstats["home_cids"])
     if bstats["mn"] is not None and bstats["mn"] < 0:
         raise ValueError(
@@ -514,7 +464,7 @@ def update_knn_graph_frame(
         # three merges would no-op, but each still costs checkpoint /
         # aggregate / commit-probe jobs: return the empty edge frame
         # instead. Costs nothing extra when the batch has rows —
-        # n_probes rides the one bstats aggregate.
+        # n_probes rides the assignment pin.
         return _topk_edges(
             _candidates(probes_new, members_new),
             k,
@@ -554,19 +504,15 @@ def update_knn_graph_frame(
     current = _pruned_by_ids(edges.read(), affected, nb).select(
         "vec_id", "neighbor_id", "cosseno"
     )
-    new_edges = _topk_edges(
-        cands.unionByName(current), k, nb
-    ).localCheckpoint(eager=False)
-    # ONE aggregate over the (lazily) checkpointed edge frame hands
-    # the edge merge its staging count + partition list (same idiom
-    # as the label fold's _delta_stats) — and, being the first
-    # action, materializes the checkpoint, severing the plan from the
-    # stores the merges rewrite BEFORE any merge starts (r14, VERDICT
-    # #7); 2 jobs per fold, measured like bstats above
-    estats = new_edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set("balde").alias("baldes"),
-    ).first()
+    # the edge merge's staging count + partition list ride the edge
+    # frame's eager checkpoint as observed metrics; the checkpoint
+    # severs the plan from the stores the merges rewrite BEFORE any
+    # merge starts
+    new_edges, estats = _pin(
+        _topk_edges(cands.unionByName(current), k, nb),
+        n=F.count(F.lit(1)),
+        baldes=F.collect_set("balde"),
+    )
     # the three merges rewrite three INDEPENDENT stores from
     # projections of already-checkpointed frames — submit them from a
     # thread pool so the later merges' tasks back-fill the earlier

@@ -1200,9 +1200,7 @@ def build_semdedup_index(
 
     # three consumers (both victim-join sides, the keeper anti-join)
     # — pin the scored assignment once
-    assigned = assign_to_centroids(base, cent, keep_score=True).localCheckpoint(
-        eager=True
-    )
+    assigned = assign_to_centroids(base, cent).localCheckpoint(eager=True)
     # paper-rule victims: the HIGHER (sim_centroide, id) endpoint of
     # every at-threshold pair loses, whether or not the other endpoint
     # itself survives — pure pair predicate, no recursion, no window
@@ -1263,9 +1261,9 @@ def admit_semdedup_frame(
 
     # five consumers (corpus/prev/intra veto joins ×2 sides, the
     # decision projection) — pin the batch assignment once
-    assigned_b = assign_to_centroids(
-        _vec_base(emb_b), cent, keep_score=True
-    ).localCheckpoint(eager=True)
+    assigned_b = assign_to_centroids(_vec_base(emb_b), cent).localCheckpoint(
+        eager=True
+    )
     bv = assigned_b.select(
         F.col("_id").alias("ida"), F.col("_vec").alias("va"),
         F.col("_norm").alias("na"), F.col("_cos_cent").alias("ca"), "_blk",

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
 from agrobr_spark.queries import register
+from agrobr_spark.queries.dedup import word_shingles
 
 _TOKS = (
     "CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>) "
@@ -231,24 +232,9 @@ def text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SPAN_W=8 width makes that vanishingly rare, and AQE skew-join
     splits it if it happens).
     """
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TOKS).alias("t")
-    )
-    spans = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size("t") >= SPAN_W,
-                    F.expr(
-                        f"transform(sequence(1, size(t) - {SPAN_W - 1}),"
-                        f" i -> md5(concat_ws(' ', slice(t, i, {SPAN_W}))))"
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("s"),
-        )
-        .distinct()
-    )
+    spans = word_shingles(
+        load(spark, sf_dir, "documents"), SPAN_W, "doc_id"
+    ).withColumnRenamed("shingle", "s")
     stats = spans.groupBy("s").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc")
     )
@@ -671,22 +657,7 @@ def containment_candidates(docs: DataFrame) -> DataFrame:
     over docs with full span inventories (A ⊆ B and B ⊆ C implies
     A ⊆ C), which tests/test_training_prep.py property-checks on
     constructed substring chains."""
-    toks = docs.select("doc_id", F.expr(_TOKS).alias("t"))
-    sh = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size("t") >= SPAN_W,
-                    F.expr(
-                        f"transform(sequence(1, size(t) - {SPAN_W - 1}),"
-                        f" i -> md5(concat_ws(' ', slice(t, i, {SPAN_W}))))"
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("s"),
-        )
-        .distinct()
-    )
+    sh = word_shingles(docs, SPAN_W, "doc_id").withColumnRenamed("shingle", "s")
     tam = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_spans"))
     a = sh.select(F.col("doc_id").alias("id_contido"), "s")
     b = sh.select(F.col("doc_id").alias("id_contem"), "s")
@@ -1421,7 +1392,7 @@ def pipeline_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the quota aggregate and the two-level cut both consume the
     # assignment — pin the 3-column projection once (the collect()
-    # below would otherwise pay the scored crossJoin twice)
+    # below would otherwise pay the scored assignment twice)
     assigned = (
         assign_to_centroids(base, cent, 6, 1)
         .select(

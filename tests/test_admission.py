@@ -462,10 +462,13 @@ def test_semdedup_admit_split_independent(spark, index):
 
 
 #: a Spark md5 word-shingle explode (``transform(sequence(...), i ->
-#: md5(concat_ws(' ', t[i], ...``), read off string literals so that a
-#: split literal still matches; the DuckDB oracles spell the shingle
-#: with ``unnest(range(...))`` and are not matched
-_SHINGLE = re.compile(r"sequence\(.*md5\(concat_ws\(' ',\s*t\[i\]", re.S)
+#: md5(concat_ws(' ', t[i], ...``, or its span spelling ``slice(t, i,
+#: k)``), read off string literals so that a split literal still
+#: matches; the DuckDB oracles spell the shingle with
+#: ``unnest(range(...))`` and are not matched
+_SHINGLE = re.compile(
+    r"sequence\(.*md5\(concat_ws\(' ',\s*(t\[i\]|slice\(t,)", re.S
+)
 #: the min-id loser filter of connected_components' output
 _LOSER = re.compile(
     r"F\.col\(\s*[\"']componente[\"']\s*\)\s*<\s*F\.col\(\s*[\"']id[\"']\s*\)"

@@ -191,6 +191,13 @@ def test_cluster_pairs_skew_cap_bounds_and_preserves_results(spark):
     got = sorted(map(tuple, capped.collect()))
     want = sorted(map(tuple, uncapped.collect()))
     assert got == want and len(want) > 1000  # dense cluster -> many pairs
+    # 100 assigned rows over a cap of 16: the capped run joins the
+    # cluster sizes; under the cap no cluster can exceed it, so the
+    # uncapped run skips the size aggregate
+    def joins_sizes(pairs):
+        return "_cnt" in pairs._jdf.queryExecution().analyzed().toString()
+
+    assert joins_sizes(capped) and not joins_sizes(uncapped)
 
     # boundedness: no (cluster, sub-block) exceeds the cap — the id
     # space here is gappy (every 10th id missing), which breaks naive
@@ -210,6 +217,138 @@ def test_cluster_pairs_skew_cap_bounds_and_preserves_results(spark):
     # corpus x corpus product even with sub-splitting active
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+
+
+def _ranked_by_window(base, cent, n_probe):
+    """Reference centroid ranking: a crossJoin of every (vector,
+    centroid) score and a per-id ``row_number`` window."""
+    from pyspark.sql import Window
+
+    from agrobr_spark.operators.allpairs import _dot
+
+    cent = cent.withColumn("_cnrm", F.sqrt(_dot("_cv", "_cv")))
+    cos = F.round(
+        _dot("_cv", "_vec") / F.nullif(F.col("_cnrm") * F.col("_norm"), F.lit(0.0)),
+        6,
+    )
+    w = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), "_blk")
+    return (
+        base.crossJoin(cent)
+        .select("_id", F.col("_cid").alias("_blk"), cos.alias("_cos"))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_probe)
+    )
+
+
+def test_assign_to_centroids_matches_window_ranking(spark):
+    """The shuffle-free assignment keeps exactly the rows a crossJoin +
+    row_number ranking keeps: tied rounded cosines break on the lower
+    centroid id, a zero-norm vector's null scores rank last, n_probe
+    past the centroid count keeps every centroid, an empty centroid
+    table assigns nothing — and the sf0.001 corpus ranks identically."""
+    from agrobr_spark.io import load
+    from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
+
+    def base_of(df):
+        return df.withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
+
+    def rows(df, score):
+        return sorted(
+            (r["_id"], r["_blk"], r["_rn"], r[score])
+            for r in df.select("_id", "_blk", "_rn", score).collect()
+        )
+
+    base = base_of(
+        spark.createDataFrame(
+            [
+                (1, [1.0, 1.0]),  # cos 0.707107 to both axes: tie
+                (2, [0.0, 0.0]),  # zero norm: every score null
+                (3, [1.0, 0.2]),
+                (4, [-1.0, 0.5]),
+            ],
+            "_id long, _vec array<double>",
+        )
+    )
+    # listed out of id order so the tie-break, not arrival, decides
+    cent = spark.createDataFrame(
+        [(7, [1.0, 0.0]), (3, [0.0, 1.0]), (5, [0.0, 2.0])],
+        "_cid long, _cv array<double>",
+    )
+    for n_probe in (1, 2, 5):
+        got = rows(assign_to_centroids(base, cent, 6, n_probe), "_cos_cent")
+        want = rows(_ranked_by_window(base, cent, n_probe), "_cos")
+        assert got == want, (n_probe, got, want)
+    # the tie: both axes score 0.707107 for id 1, centroid 3 wins
+    assert (1, 3, 1, 0.707107) in got and (1, 5, 2, 0.707107) in got
+    assert [r for r in got if r[0] == 2] == [
+        (2, 3, 1, None), (2, 5, 2, None), (2, 7, 3, None)
+    ]
+    probes = {
+        r["_id"]: r["_probes"]
+        for r in assign_to_centroids(base, cent, 6, 2).collect()
+    }
+    assert probes[1] == [3, 5] and probes[2] == [3, 5]
+
+    empty = spark.createDataFrame([], "_cid long, _cv array<double>")
+    assert assign_to_centroids(base, empty, 6, 2).count() == 0
+    assert _ranked_by_window(base, empty, 2).count() == 0
+
+    corpus = base_of(
+        load(spark, SF_SMOKE, "embeddings").select(
+            F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
+        )
+    )
+    cent = corpus.filter(F.col("_id") < 8).select(
+        F.col("_id").alias("_cid"), F.col("_vec").alias("_cv")
+    )
+    assert rows(assign_to_centroids(corpus, cent, 6, 2), "_cos_cent") == rows(
+        _ranked_by_window(corpus, cent, 2), "_cos"
+    )
+
+
+def test_multiprobe_cluster_pairs_are_exact_and_unique(spark):
+    """With n_probe=2 a pair meets in every probed cluster it shares;
+    only its lowest shared cluster scores it, so no (id_a, id_b)
+    repeats, and the pairs are exactly the exact all-pairs answer
+    restricted to pairs that share a probed cluster."""
+    from agrobr_spark.io import load
+    from agrobr_spark.operators.allpairs import (
+        _dot,
+        assign_to_centroids,
+        block_cosine_pairs,
+        cluster_cosine_pairs,
+    )
+
+    e = load(spark, SF_SMOKE, "embeddings")
+    kw = dict(id_col="vec_id", vec_col="embedding", threshold=0.3)
+    got = [
+        (r.id_a, r.id_b, r.cosseno)
+        for r in cluster_cosine_pairs(
+            e, n_centroids=6, centroid_fit="lowest_id", n_probe=2, **kw
+        ).collect()
+    ]
+    assert got and len(got) == len({(a, b) for a, b, _ in got})
+
+    base = e.select(
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
+    ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
+    cent = base.orderBy("_id").limit(6).select(
+        F.col("_id").alias("_cid"), F.col("_vec").alias("_cv")
+    )
+    probes = {
+        r["_id"]: set(r["_probes"])
+        for r in assign_to_centroids(base, cent, 6, 2)
+        .filter("_rn = 1")
+        .collect()
+    }
+    want = [
+        (r.id_a, r.id_b, r.cosseno)
+        for r in block_cosine_pairs(e, **kw).collect()
+        if probes[r.id_a] & probes[r.id_b]
+    ]
+    assert sorted(got) == sorted(want)
+    # some pairs share both probed clusters, so the dedupe is exercised
+    assert any(len(probes[a] & probes[b]) == 2 for a, b, _ in got)
 
 
 def test_connected_components_known_graph(spark):

@@ -47,10 +47,30 @@ def con():
     c.close()
 
 
+def _jvm_alive(spark) -> bool:
+    """True when the session's JVM still answers a trivial call."""
+    try:
+        spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+    except Exception:
+        return False
+    return True
+
+
 @pytest.mark.parametrize("name", _SWEEP)
 def test_oracle_match(spark, con, name):
     e = _CATALOG[name]
-    res = compare_query(spark, con, name, e.fn, e.oracle, SF_ORACLE)
+    try:
+        res = compare_query(spark, con, name, e.fn, e.oracle, SF_ORACLE)
+    except Exception as exc:
+        # every later query would fail on the dead gateway too: stop the
+        # run with one error that names the query that lost it
+        if not _jvm_alive(spark):
+            pytest.exit(
+                f"oracle sweep stopped: the Spark JVM was lost while "
+                f"running {name} ({type(exc).__name__}: {exc})",
+                returncode=pytest.ExitCode.TESTS_FAILED,
+            )
+        raise
     assert res.ok, f"{name}: {res.detail} (spark={res.spark_rows}, oracle={res.oracle_rows})"
     assert res.spark_rows > 0, f"{name}: empty result weakens the check"
 
@@ -78,3 +98,30 @@ def test_rows_only_runs(spark, name):
     df = e.fn(spark, SF_ORACLE)
     assert len(df.columns) > 0
     assert df.count() >= 0
+
+
+def test_lost_jvm_stops_the_sweep_naming_the_query(monkeypatch):
+    """A query that dies with the JVM stops the run with one error
+    naming it; a query failure on a live JVM stays an ordinary
+    failure."""
+    from types import SimpleNamespace as NS
+
+    class _DeadContext:
+        @property
+        def _jvm(self):
+            raise ConnectionRefusedError("gateway gone")
+
+    dead = NS(sparkContext=_DeadContext())
+    live = NS(sparkContext=NS(_jvm=NS(java=NS(lang=NS(
+        System=NS(currentTimeMillis=lambda: 0)
+    )))))
+
+    def boom(*a, **k):
+        raise ConnectionRefusedError("[Errno 111] Connection refused")
+
+    monkeypatch.setitem(globals(), "compare_query", boom)
+    name = _SWEEP[0]
+    with pytest.raises(pytest.exit.Exception, match=f"running {name} "):
+        test_oracle_match(dead, None, name)
+    with pytest.raises(ConnectionRefusedError):
+        test_oracle_match(live, None, name)

@@ -4,11 +4,13 @@ Each retrieval surface ships as a scan twin (rows tokenized from
 ``documents``) and an indexed twin (rows read from the posting index)
 that call the same scorer, phrase vote, snippet window and RM3
 weights. The default oracle smoke subset runs none of these pairs, so
-the equality is checked here directly, plus a guard that keeps the
-BM25 idf term and the Spark dot product in their one definition."""
+the equality is checked here directly, plus guards that keep the
+BM25 idf term, the Spark dot product and the centroid ranking in their
+one definition."""
 
 from __future__ import annotations
 
+import ast
 import re
 
 import pytest
@@ -64,4 +66,36 @@ def test_bm25_idf_and_spark_dot_have_one_definition():
     assert not offenders, (
         "BM25 idf term outside store/posting.bm25_score or Spark dot "
         "definition outside operators/allpairs.py: " + ", ".join(offenders)
+    )
+
+
+#: a crossJoin, a ranking window and a centroid table in one function
+#: is a centroid ranking; allowed only in allpairs.assign_to_centroids
+_CROSS_JOIN = re.compile(r"\.\s*crossJoin\s*\(")
+_WINDOW = re.compile(r"\bWindow\s*\.\s*partitionBy\b|\brow_number\s*\(")
+_CENTROID = re.compile(r"\b(_cv|_cid|cent|centroid_id)\b")
+
+
+def test_centroid_ranking_has_one_definition():
+    """Every centroid assignment goes through
+    operators/allpairs.assign_to_centroids (the shuffle-free one); a
+    crossJoin + window ranking of a centroid table anywhere else fails
+    with its file:line."""
+    offenders = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        rel = f.relative_to(PACKAGE).as_posix()
+        src = f.read_text(encoding="utf-8")
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.FunctionDef) or (
+                (rel, node.name) == ("operators/allpairs.py", "assign_to_centroids")
+            ):
+                continue
+            body = ast.get_source_segment(src, node)
+            cross = _CROSS_JOIN.search(body)
+            if cross and _WINDOW.search(body) and _CENTROID.search(body):
+                line = node.lineno + body.count("\n", 0, cross.start())
+                offenders.append(f"agrobr_spark/{rel}:{line}")
+    assert not offenders, (
+        "centroid ranking outside operators/allpairs.assign_to_centroids: "
+        + ", ".join(sorted(set(offenders)))
     )
