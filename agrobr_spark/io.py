@@ -3,6 +3,8 @@
 :func:`load` is the single place that knows the sf-dir layout
 (TESTDATA.md): one parquet file per table. At cluster scale these
 become partitioned table reads; the call sites stay identical.
+:func:`pin` is the package's one eager in-memory pin, its aggregate
+metrics riding the pin's own job.
 
 Footer-schema pinning
 ---------------------
@@ -59,7 +61,7 @@ from collections import OrderedDict
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 TABLES = (
@@ -259,6 +261,34 @@ def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
     read-back pinned by the write (no inference job)."""
     write_parquet(df, path)
     return read_parquet(df.sparkSession, path)
+
+
+def observed(obs: Observation) -> dict | None:
+    """The metric row of ``obs``, or None when its node never fired.
+    A provably-empty input (e.g. an empty LocalRelation) lets the
+    optimizer collapse the plan THROUGH the CollectMetrics node, so
+    the job completes but ``obs.get`` raises from the JVM conversion;
+    callers then take the metrics from the data itself, never a
+    guessed zero."""
+    try:
+        return dict(obs.get)
+    except Exception:
+        return None
+
+
+def pin(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus the named aggregate
+    ``metrics`` over its rows, read off an ``Observation`` on the
+    checkpoint's own job — no aggregate job over the pin. When the
+    observation did not fire, the same aggregates run over the pinned
+    rows instead: one job, on that path only."""
+    cols = [c.alias(name) for name, c in metrics.items()]
+    obs = Observation()
+    pinned = df.observe(obs, *cols).localCheckpoint(eager=True)
+    got = observed(obs)
+    if got is None:
+        got = pinned.agg(*cols).first().asDict()
+    return pinned, got
 
 
 @contextmanager

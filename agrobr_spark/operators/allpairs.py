@@ -34,7 +34,9 @@ this is part of the LLM-pipeline extension surface).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
+
+from agrobr_spark.io import pin
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -293,7 +295,7 @@ def cluster_cosine_pairs(
     cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
     assigned = assign_to_centroids(base, cent, round_to, n_probe)
     assigned, seen = (
-        _pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
+        pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
     )
     assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
     probes = ("_probes",) if int(n_probe) > 1 else ()
@@ -426,17 +428,6 @@ _BY_COS_DESC = (
 )
 
 
-def _pin(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
-    """Eager ``localCheckpoint`` of ``df`` plus the named aggregate
-    ``metrics`` over its rows, read off an ``Observation`` on the
-    checkpoint's own job — no aggregate job over the pin."""
-    obs = Observation()
-    pinned = df.observe(
-        obs, *[c.alias(name) for name, c in metrics.items()]
-    ).localCheckpoint(eager=True)
-    return pinned, obs.get
-
-
 def _with_subblocks(
     assigned: DataFrame, max_cluster_rows: int, n_rows: int | None = None
 ) -> DataFrame:
@@ -526,7 +517,7 @@ def semdedup_flags(
     # re-execute the scored assignment without this pin — see
     # cluster_cosine_pairs' rationale
     assigned, seen = (
-        _pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
+        pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
     )
     assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
     left = assigned.select(

@@ -85,8 +85,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from agrobr_spark.io import checkpoint_parquet, read_parquet
-from agrobr_spark.operators.allpairs import _dot, _pin, assign_to_centroids
+from agrobr_spark.io import checkpoint_parquet, pin, read_parquet
+from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.store.table import ParquetStore
 
 #: target node count per edge bucket: buckets SCALE with the corpus
@@ -309,7 +309,7 @@ def build_knn_graph_index(
     # for any int under a positive modulus, but componente =
     # min(vec_id) >= 0 is a documented layout invariant, so negative
     # ids are rejected at the door (r12 VERDICT What's wrong #3).
-    ranked, stats = _pin(
+    ranked, stats = pin(
         assign_to_centroids(base, cent, 6, n_probe),
         n=F.sum((F.col("_rn") == 1).cast("long")),
         mn=F.min("_id"),
@@ -440,7 +440,7 @@ def update_knn_graph_frame(
     # batch sizes and the id-sign guard ride the checkpoint's own job
     # as observed metrics (the merges below receive these counts and
     # partition lists precomputed): no aggregate job over the pin.
-    ranked, bstats = _pin(
+    ranked, bstats = pin(
         assign_to_centroids(_base(emb_b, id_col, vec_col), cent, 6, n_probe),
         home_cids=F.collect_set(F.when(F.col("_rn") == 1, F.col("_blk"))),
         probe_cids=F.collect_set("_blk"),
@@ -508,7 +508,7 @@ def update_knn_graph_frame(
     # frame's eager checkpoint as observed metrics; the checkpoint
     # severs the plan from the stores the merges rewrite BEFORE any
     # merge starts
-    new_edges, estats = _pin(
+    new_edges, estats = pin(
         _topk_edges(cands.unionByName(current), k, nb),
         n=F.count(F.lit(1)),
         baldes=F.collect_set("balde"),

@@ -12,11 +12,10 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
-from agrobr_spark.io import load, read_parquet
+from agrobr_spark.io import load, observed
 from agrobr_spark.queries import register
-from agrobr_spark.queries.dedup import word_shingles
 from agrobr_spark.store.fs import scratch_dir
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -427,6 +426,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at 100 TB this is the standard decontamination sweep shape
     (shingle → hash → semi-join against the benchmark index)."""
     from agrobr_spark.queries.admission import bench_shingles, contaminated
+    from agrobr_spark.queries.dedup import word_shingles
 
     sh = word_shingles(load(spark, sf_dir, "documents"), 5, "doc_id")
     return contaminated(sh, bench_shingles(sh))
@@ -839,6 +839,8 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is at most |sources|²/2 per shingle — with the source dimension in
     the tens this stays a skew-free hash join at any corpus size. The
     two totals join on the tiny per-source frame (broadcast)."""
+    from agrobr_spark.queries.dedup import word_shingles
+
     sh = word_shingles(load(spark, sf_dir, "documents"), 5, "source")
     tam = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("source").alias("fonte_a"), "shingle")
@@ -1363,27 +1365,6 @@ BM25_SCORES_CTE = rf"""docs AS (
       FROM pontos_t GROUP BY doc_id)"""
 
 
-def _bm25_scan_rows(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The BM25 scan twins' row source: lowered tokens ``(doc_id, dl,
-    termo)`` of the non-blank documents, and the corpus stats
-    ``(n, avgdl)`` as ONE row folded from the per-doc frame (no eager
-    count() job)."""
-    toks = _lowered_tokens(_doc_tokens(spark, sf_dir))
-    stats = (
-        toks.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias(
-                "avgdl"
-            ),
-        )
-    )
-    return toks, stats
-
-
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, t)``: each non-blank document's raw token array."""
     return (
@@ -1408,18 +1389,46 @@ def _tf(toks: DataFrame) -> DataFrame:
     )
 
 
-def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc BM25 score frame ``(doc_id, n_termos, pontos)`` for the
-    fixed ``BM25_QUERY`` — the scan row source behind both
-    ``text_bm25_topk`` and the RRF hybrid fusion in ``similarity.py``
-    (SQL twin: ``BM25_SCORES_CTE``), scored by the shared
-    ``store/posting.bm25_score``. See ``text_bm25_topk`` for the
-    scoring math and the plan/scale argument."""
-    from agrobr_spark.store.posting import bm25_score
+def bm25_scores(
+    spark: SparkSession,
+    sf_dir: str,
+    terms: tuple[str, ...] = BM25_QUERY,
+    peso: dict[str, float] | None = None,
+) -> DataFrame:
+    """Per-doc BM25 score frame ``(doc_id, n_termos, pontos)`` for
+    ``terms`` (default the fixed ``BM25_QUERY``; RM3 stage 2 passes
+    its weighted terms and ``peso``) — the scan row source behind
+    ``text_bm25_topk``, ``text_bm25_rm3`` and the RRF hybrid fusion in
+    ``similarity.py`` (SQL twin: ``BM25_SCORES_CTE``), scored by the
+    shared ``store/posting.bm25_score``.
 
-    toks, stats = _bm25_scan_rows(spark, sf_dir)
-    tf = _tf(toks.filter(F.col("termo").isin(*BM25_QUERY)))
-    return bm25_score(tf, stats, BM25_K1, BM25_B)
+    ONE eager job before the scoring: ``pin_term_rows`` pins the query
+    terms' tf rows with their df riding the pin, and the corpus
+    ``(n, sum_dl)`` ride the same job as an Observation at the
+    one-row-per-doc point of ``_doc_tokens`` (exact because
+    ``doc_id`` keys ``documents``). See ``text_bm25_topk`` for the
+    scoring math and the plan/scale argument."""
+    from agrobr_spark.store.posting import (
+        bm25_score,
+        corpus_stats,
+        pin_term_rows,
+    )
+
+    docs = _doc_tokens(spark, sf_dir)
+    per_doc = [
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.size("t")).cast("bigint").alias("sum_dl"),
+    ]
+    obs = Observation()
+    toks = _lowered_tokens(docs.observe(obs, *per_doc))
+    rows, df = pin_term_rows(
+        _tf(toks.filter(F.col("termo").isin(*terms))), terms
+    )
+    got = observed(obs) or docs.agg(*per_doc).first().asDict()
+    st = corpus_stats(got["n"], got["sum_dl"])
+    return bm25_score(
+        rows, st["n"], st["avgdl"], df, BM25_K1, BM25_B, peso=peso
+    )
 
 
 @register(
@@ -1445,11 +1454,13 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the corpus is tokenized ONCE; query terms filter the token
     stream BEFORE the tf aggregation, so the wide work (tf groupBy,
-    df fold, scoring join) runs only on posting rows for the
-    |query| terms — the scan-side analog of walking an inverted
-    index's posting lists. N and avgdl fold from the per-doc length
-    frame into one broadcast row; df folds from the tf table (never
-    re-touches the corpus). Top-k is orderBy+limit →
+    per-doc score sum) runs only on posting rows for the |query|
+    terms — the scan-side analog of walking an inverted index's
+    posting lists. That tokenize is one eager pin of the tf rows:
+    N and sum(dl) ride it as an Observation at the one-row-per-doc
+    point, df as one ``count_if`` per query term over the pinned
+    rows, and all three reach the scorer as driver scalars (no stats
+    join, no broadcast). Top-k is orderBy+limit →
     TakeOrderedAndProject (per-partition heaps + one k-row merge, no
     global sort). At 100 TB the corpus-side term filter is the knob:
     materialize tf once as a bucketed-by-term posting table and every
@@ -1533,9 +1544,10 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 (over a |query|-row local relation the optimizer folds:
     no job); the posting read lists and scans
     ONLY those partitions (`bucket IN` partition pruning + `termo IN`
-    pushed filter), df folds from that pruned read, (n, avgdl) come
-    from the one-row stats table. Query cost is O(posting rows of the
-    query terms) — flat as the corpus grows (SCALING.md probe)."""
+    pushed filter) into one eager pin that df rides, and (n, avgdl)
+    fold on the driver from the index manifest. Query cost is
+    O(posting rows of the query terms) — flat as the corpus grows
+    (SCALING.md probe)."""
     from agrobr_spark.store.posting import bm25_topk_indexed
 
     path = _bm25_index_dir(spark, sf_dir)
@@ -1715,6 +1727,8 @@ def text_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine floor), never over the corpus. At 100 TB the candidate
     generation scales as the exact sweep does (shingle semi-join /
     IVF-prunable cosine) and the fusion stays candidate-sized."""
+    from agrobr_spark.queries.dedup import word_shingles
+
     sh = word_shingles(load(spark, sf_dir, "documents"), 5, "doc_id")
     bench_sh = sh.filter(F.col("doc_id") < FUZZY_BENCH_DOCS).select(
         F.col("doc_id").alias("bid"), "shingle"
@@ -2485,9 +2499,10 @@ def text_bm25_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject heap; the relevance model is one token pass
     over ONLY the feedback docs (broadcast {fb}-row doc filter before
     any shuffle); expansion selection is a {e}-row heap; the weighted
-    term table (<= {nq} + {e} rows) joins the second tf pass
-    BROADCAST, so only weighted-query tokens survive to the stage-2
-    shuffle — the posting-list property twice over. At 100 TB both tf
+    term table (<= {nq} + {e} rows) is collected and filters the
+    second tf pass as a literal term list, its weights a literal map,
+    so only weighted-query tokens survive to the stage-2 shuffle —
+    the posting-list property twice over. At 100 TB both tf
     passes read |terms| buckets of the ``store/posting.py`` index
     instead of re-tokenizing (the ``text_bm25_indexed`` path); the
     expansion terms are data-dependent, which is exactly why the
@@ -2498,32 +2513,30 @@ def text_bm25_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap cuts carry explicit tie-breaks ((w DESC, termo) and
     (pontos DESC, doc_id)); stage-2 scores reuse the 6dp decimal-sum
     discipline of ``text_bm25_topk``."""
-    from agrobr_spark.store.posting import bm25_score
-
-    toks, stats = _bm25_scan_rows(spark, sf_dir)
     fb = (
         bm25_scores(spark, sf_dir)
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(RM3_FB_DOCS)
         .select("doc_id", "pontos")
     )
-    pesos = _rm3_pesos(spark, toks.join(F.broadcast(fb), "doc_id"))
-    tf2 = _tf(toks.join(F.broadcast(pesos.select("termo")), "termo"))
+    toks = _lowered_tokens(_doc_tokens(spark, sf_dir))
+    peso = _rm3_pesos(spark, toks.join(F.broadcast(fb), "doc_id"))
     return (
-        bm25_score(tf2, stats, BM25_K1, BM25_B, peso=pesos)
+        bm25_scores(spark, sf_dir, tuple(sorted(peso)), peso)
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(BM25_TOPK)
     )
 
 
-def _rm3_pesos(spark: SparkSession, fb_toks: DataFrame) -> DataFrame:
-    """The RM3 twins' shared query weights ``(termo, peso)`` from the
-    feedback docs' tokens ``(doc_id, dl, termo, pontos)``: feedback tf
-    (stopwords, original terms and short tokens dropped) → relevance
-    model ``w`` (sum over feedback docs of 6dp-rounded tf/dl x score,
-    DECIMAL-summed) → top-``RM3_EXP_TERMS`` expansion terms by
-    (w DESC, termo) → their ``total`` → ``RM3_ALPHA`` spread evenly
-    over the original terms and the rest by normalized ``w``."""
+def _rm3_pesos(spark: SparkSession, fb_toks: DataFrame) -> dict[str, float]:
+    """The RM3 twins' shared query weights ``{termo: peso}``, collected
+    to the driver (at most ``len(BM25_QUERY) + RM3_EXP_TERMS`` rows),
+    from the feedback docs' tokens ``(doc_id, dl, termo, pontos)``:
+    feedback tf (stopwords, original terms and short tokens dropped)
+    → relevance model ``w`` (sum over feedback docs of 6dp-rounded
+    tf/dl x score, DECIMAL-summed) → top-``RM3_EXP_TERMS`` expansion
+    terms by (w DESC, termo) → their ``total`` → ``RM3_ALPHA`` spread
+    evenly over the original terms and the rest by normalized ``w``."""
     fbtf = (
         fb_toks.filter(
             ~F.col("termo").isin(*BM25_QUERY)
@@ -2559,7 +2572,7 @@ def _rm3_pesos(spark: SparkSession, fb_toks: DataFrame) -> DataFrame:
     orig = spark.createDataFrame(
         [(t,) for t in BM25_QUERY], "termo string"
     ).select("termo", F.round(F.lit(peso_orig), 6).alias("peso"))
-    return orig.unionByName(
+    pesos = orig.unionByName(
         expn.crossJoin(total).select(
             "termo",
             F.round(F.lit(beta) * F.col("w") / F.col("total"), 6).alias(
@@ -2567,6 +2580,7 @@ def _rm3_pesos(spark: SparkSession, fb_toks: DataFrame) -> DataFrame:
             ),
         )
     )
+    return {r["termo"]: r["peso"] for r in pesos.collect()}
 
 
 text_bm25_rm3.__doc__ = text_bm25_rm3.__doc__.format(
@@ -2932,35 +2946,29 @@ def retrieval_index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-freshness report — the evidence row that guards every
     index-answered query (`text_bm25_indexed`, `text_phrase_indexed`):
     the posting index's own corpus statistics (doc count and summed
-    doc length, folded at build time into its one-row stats table)
-    joined against the live corpus aggregate, emitting the lag and an
-    ``atualizado`` verdict. A pipeline gates index-path routing on
-    this row: stale index -> fall back to the scan path or trigger
+    doc length, carried in its manifest since the build) set against
+    the live corpus aggregate, emitting the lag and an ``atualizado``
+    verdict. A pipeline gates index-path routing on this row: stale
+    index -> fall back to the scan path or trigger
     ``update_posting_index`` — the reference's cache-freshness check
     (ref: agrobr/cache/policies.py freshness guards) applied to the
     retrieval index.
 
-    Plan: ONE row from the index's persisted stats parquet (no
-    posting-bucket reads) crossed with ONE corpus aggregate —
-    cost is the corpus count, zero joins against corpus-sized frames.
-    At 100 TB the corpus side comes from the document store's own
-    manifest instead of a live scan; the comparison logic is
-    unchanged.
+    Plan: the index side is two driver scalars folded from the
+    manifest (``store/posting.read_stats``: no posting-bucket read,
+    no job), projected as literals onto ONE corpus aggregate — cost
+    is the corpus count, no join at all. At 100 TB the corpus side
+    comes from the document store's own manifest instead of a live
+    scan; the comparison logic is unchanged.
 
     The fixture pins the fresh case (the index cache builds from this
     very corpus): equality and lag 0 — the driver hash proves BOTH
     sides compute identical statistics through entirely different
     code paths (index build fold vs direct aggregate), which is the
     actual evidence-chain property."""
-    import pyspark.sql.functions as _F
-
     from agrobr_spark.store.posting import read_stats
 
-    path = _bm25_index_dir(spark, sf_dir)
-    stats = read_stats(spark, path).select(
-        _F.col("n").cast("bigint").alias("n_docs_indice"),
-        _F.col("sum_dl").cast("bigint").alias("soma_dl_indice"),
-    )
+    st = read_stats(_bm25_index_dir(spark, sf_dir))
     corpus = (
         load(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -2971,7 +2979,11 @@ def retrieval_index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_tokens_corpus"),
         )
     )
-    return stats.crossJoin(F.broadcast(corpus)).select(
+    return corpus.select(
+        F.lit(st["n"]).cast("bigint").alias("n_docs_indice"),
+        F.lit(st["sum_dl"]).cast("bigint").alias("soma_dl_indice"),
+        "*",
+    ).select(
         "*",
         (F.col("n_docs_corpus") - F.col("n_docs_indice"))
         .cast("bigint")
@@ -3071,16 +3083,13 @@ def text_bm25_rm3_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same oracle string as the scan path, so indexed ≡ scan —
     including identical expansion-term selection and weights — is
     driver-hash-checked every round."""
-    from agrobr_spark.store.posting import bm25_score, query_postings
+    from agrobr_spark.store.posting import bm25_scores_indexed, read_manifest
 
     path = _bm25_index_dir(spark, sf_dir)
-    stats = read_parquet(spark, f"{path}/stats")
+    man = read_manifest(path)
     fb = (
-        bm25_score(
-            query_postings(spark, path, tuple(sorted(BM25_QUERY))),
-            stats,
-            BM25_K1,
-            BM25_B,
+        bm25_scores_indexed(
+            spark, path, tuple(sorted(BM25_QUERY)), BM25_K1, BM25_B, man=man
         )
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(RM3_FB_DOCS)
@@ -3089,13 +3098,14 @@ def text_bm25_rm3_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     fb_toks = _lowered_tokens(
         _doc_tokens(spark, sf_dir).join(F.broadcast(fb), "doc_id"), "pontos"
     )
-    pesos = _rm3_pesos(spark, fb_toks).localCheckpoint(eager=True)
-    # data-dependent expansion terms -> bounded (<= 3 + 3 row) collect
+    # data-dependent expansion terms: a bounded (<= 3 + 3 row) collect
     # feeding the index reader's term->bucket pruning
-    termos2 = tuple(sorted(r["termo"] for r in pesos.collect()))
-    tf2 = query_postings(spark, path, termos2)
+    peso = _rm3_pesos(spark, fb_toks)
     return (
-        bm25_score(tf2, stats, BM25_K1, BM25_B, peso=pesos)
+        bm25_scores_indexed(
+            spark, path, tuple(sorted(peso)), BM25_K1, BM25_B,
+            peso=peso, man=man,
+        )
         .orderBy(F.desc("pontos"), F.asc("doc_id"))
         .limit(BM25_TOPK)
     )

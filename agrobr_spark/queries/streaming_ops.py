@@ -1052,7 +1052,7 @@ def stream_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-ranged ingest files, and every micro-batch folds its postings
     in via ``store/posting.update_posting_index`` — staged into a
     batch_id-derived directory at the bucket width frozen in the
-    manifest, stats delta carried alongside, and published by ONE
+    manifest, and published, stats delta with it, by ONE
     atomic manifest commit, so a replayed epoch is a no-op and a
     mid-write crash replays cleanly (crash-safe exactly-once, r9
     ADVICE; ``compact_posting_index`` later folds the accreted batch

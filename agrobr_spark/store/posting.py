@@ -9,26 +9,29 @@ cost independent of history size). Layout at ``path``:
 - ``postings/`` — parquet, disk-partitioned by
   ``bucket = pmod(xxhash64(termo), n_buckets)``, rows
   ``(termo, doc_id, dl, tf)``: one row per (document, distinct term).
-  A query for terms T computes T's buckets (one tiny Spark job — the
-  same xxhash64 the writer used, so Python never re-implements the
-  hash) and reads ONLY those partitions: Catalyst partition-prunes on
-  ``bucket IN (...)`` and pushes ``termo IN (...)`` into the pruned
-  scan. Query cost is O(posting rows of the query's terms), flat in
-  corpus size — the inverted-index property.
-- ``stats/`` — one row ``(n, avgdl)``: corpus document count and
-  average document length, folded at build time so queries never
-  touch the corpus.
+  A query for terms T computes T's buckets (folded on the driver, no
+  job — the same xxhash64 the writer used, so Python never
+  re-implements the hash) and reads ONLY those partitions: Catalyst
+  partition-prunes on ``bucket IN (...)`` and pushes
+  ``termo IN (...)`` into the pruned scan. Query cost is O(posting
+  rows of the query's terms), flat in corpus size — the
+  inverted-index property.
 - ``manifest.json`` — ``n_buckets`` + tokenizer version, read back at
-  query time so probe-side bucketing always matches the build. It
-  also carries the index's COMMIT STATE: ``postings_dir`` /
-  ``stats_dir`` (the current base generation), ``active_batches``
-  (streamed batches not yet compacted into the base), and
-  ``applied_batch_ids`` (the exactly-once replay guard, never
-  cleared).
+  query time so probe-side bucketing always matches the build, and
+  the posting rows' ``postings_schema``. It also carries the index's
+  COMMIT STATE: ``postings_dir`` (the current base generation),
+  ``active_batches`` (streamed batches not yet compacted into the
+  base), and ``applied_batch_ids`` (the exactly-once replay guard,
+  never cleared). A BM25 index's manifest
+  carries its corpus statistics too: ``n`` (document count) and
+  ``sum_dl`` (summed document length) of the base generation, and
+  ``batch_stats``, one ``{"n", "sum_dl"}`` delta per active batch.
+  Both ride the postings write as an Observation, so a query's
+  ``(n, avgdl)`` is a driver-side fold (:func:`read_stats`), never a
+  read.
 - ``batches/b<batch_id>/`` — one directory per streamed update epoch
-  (its posting rows, bucket-partitioned like the base, plus its
-  one-row stats delta), visible only once the manifest lists it in
-  ``active_batches``.
+  (its posting rows, bucket-partitioned like the base), visible only
+  once the manifest lists it in ``active_batches``.
 
 Every update epoch and every compaction commits through
 ``store/fs.commit_epoch`` (the exactly-once epoch protocol, described
@@ -37,15 +40,15 @@ listed in ``active_batches`` and its ``batch_id`` recorded in one
 locked manifest replace.
 
 ``compact_posting_index`` is the maintenance op: per-epoch batch
-directories and their stats-delta chain accrete forever (at 100 TB the
-bucket file count and the delta fold become the read bottleneck), so
-compaction folds base + active batches into a NEW base generation
-(``postings_v<k>``, one file per bucket), commits the manifest pointer
-atomically, then deletes the superseded directories. Indexed query
-results are byte-identical pre/post (pinned by
-tests/test_store.py::test_posting_index_compaction) and the replay
-guard survives — an already-applied epoch stays a no-op after
-compaction.
+directories accrete forever (at 100 TB the bucket file count becomes
+the read bottleneck), so compaction folds base + active batches into
+a NEW base generation (``postings_v<k>``, one file per bucket) and
+their stats deltas into the base ``n``/``sum_dl``, commits the
+manifest pointer atomically, then deletes the superseded
+directories. Indexed query results are byte-identical pre/post
+(pinned by tests/test_store.py::test_posting_index_compaction) and
+the replay guard survives — an already-applied epoch stays a no-op
+after compaction.
 
 At 100 TB: the build is one tokenize + one (doc, term) aggregation —
 the same work a single ``text_bm25_topk`` already does — amortized
@@ -59,17 +62,20 @@ directory here.
 ``bm25_score`` is the one BM25 scorer and ``phrase_vote`` the one
 phrase matcher. The scan twins in ``queries/pipeline_text.py`` feed
 them rows tokenized from ``documents``; the indexed twins feed them
-``query_postings`` rows. Each pair shares one DuckDB oracle string,
-so indexed ≡ scan is the same code over a different row source, and
-oracle-checked.
+``query_postings`` rows. Both BM25 twins pin their query-term rows
+once (:func:`pin_term_rows`, df riding the pin job) and score off
+the pin with the corpus statistics as driver scalars. Each pair
+shares one DuckDB oracle string, so indexed ≡ scan is the same code
+over a different row source, and oracle-checked.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
 
-from agrobr_spark.io import read_parquet, write_parquet
+from agrobr_spark.io import observed, pin, read_parquet, write_parquet
 
 TOKENIZER_VERSION = 1
 DEFAULT_BUCKETS = 64
@@ -90,7 +96,7 @@ def tokenize_postings(docs: DataFrame, id_col: str = "doc_id",
     ``stats_obs``: an Observation attached at the ONE-ROW-PER-DOC
     point of the plan (after the empty-text filter, before the
     explode), collecting ``n`` (doc count) and ``sum_dl`` (summed
-    token counts) — exactly the corpus stats the index sidecar needs,
+    token counts) — exactly the corpus stats the manifest carries,
     riding the postings write job itself instead of a second pass
     (r14; the r13 version re-read the written postings and paid a
     distinct-doc aggregate per build/epoch). Distinct-free by
@@ -114,26 +120,11 @@ def tokenize_postings(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _obs_metrics(obs: Observation) -> dict | None:
-    """The observation's metric row, or None when the node never
-    fired. A provably-empty input (e.g. an empty LocalRelation epoch)
-    lets the optimizer collapse the plan THROUGH the CollectMetrics
-    node, so the write completes but the observation holds no row and
-    ``obs.get`` raises from the JVM conversion — callers treat None
-    as 'decide from the written directory instead' (the r13 listing
-    path, kept as the fallback so an observation quirk can never
-    misclassify a non-empty epoch)."""
-    try:
-        return dict(obs.get)
-    except Exception:
-        return None
-
-
 def _written_dir_stats(spark: SparkSession, postings_dir: str) -> dict:
     """Fallback when the observation did not fire: emptiness from the
     directory listing, ``{"n": 0 | 1}`` — all the empty-epoch decision
-    needs. The BM25 sidecar re-derives its (n, sum_dl) from the written
-    rows (:func:`_write_stats_row`)."""
+    needs. The BM25 manifest stats re-derive their (n, sum_dl) from
+    the written rows (:func:`_bm25_stats`)."""
     from agrobr_spark.store.fs import hadoop_fs
 
     fs, hdir = hadoop_fs(spark, postings_dir)
@@ -143,94 +134,72 @@ def _written_dir_stats(spark: SparkSession, postings_dir: str) -> dict:
     ))}
 
 
-def _write_stats_row(spark: SparkSession, gen_dir: str, id_col: str,
-                     got: dict, with_avgdl: bool) -> None:
-    """The BM25 index's one-row stats sidecar ``gen_dir/stats`` from
-    DRIVER-held observation values ``got``: a no-input local-relation
-    write instead of the r13 read-back scan of the just-written
-    postings. ``sum_dl`` is None when n == 0 (SUM over zero rows —
-    matches the old aggregate's NULL). When the observation did not
-    fire but rows were written (``got`` carries no ``sum_dl``), (n,
-    sum_dl) are re-derived per distinct id from ``gen_dir/postings`` —
-    the r13 read-back semantics, which match the postings even when an
-    id is duplicated.
-
-    Built over ``spark.range(1)`` rather than a Python createDataFrame
-    local relation: measured on this very write, coalesce(1) over a
-    pickled LocalTableScan costs 5-9 s per call while the range-backed
-    equivalent is ~0.2 s — the entire saving of skipping the read-back
-    would have been handed straight back."""
-    n, sum_dl = got["n"], got.get("sum_dl")
-    if n and "sum_dl" not in got:
-        row = (
-            read_parquet(spark, f"{gen_dir}/postings")
+def _bm25_stats(spark: SparkSession, postings_dir: str, id_col: str,
+                got: dict) -> dict:
+    """The BM25 manifest's corpus stats ``{"n", "sum_dl"}`` for one
+    postings write, from the DRIVER-held observation values ``got``:
+    no job. ``sum_dl`` is None when n == 0 (SUM over zero rows, as the
+    corpus aggregate gives). When the observation did not fire but
+    rows were written (``got`` carries no ``sum_dl``), both are
+    re-derived per distinct id from the written postings: one
+    aggregate job, exact even when an id is duplicated."""
+    if got["n"] and "sum_dl" not in got:
+        got = (
+            read_parquet(spark, postings_dir)
             .groupBy(id_col)
             .agg(F.first("dl").alias("dl"))
-            .groupBy()
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("dl").cast("bigint").alias("sum_dl"),
-            )
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
             .first()
+            .asDict()
         )
-        n, sum_dl = row["n"], row["sum_dl"]
-    cols = [
-        F.lit(int(n)).cast("bigint").alias("n"),
-        F.lit(None if sum_dl is None else int(sum_dl))
-        .cast("bigint")
-        .alias("sum_dl"),
-    ]
-    if with_avgdl:
-        avgdl = (
-            float(sum_dl) / float(n) if n and sum_dl is not None else None
-        )
-        cols.append(F.lit(avgdl).cast("double").alias("avgdl"))
-    df = spark.range(1).select(*cols)
-    write_parquet(df.coalesce(1), f"{gen_dir}/stats")
+    sum_dl = got.get("sum_dl")
+    return {"n": int(got["n"]),
+            "sum_dl": None if sum_dl is None else int(sum_dl)}
 
 
 def _write_postings(docs: DataFrame, postings_dir: str, n_buckets: int,
-                    id_col: str, text_col: str, tokenize) -> dict:
+                    id_col: str, text_col: str,
+                    tokenize) -> tuple[dict, dict]:
     """The one postings write behind both index kinds' build and
     update: ``tokenize(docs, id_col, text_col, obs)`` (the kind's
     tokenizer, ``obs`` attached at its one-row-per-doc point),
     bucket-partitioned at ``n_buckets``. ONE tokenizer execution (r13:
     the emptiness probe, the postings write and the stats write each
     re-ran it) and ZERO read-back jobs (r14): the doc count (and, for
-    BM25, the summed dl) rides the write job as an Observation.
+    BM25, the summed dl) rides the write job as an Observation and
+    lands in the manifest.
     Returns the observation's metrics, or the listing fallback's
-    ``{"n": 0 | 1}`` when it did not fire.
+    ``{"n": 0 | 1}`` when it did not fire, and the written rows'
+    schema as JSON (the build records it, so a base of zero documents,
+    which leaves no data file to infer a schema from, still reads).
 
     Precondition of the observation: ``docs`` holds ONE row per
     ``id_col``. It counts input rows, so a duplicated id would count
     twice in n and sum_dl while the tf aggregate folds it into one
     posting doc. Catalog corpora are keyed on doc_id."""
     obs = Observation()
-    rows = tokenize(docs, id_col, text_col, obs)
     bucket = F.pmod(F.xxhash64(F.col("termo")), F.lit(int(n_buckets)))
-    write_parquet(
-        rows.withColumn("bucket", bucket.cast("int")),
-        postings_dir,
-        ("bucket",),
+    rows = tokenize(docs, id_col, text_col, obs).withColumn(
+        "bucket", bucket.cast("int")
     )
-    return _obs_metrics(obs) or _written_dir_stats(
+    write_parquet(rows, postings_dir, ("bucket",))
+    got = observed(obs) or _written_dir_stats(
         docs.sparkSession, postings_dir
     )
+    return got, rows.schema.jsonValue()
 
 
 def _build_index(docs: DataFrame, path: str, n_buckets: int, id_col: str,
-                 text_col: str, kind: str, tokenize, write_stats) -> None:
-    """The one build path: postings write, then the kind's stats
-    sidecar (``write_stats``; None for positions, which carry no
-    corpus aggregate, so ``stats_dir`` stays absent on disk), then the
-    version-0 manifest."""
-    got = _write_postings(
-        docs, f"{path}/postings", n_buckets, id_col, text_col, tokenize
-    )
-    if write_stats is not None:
-        write_stats(docs.sparkSession, path, id_col, got, with_avgdl=True)
+                 text_col: str, kind: str, tokenize, stats) -> None:
+    """The one build path: postings write, then the version-0
+    manifest, carrying the kind's corpus stats (``stats``, None for
+    positions, which carry no corpus aggregate)."""
     from agrobr_spark.store.fs import commit_json
 
+    postings = f"{path}/postings"
+    got, schema = _write_postings(
+        docs, postings, n_buckets, id_col, text_col, tokenize
+    )
     commit_json(f"{path}/manifest.json", {
         "n_buckets": int(n_buckets),
         "tokenizer_version": TOKENIZER_VERSION,
@@ -238,31 +207,34 @@ def _build_index(docs: DataFrame, path: str, n_buckets: int, id_col: str,
         "kind": kind,
         "version": 0,
         "postings_dir": "postings",
-        "stats_dir": "stats",
+        "postings_schema": schema,
         "active_batches": [],
         "applied_batch_ids": [],
+        **(stats(docs.sparkSession, postings, id_col, got) if stats else {}),
     })
 
 
 def _update_index(docs_new: DataFrame, path: str, id_col: str,
                   text_col: str, batch_id: int | None, tokenize,
-                  write_stats) -> None:
+                  stats) -> None:
     """The one staged-epoch update path, one ``store/fs.commit_epoch``
     epoch (protocol in :func:`update_posting_index`'s docstring): the
-    stage writes ``batches/b<id>/`` at the manifest-frozen n_buckets
-    plus the kind's stats delta (``write_stats``, None for
-    positions); the publish lists the batch in ``active_batches``."""
+    stage writes ``batches/b<id>/`` at the manifest-frozen n_buckets;
+    the publish lists the batch in ``active_batches`` and records the
+    kind's stats delta (``stats``, None for positions) in
+    ``batch_stats``."""
     from agrobr_spark.store.fs import commit_epoch, delete_path
 
     _require_valid_epoch_id(batch_id)
     spark = docs_new.sparkSession
 
-    def stage(man: dict) -> int | None:
+    def stage(man: dict) -> tuple[int, dict | None] | None:
         bid = (int(batch_id) if batch_id is not None
                else _next_local_batch(man))
         bdir = _batch_dir(path, bid)
-        got = _write_postings(
-            docs_new, f"{bdir}/postings", int(man["n_buckets"]), id_col,
+        postings = f"{bdir}/postings"
+        got, _ = _write_postings(
+            docs_new, postings, int(man["n_buckets"]), id_col,
             text_col, tokenize,
         )
         if not got["n"]:
@@ -270,19 +242,20 @@ def _update_index(docs_new: DataFrame, path: str, id_col: str,
             # read: drop it, and the epoch publishes only its guard
             delete_path(spark, bdir)
             return None
-        if write_stats is not None:
-            write_stats(spark, bdir, id_col, got, with_avgdl=False)
-        return bid
+        return bid, stats(spark, postings, id_col, got) if stats else None
 
-    def publish(cur: dict, bid: int | None) -> dict:
+    def publish(cur: dict, staged: tuple[int, dict | None] | None) -> dict:
         # only THIS epoch's delta merges into the manifest as it
         # stands at commit time: a compaction may have swapped the
         # generation pointer while the batch staged, and its
         # uncommitted directory was invisible to that compaction, so
         # the next one folds it
         cur = _normalize_manifest(cur)
-        if bid is not None:
+        if staged is not None:
+            bid, delta = staged
             cur["active_batches"].append(bid)
+            if delta is not None:
+                cur["batch_stats"][str(bid)] = delta
             if bid < 0:
                 # advance the local-id watermark so a post-compaction
                 # ingest can never reuse a folded id
@@ -309,7 +282,7 @@ def build_posting_index(
     data — the driver-side artifacts are two scalars and the manifest
     dict."""
     _build_index(docs, path, n_buckets, id_col, text_col, "bm25",
-                 tokenize_postings, _write_stats_row)
+                 tokenize_postings, _bm25_stats)
 
 
 def update_posting_index(
@@ -327,8 +300,8 @@ def update_posting_index(
     into their term buckets at the n_buckets FROZEN in the manifest
     (batch and corpus can never hash at different widths).
 
-    Corpus stats fold exactly: the stats row carries ``sum_dl``
-    alongside ``n``, so the updated ``avgdl`` is
+    Corpus stats fold exactly: the batch's ``batch_stats`` delta
+    carries ``sum_dl`` alongside ``n``, so the updated ``avgdl`` is
     ``(sum_dl + sum_dl_batch) / (n + n_batch)`` — byte-identical to a
     full rebuild over corpus ∪ batch, which is what the parity test
     pins (build+update ≡ rebuild, query-result equality).
@@ -339,9 +312,9 @@ def update_posting_index(
     double-count its postings, the same append-only semantics as the
     survivor MERGE's staging input.
 
-    Durability: one ``store/fs.commit_epoch`` epoch. The rows and
-    stats delta are OVERWRITE-written into ``batches/b<id>/`` and
-    become visible only at the manifest commit, so a replayed
+    Durability: one ``store/fs.commit_epoch`` epoch. The rows are
+    OVERWRITE-written into ``batches/b<id>/`` and, with the stats
+    delta, become visible only at the manifest commit, so a replayed
     ``batch_id`` (streaming foreachBatch) either no-ops or cleanly
     rewrites an uncommitted directory. Without ``batch_id`` (one-shot
     maintenance caller) a local epoch id is drawn below the streaming
@@ -349,7 +322,7 @@ def update_posting_index(
     a reader may be mid-scan on.
     """
     _update_index(docs_new, path, id_col, text_col, batch_id,
-                  tokenize_postings, _write_stats_row)
+                  tokenize_postings, _bm25_stats)
 
 
 def _batch_rel(bid: int) -> str:
@@ -397,8 +370,8 @@ def _normalize_manifest(man: dict) -> dict:
     """Fill the commit-state defaults: pre-r10 manifests carry none
     and were built with the fixed layout."""
     man.setdefault("postings_dir", "postings")
-    man.setdefault("stats_dir", "stats")
     man.setdefault("active_batches", [])
+    man.setdefault("batch_stats", {})
     man.setdefault("version", 0)
     # superseded dirs awaiting the DEFERRED vacuum (r13); relative to
     # the index root so the manifest stays relocatable
@@ -431,51 +404,73 @@ def _postings_frame(
     from a crashed epoch is invisible). Each leg is its own
     bucket-partitioned parquet read, so ``bucket IN (...)`` partition
     pruning applies per leg — a query still touches only its terms'
-    buckets in every generation."""
+    buckets in every generation. A BM25 base of zero documents
+    (``n == 0``) holds no data file to read, so it is no leg; with no
+    leg at all the set is an empty frame of the build's
+    ``postings_schema``."""
+    from functools import reduce
+
     man = man or read_manifest(path)
-    df = read_parquet(spark, f"{path}/{man['postings_dir']}")
-    for bid in man["active_batches"]:
-        df = df.unionByName(
-            read_parquet(spark, f"{_batch_dir(path, int(bid))}/postings")
+    legs = [f"{path}/{man['postings_dir']}"] if man.get("n") != 0 else []
+    legs += [
+        f"{_batch_dir(path, int(bid))}/postings"
+        for bid in man["active_batches"]
+    ]
+    if not legs:
+        return spark.createDataFrame(
+            [], T.StructType.fromJson(man["postings_schema"])
         )
-    return df
+    return reduce(
+        DataFrame.unionByName, [read_parquet(spark, leg) for leg in legs]
+    )
 
 
-def read_stats(
-    spark: SparkSession, path: str, man: dict | None = None
-) -> DataFrame:
-    """The index's effective one-row corpus stats ``(n, sum_dl,
-    avgdl)``: the base generation's row folded with every committed
-    batch's delta — one aggregation over |active_batches| + 1 rows,
-    never a corpus read."""
+def corpus_stats(n: int, sum_dl: int | None) -> dict:
+    """``{"n", "sum_dl", "avgdl"}``: ``avgdl`` is ``sum_dl / n`` as
+    two doubles, the division the DuckDB oracle makes; None for an
+    empty corpus."""
+    avgdl = float(sum_dl) / float(n) if n else None
+    return {"n": int(n), "sum_dl": sum_dl, "avgdl": avgdl}
+
+
+def read_stats(path: str, man: dict | None = None) -> dict:
+    """The BM25 index's effective corpus stats ``{"n", "sum_dl",
+    "avgdl"}``: the manifest's base ``n``/``sum_dl`` folded in Python
+    with every active batch's ``batch_stats`` delta — no Spark job,
+    never a corpus read. ``sum_dl`` sums like SQL ``SUM``: None only
+    when every part is None (n == 0).
+
+    Raises ``ValueError`` naming ``path`` when the manifest carries
+    no stats (an index built by an older layout, which kept them in a
+    parquet sidecar, or a positional index): rebuild it."""
     man = man or read_manifest(path)
-    df = read_parquet(spark, f"{path}/{man['stats_dir']}").select(
-        "n", "sum_dl"
-    )
-    for bid in man["active_batches"]:
-        df = df.unionByName(
-            read_parquet(spark, f"{_batch_dir(path, int(bid))}/stats")
-        )
-    return df.groupBy().agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-        (F.sum("sum_dl").cast("double") / F.sum("n").cast("double")).alias(
-            "avgdl"
-        ),
-    )
+    try:
+        parts = [man] + [
+            man["batch_stats"][str(int(b))] for b in man["active_batches"]
+        ]
+        n = sum(int(p["n"]) for p in parts)
+        sums = [int(p["sum_dl"]) for p in parts if p["sum_dl"] is not None]
+    except KeyError as e:
+        raise ValueError(
+            f"posting index at {path!r} has no BM25 corpus stats in its "
+            f"manifest (missing {e}): it was built by an older layout or "
+            "is not a BM25 index — rebuild it with build_posting_index"
+        ) from None
+    return corpus_stats(n, sum(sums) if sums else None)
 
 
 def compact_posting_index(spark: SparkSession, path: str) -> int:
     """Fold base + committed batches into a new base generation —
     the index maintenance op (r9 VERDICT next #4).
 
-    Streamed epochs leave one directory (and one stats delta) each;
-    at 100 TB an always-on ingest makes the per-bucket file count and
-    the delta-fold chain the read bottleneck. Compaction rewrites the
-    full posting set as ``postings_v<k>`` with ONE file per bucket
+    Streamed epochs leave one directory (and one manifest stats
+    delta) each; at 100 TB an always-on ingest makes the per-bucket
+    file count the read bottleneck. Compaction rewrites the full
+    posting set as ``postings_v<k>`` with ONE file per bucket
     (``repartition("bucket")`` sends each bucket to exactly one task,
-    so each partition directory gets one data file), folds stats into
-    one base row, then atomically swaps the manifest pointer:
+    so each partition directory gets one data file), folds the
+    batches' ``batch_stats`` into the base ``n``/``sum_dl``, then
+    atomically swaps the manifest pointer:
 
     - readers see the old generation or the new one, never a mix;
     - ``applied_batch_ids`` is preserved — a late replay of an
@@ -512,9 +507,9 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
     window now needs a reader to straddle TWO full compactions.
 
     Returns the number of posting data files after compaction.
-    Positional indexes (no stats sidecar) compact the same way.
+    Positional indexes (no corpus stats) compact the same way.
     """
-    from agrobr_spark.store.fs import commit_epoch, delete_path, path_exists
+    from agrobr_spark.store.fs import commit_epoch, delete_path
 
     def stage(man: dict) -> tuple[dict, set]:
         man = _normalize_manifest(man)
@@ -534,24 +529,20 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
             delete_path(spark, f"{path}/{d}")
         ver = int(man["version"]) + 1
         gen = {"version": ver, "postings_dir": f"postings_v{ver}"}
+        if man.get("kind") != "positional":
+            # before the rewrite: an old-layout index raises here
+            st = read_stats(path, man)
+            gen.update(n=st["n"], sum_dl=st["sum_dl"])
         write_parquet(
             _postings_frame(spark, path, man).repartition("bucket"),
             f"{path}/{gen['postings_dir']}",
             ("bucket",),
         )
-        old_dirs = [man["postings_dir"]]
-        if path_exists(spark, f"{path}/{man['stats_dir']}"):
-            gen["stats_dir"] = f"stats_v{ver}"
-            write_parquet(
-                read_stats(spark, path, man).coalesce(1),
-                f"{path}/{gen['stats_dir']}",
-            )
-            old_dirs.append(man["stats_dir"])
         # this generation's superseded dirs are only RECORDED as
         # garbage; the NEXT compaction's vacuum deletes them, so an
         # in-flight reader planned against the pre-swap generation
         # keeps its files through the swap (deferred vacuum)
-        gen["garbage"] = old_dirs + [
+        gen["garbage"] = [man["postings_dir"]] + [
             _batch_rel(int(b)) for b in man["active_batches"]
         ]
         return gen, {int(b) for b in man["active_batches"]}
@@ -569,6 +560,10 @@ def compact_posting_index(spark: SparkSession, path: str) -> int:
             active_batches=[
                 b for b in cur["active_batches"] if int(b) not in folded
             ],
+            batch_stats={
+                b: d for b, d in cur["batch_stats"].items()
+                if int(b) not in folded
+            },
             **gen,
         )
 
@@ -597,9 +592,11 @@ def posting_file_count(spark: SparkSession, path: str) -> int:
 
 
 def query_postings(
-    spark: SparkSession, path: str, terms: tuple[str, ...]
+    spark: SparkSession, path: str, terms: tuple[str, ...],
+    man: dict | None = None,
 ) -> DataFrame:
-    """Posting rows for ``terms`` read from only their buckets.
+    """Posting rows for ``terms`` read from only their buckets (of the
+    generation ``man`` names; the current manifest by default).
 
     The term→bucket map is computed with the SAME xxhash64 the build
     used, by Spark itself (never a Python re-implementation of the
@@ -610,7 +607,7 @@ def query_postings(
     inside the pruned partitions)."""
     import pandas as pd
 
-    man = read_manifest(path)
+    man = man or read_manifest(path)
     nb = int(man["n_buckets"])
     # from pandas, not a list: a list becomes a parallelized RDD whose
     # collect is a job, a pandas frame a LocalRelation folded to zero
@@ -632,13 +629,38 @@ def query_postings(
     )
 
 
+def pin_term_rows(
+    rows: DataFrame, terms
+) -> tuple[DataFrame, dict[str, int]]:
+    """The one eager pin of a query's posting rows ``(id, dl, termo,
+    tf)``, with each query term's document frequency riding the pin's
+    own job: ``count_if(termo = t)`` per term, exact because the rows
+    hold one row per (doc, term). Returns the pinned rows and
+    ``{termo: df}``; a term absent from the corpus has df 0, read off
+    the pin itself (:func:`agrobr_spark.io.pin`), never assumed."""
+    names = dict(enumerate(dict.fromkeys(terms)))
+    pinned, got = pin(rows, **{
+        f"df{i}": F.count_if(F.col("termo") == t) for i, t in names.items()
+    })
+    return pinned, {t: int(got[f"df{i}"]) for i, t in names.items()}
+
+
+def _by_term(values: dict, typ: str):
+    """``values[termo]`` as a literal-map lookup of type ``typ``."""
+    return F.create_map(
+        *[F.lit(x) for kv in sorted(values.items()) for x in kv]
+    )[F.col("termo")].cast(typ)
+
+
 def bm25_score(
     tf: DataFrame,
-    stats: DataFrame,
+    n: int,
+    avgdl: float | None,
+    df: dict[str, int],
     k1: float,
     b: float,
     id_col: str = "doc_id",
-    peso: DataFrame | None = None,
+    peso: dict[str, float] | None = None,
 ) -> DataFrame:
     """Per-doc BM25 scores ``(id, n_termos, pontos)`` — the package's
     one BM25 score expression, behind the scan twins (``tf`` tokenized
@@ -646,33 +668,32 @@ def bm25_score(
     ``query_postings``) alike.
 
     ``tf`` holds posting rows ``(id, dl, termo, tf)`` of the query
-    terms; ``stats`` is the one-row corpus ``(n, avgdl)``. df folds
-    from ``tf`` (never re-touches the corpus) and joins without a
-    broadcast hint: forcing a broadcast of that derived aggregate can
-    re-run the tf lineage as a separate job, while AQE broadcasts the
-    |query|-row table at runtime anyway; ``stats`` joins broadcast.
+    terms, pinned by :func:`pin_term_rows`. The corpus statistics are
+    driver scalars: ``n`` (document count), ``avgdl`` and ``df``
+    (``{termo: df}``), which become literals and a literal map, so
+    scoring is one narrow projection of ``tf`` into the per-doc sum —
+    no stats join, no broadcast, no df aggregate.
     Per (doc, term): ``idf · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))``
     with ``idf = ln(1 + (n-df+0.5)/(df+0.5))``, rounded
     to 6dp DECIMAL and summed per doc, so rankings and their tie cuts
     are deterministic on both engines.
 
-    ``peso``: a ``(termo, peso)`` frame weighting the query terms (RM3
-    stage 2). The term score is then ``peso · idf · tf·(k1+1) /
-    denom``, multiplied left to right as the DuckDB oracle writes it."""
-    df_tab = tf.groupBy("termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    rows = tf.join(df_tab, "termo")
+    ``peso``: ``{termo: peso}`` weighting the query terms (RM3 stage
+    2). The term score is then ``peso · idf · tf·(k1+1) / denom``,
+    multiplied left to right as the DuckDB oracle writes it."""
+    rows = tf.withColumn("df", _by_term(df, "bigint"))
     termo_p = F.log(
-        1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        1 + (F.lit(int(n)).cast("bigint") - F.col("df") + 0.5)
+        / (F.col("df") + 0.5)
     )
     if peso is not None:
-        rows = rows.join(F.broadcast(peso), "termo")
+        rows = rows.withColumn("peso", _by_term(peso, "double"))
         termo_p = F.col("peso") * termo_p
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+    denom = F.col("tf") + k1 * (
+        1 - b + b * F.col("dl") / F.lit(avgdl).cast("double")
+    )
     return (
-        rows.crossJoin(F.broadcast(stats))
-        .select(
+        rows.select(
             id_col,
             F.round(termo_p * (F.col("tf") * (k1 + 1)) / denom, 6)
             .cast("decimal(18,6)")
@@ -686,6 +707,27 @@ def bm25_score(
     )
 
 
+def bm25_scores_indexed(
+    spark: SparkSession,
+    path: str,
+    terms: tuple[str, ...],
+    k1: float,
+    b: float,
+    id_col: str = "doc_id",
+    peso: dict[str, float] | None = None,
+    man: dict | None = None,
+) -> DataFrame:
+    """Per-doc BM25 scores for ``terms`` from the posting index:
+    :func:`bm25_score` over the pinned pruned posting read, with
+    ``(n, avgdl)`` folded from the manifest ``man`` (read once, so
+    the postings and the stats are one generation). One Spark job
+    before the scoring: the pin."""
+    man = man or read_manifest(path)
+    st = read_stats(path, man)
+    rows, df = pin_term_rows(query_postings(spark, path, terms, man), terms)
+    return bm25_score(rows, st["n"], st["avgdl"], df, k1, b, id_col, peso)
+
+
 def bm25_topk_indexed(
     spark: SparkSession,
     path: str,
@@ -695,17 +737,11 @@ def bm25_topk_indexed(
     b: float,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k BM25 answer from the posting index: :func:`bm25_score`
-    over the pruned posting read, (n, avgdl) from the one-row stats
-    table, tie-break on doc id. The corpus is never touched."""
+    """Top-k BM25 answer from the posting index:
+    :func:`bm25_scores_indexed`, tie-break on doc id. The corpus is
+    never touched."""
     return (
-        bm25_score(
-            query_postings(spark, path, terms),
-            read_stats(spark, path),
-            k1,
-            b,
-            id_col,
-        )
+        bm25_scores_indexed(spark, path, terms, k1, b, id_col)
         .orderBy(F.desc("pontos"), id_col)
         .limit(int(k))
     )
@@ -773,7 +809,7 @@ def update_positional_index(
     batch's rows land in a staged ``batches/b<id>/`` directory at the
     manifest-frozen n_buckets and become visible at the atomic
     manifest commit — the crash-safe exactly-once protocol of
-    ``update_posting_index`` (no stats sidecar: positions carry no
+    ``update_posting_index`` (no stats delta: positions carry no
     corpus aggregate). Same append-only contract: ids must not
     already be indexed."""
     _update_index(docs_new, path, id_col, text_col, batch_id,

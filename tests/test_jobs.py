@@ -16,6 +16,10 @@ from tools.jobs_census import census
 WARM_JOBS = {
     "dedup_survivors": 7,
     "near_dup_embeddings": 4,
+    "text_bm25_indexed": 3,
+    "text_bm25_topk": 4,
+    "text_bm25_rm3_indexed": 10,
+    "retrieval_index_freshness": 2,
 }
 
 

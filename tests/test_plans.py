@@ -264,18 +264,29 @@ class TestRetrievalAndSampling:
         assert "BatchEvalPython" not in plan
 
     def test_bm25_indexed_prunes_buckets(self, spark, cat):
-        """text_bm25_indexed (r8 verdict next #2): the posting read
-        must be partition-pruned to the query terms' buckets (the
+        """text_bm25_indexed (r8 verdict next #2): the posting read it
+        pins must be partition-pruned to the query terms' buckets (the
         inverted-index property — untouched buckets are never read),
-        with the termo IN filter pushed into the pruned scan, the
-        stats/df sides broadcast, and the final cut a
-        TakeOrderedAndProject; the documents corpus never appears."""
-        plan = plan_of(cat["text_bm25_indexed"].fn(spark, SF_SMOKE))
-        m = re.search(r"PartitionFilters: \[bucket[^\]]*IN \(([^)]*)\)", plan)
-        assert m, plan
+        with the termo IN filter pushed into the pruned scan. Scoring
+        runs off that pin with the corpus stats as literals: no join,
+        no broadcast, and the final cut a TakeOrderedAndProject; the
+        documents corpus never appears."""
+        from agrobr_spark.queries.pipeline_text import (
+            BM25_QUERY,
+            _bm25_index_dir,
+        )
+        from agrobr_spark.store.posting import query_postings
+
+        read = plan_of(
+            query_postings(spark, _bm25_index_dir(spark, SF_SMOKE), BM25_QUERY)
+        )
+        m = re.search(r"PartitionFilters: \[bucket[^\]]*IN \(([^)]*)\)", read)
+        assert m, read
         # 3 query terms → at most 3 buckets listed, never the full 64
         assert len(m.group(1).split(",")) <= 3
-        assert re.search(r"PushedFilters: \[In\(termo", plan), plan
+        assert re.search(r"PushedFilters: \[In\(termo", read), read
+        plan = plan_of(cat["text_bm25_indexed"].fn(spark, SF_SMOKE))
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
         assert "TakeOrderedAndProject" in plan
         assert "documents" not in plan  # corpus untouched at query time
         assert "BatchEvalPython" not in plan
@@ -442,12 +453,13 @@ class TestRound9Additions:
         read_cols = {f.split(":")[0] for s in schemas for f in s.split(",") if f}
         assert read_cols <= {"doc_id", "text"}, read_cols
 
-    def test_rm3_weighted_terms_broadcast_and_topk_heap(self, spark, cat):
-        """text_bm25_rm3: the weighted term table broadcasts into the
-        stage-2 tf pass and the final cut is a TakeOrderedAndProject
-        heap — the corpus is never globally sorted."""
+    def test_rm3_weighted_terms_are_literals_and_topk_heap(self, spark, cat):
+        """text_bm25_rm3: the stage-2 weights, df and corpus stats
+        reach the scorer as literals over the pinned tf rows — no join
+        at all — and the final cut is a TakeOrderedAndProject heap:
+        the corpus is never globally sorted."""
         plan = plan_of(cat["text_bm25_rm3"].fn(spark, SF_SMOKE))
-        assert "BroadcastHashJoin" in plan
+        assert "Join" not in plan, plan
         assert "TakeOrderedAndProject" in plan
         assert "BatchEvalPython" not in plan
         assert "CartesianProduct" not in plan

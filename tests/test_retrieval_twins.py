@@ -49,8 +49,10 @@ _DOT = re.compile(r"aggregate\(\s*zip_with\(\s*[^(),]+,\s*[^(),]+,\s*\(")
 def test_bm25_idf_and_spark_dot_have_one_definition():
     """The BM25 score lives in store/posting.bm25_score and the Spark
     dot product in operators/allpairs.py; a copy elsewhere fails with
-    its file:line."""
-    offenders = []
+    its file:line. The idf pattern must match exactly once inside
+    bm25_score, so a respelling there cannot leave it matching
+    nothing."""
+    offenders, idf_owned = [], 0
     for f in sorted(PACKAGE.rglob("*.py")):
         rel = f.relative_to(PACKAGE).as_posix()
         src = f.read_text(encoding="utf-8")
@@ -63,9 +65,15 @@ def test_bm25_idf_and_spark_dot_have_one_definition():
                 line = src.count("\n", 0, m.start()) + 1
                 if not allowed(owner.get(line)):
                     offenders.append(f"agrobr_spark/{rel}:{line}")
+                elif pattern is _IDF:
+                    idf_owned += 1
     assert not offenders, (
         "BM25 idf term outside store/posting.bm25_score or Spark dot "
         "definition outside operators/allpairs.py: " + ", ".join(offenders)
+    )
+    assert idf_owned == 1, (
+        f"the idf pattern matches {idf_owned} times inside "
+        "store/posting.bm25_score, not once: update _IDF to its spelling"
     )
 
 

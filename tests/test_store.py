@@ -622,8 +622,8 @@ def test_posting_index_incremental_update_equals_rebuild(spark, tmp_path):
     assert answer(inc) == answer(full)
     from agrobr_spark.store.posting import read_stats
 
-    s_inc = read_stats(spark, inc).collect()[0]
-    s_full = read_stats(spark, full).collect()[0]
+    s_inc = read_stats(inc)
+    s_full = read_stats(full)
     assert (s_inc["n"], s_inc["sum_dl"]) == (s_full["n"], s_full["sum_dl"])
     assert s_inc["avgdl"] == s_full["avgdl"]
 
@@ -653,7 +653,7 @@ def test_posting_index_batchid_replay_is_noop(spark, tmp_path):
     build_posting_index(corpus, path, n_buckets=8)
 
     def state():
-        stats = read_stats(spark, path).collect()[0]
+        stats = read_stats(path)
         rows = sorted(
             tuple(r) for r in _postings_frame(spark, path).collect()
         )
@@ -707,7 +707,7 @@ def test_posting_index_compaction(spark, tmp_path):
         ).collect()
     ]
     files_before = posting_file_count(spark, path)
-    stats_before = tuple(read_stats(spark, path).collect()[0])
+    stats_before = read_stats(path)
 
     files_after = compact_posting_index(spark, path)
     man = read_manifest(path)
@@ -723,14 +723,14 @@ def test_posting_index_compaction(spark, tmp_path):
         ).collect()
     ]
     assert after == before
-    assert tuple(read_stats(spark, path).collect()[0]) == stats_before
+    assert read_stats(path) == stats_before
     # replay of an already-compacted epoch is still a no-op
     update_posting_index(
         spark.createDataFrame(docs[20:25], "doc_id bigint, text string"),
         path,
         batch_id=0,
     )
-    assert tuple(read_stats(spark, path).collect()[0]) == stats_before
+    assert read_stats(path) == stats_before
 
 
 def test_positional_index_compaction(spark, tmp_path):
@@ -912,7 +912,7 @@ def test_posting_index_empty_epoch_is_guarded_noop(spark, tmp_path):
     assert man["applied_batch_ids"] == [0, 1]
     assert man["active_batches"] == []
     assert _postings_frame(spark, path).count() == 2  # still readable
-    assert read_stats(spark, path).collect()[0]["n"] == 1
+    assert read_stats(path)["n"] == 1
     # replay of the empty epoch stays a no-op; a real epoch still lands
     update_posting_index(empty, path, batch_id=0)
     update_posting_index(
@@ -920,7 +920,135 @@ def test_posting_index_empty_epoch_is_guarded_noop(spark, tmp_path):
         path,
         batch_id=2,
     )
-    assert read_stats(spark, path).collect()[0]["n"] == 2
+    assert read_stats(path)["n"] == 2
+
+
+def test_bm25_query_terms_absent_from_corpus_return_empty(
+    spark, tmp_path, monkeypatch
+):
+    """Query terms the corpus never holds score nothing, without
+    error, on both twins. Their df is 0, read off the empty pin: also
+    when the pin's Observation does not fire, the fallback aggregates
+    the pinned rows instead of assuming zeros."""
+    import agrobr_spark.io as io
+    from agrobr_spark.queries.pipeline_text import bm25_scores
+    from agrobr_spark.store.posting import (
+        bm25_topk_indexed,
+        build_posting_index,
+        pin_term_rows,
+    )
+    from tests.conftest import SF_SMOKE
+
+    path = str(tmp_path / "idx")
+    build_posting_index(
+        spark.createDataFrame(
+            [(1, "alpha beta"), (2, "alpha gamma")],
+            "doc_id bigint, text string",
+        ),
+        path,
+        n_buckets=4,
+    )
+    def answer(terms):
+        return [
+            r["doc_id"]
+            for r in bm25_topk_indexed(
+                spark, path, terms, 10, 1.2, 0.75
+            ).collect()
+        ]
+
+    assert answer(("zzz", "qqq")) == []
+    assert answer(("beta", "zzz")) == [1]
+    assert bm25_scores(spark, SF_SMOKE, ("zzzabsentzzz",)).count() == 0
+
+    empty = spark.createDataFrame(
+        [], "doc_id bigint, dl int, termo string, tf bigint"
+    )
+    for fired in (True, False):
+        if not fired:
+            monkeypatch.setattr(io, "observed", lambda obs: None)
+        rows, df = pin_term_rows(empty, ("zzz", "qqq"))
+        assert df == {"zzz": 0, "qqq": 0}
+        assert rows.isEmpty()
+
+
+def test_posting_index_zero_document_base(spark, tmp_path):
+    """A BM25 index built over zero documents reads as empty (n 0, no
+    avgdl), answers queries with no rows, and takes updates and a
+    compaction like any other base."""
+    from agrobr_spark.store.posting import (
+        bm25_topk_indexed,
+        build_posting_index,
+        compact_posting_index,
+        read_stats,
+        update_posting_index,
+    )
+
+    schema = "doc_id bigint, text string"
+    path = str(tmp_path / "idx")
+    build_posting_index(spark.createDataFrame([], schema), path, n_buckets=4)
+    assert read_stats(path) == {"n": 0, "sum_dl": None, "avgdl": None}
+
+    def answer(p):
+        return bm25_topk_indexed(
+            spark, p, ("alpha", "beta"), 10, 1.2, 0.75
+        ).collect()
+
+    assert answer(path) == []
+
+    batch = spark.createDataFrame([(1, "alpha beta"), (2, "alpha")], schema)
+    update_posting_index(batch, path, batch_id=0)
+    full = str(tmp_path / "full")
+    build_posting_index(batch, full, n_buckets=4)
+    assert read_stats(path) == read_stats(full)
+    assert read_stats(full) == {"n": 2, "sum_dl": 3, "avgdl": 1.5}
+    assert answer(path) == answer(full)
+    compact_posting_index(spark, path)
+    assert read_stats(path) == read_stats(full)
+    assert answer(path) == answer(full)
+
+
+def test_read_stats_rejects_a_manifest_without_stats(spark, tmp_path):
+    """A manifest of the previous layout (stats in a ``stats/``
+    parquet sidecar, no ``n``/``sum_dl``) and a positional index's
+    manifest carry no corpus stats: reading them raises, naming the
+    path and asking for a rebuild, rather than reading a sidecar."""
+    import json
+    import os
+    import re
+
+    import pytest
+
+    from agrobr_spark.store.posting import (
+        bm25_topk_indexed,
+        build_positional_index,
+        build_posting_index,
+        read_stats,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta")], "doc_id bigint, text string"
+    )
+    path = str(tmp_path / "idx")
+    build_posting_index(docs, path, n_buckets=4)
+    manifest = os.path.join(path, "manifest.json")
+    with open(manifest, encoding="utf-8") as fh:
+        man = json.load(fh)
+    for k in ("n", "sum_dl", "postings_schema"):
+        del man[k]
+    man["stats_dir"] = "stats"
+    with open(manifest, "w", encoding="utf-8") as fh:
+        json.dump(man, fh)
+    for read in (
+        lambda: read_stats(path),
+        lambda: bm25_topk_indexed(spark, path, ("alpha",), 10, 1.2, 0.75),
+    ):
+        with pytest.raises(ValueError, match=re.escape(path) + ".*rebuild"):
+            read()
+
+    pos = str(tmp_path / "pos")
+    build_positional_index(docs, pos, n_buckets=4)
+    with pytest.raises(ValueError, match=re.escape(pos) + ".*rebuild"):
+        read_stats(pos)
 
 
 def test_posting_stats_fallback_matches_postings_with_duplicate_doc_id(
@@ -934,7 +1062,7 @@ def test_posting_stats_fallback_matches_postings_with_duplicate_doc_id(
     and on update."""
     import agrobr_spark.store.posting as P
 
-    monkeypatch.setattr(P, "_obs_metrics", lambda obs: None)
+    monkeypatch.setattr(P, "observed", lambda obs: None)
     schema = "doc_id bigint, text string"
 
     def assert_stats_match_postings(n, sum_dl):
@@ -942,7 +1070,7 @@ def test_posting_stats_fallback_matches_postings_with_duplicate_doc_id(
             P._postings_frame(spark, path).select("doc_id", "dl").distinct()
         )
         dls = [r["dl"] for r in written.collect()]
-        st = P.read_stats(spark, path).collect()[0]
+        st = P.read_stats(path)
         assert (st["n"], st["sum_dl"]) == (len(dls), sum(dls)) == (n, sum_dl)
 
     path = str(tmp_path / "idx")
@@ -1014,7 +1142,7 @@ def test_compaction_preserves_epoch_committed_during_rewrite(
     assert man["version"] == 1
     assert man["active_batches"] == [42]  # the late epoch survived
     assert 42 in man["applied_batch_ids"] and 0 in man["applied_batch_ids"]
-    stats = P.read_stats(spark, path).collect()[0]
+    stats = P.read_stats(path)
     assert stats["n"] == 4  # 2 corpus + batch 0 + the late epoch
     docs_seen = {
         r["doc_id"] for r in P._postings_frame(spark, path).collect()
@@ -1022,7 +1150,7 @@ def test_compaction_preserves_epoch_committed_during_rewrite(
     assert docs_seen == {1, 2, 3, 4}
     # the late epoch's replay guard still works post-compaction
     P.update_posting_index(late, path, batch_id=42)
-    assert P.read_stats(spark, path).collect()[0]["n"] == 4
+    assert P.read_stats(path)["n"] == 4
 
 
 def test_update_commit_straddling_compaction_survives(
@@ -1078,10 +1206,10 @@ def test_update_commit_straddling_compaction_survives(
         r["doc_id"] for r in P._postings_frame(spark, path).collect()
     }
     assert docs_seen == {1, 2, 3, 4}
-    assert P.read_stats(spark, path).collect()[0]["n"] == 4
+    assert P.read_stats(path)["n"] == 4
     # replay stays a no-op, and the NEXT compaction folds the epoch
     P.update_posting_index(late, path, batch_id=7)
-    assert P.read_stats(spark, path).collect()[0]["n"] == 4
+    assert P.read_stats(path)["n"] == 4
     P.compact_posting_index(spark, path)
     man2 = P.read_manifest(path)
     assert man2["version"] == 2 and man2["active_batches"] == []
@@ -1294,9 +1422,9 @@ def test_posting_compaction_deferred_vacuum_reader_survives(
     import os
 
     from agrobr_spark.store.posting import (
-        bm25_topk_indexed,
         build_posting_index,
         compact_posting_index,
+        query_postings,
         read_manifest,
         update_posting_index,
     )
@@ -1317,26 +1445,27 @@ def test_posting_compaction_deferred_vacuum_reader_survives(
     )
     terms = ("alpha", "term3", "gamma")
     # the in-flight reader: plan + file listing happen NOW, against
-    # the pre-compaction generation
-    reader = bm25_topk_indexed(spark, path, terms, 10, 1.2, 0.75)
-    expected = [tuple(r) for r in reader.collect()]
+    # the pre-compaction generation (a posting read, not the BM25
+    # answer, which pins its rows eagerly)
+    reader = query_postings(spark, path, terms)
+    expected = sorted(tuple(r) for r in reader.collect())
 
     compact_posting_index(spark, path)
     man = read_manifest(path)
     # superseded dirs recorded, NOT deleted: the reader's files live on
     assert sorted(man["garbage"]) == sorted(
-        ["postings", "stats", "batches/b00000001099511627776"]
+        ["postings", "batches/b00000001099511627776"]
     )
     for d in man["garbage"]:
         assert os.path.exists(os.path.join(path, d)), d
-    assert [tuple(r) for r in reader.collect()] == expected  # survives
+    assert sorted(tuple(r) for r in reader.collect()) == expected  # survives
 
     # the NEXT compaction vacuums the previous generation's garbage
     compact_posting_index(spark, path)
     man2 = read_manifest(path)
     for d in man["garbage"]:
         assert not os.path.exists(os.path.join(path, d)), d
-    assert sorted(man2["garbage"]) == sorted(["postings_v1", "stats_v1"])
+    assert man2["garbage"] == ["postings_v1"]
 
 
 def test_posting_commit_raises_on_missing_manifest(
