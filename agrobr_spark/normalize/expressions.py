@@ -35,6 +35,27 @@ def norm_key(c: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(fold_accents(c)), r"\s+", " "))
 
 
+#: Version of :func:`tokens`' semantics. Every persisted posting index
+#: records it in its manifest and a reader rejects any other value, so
+#: a tokenizer change forces a rebuild instead of mixing token sets.
+TOKENIZER_VERSION = 1
+
+
+def tokens(c: Column | str) -> Column:
+    """THE whitespace tokenizer: ``trim`` then split on ``\\s+``; blank
+    text gives ``[]`` (a bare split would give ``['']``). Every token
+    array, token count and term row in the package is built from it."""
+    t = F.trim(c)
+    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
+        F.split(t, r"\s+")
+    )
+
+
+def n_tokens(c: Column | str) -> Column:
+    """BIGINT size of :func:`tokens` (0 for blank text)."""
+    return F.size(tokens(c)).cast("bigint")
+
+
 # The same normalization for the DuckDB oracle side.
 NORM_KEY_SQL = (
     "trim(regexp_replace(lower(translate({col}, "

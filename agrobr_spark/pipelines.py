@@ -60,11 +60,11 @@ def prepare_training_corpus(
     restricts the pool to DSIR-selected (target-like) gated docs and
     budgets each source by its selected token mass (see
     ``pipeline_dsir_weights``)."""
+    from agrobr_spark.normalize.expressions import n_tokens
     from agrobr_spark.queries.pipeline_text import pipeline_keep_set
     from agrobr_spark.queries.training_prep import (
         MIX_FRACTION_DEN,
         MIX_WEIGHTS,
-        N_TOKENS_EXPR,
         dsir_scores,
         mix_by_token_budget,
         o6_train_val_test,
@@ -133,7 +133,7 @@ def prepare_training_corpus(
         weights = {
             r["source"]: max(1, int(r["t"]))
             for r in gated_docs.select(
-                "source", F.expr(N_TOKENS_EXPR).alias("n")
+                "source", n_tokens("text").alias("n")
             )
             .groupBy("source")
             .agg(F.sum("n").alias("t"))

@@ -80,6 +80,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import checkpoint_parquet, load, read_parquet
+from agrobr_spark.normalize.expressions import tokens
 from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.operators.components import connected_components
 from agrobr_spark.queries import register
@@ -133,12 +134,6 @@ def _pair_cos(round_to: int = 6):
     return F.round(c, round_to)
 
 
-def _n_tokens():
-    return F.when(
-        F.length(F.trim(F.col("text"))) == 0, F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.col("text")), r"\s+")))
-
-
 # ---- the contamination gate ----
 
 
@@ -181,7 +176,8 @@ def _decisions(
     """Precedence CASE over independent gate flags: curto >
     contaminado > the duplicado flags in order > mantido."""
     hits = contaminated(word_shingles(docs, _CONTAM_WORDS, "doc_id"), bench)
-    out = docs.select("doc_id", _n_tokens().alias("n_tokens")).join(
+    n = F.size(tokens("text")).alias("n_tokens")
+    out = docs.select("doc_id", n).join(
         hits.select("doc_id", F.lit(True).alias("_contaminado")),
         "doc_id",
         "left",

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import load
+from agrobr_spark.normalize.expressions import tokens
 from agrobr_spark.queries import register
 
 N_HASHES = 8
@@ -45,7 +46,7 @@ def word_shingles(frame: DataFrame, k: int, *keys: str) -> DataFrame:
     The DuckDB oracles spell the same shingle with 1-based subscripts."""
     rest = "".join(f", t[i+{j}]" for j in range(1, int(k)))
     return (
-        frame.select(*keys, F.split(F.trim("text"), r"\s+").alias("t"))
+        frame.select(*keys, tokens("text").alias("t"))
         .filter(F.size("t") >= k)
         .select(
             *keys,
@@ -1261,10 +1262,7 @@ def dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pares = _neardup_pairs(spark, sf_dir)
     comp = connected_components(pares, "id_a", "id_b")
     d = load(spark, sf_dir, "documents")
-    toks = F.expr(
-        "CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>)"
-        r" ELSE split(trim(text), '\\s+') END"
-    )
+    toks = tokens("text")
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     qual = d.select(
         "doc_id",

@@ -15,18 +15,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from agrobr_spark.io import load, observed
+from agrobr_spark.normalize.expressions import n_tokens, tokens
 from agrobr_spark.queries import register
 from agrobr_spark.store.fs import scratch_dir
+from agrobr_spark.store.posting import term_rows, term_tf
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
-
-
-def _tokens(col: str = "text"):
-    """Whitespace tokenization; empty text → empty array (not [''])."""
-    return F.when(
-        F.length(F.trim(F.col(col))) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(F.col(col)), r"\s+"))
 
 
 @register(
@@ -46,7 +41,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         "lang",
-        F.size(_tokens()).alias("n_tokens"),
+        F.size(tokens("text")).alias("n_tokens"),
         F.length("text").alias("n_chars_real"),
     )
 
@@ -76,7 +71,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality signals: length, punctuation ratio, stopword ratio,
     mean token length (C4/Gopher-style heuristics)."""
     d = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens("text")
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     base = d.select(
         "doc_id",
@@ -141,9 +136,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language ID heuristic (deterministic priority
     order en>es>fr>de on ties)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.when(
-        F.length(F.trim(F.col("text"))) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+    toks = tokens(F.lower("text"))
 
     def hits(lang: str):
         arr = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
@@ -254,7 +247,7 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     maps only), so chunking 100 TB of text is scan-bound.
     """
     d = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens("text")
     with_toks = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
     starts = F.sequence(
         F.lit(0), F.size("toks") - 1, F.lit(CHUNK_STRIDE)
@@ -374,7 +367,7 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, bigram) partials shuffle."""
     d = load(spark, sf_dir, "documents")
     bigramas = (
-        d.select("lang", F.split(F.trim("text"), r"\s+").alias("t"))
+        d.select("lang", tokens("text").alias("t"))
         .filter(F.size("t") >= 2)
         .select(
             "lang",
@@ -509,7 +502,7 @@ def pipeline_keep_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.dedup import dedup_survivors
 
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.size(_tokens()).alias("n_tokens"))
+    toks = d.select("doc_id", F.size(tokens("text")).alias("n_tokens"))
     contaminado = text_contamination(spark, sf_dir).select(
         "doc_id", F.lit(True).alias("_contaminado")
     )
@@ -567,7 +560,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(
             F.regexp_extract_all("text", F.lit(_BPE_PAT), F.lit(0))
         ).alias("n_tokens_bpe"),
-        F.size(_tokens()).alias("n_tokens_ws"),
+        F.size(tokens("text")).alias("n_tokens_ws"),
     )
 
 
@@ -772,7 +765,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregation."""
     d = load(spark, sf_dir, "documents")
     toks = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
+        "doc_id", F.explode(tokens("text")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("f"))
     return (
@@ -923,49 +916,21 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     KEYED by doc_id. No global sort, no unkeyed window, and
     stop-words need no list — their IDF → 0 demotes them
     arithmetically."""
+    from agrobr_spark.queries.vocab import doc_freq, tfidf_topk
+
     d = load(spark, sf_dir, "documents")
-    toks = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("t").alias("tok"))
-        .groupBy("doc_id", F.lower("tok").alias("termo"))
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = term_tf(term_rows(d, "doc_id"), "doc_id")
     # corpus size as a broadcast 1-row aggregate, not an eager count()
     # job per invocation (the r5-nit pattern: composed queries must not
     # pay a driver action per layer)
     n_docs = d.groupBy().agg(F.count(F.lit(1)).alias("n_corpus"))
-    df_tab = tf.groupBy("termo").agg(F.count(F.lit(1)).alias("df"))
-    # no broadcast hint on df_tab: it is a derived aggregate, and
+    # no broadcast hint on the DF table: it is a derived aggregate, and
     # forcing a broadcast exchange re-executes the TF lineage as a
     # separate job (the dedup_minhash_lsh lesson); AQE converts the
     # join to broadcast at runtime when the vocabulary is small, and
     # web-scale vocabularies (urls/typos) stay a shuffled equi-join
-    pontuado = (
-        tf.join(df_tab, "termo")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "termo",
-            F.col("tf").cast("bigint").alias("tf"),
-            F.col("df").cast("bigint").alias("df"),
-            F.round(
-                F.col("tf")
-                * F.log(
-                    (F.col("n_corpus") + 1.0) / (F.col("df") + 1.0)
-                ),
-                6,
-            ).alias("tfidf"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "termo")
-    return (
-        pontuado.withColumn("posicao", F.row_number().over(w).cast("int"))
-        .filter(F.col("posicao") <= TFIDF_TOPK)
-    )
+    rows = tf.join(doc_freq(tf), "termo").crossJoin(F.broadcast(n_docs))
+    return tfidf_topk(rows, F.col("n_corpus"), TFIDF_TOPK)
 
 
 def _keep_set_report_oracle() -> str:
@@ -1052,12 +1017,7 @@ def text_unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     the term (broadcast when the vocab fits, AQE otherwise; salting
     only matters if one TERM dominates the corpus), one keyed agg.
     All linear in token count."""
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = d.select(
-        "doc_id", F.explode(_tokens()).alias("tok")
-    ).select("doc_id", F.lower("tok").alias("termo"))
+    toks = term_rows(load(spark, sf_dir, "documents"), "doc_id")
     freq = toks.groupBy("termo").agg(F.count(F.lit(1)).alias("c"))
     # total token count folded FROM the vocab aggregate — the tot
     # branch shares freq's exchange (AQE reuses identical exchanges at
@@ -1281,12 +1241,7 @@ def corpus_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-V (driver-size result, broadcast back), and two
     tiny keyed aggs. Linear in token count; the vocab join is a
     broadcast, never a shuffle of the token stream."""
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = d.select(
-        "source", F.explode(_tokens()).alias("tok")
-    ).select("source", F.lower("tok").alias("termo"))
+    toks = term_rows(load(spark, sf_dir, "documents"), "source")
     contagens = toks.groupBy("source", "termo").agg(
         F.count(F.lit(1)).alias("cs")
     )
@@ -1365,30 +1320,6 @@ BM25_SCORES_CTE = rf"""docs AS (
       FROM pontos_t GROUP BY doc_id)"""
 
 
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, t)``: each non-blank document's raw token array."""
-    return (
-        load(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-    )
-
-
-def _lowered_tokens(docs: DataFrame, *keep: str) -> DataFrame:
-    """``(doc_id, *keep, dl, termo)``: one lower-cased row per entry of
-    the token array ``t``; ``dl`` is the doc's token count."""
-    return docs.select(
-        "doc_id", *keep, F.size("t").alias("dl"), F.explode("t").alias("tok")
-    ).select("doc_id", *keep, "dl", F.lower("tok").alias("termo"))
-
-
-def _tf(toks: DataFrame) -> DataFrame:
-    """Posting rows ``(doc_id, dl, termo, tf)``, one per (doc, term)."""
-    return toks.groupBy("doc_id", "dl", "termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-
-
 def bm25_scores(
     spark: SparkSession,
     sf_dir: str,
@@ -1402,29 +1333,36 @@ def bm25_scores(
     ``similarity.py`` (SQL twin: ``BM25_SCORES_CTE``), scored by the
     shared ``store/posting.bm25_score``.
 
-    ONE eager job before the scoring: ``pin_term_rows`` pins the query
+    The rows are the index build's own (``term_rows`` → ``term_tf``),
+    but filtered to the query terms BEFORE the tf aggregation. ONE
+    eager job before the scoring: ``pin_term_rows`` pins the query
     terms' tf rows with their df riding the pin, and the corpus
-    ``(n, sum_dl)`` ride the same job as an Observation at the
-    one-row-per-doc point of ``_doc_tokens`` (exact because
-    ``doc_id`` keys ``documents``). See ``text_bm25_topk`` for the
-    scoring math and the plan/scale argument."""
+    ``(n, sum_dl)`` ride the same job as ``term_rows``' Observation
+    (exact because ``doc_id`` keys ``documents``). See
+    ``text_bm25_topk`` for the scoring math and the plan/scale
+    argument."""
     from agrobr_spark.store.posting import (
         bm25_score,
         corpus_stats,
         pin_term_rows,
     )
 
-    docs = _doc_tokens(spark, sf_dir)
-    per_doc = [
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.size("t")).cast("bigint").alias("sum_dl"),
-    ]
+    docs = load(spark, sf_dir, "documents")
     obs = Observation()
-    toks = _lowered_tokens(docs.observe(obs, *per_doc))
+    toks = term_rows(docs, "doc_id", dl=True, obs=obs)
     rows, df = pin_term_rows(
-        _tf(toks.filter(F.col("termo").isin(*terms))), terms
+        term_tf(toks.filter(F.col("termo").isin(*terms)), "doc_id", "dl"),
+        terms,
     )
-    got = observed(obs) or docs.agg(*per_doc).first().asDict()
+    got = observed(obs) or (
+        docs.filter(F.length(F.trim("text")) > 0)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(n_tokens("text")).alias("sum_dl"),
+        )
+        .first()
+        .asDict()
+    )
     st = corpus_stats(got["n"], got["sum_dl"])
     return bm25_score(
         rows, st["n"], st["avgdl"], df, BM25_K1, BM25_B, peso=peso
@@ -1846,12 +1784,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stronger guarantee question "EVERY token above the support
     bar, exactly" — the Deequ/stream-profiling heavy-hitter contract.
     """
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = d.select(
-        F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
-    ).select(F.lower("t").alias("termo"))
+    toks = term_rows(load(spark, sf_dir, "documents"))
     # pass 1: bounded-state candidates (list of <= ~2/s tokens).
     # freqItems' superset guarantee is STRICT-> ("frequency > support"):
     # a term sitting exactly at ceil(s*N) could be missing at support=s
@@ -1952,11 +1885,9 @@ def text_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap-unambiguous; a start position can satisfy an offset at
     most once, so HAVING count = |phrase| is exact for repeated-token
     phrases too."""
-    from agrobr_spark.store.posting import phrase_vote
+    from agrobr_spark.store.posting import phrase_vote, tokenize_positional
 
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.posexplode(_tokens()).alias("pos", "termo")
-    )
+    toks = tokenize_positional(load(spark, sf_dir, "documents"))
     return phrase_vote(toks, _PHRASE_TERMS)
 
 
@@ -2095,7 +2026,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the cheapest possible shape: every rule folds
     into the same pass over ``text``."""
     d = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens("text")
     linhas = F.split(F.col("text"), "\n")
     g = lambda c: F.greatest(c, F.lit(1)).cast("double")  # noqa: E731
     n_hash = F.length("text") - F.length(F.replace(F.col("text"), F.lit("#")))
@@ -2251,14 +2182,8 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pesos = spark.createDataFrame(
         list(enumerate(CLS_WEIGHTS)), "balde int, peso double"
     )
-    toks = (
-        d.filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
-        )
-        .select("doc_id", F.lower("tok").alias("termo"))
-        .select("doc_id", F.expr(_CLS_B_SPARK).alias("balde"))
+    toks = term_rows(d, "doc_id").select(
+        "doc_id", F.expr(_CLS_B_SPARK).alias("balde")
     )
     pontua = (
         toks.join(F.broadcast(pesos), "balde")
@@ -2348,18 +2273,13 @@ def text_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: positions are exact integers, counts are exact, the
     ordering carries (n_termos, n_hits, inicio) with no floats — the
     oracle pins the exact snippet rows."""
-    docs = _doc_tokens(spark, sf_dir)
-    hits = (
-        docs.select(
-            "doc_id", F.posexplode("t").alias("pos", "tok")
-        )
-        .select(
-            "doc_id",
-            F.col("pos").cast("bigint").alias("pos"),
-            F.lower("tok").alias("termo"),
-        )
-        .filter(F.col("termo").isin(*BM25_QUERY))
-    )
+    from agrobr_spark.store.posting import tokenize_positional
+
+    # the snippet index's own build tokenizer (``_snippet_index_dir``)
+    docs = load(spark, sf_dir, "documents")
+    hits = tokenize_positional(
+        docs.withColumn("text", F.lower("text"))
+    ).filter(F.col("termo").isin(*BM25_QUERY))
     return _best_snippets(hits, docs)
 
 
@@ -2368,8 +2288,8 @@ def _best_snippets(hits: DataFrame, docs: DataFrame) -> DataFrame:
     termo)`` → one candidate window per hit start (a hits x hits
     equi-join on ``doc_id`` with the window range as a post-join
     filter) → the best window per doc (a ``row_number`` over candidate
-    rows only) → its slice of the doc's token array ``t`` from
-    ``docs``."""
+    rows only) → its slice of the token array of the doc's ``text``
+    in ``docs``."""
     h1 = hits.select("doc_id", F.col("pos").alias("inicio"))
     h2 = hits.select(
         F.col("doc_id").alias("d2"),
@@ -2402,8 +2322,11 @@ def _best_snippets(hits: DataFrame, docs: DataFrame) -> DataFrame:
         F.expr(f"slice(t, cast(inicio + 1 as int), {SNIPPET_WINDOW})"),
         " ",
     )
-    return melhor.join(docs, "doc_id").select(
-        "doc_id", "inicio", "n_termos", "n_hits", trecho.alias("trecho")
+    return (
+        melhor.join(docs.select("doc_id", tokens("text").alias("t")), "doc_id")
+        .select(
+            "doc_id", "inicio", "n_termos", "n_hits", trecho.alias("trecho")
+        )
     )
 
 
@@ -2519,7 +2442,7 @@ def text_bm25_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RM3_FB_DOCS)
         .select("doc_id", "pontos")
     )
-    toks = _lowered_tokens(_doc_tokens(spark, sf_dir))
+    toks = term_rows(load(spark, sf_dir, "documents"), "doc_id", dl=True)
     peso = _rm3_pesos(spark, toks.join(F.broadcast(fb), "doc_id"))
     return (
         bm25_scores(spark, sf_dir, tuple(sorted(peso)), peso)
@@ -2660,7 +2583,7 @@ def pipeline_admission_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agrobr_spark.queries.dedup import dedup_survivors
 
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.size(_tokens()).cast("bigint").alias("n_tokens"))
+    toks = d.select("doc_id", n_tokens("text").alias("n_tokens"))
     cont = text_contamination(spark, sf_dir).select(
         "doc_id", F.lit(True).alias("_cont")
     )
@@ -2773,7 +2696,7 @@ def text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     mantidas = F.filter(
         linhas,
         lambda l: F.rtrim(l).rlike(_C4_TERMINAL)
-        & (F.size(F.split(F.trim(l), r"\s+")) >= C4_MIN_WORDS)
+        & (F.size(tokens(l)) >= C4_MIN_WORDS)
         & (F.length(F.trim(l)) > 0)
         & ~F.lower(l).contains("javascript"),
     )
@@ -2795,9 +2718,7 @@ def text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_linhas",
             F.size("mantidas").cast("int").alias("n_linhas_mantidas"),
             F.when(F.size("mantidas") == 0, F.lit(0))
-            .otherwise(
-                F.size(F.split(F.trim(texto_limpo), r"\s+"))
-            )
+            .otherwise(n_tokens(texto_limpo))
             .cast("bigint")
             .alias("n_tokens_limpo"),
             "pagina_ok",
@@ -2872,7 +2793,7 @@ def text_bigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = d.select(
         "doc_id",
-        F.transform(_tokens(), lambda x: F.lower(x)).alias("t"),
+        F.transform(tokens("text"), lambda x: F.lower(x)).alias("t"),
     )
     toks = base.select("doc_id", F.explode("t").alias("termo"))
     c1 = toks.groupBy("termo").agg(F.count(F.lit(1)).alias("c"))
@@ -2974,7 +2895,7 @@ def retrieval_index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length(F.trim("text")) > 0)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs_corpus"),
-            F.sum(F.size(F.split(F.trim("text"), r"\s+")))
+            F.sum(n_tokens("text"))
             .cast("bigint")
             .alias("n_tokens_corpus"),
         )
@@ -3044,7 +2965,7 @@ def text_snippets_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = query_postings(spark, path, tuple(sorted(BM25_QUERY))).select(
         "doc_id", F.col("pos").cast("bigint").alias("pos"), "termo"
     )
-    return _best_snippets(hits, _doc_tokens(spark, sf_dir))
+    return _best_snippets(hits, load(spark, sf_dir, "documents"))
 
 
 from agrobr_spark.queries import _REGISTRY as _PT_REG  # noqa: E402
@@ -3095,8 +3016,9 @@ def text_bm25_rm3_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RM3_FB_DOCS)
         .select("doc_id", "pontos")
     )
-    fb_toks = _lowered_tokens(
-        _doc_tokens(spark, sf_dir).join(F.broadcast(fb), "doc_id"), "pontos"
+    fb_toks = term_rows(
+        load(spark, sf_dir, "documents").join(F.broadcast(fb), "doc_id"),
+        "doc_id", "pontos", dl=True,
     )
     # data-dependent expansion terms: a bounded (<= 3 + 3 row) collect
     # feeding the index reader's term->bucket pruning
@@ -3171,7 +3093,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(
             F.regexp_extract_all("text", F.lit(_BPE_PAT), F.lit(0))
         ).cast("bigint").alias("bpe"),
-        F.size(_tokens()).cast("bigint").alias("palavras"),
+        n_tokens("text").alias("palavras"),
         F.octet_length("text").cast("bigint").alias("n_bytes"),
     )
     return base.groupBy("lang", "source").agg(

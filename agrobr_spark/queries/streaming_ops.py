@@ -13,9 +13,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import read_parquet, write_parquet
+from agrobr_spark.normalize.expressions import n_tokens
 from agrobr_spark.queries import register
 from agrobr_spark.session import run_concurrently
 from agrobr_spark.store.fs import scratch_dir
+from agrobr_spark.store.posting import term_rows
 from agrobr_spark.streaming.windows import (
     drain_or_raise,
     read_events_stream,
@@ -993,10 +995,7 @@ def stream_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "doc_id",
                 "source",
-                F.expr(
-                    "CAST(CASE WHEN length(trim(text)) = 0 THEN 0 "
-                    r"ELSE size(split(trim(text), '\\s+')) END AS BIGINT)"
-                ).alias("n_tokens"),
+                n_tokens("text").alias("n_tokens"),
             )
         )
 
@@ -1213,16 +1212,9 @@ def stream_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
 
     # frozen blend: top-500 corpus vocabulary + totals
-    toks_all = (
-        docs.filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
-        )
-        .select("doc_id", F.lower("tok").alias("termo"))
-    )
     vocab = (
-        toks_all.groupBy("termo")
+        term_rows(docs)
+        .groupBy("termo")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cc"))
         .orderBy(F.desc("cc"), "termo")
         .limit(500)
@@ -1239,11 +1231,7 @@ def stream_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         if head is None:
             return
         counts = (
-            batch.filter(F.length(F.trim("text")) > 0)
-            .select(
-                F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
-            )
-            .select(F.lower("tok").alias("termo"))
+            term_rows(batch)
             .groupBy("termo")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cs"))
             .join(F.broadcast(vocab), "termo")
@@ -1336,10 +1324,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def step(batch: DataFrame, prev: DataFrame) -> DataFrame:
             bc = (
-                batch.select(
-                    F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
-                )
-                .select(F.lower("t").alias("termo"))
+                term_rows(batch)
                 .groupBy("termo")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("bc"))
             )
@@ -1380,9 +1365,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # read-time exact verify: ≤ cap candidates, one counting pass
         cands = [r["termo"] for r in current().collect()]
-        toks = docs.select(
-            F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
-        ).select(F.lower("t").alias("termo"))
+        toks = term_rows(docs)
         tot = toks.groupBy().agg(
             F.count(F.lit(1)).cast("bigint").alias("total")
         )
@@ -1494,16 +1477,11 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents")
 
         # frozen models: (balde, cr, ct) + totals from the corpus side
-        toks = (
-            docs.filter(
-                (F.length(F.trim("text")) > 0) & (F.col("doc_id") < cut)
-            )
-            .select(
-                "doc_id",
-                (F.col("lang") == DSIR_TARGET_LANG).alias("alvo"),
-                F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
-            )
-            .select("doc_id", "alvo", F.lower("tok").alias("termo"))
+        toks = term_rows(
+            docs.filter(F.col("doc_id") < cut).withColumn(
+                "alvo", F.col("lang") == DSIR_TARGET_LANG
+            ),
+            "doc_id", "alvo",
         )
         modelo = (
             toks.groupBy(F.expr(_DSIR_B_SPARK).alias("balde"))
@@ -1532,12 +1510,7 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             db = (
-                batch.filter(F.length(F.trim("text")) > 0)
-                .select(
-                    "doc_id",
-                    F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
-                )
-                .select("doc_id", F.lower("tok").alias("termo"))
+                term_rows(batch, "doc_id")
                 .groupBy("doc_id", F.expr(_DSIR_B_SPARK).alias("balde"))
                 .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
             )
@@ -1786,7 +1759,6 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SHARD_H_ID,
         _SHARD_H_TXT,
         N_SHARDS,
-        N_TOKENS_EXPR,
     )
 
     with scratch_dir(spark, "stream_manifest_st_") as state:
@@ -1801,7 +1773,7 @@ def stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("int")
                     .alias("shard"),
                     "doc_id",
-                    F.expr(N_TOKENS_EXPR).alias("n_tokens"),
+                    n_tokens("text").alias("n_tokens"),
                     F.expr(_SHARD_H_TXT).alias("h_txt"),
                 )
                 .groupBy("shard")

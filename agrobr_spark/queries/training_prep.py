@@ -35,22 +35,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
+from agrobr_spark.normalize.expressions import n_tokens, tokens
 from agrobr_spark.queries import register
 from agrobr_spark.queries.dedup import word_shingles
 
-_TOKS = (
-    "CASE WHEN length(trim(text)) = 0 THEN CAST(array() AS array<string>) "
-    r"ELSE split(trim(text), '\\s+') END"
-)
+# the DuckDB oracles' spelling of normalize/expressions.tokens
 _TOKS_DUCK = (
     "CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[] "
     r"ELSE string_split_regex(trim(text), '\s+') END"
 )
-# THE canonical whitespace token count — every consumer (catalog
-# entries, the end-to-end pipeline in pipelines.py) must build token
-# counts from this one expression so a tokenizer change can never
-# silently de-sync mixture weights from the catalog's
-N_TOKENS_EXPR = f"CAST(size({_TOKS}) AS BIGINT)"
 
 # -- within-doc repetition (Gopher §A1.1: duplicate mass / top n-gram) --
 
@@ -116,7 +109,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts; no skew (doc_id is unique-ish per group).
     """
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TOKS).alias("t")
+        "doc_id", tokens("text").alias("t")
     )
     tok_counts = (
         d.select("doc_id", F.explode("t").alias("tok"))
@@ -361,7 +354,7 @@ def mix_by_token_budget(
     tok = docs.select(
         "doc_id",
         "source",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("k"),
     ).withColumn("balde", F.substring("k", 1, 1))
     total = tok.groupBy().agg(F.sum("n_tokens").cast("long").alias("total"))
@@ -446,7 +439,7 @@ def pipeline_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
     )
     width = tok.groupBy().agg(
         F.expr(
@@ -583,7 +576,7 @@ def pipeline_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "source",
         "lang",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
         F.col("n_chars").cast("long").alias("n_chars"),
     )
     agg = tok.cube("source", "lang").agg(
@@ -718,7 +711,7 @@ def text_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = d.select(
         "doc_id",
         "source",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
     )
     w = Window.partitionBy("source").orderBy(
         F.col("n_tokens").desc(), "doc_id"
@@ -742,7 +735,7 @@ def quality_deciles_approx(d: DataFrame) -> DataFrame:
     q = d.select(
         "doc_id",
         "source",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
     )
     qs = ", ".join(str(x / 10.0) for x in range(9, 0, -1))
     cortes = q.groupBy("source").agg(
@@ -910,7 +903,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = d.select(
         "doc_id",
         "source",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
     )
     wd = Window.partitionBy("source").orderBy(F.col("n_tokens").desc(), "doc_id")
     chave = F.md5(F.concat(F.lit(_SHUFFLE_SEED), F.col("doc_id").cast("string")))
@@ -959,7 +952,7 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation risks at exact powers of two. One partial+final
     aggregation; scan-bound at any scale."""
     d = load(spark, sf_dir, "documents")
-    q = d.select(F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"))
+    q = d.select(n_tokens("text").alias("n_tokens"))
     balde = F.when(F.col("n_tokens") == 0, F.lit(0)).otherwise(
         F.length(F.bin(F.col("n_tokens")))
     ).cast("int")
@@ -1026,7 +1019,7 @@ def pipeline_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n"),
+            n_tokens("text").alias("n"),
         )
         .filter(F.col("n") > 0)
     )
@@ -1122,16 +1115,16 @@ def pipeline_data_mix_temperature(
 
 def temperature_weights(docs: DataFrame) -> dict[str, int]:
     """α = 1/2 weight table for any documents-shaped frame:
-    ``max(1, floor(sqrt(per-source token mass)))`` with the canonical
-    ``N_TOKENS_EXPR`` count — the ONE definition both the catalog
-    entry above and the end-to-end pipeline
+    ``max(1, floor(sqrt(per-source token mass)))`` with the one token
+    count (``normalize/expressions.n_tokens``) — the definition both
+    the catalog entry above and the end-to-end pipeline
     (:func:`agrobr_spark.pipelines.prepare_training_corpus`) use, so
     their weight tables cannot drift apart. Cost: one per-source
     aggregation collapsed to a handful of driver rows."""
     import math
 
     totals = (
-        docs.select("source", F.expr(N_TOKENS_EXPR).alias("n"))
+        docs.select("source", n_tokens("text").alias("n"))
         .groupBy("source")
         .agg(F.sum("n").alias("t"))
         .collect()
@@ -1239,14 +1232,12 @@ def dsir_scores(docs: DataFrame) -> DataFrame:
     (the ``temperature_weights`` single-sourcing pattern, r8 VERDICT
     next #4). Math, determinism, and plan shape as documented on
     ``pipeline_dsir_weights``."""
-    from agrobr_spark.queries.pipeline_text import _tokens
+    from agrobr_spark.store.posting import term_rows
 
-    d = docs.filter(F.length(F.trim("text")) > 0)
-    toks = d.select(
-        "doc_id",
-        (F.col("lang") == DSIR_TARGET_LANG).alias("alvo"),
-        F.explode(_tokens()).alias("tok"),
-    ).select("doc_id", "alvo", F.lower("tok").alias("termo"))
+    toks = term_rows(
+        docs.withColumn("alvo", F.col("lang") == DSIR_TARGET_LANG),
+        "doc_id", "alvo",
+    )
     db = toks.groupBy(
         "doc_id", "alvo", F.expr(_DSIR_B_SPARK).alias("balde")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -1497,15 +1488,15 @@ def pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    toks = F.expr(_TOKS)
+    toks = tokens("text")
     base = d.select(
         "doc_id",
-        F.expr(N_TOKENS_EXPR).alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
         F.round(
             F.size(
                 F.filter(toks, lambda w: F.array_contains(stop_arr, w))
             ).cast("double")
-            / F.greatest(F.expr(N_TOKENS_EXPR), F.lit(1)).cast("double"),
+            / F.greatest(n_tokens("text"), F.lit(1)).cast("double"),
             6,
         ).alias("qualidade"),
     )
@@ -1606,7 +1597,7 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "documents").select(
         F.expr(f"pmod({_SHARD_H_ID}, {N_SHARDS})").cast("int").alias("shard"),
         "doc_id",
-        F.expr(N_TOKENS_EXPR).alias("n_tokens"),
+        n_tokens("text").alias("n_tokens"),
         F.expr(_SHARD_H_TXT).alias("h_txt"),
     )
     return base.groupBy("shard").agg(

@@ -23,35 +23,57 @@ over the full corpus.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
 from agrobr_spark.queries import register
 from agrobr_spark.store.fs import scratch_dir
+from agrobr_spark.store.posting import term_rows, term_tf
 from agrobr_spark.store.table import ParquetStore
 
 N_VOCAB_BUCKETS = 16
 
 
-def _term_df(docs: DataFrame) -> DataFrame:
-    """(termo, balde, df) per-term document frequency of one doc set."""
-    toks = docs.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("t").alias("tok"))
-        .select("doc_id", F.lower("tok").alias("termo"))
+def doc_freq(rows: DataFrame) -> DataFrame:
+    """``(termo, df)``: the number of distinct documents holding each
+    term of ``(doc_id, termo)`` rows — the one per-term document
+    frequency (the DF table, stopword discovery, TF-IDF)."""
+    return (
+        rows.select("doc_id", "termo")
         .distinct()
+        .groupBy("termo")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     )
+
+
+def tfidf_topk(rows: DataFrame, n: Column, k: int) -> DataFrame:
+    """The one TF-IDF scorer: ``(doc_id, termo, tf, df)`` rows →
+    ``(doc_id, termo, tf, df, tfidf, posicao)``, each document's top
+    ``k`` terms. ``tfidf = round(tf · ln((n+1)/(df+1)), 6)`` for the
+    corpus size ``n`` (a column, or an ``F.lit``); the top-k is one
+    ``row_number`` keyed by ``doc_id``, ties broken on the term."""
+    pontuado = rows.select(
+        "doc_id",
+        "termo",
+        F.col("tf").cast("bigint").alias("tf"),
+        F.col("df").cast("bigint").alias("df"),
+        F.round(
+            F.col("tf") * F.log((n + 1.0) / (F.col("df") + 1.0)), 6
+        ).alias("tfidf"),
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "termo")
+    return pontuado.withColumn(
+        "posicao", F.row_number().over(w).cast("int")
+    ).filter(F.col("posicao") <= int(k))
+
+
+def _term_df(docs: DataFrame) -> DataFrame:
+    """(termo, df, balde) per-term document frequency of one doc set."""
     balde = (
         F.conv(F.substring(F.md5(F.col("termo")), 1, 15), 16, 10)
         .cast("bigint") % N_VOCAB_BUCKETS
     ).cast("int")
-    return (
-        tf.groupBy("termo")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        .withColumn("balde", balde)
-    )
+    return doc_freq(term_rows(docs, "doc_id")).withColumn("balde", balde)
 
 
 def _df_store(spark: SparkSession, store_dir: str) -> ParquetStore:
@@ -151,35 +173,12 @@ def tfidf_from_index(
     ``n_corpus`` is the indexed document count (tracked by the caller's
     admission metadata). Unseen terms get df=0 — maximal IDF, which is
     what a novelty-sensitive scorer wants."""
-    toks = batch_docs.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("t").alias("tok"))
-        .groupBy("doc_id", F.lower("tok").alias("termo"))
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = term_tf(term_rows(batch_docs, "doc_id"), "doc_id")
     idx = _df_store(spark, store_dir).read().select("termo", "df")
-    pontuado = tf.join(idx, "termo", "left").select(
-        "doc_id",
-        "termo",
-        F.col("tf").cast("bigint").alias("tf"),
-        F.coalesce("df", F.lit(0)).cast("bigint").alias("df"),
-        F.round(
-            F.col("tf")
-            * F.log(
-                (F.lit(float(n_corpus)) + 1.0)
-                / (F.coalesce("df", F.lit(0)) + 1.0)
-            ),
-            6,
-        ).alias("tfidf"),
+    rows = tf.join(idx, "termo", "left").withColumn(
+        "df", F.coalesce("df", F.lit(0))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "termo")
-    return pontuado.withColumn(
-        "posicao", F.row_number().over(w).cast("int")
-    ).filter(F.col("posicao") <= int(top_k))
+    return tfidf_topk(rows, F.lit(float(n_corpus)), top_k)
 
 
 @register(
@@ -271,22 +270,18 @@ def text_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-driven replacement for a hand-curated stopword list (quality
     scoring and TF-IDF both consume it; in TF-IDF the same terms are
     already demoted arithmetically, this entry makes the list itself
-    inspectable). One DF aggregation (the same shape vocab.py
-    persists) against a lazy 1-row corpus count — scan-bound, and at
-    100 TB the DF side reads the maintained index instead of
-    recomputing (build_df_index/update_df_index)."""
+    inspectable). One DF aggregation (``doc_freq``, the helper the
+    persisted DF table is built with) against a lazy 1-row corpus
+    count — scan-bound, and at 100 TB the DF side reads the
+    maintained index instead of recomputing
+    (build_df_index/update_df_index)."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
+    n_docs = (
+        docs.filter(F.length(F.trim("text")) > 0)
+        .groupBy()
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    n_docs = toks.groupBy().agg(F.count(F.lit(1)).alias("n"))
-    dfx = (
-        toks.select("doc_id", F.explode("t").alias("tok"))
-        .select("doc_id", F.lower("tok").alias("termo"))
-        .distinct()
-        .groupBy("termo")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    dfx = doc_freq(term_rows(docs, "doc_id"))
     return (
         dfx.crossJoin(F.broadcast(n_docs))
         .filter(
@@ -294,7 +289,7 @@ def text_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "termo",
-            F.col("df").cast("bigint").alias("df"),
+            "df",
             F.round(F.col("df").cast("double") / F.col("n"), 6).alias(
                 "frac_docs"
             ),

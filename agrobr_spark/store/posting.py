@@ -16,9 +16,12 @@ cost independent of history size). Layout at ``path``:
   ``termo IN (...)`` into the pruned scan. Query cost is O(posting
   rows of the query's terms), flat in corpus size — the
   inverted-index property.
-- ``manifest.json`` — ``n_buckets`` + tokenizer version, read back at
-  query time so probe-side bucketing always matches the build, and
-  the posting rows' ``postings_schema``. It also carries the index's
+- ``manifest.json`` — ``n_buckets``, read back at query time so
+  probe-side bucketing always matches the build;
+  ``tokenizer_version``, which every read and update checks against
+  ``TOKENIZER_VERSION`` (an index tokenized otherwise must be
+  rebuilt); and the posting rows' ``postings_schema``. It also
+  carries the index's
   COMMIT STATE: ``postings_dir`` (the current base generation),
   ``active_batches`` (streamed batches not yet compacted into the
   base), and ``applied_batch_ids`` (the exactly-once replay guard,
@@ -59,12 +62,14 @@ cluster the same frame can instead go through
 but disk partitioning keeps the index a plain portable parquet
 directory here.
 
-``bm25_score`` is the one BM25 scorer and ``phrase_vote`` the one
-phrase matcher. The scan twins in ``queries/pipeline_text.py`` feed
-them rows tokenized from ``documents``; the indexed twins feed them
-``query_postings`` rows. Both BM25 twins pin their query-term rows
-once (:func:`pin_term_rows`, df riding the pin job) and score off
-the pin with the corpus statistics as driver scalars. Each pair
+``term_rows`` is the one lowered term-row explode (over the one
+tokenizer, ``normalize/expressions.tokens``), ``bm25_score`` the one
+BM25 scorer and ``phrase_vote`` the one phrase matcher. The index
+builds and the scan twins in ``queries/pipeline_text.py`` tokenize
+``documents`` through the same helpers; the indexed twins feed the
+scorers ``query_postings`` rows. Both BM25 twins pin their
+query-term rows once (:func:`pin_term_rows`, df riding the pin job)
+and score off the pin with the corpus statistics as driver scalars. Each pair
 shares one DuckDB oracle string, so indexed ≡ scan is the same code
 over a different row source, and oracle-checked.
 """
@@ -76,47 +81,67 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from agrobr_spark.io import observed, pin, read_parquet, write_parquet
+from agrobr_spark.normalize.expressions import TOKENIZER_VERSION, tokens
 
-TOKENIZER_VERSION = 1
 DEFAULT_BUCKETS = 64
+
+
+def term_rows(docs: DataFrame, *keep: str, text_col: str = "text",
+              dl: bool = False,
+              obs: Observation | None = None) -> DataFrame:
+    """THE lowered term-row explode: ``(*keep, [dl,] termo)``, one
+    lower-cased row per :func:`~agrobr_spark.normalize.expressions.tokens`
+    entry of each non-blank document, ``dl`` (with ``dl=True``) its
+    document's token count. Every per-token term stream in the package
+    (posting rows, the BM25 scan twin, DF tables, TF-IDF, the
+    heavy-hitter, DSIR and divergence streams) starts here.
+
+    ``obs``: an Observation attached at the ONE-ROW-PER-DOC point of
+    the plan (after the blank-text filter, before the explode),
+    collecting ``n`` (document count) and ``sum_dl`` (summed token
+    counts), so the corpus statistics ride whatever job consumes the
+    rows instead of a second pass. Exact when the rows of ``docs``
+    are one per document."""
+    pre = docs.filter(F.length(F.trim(text_col)) > 0).select(
+        *keep, tokens(text_col).alias("_t")
+    )
+    if obs is not None:
+        pre = pre.observe(
+            obs,
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.size("_t")).cast("bigint").alias("sum_dl"),
+        )
+    return pre.select(
+        *keep, F.size("_t").alias("dl"), F.explode("_t").alias("_tok")
+    ).select(*keep, *(["dl"] if dl else []), F.lower("_tok").alias("termo"))
+
+
+def term_tf(rows: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, termo, tf)``: the term frequency of each distinct
+    ``(*keys, termo)`` of :func:`term_rows` rows."""
+    return rows.groupBy(*keys, "termo").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
+    )
 
 
 def tokenize_postings(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       stats_obs: Observation | None = None) -> DataFrame:
     """Whitespace-lowered posting rows ``(doc_id, dl, termo, tf)`` —
-    the BM25 index's tokenizer. The scan path (``bm25_scores``) splits
-    with the same token semantics (indexed ≡ scan needs them to agree
-    byte-for-byte) but keeps its own split: it filters to the query
-    terms BEFORE the tf aggregation, where this function aggregates
-    every term. A prototype that routed the scan through here kept the
-    oracle green and raised ``text_bm25_rm3`` from 21 to 24 warm Spark
-    jobs (sf0.01, local[3]).
+    the BM25 index's tokenizer: :func:`term_rows` aggregated by
+    :func:`term_tf` over every term. The scan path
+    (``queries/pipeline_text.bm25_scores``) shares both helpers, so
+    indexed ≡ scan holds byte for byte, but filters its term rows to
+    the query terms BEFORE the tf aggregation. A prototype that routed
+    the scan through this full aggregate kept the oracle green and
+    raised ``text_bm25_rm3`` from 21 to 24 warm Spark jobs (sf0.01,
+    local[3]).
 
-    ``stats_obs``: an Observation attached at the ONE-ROW-PER-DOC
-    point of the plan (after the empty-text filter, before the
-    explode), collecting ``n`` (doc count) and ``sum_dl`` (summed
-    token counts) — exactly the corpus stats the manifest carries,
-    riding the postings write job itself instead of a second pass
-    (r14; the r13 version re-read the written postings and paid a
-    distinct-doc aggregate per build/epoch). Distinct-free by
-    construction: rows at the observe point are one per doc."""
-    pre = (
-        docs.filter(F.length(F.trim(text_col)) > 0)
-        .select(id_col, F.split(F.trim(text_col), r"\s+").alias("_t"))
-        .select(id_col, F.size("_t").alias("dl"), F.col("_t"))
-    )
-    if stats_obs is not None:
-        pre = pre.observe(
-            stats_obs,
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-        )
-    toks = pre.select(
-        id_col, "dl", F.explode("_t").alias("_tok")
-    ).select(id_col, "dl", F.lower("_tok").alias("termo"))
-    return toks.groupBy(id_col, "dl", "termo").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
+    ``stats_obs``: :func:`term_rows`' ``obs`` — the manifest's corpus
+    stats ride the postings write job itself."""
+    return term_tf(
+        term_rows(docs, id_col, text_col=text_col, dl=True, obs=stats_obs),
+        id_col, "dl",
     )
 
 
@@ -229,6 +254,7 @@ def _update_index(docs_new: DataFrame, path: str, id_col: str,
     spark = docs_new.sparkSession
 
     def stage(man: dict) -> tuple[int, dict | None] | None:
+        _require_tokenizer(path, man)
         bid = (int(batch_id) if batch_id is not None
                else _next_local_batch(man))
         bdir = _batch_dir(path, bid)
@@ -393,7 +419,23 @@ def read_manifest(path: str) -> dict:
         raise FileNotFoundError(
             f"posting-index manifest missing under {path!r}"
         )
+    _require_tokenizer(path, man)
     return _normalize_manifest(man)
+
+
+def _require_tokenizer(path: str, man: dict) -> None:
+    """Postings are only comparable with query terms tokenized the same
+    way: an index whose manifest lacks ``tokenizer_version`` or records
+    another one than :data:`TOKENIZER_VERSION` raises ``ValueError``
+    naming ``path``: rebuild it."""
+    got = man.get("tokenizer_version")
+    if got != TOKENIZER_VERSION:
+        raise ValueError(
+            f"posting index at {path!r} records tokenizer_version {got!r}, "
+            f"not {TOKENIZER_VERSION}: its terms came from another "
+            "tokenizer — rebuild it with build_posting_index or "
+            "build_positional_index"
+        )
 
 
 def _postings_frame(
@@ -753,12 +795,13 @@ def bm25_topk_indexed(
 def tokenize_positional(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         count_obs: Observation | None = None) -> DataFrame:
-    """Positional posting rows ``(doc_id, pos, termo)`` — the raw
-    whitespace tokenizer of the phrase scan path
-    (``queries/pipeline_text.text_phrase_match``) with 0-based token
-    offsets kept, so indexed ≡ scan holds byte-for-byte. Unlike the
-    BM25 rows there is no per-(doc, term) aggregation: order IS the
-    payload.
+    """Positional posting rows ``(doc_id, pos, termo)``: the raw
+    :func:`~agrobr_spark.normalize.expressions.tokens` of each
+    non-blank document with 0-based token offsets kept. The phrase and
+    snippet scan twins (``queries/pipeline_text.text_phrase_match``,
+    ``text_snippets``) read their rows from here too, so indexed ≡
+    scan holds byte-for-byte. Unlike the BM25 rows there is no
+    per-(doc, term) aggregation: order IS the payload.
 
     ``count_obs``: an Observation at the one-row-per-doc point (after
     the empty-text filter, before the posexplode) collecting ``n`` —
@@ -770,12 +813,7 @@ def tokenize_positional(docs: DataFrame, id_col: str = "doc_id",
             count_obs, F.count(F.lit(1)).cast("bigint").alias("n")
         )
     return (
-        pre.select(
-            id_col,
-            F.posexplode(F.split(F.trim(text_col), r"\s+")).alias(
-                "pos", "termo"
-            ),
-        )
+        pre.select(id_col, F.posexplode(tokens(text_col)).alias("pos", "termo"))
         .select(id_col, F.col("pos").cast("bigint").alias("pos"), "termo")
     )
 

@@ -20,6 +20,9 @@ WARM_JOBS = {
     "text_bm25_topk": 4,
     "text_bm25_rm3_indexed": 10,
     "retrieval_index_freshness": 2,
+    "text_tfidf_topk": 8,
+    "pipeline_tfidf_incremental": 10,
+    "text_quality_score": 1,
 }
 
 

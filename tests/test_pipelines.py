@@ -42,9 +42,9 @@ def test_mix_budget_derived_from_gated_corpus(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from agrobr_spark.io import load
+    from agrobr_spark.normalize.expressions import n_tokens
     from agrobr_spark.queries.pipeline_text import pipeline_keep_set
     from agrobr_spark.queries.training_prep import (
-        _TOKS,
         MIX_FRACTION_DEN,
         MIX_WEIGHTS,
         text_repetition_filter,
@@ -60,7 +60,7 @@ def test_mix_budget_derived_from_gated_corpus(spark, tmp_path):
     gated_total = (
         load(spark, SF_SMOKE, "documents")
         .join(gated, "doc_id")
-        .select(F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n"))
+        .select(n_tokens("text").alias("n"))
         .groupBy()
         .agg(F.sum("n").alias("t"))
         .collect()[0]["t"]
@@ -119,9 +119,9 @@ def test_prepare_corpus_temperature_mix_flattens(spark, tmp_path):
     # budgets proportional to sqrt weights: check ratio consistency
     # against independently recomputed gated totals
     from agrobr_spark.io import load
+    from agrobr_spark.normalize.expressions import n_tokens
     from agrobr_spark.queries.pipeline_text import pipeline_keep_set
     from agrobr_spark.queries.training_prep import (
-        _TOKS,
         MIX_FRACTION_DEN,
         text_repetition_filter,
         text_span_dedup,
@@ -133,7 +133,7 @@ def test_prepare_corpus_temperature_mix_flattens(spark, tmp_path):
     gated = (
         load(spark, SF_SMOKE, "documents")
         .join(kept.join(rep, "doc_id").join(span, "doc_id"), "doc_id")
-        .select("source", F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n"))
+        .select("source", n_tokens("text").alias("n"))
         .groupBy("source")
         .agg(F.sum("n").alias("t"))
         .collect()
@@ -319,11 +319,11 @@ def test_prepare_corpus_dsir_mix(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from agrobr_spark.io import load
+    from agrobr_spark.normalize.expressions import n_tokens
     from agrobr_spark.pipelines import DSIR_KEEP_FRAC
     from agrobr_spark.queries.pipeline_text import pipeline_keep_set
     from agrobr_spark.queries.training_prep import (
         MIX_FRACTION_DEN,
-        N_TOKENS_EXPR,
         dsir_scores,
         text_repetition_filter,
         text_span_dedup,
@@ -361,7 +361,7 @@ def test_prepare_corpus_dsir_mix(spark, tmp_path):
     )
     totals = {
         r["source"]: int(r["t"])
-        for r in pool.select("source", F.expr(N_TOKENS_EXPR).alias("n"))
+        for r in pool.select("source", n_tokens("text").alias("n"))
         .groupBy("source")
         .agg(F.sum("n").alias("t"))
         .collect()

@@ -1007,6 +1007,52 @@ def test_posting_index_zero_document_base(spark, tmp_path):
     assert answer(path) == answer(full)
 
 
+def test_posting_index_rejects_another_tokenizer_version(spark, tmp_path):
+    """Postings tokenized by another tokenizer (manifest
+    ``tokenizer_version`` 0, or none recorded) cannot answer queries
+    tokenized by this one: reading the manifest, querying and
+    updating all raise, naming the path and asking for a rebuild."""
+    import json
+    import os
+    import re
+
+    from agrobr_spark.store.posting import (
+        bm25_topk_indexed,
+        build_posting_index,
+        read_manifest,
+        update_posting_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta")], "doc_id bigint, text string"
+    )
+    path = str(tmp_path / "idx")
+    build_posting_index(docs, path, n_buckets=4)
+    manifest = os.path.join(path, "manifest.json")
+    with open(manifest, encoding="utf-8") as fh:
+        man = json.load(fh)
+    assert read_manifest(path)["tokenizer_version"] == 1
+    stale = re.escape(path) + ".*tokenizer_version.*rebuild"
+    for rewrite in (lambda m: m.update(tokenizer_version=0),
+                    lambda m: m.pop("tokenizer_version")):
+        rewrite(man)
+        with open(manifest, "w", encoding="utf-8") as fh:
+            json.dump(man, fh)
+        for op in (
+            lambda: read_manifest(path),
+            lambda: bm25_topk_indexed(spark, path, ("alpha",), 10, 1.2, 0.75),
+            lambda: update_posting_index(
+                spark.createDataFrame(
+                    [(2, "gamma")], "doc_id bigint, text string"
+                ),
+                path,
+            ),
+        ):
+            with pytest.raises(ValueError, match=stale):
+                op()
+    assert not os.path.exists(os.path.join(path, "batches"))
+
+
 def test_read_stats_rejects_a_manifest_without_stats(spark, tmp_path):
     """A manifest of the previous layout (stats in a ``stats/``
     parquet sidecar, no ``n``/``sum_dl``) and a positional index's

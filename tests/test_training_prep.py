@@ -503,7 +503,7 @@ def test_temperature_mix_flattens_the_distribution(spark):
     import pyspark.sql.functions as F2
 
     from agrobr_spark.io import load
-    from agrobr_spark.queries.training_prep import _TOKS
+    from agrobr_spark.normalize.expressions import n_tokens
 
     out = _CAT["pipeline_data_mix_temperature"].fn(spark, SF_ORACLE)
     budgets = {
@@ -513,7 +513,7 @@ def test_temperature_mix_flattens_the_distribution(spark):
     totals = {
         r["source"]: r["t"]
         for r in load(spark, SF_ORACLE, "documents")
-        .select("source", F2.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n"))
+        .select("source", n_tokens("text").alias("n"))
         .groupBy("source")
         .agg(F2.sum("n").alias("t"))
         .collect()
