@@ -38,16 +38,22 @@ def norm_key(c: Column) -> Column:
 #: Version of :func:`tokens`' semantics. Every persisted posting index
 #: records it in its manifest and a reader rejects any other value, so
 #: a tokenizer change forces a rebuild instead of mixing token sets.
-TOKENIZER_VERSION = 1
+TOKENIZER_VERSION = 2
+
+#: The tokenizer's whitespace (not NBSP), spelled out: ``\s`` and bare
+#: ``trim`` differ between Spark/Java and DuckDB/RE2.
+WS_CHARS = " \t\n\x0b\x0c\r"
+WS_RUN = r"[ \t\n\x0B\f\r]+"
 
 
 def tokens(c: Column | str) -> Column:
-    """THE whitespace tokenizer: ``trim`` then split on ``\\s+``; blank
-    text gives ``[]`` (a bare split would give ``['']``). Every token
-    array, token count and term row in the package is built from it."""
-    t = F.trim(c)
+    """THE whitespace tokenizer: trim :data:`WS_CHARS` then split on
+    runs of them; blank text gives ``[]`` (a bare split would give
+    ``['']``). Every token array, token count and term row in the
+    package is built from it."""
+    t = F.trim(c, F.lit(WS_CHARS))
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
+        F.split(t, WS_RUN)
     )
 
 

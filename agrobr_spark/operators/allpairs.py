@@ -26,7 +26,11 @@ shrinks O(1/B²), so B tunes the memory/shuffle trade directly.
 
 This is the exactness baseline; the sublinear path for ``top-k`` style
 retrieval is IVF/LSH bucketing (``queries/similarity.py``), which
-trades recall for pruning. Reference behavior: near-dup detection over
+trades recall for pruning. The cluster-blocked operators pair rows
+only inside a cluster and need no join: ``_pairs_in_blocks`` hashes
+the assignment ONCE on the cluster key (an over-cap cluster's
+sub-blocks on the triangle keys above) and enumerates each group's
+pairs in place. Reference behavior: near-dup detection over
 document embeddings (the reference engine has no embedding operators;
 this is part of the LLM-pipeline extension surface).
 """
@@ -36,8 +40,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from agrobr_spark.io import pin
-
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
     " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -46,6 +48,13 @@ _DOT = (
 
 def _dot(a: str, b: str) -> Column:
     return F.expr(_DOT.format(a=a, b=b))
+
+
+def _cosine(va: str, vb: str, na: str, nb: str, round_to: int | None) -> Column:
+    """Cosine of two vector columns from their norms, rounded to
+    ``round_to``; null when either norm is zero."""
+    cos = _dot(va, vb) / F.nullif(F.col(na) * F.col(nb), F.lit(0.0))
+    return cos if round_to is None else F.round(cos, round_to)
 
 
 def block_cosine_pairs(
@@ -94,9 +103,7 @@ def block_cosine_pairs(
     pares = pares.filter(
         (F.col("ki") != F.col("kj")) | (F.col("ida") < F.col("idb"))
     )
-    cos = _dot("va", "vb") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
+    cos = _cosine("va", "vb", "na", "nb", round_to)
     swap = F.col("ida") > F.col("idb")
     out_cols = [
         F.when(swap, F.col("idb")).otherwise(F.col("ida")).alias("id_a"),
@@ -176,9 +183,11 @@ def fit_centroids_kmeans(
         cn = np.linalg.norm(C, axis=1)
         cn[cn == 0] = 1.0
         C = C / cn[:, None]
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(int(j), [float(x) for x in C[j]]) for j in range(k)],
+    import pandas as pd
+
+    # from pandas, not a list: a LocalRelation (see query_postings)
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame({"_cid": range(k), "_cv": [list(map(float, c)) for c in C]}),
         "_cid long, _cv array<double>",
     )
 
@@ -210,26 +219,16 @@ def cluster_cosine_pairs(
     max_cluster_rows: int = 8192,
     centroid_fit: str = "kmeans",
     n_probe: int = 1,
-    materialize: bool = True,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via IVF-style cluster blocking — the 100 TB
     default (VERDICT r2 'What's wrong' #3: exact O(n²) must not be the
     default entry point).
 
-    ``materialize`` (default on) pins the scored assignment with an
-    eager ``localCheckpoint`` before the pair stage: the assignment —
-    O(n·C) scored dots, the same ~n^1.5 element-work order as the pair
-    join itself — feeds both sides of the self-join (and the sub-block
-    size aggregate), and without the pin each consumer re-executes it
-    from the scan. The pin's row count rides it as an ``Observation``;
-    when it is at most ``max_cluster_rows`` no cluster can exceed the
-    cap and the size aggregate is skipped. Pass ``materialize=False``
-    to keep the operator fully lazy (plan-shape tests; callers that
-    persist the assignment themselves).
-
     Every vector is assigned to its nearest centroid, then exact
-    cosine runs ONLY within each cluster as a self equi-join on
-    ``centroid_id``. ``centroid_fit`` picks the centroid source:
+    cosine runs ONLY within each cluster (``_pairs_in_blocks``: no
+    pin, one hash exchange). ``centroid_fit`` picks the centroid
+    source:
 
     - ``"kmeans"`` (library default): a real sampled spherical k-means
       fit (``fit_centroids_kmeans``) — representative blocking even
@@ -243,17 +242,19 @@ def cluster_cosine_pairs(
 
     Assignment cosine is rounded to ``round_to`` with a centroid-id
     tie-break, so bucketing is deterministic either way. Work drops
-    from n²/2 to
-    Σ|cluster|²/2; shuffle is O(n) on the cluster key — no stage ever
-    sees the full pair space. Pairs straddling cluster boundaries are
-    missed: that is the documented ANN recall trade; use
-    ``block_cosine_pairs`` when exactness is required.
+    from n²/2 to Σ|cluster|²/2; shuffle is O(n) on the cluster key —
+    no stage ever sees the full pair space. Pairs straddling cluster
+    boundaries are missed: that is the documented ANN recall trade;
+    use ``block_cosine_pairs`` when exactness is required.
 
-    With ``n_centroids=None`` the count is sized ~n_probe·sqrt(n) (one
-    extra count job), giving ~n^1.5 total comparisons for any
-    ``n_probe``; at 100 TB feed real k-means centroids and write the
-    assigned table bucketed by ``centroid_id`` so repeated dedup runs
-    skip the pair join's cluster-key shuffle.
+    ``n_rows`` is the input's row count when the caller has it (the
+    count that sizes ``n_centroids``): at or under
+    ``max_cluster_rows`` no cluster can exceed the cap and the
+    sub-block size aggregate is skipped. With ``n_centroids=None`` the
+    operator counts the input itself (one job) and sizes the
+    centroids ~n_probe·sqrt(n), giving ~n^1.5 total comparisons for
+    any ``n_probe``; with neither, the size aggregate runs. A wrong
+    ``n_rows`` changes only the skew protection, never the result.
 
     ``n_probe > 1`` assigns each vector to its ``n_probe`` nearest
     centroids (IVF multiprobe): a true pair is recovered when it
@@ -265,20 +266,13 @@ def cluster_cosine_pairs(
     probe lists), so every pair comes out once with no DISTINCT.
 
     Skew cap (VERDICT r3 #3): one pathological centroid attracting most
-    vectors would re-create the n² blowup as a single straggler task.
-    Clusters larger than ``max_cluster_rows`` are hashed into
-    ``ceil(2·|cluster| / cap)`` sub-blocks (``xxhash64(_id) mod nb``)
-    joined as triangle blocks keyed by ``(cluster, ki, kj)`` — same
-    scheme as ``block_cosine_pairs``: every within-cluster pair still
-    meets exactly once, so the RESULT SET IS UNCHANGED. ``cap`` is an
-    expected-load target, strict only with high probability: hashed
-    dispersion with 2× headroom keeps each sub-block at ~cap/2 rows in
-    expectation (and ≤cap w.h.p.) without the per-cluster sort a strict
-    bound would cost (see ``_with_subblocks``). The giant cluster
-    spreads over B(B+1)/2 keys; cluster sizes come from one tiny
-    broadcast aggregate on the assignment, paid only when the pinned
-    assignment has more rows than the cap.
-    """
+    vectors would re-create the n² blowup as a single straggler group.
+    Clusters larger than ``max_cluster_rows`` are hashed into B =
+    ``ceil(2·|cluster| / cap)`` sub-blocks (``_with_subblocks``) whose
+    rows are replicated to the B(B+1)/2 triangle keys of the cluster:
+    every within-cluster pair still meets exactly once, so the RESULT
+    SET IS UNCHANGED. ``cap`` is an expected-load target, strict only
+    with high probability."""
     if n_centroids is None:
         # auto-sizing scales with n_probe so multiprobe is work-neutral:
         # memberships = p·n over p·sqrt(n) clusters keeps avg cluster
@@ -286,7 +280,8 @@ def cluster_cosine_pairs(
         # extra probes recover boundary-straddling pairs (measured on a
         # 600-vector manifold corpus, kmeans fit: p=1/C=sqrt(n) recall
         # 0.80; p=2/C=2·sqrt(n) recall 1.00 at equal wall clock)
-        n_centroids = max(4, int(int(n_probe) * df.count() ** 0.5))
+        n_rows = df.count() if n_rows is None else n_rows
+        n_centroids = max(4, int(int(n_probe) * n_rows**0.5))
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
@@ -294,62 +289,30 @@ def cluster_cosine_pairs(
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
     cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
     assigned = assign_to_centroids(base, cent, round_to, n_probe)
-    assigned, seen = (
-        pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
-    )
-    assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
     probes = ("_probes",) if int(n_probe) > 1 else ()
-    left = assigned.select(
-        F.col("_id").alias("ida"),
-        F.col("_vec").alias("va"),
-        F.col("_norm").alias("na"),
-        *[F.col(f"_x_{c}").alias(f"_a_{c}") for c in extra_cols],
-        *[F.col(c).alias("pa") for c in probes],
-        "_blk",
-        F.col("_sb").alias("ki"),
-        F.explode(F.sequence(F.col("_sb"), F.col("_nb") - 1)).alias("kj"),
-    )
-    right = assigned.select(
-        F.col("_id").alias("idb"),
-        F.col("_vec").alias("vb"),
-        F.col("_norm").alias("nb"),
-        *[F.col(f"_x_{c}").alias(f"_b_{c}") for c in extra_cols],
-        *[F.col(c).alias("pb") for c in probes],
-        "_blk",
-        F.explode(F.sequence(F.lit(0), F.col("_sb"))).alias("ki"),
-        F.col("_sb").alias("kj"),
-    )
-    pares = (
-        left.join(right, ["_blk", "ki", "kj"])
-        .filter(F.col("ida") != F.col("idb"))
-        # same-sub-block pairs meet in both orders; cross-sub-block pairs
-        # meet once with arbitrary side assignment — canonicalize
-        .filter((F.col("ki") != F.col("kj")) | (F.col("ida") < F.col("idb")))
-    )
+    carry = (*[f"_x_{c}" for c in extra_cols], *probes)
+    pares = _pairs_in_blocks(assigned, carry, max_cluster_rows, n_rows, round_to)
     if probes:
         # a pair sharing several probed clusters meets in each of them;
         # only its lowest shared cluster scores it
         pares = pares.filter(
-            F.col("_blk") == F.array_min(F.array_intersect("pa", "pb"))
+            F.col("_blk")
+            == F.array_min(F.array_intersect("a._probes", "b._probes"))
         )
-    cos = _dot("va", "vb") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    swap = F.col("ida") > F.col("idb")
-    out_cols = [
-        F.when(swap, F.col("idb")).otherwise(F.col("ida")).alias("id_a"),
-        F.when(swap, F.col("ida")).otherwise(F.col("idb")).alias("id_b"),
-    ]
-    for c in extra_cols:
-        out_cols.append(
-            F.when(swap, F.col(f"_b_{c}")).otherwise(F.col(f"_a_{c}")).alias(f"{c}_a")
-        )
-    for c in extra_cols:
-        out_cols.append(
-            F.when(swap, F.col(f"_a_{c}")).otherwise(F.col(f"_b_{c}")).alias(f"{c}_b")
-        )
-    out_cols.append(cos.alias("cosseno"))
-    return pares.select(*out_cols).filter(F.col("cosseno") >= threshold)
+    # a group's pairs come out in arbitrary side order: canonicalize
+    swap = F.col("a._id") > F.col("b._id")
+
+    def side(c, first):
+        lo, hi = F.col(f"a.{c}"), F.col(f"b.{c}")
+        return F.when(swap, hi if first else lo).otherwise(lo if first else hi)
+
+    return pares.select(
+        side("_id", True).alias("id_a"),
+        side("_id", False).alias("id_b"),
+        *[side(f"_x_{c}", True).alias(f"{c}_a") for c in extra_cols],
+        *[side(f"_x_{c}", False).alias(f"{c}_b") for c in extra_cols],
+        F.col("_cos").alias("cosseno"),
+    ).filter(F.col("cosseno") >= threshold)
 
 
 def assign_to_centroids(
@@ -433,9 +396,10 @@ def _with_subblocks(
 ) -> DataFrame:
     """Attach ``_nb`` (sub-block count) and ``_sb`` (this row's
     sub-block) to a ``_blk``-assigned frame. Clusters at or under the
-    cap get ``_nb = 1`` — the plan is then byte-identical in behavior
-    to the uncapped join. A known total ``n_rows`` at or under the cap
-    bounds every cluster, so the size aggregate is skipped.
+    cap get ``_nb = 1``: one group, as with no cap. A known input row
+    count ``n_rows`` at or under the cap bounds every cluster (a row
+    lands in a cluster at most once), so the size aggregate is
+    skipped.
 
     Over-cap clusters hash rows into ``ceil(2·|cluster| / cap)``
     sub-blocks via ``xxhash64(_id)``: expected load cap/2 per
@@ -445,8 +409,8 @@ def _with_subblocks(
     per-cluster ``row_number`` window — i.e. sorting the whole giant
     cluster in one task, the very straggler this cap exists to kill —
     so hashed dispersion with 2× headroom is the scale-correct trade.
-    The sub-block split never changes the RESULT, only which join key
-    a pair meets on."""
+    The sub-block split never changes the RESULT, only which group a
+    pair meets in."""
     cap = max(1, int(max_cluster_rows))
     if n_rows is not None and n_rows <= cap:
         return assigned.withColumn("_nb", F.lit(1)).withColumn("_sb", F.lit(0))
@@ -464,6 +428,58 @@ def _with_subblocks(
     )
 
 
+def _pairs_in_blocks(
+    assigned: DataFrame,
+    carry: tuple[str, ...],
+    max_cluster_rows: int,
+    n_rows: int | None,
+    round_to: int | None,
+) -> DataFrame:
+    """Every unordered pair of distinct-id rows of a ``_blk``-assigned
+    frame that share a ``_blk``, as ``(_blk, a, b, _cos)``: ``a`` and
+    ``b`` are structs of ``_id``, ``_vec``, ``_norm`` and ``carry`` in
+    arbitrary side order, ``_cos`` their cosine. The pair stage of
+    ``cluster_cosine_pairs`` and ``semdedup_flags``.
+
+    ONE hash exchange of the unpinned assignment on the block key. A
+    row of sub-block ``s`` of ``_nb`` (``_with_subblocks``) goes out to
+    the triangle keys ``(least(s, k), greatest(s, k))``, k < ``_nb``;
+    each ``(_blk, ki, kj)`` group collects its ``ki`` rows (``_lo``)
+    and, off the diagonal, its ``kj`` rows (``_hi``). A diagonal group
+    pairs each row with the later ones (``posexplode`` + ``slice``), a
+    cross group each ``_lo`` row with every ``_hi`` row: every pair
+    meets once, nothing is enumerated and discarded, and no group
+    holds more than two sub-blocks."""
+    sub = _with_subblocks(assigned, max_cluster_rows, n_rows)
+    keyed = sub.select(
+        "_blk",
+        "_sb",
+        F.struct("_id", "_vec", "_norm", *carry).alias("_row"),
+        F.explode(F.sequence(F.lit(0), F.col("_nb") - 1)).alias("_k"),
+    )
+    lo = F.col("_sb") <= F.col("_k")
+    groups = keyed.groupBy(
+        "_blk",
+        F.least("_sb", "_k").alias("_ki"),
+        F.greatest("_sb", "_k").alias("_kj"),
+    ).agg(
+        F.collect_list(F.when(lo, F.col("_row"))).alias("_lo"),
+        F.collect_list(F.when(~lo, F.col("_row"))).alias("_hi"),
+    )
+    partners = F.when(
+        F.col("_ki") == F.col("_kj"),
+        F.slice("_lo", F.col("_p") + 2, F.size("_lo")),
+    ).otherwise(F.col("_hi"))
+    return (
+        groups.select("*", F.posexplode("_lo").alias("_p", "a"))
+        .select("_blk", "a", F.explode(partners).alias("b"))
+        .filter(F.col("a._id") != F.col("b._id"))
+        .withColumn(
+            "_cos", _cosine("a._vec", "b._vec", "a._norm", "b._norm", round_to)
+        )
+    )
+
+
 def semdedup_flags(
     df: DataFrame,
     id_col: str,
@@ -473,7 +489,7 @@ def semdedup_flags(
     centroid_fit: str = "kmeans",
     max_cluster_rows: int = 8192,
     round_to: int | None = 6,
-    materialize: bool = True,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by
     cluster-then-prune. Every vector is assigned to its ONE nearest
@@ -491,12 +507,13 @@ def semdedup_flags(
     Scale shape: the keeper priority is evaluated as a pure PAIR
     predicate — ``(sim_centroide, id)`` lexicographic — so no
     per-cluster ranking window (which would sort a whole cluster in
-    one task) exists anywhere in the plan. The within-cluster pair
-    join reuses the skew-capped triangle sub-block scheme of
-    ``cluster_cosine_pairs``: work is Σ|cluster|²/2 ≈ n^1.5 with
-    ~sqrt(n) centroids, shuffle is O(n) on the cluster key, and a
-    pathological giant cluster spreads over hashed sub-block keys
-    instead of one straggler task. Following the paper, assignment is
+    one task) exists anywhere in the plan. The within-cluster pairs
+    come from ``_pairs_in_blocks``, the pair stage of
+    ``cluster_cosine_pairs``: no pin, one hash exchange on the cluster
+    key, and a pathological giant cluster spread over replicated
+    sub-block keys instead of one straggler group; ``n_rows`` gates
+    the sub-block size aggregate as there. Work is Σ|cluster|²/2 ≈
+    n^1.5 with ~sqrt(n) centroids. Following the paper, assignment is
     single-probe: a boundary-straddling duplicate pair may be missed
     (the documented recall trade `dedup_blocking_recall` measures);
     the admission-time answer at 100 TB is the same frozen-centroid
@@ -507,53 +524,24 @@ def semdedup_flags(
     (float-iteration-free, exactly replicable by a pure-SQL oracle —
     the catalog entry pins this path)."""
     if n_centroids is None:
-        n_centroids = max(4, int(df.count() ** 0.5))
+        n_rows = df.count() if n_rows is None else n_rows
+        n_centroids = max(4, int(n_rows**0.5))
     base = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
     cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
     assigned = assign_to_centroids(base, cent, round_to, 1)
-    # three consumers (both pair-join sides, the final flag join) each
-    # re-execute the scored assignment without this pin — see
-    # cluster_cosine_pairs' rationale
-    assigned, seen = (
-        pin(assigned, n=F.count(F.lit(1))) if materialize else (assigned, {})
+    pares = _pairs_in_blocks(
+        assigned, ("_cos_cent",), max_cluster_rows, n_rows, round_to
     )
-    assigned = _with_subblocks(assigned, max_cluster_rows, seen.get("n"))
-    left = assigned.select(
-        F.col("_id").alias("ida"),
-        F.col("_vec").alias("va"),
-        F.col("_norm").alias("na"),
-        F.col("_cos_cent").alias("ca"),
-        "_blk",
-        F.col("_sb").alias("ki"),
-        F.explode(F.sequence(F.col("_sb"), F.col("_nb") - 1)).alias("kj"),
-    )
-    right = assigned.select(
-        F.col("_id").alias("idb"),
-        F.col("_vec").alias("vb"),
-        F.col("_norm").alias("nb"),
-        F.col("_cos_cent").alias("cb"),
-        "_blk",
-        F.explode(F.sequence(F.lit(0), F.col("_sb"))).alias("ki"),
-        F.col("_sb").alias("kj"),
-    )
-    cos = _dot("va", "vb") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
+    ca, cb = F.col("a._cos_cent"), F.col("b._cos_cent")
+    ida, idb = F.col("a._id"), F.col("b._id")
     # unordered dup pairs; the LATER keeper-priority endpoint is the victim
     vitimas = (
-        left.join(right, ["_blk", "ki", "kj"])
-        .filter(F.col("ida") != F.col("idb"))
-        .filter((F.col("ki") != F.col("kj")) | (F.col("ida") < F.col("idb")))
-        .filter(cos >= F.lit(float(threshold)))
+        pares.filter(F.col("_cos") >= F.lit(float(threshold)))
         .select(
-            F.when(
-                (F.col("ca") < F.col("cb"))
-                | ((F.col("ca") == F.col("cb")) & (F.col("ida") < F.col("idb"))),
-                F.col("idb"),
-            )
-            .otherwise(F.col("ida"))
+            F.when((ca < cb) | ((ca == cb) & (ida < idb)), idb)
+            .otherwise(ida)
             .alias("_vid")
         )
         .distinct()
@@ -638,9 +626,7 @@ def knn_graph_edges(
         F.col("_norm").alias("_qn"),
         F.col("_blk").alias("_cid"),
     )
-    cos = _dot("_qv", "_mv") / F.nullif(F.col("_qn") * F.col("_mn"), F.lit(0.0))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
+    cos = _cosine("_qv", "_mv", "_qn", "_mn", round_to)
     w_rank = Window.partitionBy("id").orderBy(F.col("cosseno").desc(), "neighbor_id")
     return (
         # a sort-merge join whatever the pinned assignment's size

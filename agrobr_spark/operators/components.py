@@ -159,9 +159,8 @@ def _driver_components(spark, pdf, id_type) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # .tolist() converts numpy scalars to plain Python values — both
-    # for dict-key hashing sanity and because createDataFrame rejects
-    # numpy types in plain tuples
+    # .tolist() converts numpy scalars to plain Python values, for
+    # dict-key hashing sanity
     for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
@@ -170,16 +169,13 @@ def _driver_components(spark, pdf, id_type) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    out = [(x, find(x)) for x in parent]
-    from pyspark.sql import types as T
+    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("id", id_type),
-            T.StructField("componente", id_type),
-        ]
-    )
-    return spark.createDataFrame(out, schema)
+    # from pandas, not a list: a LocalRelation (see query_postings)
+    ids = list(parent)
+    out = pd.DataFrame({"id": ids, "componente": [find(x) for x in ids]}, dtype=object)
+    t = id_type.simpleString()
+    return spark.createDataFrame(out, f"id {t}, componente {t}")
 
 
 def _sym_distinct_rows(pdf) -> int:

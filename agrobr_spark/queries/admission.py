@@ -271,9 +271,10 @@ def _vector_payload(docs: DataFrame, vecs: DataFrame, *keep: str) -> list:
 
 
 def _block_pairs(a_side: DataFrame, b_side: DataFrame) -> DataFrame:
-    """Pairs in the same frozen block at cosseno >= threshold — the
-    same equi-join-on-block-key shape as cluster_cosine_pairs; at
-    index scale add the skew sub-splitting from allpairs."""
+    """Pairs in the same frozen block at cosseno >= threshold: a
+    batch × index equi-join on the block key (two frames, unlike the
+    one-frame pair stage of cluster_cosine_pairs); at index scale add
+    the skew sub-splitting from allpairs."""
     a = a_side.select(
         F.col("_id").alias("ida"),
         F.col("_vec").alias("va"),

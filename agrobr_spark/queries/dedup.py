@@ -497,6 +497,7 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_col="embedding",
         threshold=_COS_THRESHOLD,
         n_centroids=max(4, int(n**0.5)),
+        n_rows=n,
         extra_cols=("label",),
         # oracle-pinned: the recursive-CTE oracle replicates the
         # lowest-id stand-in exactly; the library default is the real
@@ -518,8 +519,9 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup — the 100 TB DEFAULT path (VERDICT r2 #3):
     IVF-style cluster blocking (operators/allpairs.cluster_cosine_pairs)
-    so exact cosine runs only WITHIN clusters via an equi-join on the
-    cluster key — no stage ever materializes the full n²/2 pair space
+    so exact cosine runs only WITHIN clusters, whose pairs are
+    enumerated after one hash exchange on the cluster key — no stage
+    ever materializes the full n²/2 pair space
     (`dedup_embedding_cosine` keeps the exact triangle join as the
     oracle baseline / exactness fallback). Cluster assignment uses the
     same rounded-cosine + id tie-break determinism as `sim_ivf_ann`,
@@ -1028,6 +1030,7 @@ def blocking_recall_paths(
             vec_col=vec_col,
             threshold=threshold,
             n_centroids=max(4, int(n**0.5)),
+            n_rows=n,
             centroid_fit=fit,
             n_probe=n_probe,
         ).select(
@@ -1187,7 +1190,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalog pin: lowest-id centroid stand-in + single probe, exactly
     replicated by the oracle CTE; the library form
     (operators/allpairs.semdedup_flags) defaults to the sampled
-    k-means fit, and the skew-capped triangle sub-block join bounds
+    k-means fit, and the skew-capped triangle sub-block groups bound
     the within-cluster pair work (see its docstring for the n^1.5
     argument)."""
     from agrobr_spark.operators.allpairs import semdedup_flags
@@ -1200,6 +1203,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_col="embedding",
         threshold=_COS_THRESHOLD,
         n_centroids=max(4, int(n**0.5)),
+        n_rows=n,
         centroid_fit="lowest_id",
     )
 

@@ -35,14 +35,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
-from agrobr_spark.normalize.expressions import n_tokens, tokens
+from agrobr_spark.normalize.expressions import WS_CHARS, WS_RUN, n_tokens, tokens
 from agrobr_spark.queries import register
 from agrobr_spark.queries.dedup import word_shingles
 
-# the DuckDB oracles' spelling of normalize/expressions.tokens
+# the DuckDB oracles' spelling of normalize/expressions.tokens, on
+# the same whitespace class
+_WS_DUCK = " || ".join(f"chr({ord(c)})" for c in WS_CHARS)
 _TOKS_DUCK = (
-    "CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[] "
-    r"ELSE string_split_regex(trim(text), '\s+') END"
+    f"CASE WHEN length(trim(text, {_WS_DUCK})) = 0 THEN []::VARCHAR[] "
+    f"ELSE string_split_regex(trim(text, {_WS_DUCK}), '{WS_RUN}') END"
 )
 
 # -- within-doc repetition (Gopher §A1.1: duplicate mass / top n-gram) --

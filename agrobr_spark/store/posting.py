@@ -871,8 +871,12 @@ def phrase_vote(
     tables join broadcast, so only query-term tokens reach the
     (doc, phrase, start) aggregation, whose groups hold at most
     |phrase| rows."""
+    import pandas as pd
+
+    # from pandas, not a list (see query_postings)
     termdf = rows.sparkSession.createDataFrame(
-        terms, "frase string, termo string, deslocamento int"
+        pd.DataFrame(terms, columns=["frase", "termo", "deslocamento"]),
+        "frase string, termo string, deslocamento int",
     )
     lens = termdf.groupBy("frase").agg(
         F.count(F.lit(1)).alias("comprimento")

@@ -14,8 +14,11 @@ from tools.jobs_census import census
 
 #: warm jobs at sf0.001
 WARM_JOBS = {
-    "dedup_survivors": 7,
-    "near_dup_embeddings": 4,
+    "dedup_survivors": 6,
+    "dedup_components": 5,
+    "dedup_semdedup": 5,
+    "near_dup_embeddings": 3,
+    "pipeline_keep_set": 12,
     "text_bm25_indexed": 3,
     "text_bm25_topk": 4,
     "text_bm25_rm3_indexed": 10,

@@ -187,13 +187,13 @@ def test_cluster_pairs_skew_cap_bounds_and_preserves_results(spark):
         n_centroids=4, extra_cols=("label",),
     )
     capped = cluster_cosine_pairs(df, max_cluster_rows=16, **kw)
-    uncapped = cluster_cosine_pairs(df, max_cluster_rows=1_000_000, **kw)
+    uncapped = cluster_cosine_pairs(df, max_cluster_rows=1_000_000, n_rows=100, **kw)
     got = sorted(map(tuple, capped.collect()))
     want = sorted(map(tuple, uncapped.collect()))
     assert got == want and len(want) > 1000  # dense cluster -> many pairs
-    # 100 assigned rows over a cap of 16: the capped run joins the
-    # cluster sizes; under the cap no cluster can exceed it, so the
-    # uncapped run skips the size aggregate
+    # with no row count the capped run joins the cluster sizes; 100
+    # input rows under the cap bound every cluster, so the uncapped
+    # run skips the size aggregate
     def joins_sizes(pairs):
         return "_cnt" in pairs._jdf.queryExecution().analyzed().toString()
 
@@ -213,10 +213,156 @@ def test_cluster_pairs_skew_cap_bounds_and_preserves_results(spark):
     assert {r["_nb"] for r in sub.filter("_blk = 0").collect()} == {12}
     assert {r["_nb"] for r in sub.filter("_blk = 1").collect()} == {1}
 
-    # the pair stage stays an equi-join: no cartesian/nested-loop
-    # corpus x corpus product even with sub-splitting active
+    # no corpus x corpus product even with sub-splitting active
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+
+
+def _pairs_by_self_join(sub, carry):
+    """Reference pair stage over a ``_with_subblocks`` frame: the left
+    side replicated to triangle keys ``(sb, sb..nb-1)``, the right to
+    ``(0..sb, sb)``, a self equi-join on ``(_blk, ki, kj)``, and the
+    same-sub-block pairs that meet in both orders dropped."""
+    left = sub.select(
+        F.col("_id").alias("ida"),
+        *[F.col(c).alias(f"a{c}") for c in carry],
+        "_blk",
+        F.col("_sb").alias("ki"),
+        F.explode(F.sequence(F.col("_sb"), F.col("_nb") - 1)).alias("kj"),
+    )
+    right = sub.select(
+        F.col("_id").alias("idb"),
+        *[F.col(c).alias(f"b{c}") for c in carry],
+        "_blk",
+        F.explode(F.sequence(F.lit(0), F.col("_sb"))).alias("ki"),
+        F.col("_sb").alias("kj"),
+    )
+    return (
+        left.join(right, ["_blk", "ki", "kj"])
+        .filter(F.col("ida") != F.col("idb"))
+        .filter((F.col("ki") != F.col("kj")) | (F.col("ida") < F.col("idb")))
+    )
+
+
+def test_pairs_in_blocks_match_the_self_join(spark):
+    """The one-exchange pair stage gives the reference self-join's
+    pairs, each once, with the same carried columns and cosine: on
+    gappy ids with a 90-row dense cluster split at cap 16 and
+    uncapped, single- and multiprobe, with an extra column and a
+    zero-norm vector (null cosine) in the corpus."""
+    import random
+
+    from agrobr_spark.operators.allpairs import (
+        _cosine,
+        _dot,
+        _pairs_in_blocks,
+        _with_subblocks,
+        assign_to_centroids,
+    )
+
+    rng = random.Random(11)
+    rows = [(10_000, "zero", [0.0, 0.0, 0.0])]
+    for i in range(100):
+        if i % 10 != 0:
+            v = [1.0 + rng.uniform(-0.01, 0.01), 0.1, 0.1]
+        else:
+            v = [rng.uniform(-1, 1) for _ in range(3)]
+        rows.append((7 * i + i % 3, f"d{i}", v))
+    base = spark.createDataFrame(
+        rows, "_id long, _x_label string, _vec array<double>"
+    ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.1, 0.1]), (1, [-1.0, 0.0, 0.0]),
+         (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, -1.0])],
+        "_cid long, _cv array<double>",
+    )
+
+    def canon(blk, ida, idb, a, b, cos):
+        # (block, lower id, higher id, its carry, the other's, cosine)
+        if ida > idb:
+            ida, idb, a, b = idb, ida, b, a
+        return (blk, ida, idb, *a, *b, cos)
+
+    for n_probe in (1, 2):
+        assigned = assign_to_centroids(base, cent, 6, n_probe)
+        carry = ("_x_label", "_probes")
+        for cap, n_rows in ((16, None), (1_000_000, len(rows))):
+            got = sorted(
+                canon(
+                    r["_blk"], r["a"]["_id"], r["b"]["_id"],
+                    [r["a"][c] for c in carry], [r["b"][c] for c in carry],
+                    r["_cos"],
+                )
+                for r in _pairs_in_blocks(
+                    assigned, carry, cap, n_rows, 6
+                ).collect()
+            )
+            sub = _with_subblocks(assigned, cap)
+            ref = _pairs_by_self_join(sub, ("_vec", "_norm", *carry)).withColumn(
+                "_cos", _cosine("a_vec", "b_vec", "a_norm", "b_norm", 6)
+            )
+            want = sorted(
+                canon(
+                    r["_blk"], r["ida"], r["idb"],
+                    [r[f"a{c}"] for c in carry], [r[f"b{c}"] for c in carry],
+                    r["_cos"],
+                )
+                for r in ref.collect()
+            )
+            assert got == want, (n_probe, cap)
+            assert len(got) > 4000  # the dense cluster's 90·89/2 pairs
+            assert any(g[-1] is None for g in got)  # the zero-norm vector
+            nb = {r["_nb"] for r in sub.select("_nb").collect()}
+            assert (max(nb) > 1) == (cap == 16), (cap, nb)
+
+
+def test_pair_stage_is_one_block_exchange_with_no_pin(spark):
+    """Building a blocked pair frame runs no job (no pin, no
+    ``localCheckpoint``); its plan has exactly one hash exchange keyed
+    on the block key; and the triangle sub-block key explode has one
+    definition in the package, in ``_pairs_in_blocks``."""
+    import ast
+    import re
+
+    from agrobr_spark.io import load
+    from agrobr_spark.operators.allpairs import (
+        cluster_cosine_pairs,
+        semdedup_flags,
+    )
+    from tests.test_concurrency import PACKAGE, _enclosing_functions
+
+    e = load(spark, SF_SMOKE, "embeddings")
+    n = e.count()
+    kw = dict(n_centroids=8, centroid_fit="lowest_id", n_rows=n)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    for build in (
+        lambda: cluster_cosine_pairs(e, "vec_id", "embedding", 0.45, n_probe=2, **kw),
+        lambda: semdedup_flags(e, "vec_id", "embedding", 0.45, **kw),
+    ):
+        before = sched.nextJobId()
+        df = build()
+        assert sched.nextJobId() == before
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        keys = re.findall(r"hashpartitioning\((\w+)#", plan)
+        assert keys.count("_blk") == 1, plan
+
+    owners = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        src = f.read_text(encoding="utf-8")
+        owner = _enclosing_functions(src)
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) in ("explode", "posexplode")
+                and node.args
+                and getattr(node.args[0], "func", None) is not None
+                and getattr(node.args[0].func, "attr", None) == "sequence"
+                and "_nb" in ast.dump(node)
+            ):
+                rel = f.relative_to(PACKAGE).as_posix()
+                owners.append((rel, owner.get(node.lineno)))
+    assert owners == [("operators/allpairs.py", "_pairs_in_blocks")], owners
 
 
 def _ranked_by_window(base, cent, n_probe):
@@ -834,6 +980,21 @@ def test_connected_components_driver_path_folds_raw_pairs(spark, tmp_path):
     dup = [(1, 2)] * 6
     assert run(dup, 5, "raw_past") == ({(1, 1), (2, 1)}, True)
     assert run(dup, 6, "raw_at") == ({(1, 1), (2, 1)}, False)
+
+
+def test_connected_components_driver_output_is_a_local_relation(spark):
+    """The driver finish's result plans as a ``LocalTableScan``, not as
+    a Python-deserialized ``ExistingRDD`` whose every job would start
+    Python workers — for numeric and for string ids."""
+    from agrobr_spark.operators.components import connected_components
+
+    for rows, t in (([(1, 2), (2, 3), (7, 8)], "bigint"), ([("x", "y")], "string")):
+        out = connected_components(
+            spark.createDataFrame(rows, f"a {t}, b {t}"), "a", "b"
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert out.schema.simpleString() == f"struct<id:{t},componente:{t}>"
 
 
 def test_rp_lsh_recall_on_fixture(spark):

@@ -1,7 +1,7 @@
 """Physical-plan audits: the scale posture README claims, asserted.
 
 These tests mostly never execute a job (queries that pin intermediates
-with an eager localCheckpoint at build time — the admit/fold/near-dup
+with an eager localCheckpoint at build time — the admit/fold
 families — do run their pinned legs) — they compile each query and assert
 properties of the Catalyst physical plan: predicate pushdown reaches
 the parquet scan, projections prune the read schema, small dims
@@ -110,43 +110,45 @@ class TestJoinStrategy:
 
     def test_near_dup_default_has_no_full_pair_stage(self, spark, cat):
         # the scale-default embedding near-dup (VERDICT r2 #3): the
-        # pair stage must be an equi-join on the cluster key — with
-        # the r13 assignment pin, the returned plan joins checkpoint
-        # scans, so NO nested loop (the centroid sweep ran inside the
-        # materialization) and certainly no corpus × corpus product
-        plan = plan_of(cat["near_dup_embeddings"].fn(spark, SF_SMOKE))
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        # the pair self-join is keyed on the cluster id (formatted
-        # explain lists equi-join keys as "Left keys" detail lines)
-        key_lines = [ln for ln in plan.splitlines() if "Left keys" in ln]
-        assert key_lines and any("_blk" in ln for ln in key_lines), plan
+        # pairs come out of ONE hash exchange on the cluster key, the
+        # centroid sweep is the only nested loop, and there is no
+        # corpus × corpus product
+        _assert_one_block_exchange(
+            plan_of(cat["near_dup_embeddings"].fn(spark, SF_SMOKE))
+        )
 
     def test_cluster_pairs_lazy_shape_is_centroid_sweep(self, spark):
-        # the UN-materialized operator keeps the round-2 discipline
-        # visible: nested loops only against the broadcast centroid
-        # build side (O(C·n) rows), never a corpus × corpus product
-        from agrobr_spark.operators.allpairs import cluster_cosine_pairs
+        # the operator itself, under the skew cap: the same one
+        # exchange, with no pin and no size aggregate before it
         from agrobr_spark.io import load
+        from agrobr_spark.operators.allpairs import cluster_cosine_pairs
 
+        e = load(spark, SF_SMOKE, "embeddings")
         df = cluster_cosine_pairs(
-            load(spark, SF_SMOKE, "embeddings"),
+            e,
             id_col="vec_id",
             vec_col="embedding",
             threshold=0.45,
             n_centroids=8,
             centroid_fit="lowest_id",
-            materialize=False,
+            n_rows=e.count(),
         )
-        plan = plan_of(df)
-        assert "CartesianProduct" not in plan, plan
-        key_lines = [ln for ln in plan.splitlines() if "Left keys" in ln]
-        assert key_lines and any("_blk" in ln for ln in key_lines), plan
-        tree_nlj = [
-            ln for ln in plan.splitlines()
-            if "BroadcastNestedLoopJoin" in ln and "Build" in ln
-        ]
-        assert tree_nlj and all("BuildRight" in ln for ln in tree_nlj), plan
+        _assert_one_block_exchange(plan_of(df))
+
+
+def _assert_one_block_exchange(plan):
+    """The blocked pair stage's shape: one ``hashpartitioning``
+    exchange, keyed on the block key; the only nested loop is the
+    centroid sweep against its broadcast build side; no
+    ``CartesianProduct``."""
+    assert "CartesianProduct" not in plan, plan
+    keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
+    assert keys == ["_blk"], plan
+    tree_nlj = [
+        ln for ln in plan.splitlines()
+        if "BroadcastNestedLoopJoin" in ln and "Build" in ln
+    ]
+    assert len(tree_nlj) == 1 and "BuildRight" in tree_nlj[0], plan
 
 
 class TestSortAndAggShape:

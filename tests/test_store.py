@@ -1009,13 +1009,15 @@ def test_posting_index_zero_document_base(spark, tmp_path):
 
 def test_posting_index_rejects_another_tokenizer_version(spark, tmp_path):
     """Postings tokenized by another tokenizer (manifest
-    ``tokenizer_version`` 0, or none recorded) cannot answer queries
-    tokenized by this one: reading the manifest, querying and
-    updating all raise, naming the path and asking for a rebuild."""
+    ``tokenizer_version`` 1, the previous one, or none recorded)
+    cannot answer queries tokenized by this one: reading the manifest,
+    querying and updating all raise, naming the path and asking for a
+    rebuild."""
     import json
     import os
     import re
 
+    from agrobr_spark.normalize.expressions import TOKENIZER_VERSION
     from agrobr_spark.store.posting import (
         bm25_topk_indexed,
         build_posting_index,
@@ -1031,9 +1033,9 @@ def test_posting_index_rejects_another_tokenizer_version(spark, tmp_path):
     manifest = os.path.join(path, "manifest.json")
     with open(manifest, encoding="utf-8") as fh:
         man = json.load(fh)
-    assert read_manifest(path)["tokenizer_version"] == 1
+    assert read_manifest(path)["tokenizer_version"] == TOKENIZER_VERSION == 2
     stale = re.escape(path) + ".*tokenizer_version.*rebuild"
-    for rewrite in (lambda m: m.update(tokenizer_version=0),
+    for rewrite in (lambda m: m.update(tokenizer_version=1),
                     lambda m: m.pop("tokenizer_version")):
         rewrite(man)
         with open(manifest, "w", encoding="utf-8") as fh:

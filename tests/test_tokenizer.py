@@ -10,6 +10,7 @@ import re
 
 import pytest
 
+from agrobr_spark.normalize.expressions import WS_RUN
 from tests.test_concurrency import PACKAGE, _enclosing_functions
 
 _OWNERS = {
@@ -62,7 +63,10 @@ def _matches(src):
     ``F.explode``/``F.posexplode`` in the same top-level function."""
     tree = ast.parse(src)
     for node in ast.walk(tree):
-        if _f_call(node, "split") and r"\s+" in _strings(node):
+        if _f_call(node, "split") and (
+            {r"\s+", WS_RUN} & set(_strings(node))
+            or any(isinstance(a, ast.Name) and a.id == "WS_RUN" for a in node.args)
+        ):
             yield "whitespace split", node.lineno
         text = _literal_text(node)
         if text is not None and _SQL_SPLIT.search(text):
@@ -103,7 +107,10 @@ def test_tokenizer_has_one_definition():
     assert owners_seen == set(_OWNERS)
 
 
-_EDGES = ["", " ", "\t", "\ttext", "a  b", " a b ", "a\tb", "a\nb", "a\xa0b"]
+_EDGES = [
+    "", " ", "\t", "\ttext", "a  b", " a b ", "a\tb", "a\nb", "a\xa0b",
+    "\xa0", "a\x0bb", "\x0c", " a\tb \n",
+]
 
 
 @pytest.fixture(scope="module")
@@ -112,26 +119,22 @@ def spark_tokens(spark):
     from agrobr_spark.normalize.expressions import tokens
 
     rows = spark.createDataFrame(
-        [(s,) for s in _EDGES + ["\xa0"]], "text string"
+        [(s,) for s in _EDGES], "text string"
     ).select("text", tokens("text").alias("t"))
     return {r["text"]: list(r["t"]) for r in rows.collect()}
 
 
-@pytest.mark.parametrize(
-    "text",
-    _EDGES
-    + [
-        pytest.param(
-            "\xa0",
-            marks=pytest.mark.xfail(
-                strict=True,
-                reason="NBSP-only text: DuckDB's trim strips U+00A0 and "
-                "gives [], Spark's trims only ASCII space and gives "
-                "['\\xa0']",
-            ),
-        )
-    ],
-)
+def test_whitespace_only_text_has_no_tokens(spark_tokens):
+    """Whitespace is the spelled-out ASCII class on both ends: tab-only
+    text is blank, VT splits, a trailing newline leaves no empty token,
+    and NBSP is a token character."""
+    assert spark_tokens["\t"] == [] and spark_tokens["\x0c"] == []
+    assert spark_tokens[" a\tb \n"] == ["a", "b"]
+    assert spark_tokens["a\x0bb"] == ["a", "b"]
+    assert spark_tokens["\xa0"] == ["\xa0"]
+
+
+@pytest.mark.parametrize("text", _EDGES)
 def test_tokens_match_the_oracle_tokenizer(spark_tokens, text):
     import duckdb
 
