@@ -62,6 +62,28 @@ def n_tokens(c: Column | str) -> Column:
     return F.size(tokens(c)).cast("bigint")
 
 
+def has_tokens(c: Column | str) -> Column:
+    """True when :func:`tokens` is non-empty: the blank-document filter,
+    without the split."""
+    return F.length(F.trim(c, F.lit(WS_CHARS))) > 0
+
+
+_WS_SQL = " || ".join(f"chr({ord(ch)})" for ch in WS_CHARS)
+
+
+def tokens_sql(col: str = "text") -> str:
+    """:func:`tokens` of the SQL expression ``col`` in the DuckDB
+    oracles' spelling: the same trim set and split class (DuckDB's bare
+    ``trim`` also strips NBSP, its ``\\s`` lacks VT). Every oracle token
+    array, count (``len(...)``) and blank filter (``len(...) > 0``) is
+    built from it."""
+    t = f"trim({col}, {_WS_SQL})"
+    return (
+        f"(CASE WHEN length({t}) = 0 THEN []::VARCHAR[] "
+        f"ELSE string_split_regex({t}, '{WS_RUN}') END)"
+    )
+
+
 # The same normalization for the DuckDB oracle side.
 NORM_KEY_SQL = (
     "trim(regexp_replace(lower(translate({col}, "

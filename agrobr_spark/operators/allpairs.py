@@ -226,9 +226,8 @@ def cluster_cosine_pairs(
     default entry point).
 
     Every vector is assigned to its nearest centroid, then exact
-    cosine runs ONLY within each cluster (``_pairs_in_blocks``: no
-    pin, one hash exchange). ``centroid_fit`` picks the centroid
-    source:
+    cosine runs ONLY within each cluster (``_pairs_in_blocks``: one
+    hash exchange). ``centroid_fit`` picks the centroid source:
 
     - ``"kmeans"`` (library default): a real sampled spherical k-means
       fit (``fit_centroids_kmeans``) — representative blocking even
@@ -249,8 +248,9 @@ def cluster_cosine_pairs(
 
     ``n_rows`` is the input's row count when the caller has it (the
     count that sizes ``n_centroids``): at or under
-    ``max_cluster_rows`` no cluster can exceed the cap and the
-    sub-block size aggregate is skipped. With ``n_centroids=None`` the
+    ``max_cluster_rows`` no cluster can exceed the cap, and the
+    sub-block size aggregate and the assignment pin it needs are
+    skipped. With ``n_centroids=None`` the
     operator counts the input itself (one job) and sizes the
     centroids ~n_probe·sqrt(n), giving ~n^1.5 total comparisons for
     any ``n_probe``; with neither, the size aggregate runs. A wrong
@@ -291,7 +291,8 @@ def cluster_cosine_pairs(
     assigned = assign_to_centroids(base, cent, round_to, n_probe)
     probes = ("_probes",) if int(n_probe) > 1 else ()
     carry = (*[f"_x_{c}" for c in extra_cols], *probes)
-    pares = _pairs_in_blocks(assigned, carry, max_cluster_rows, n_rows, round_to)
+    sub = _with_subblocks(assigned, max_cluster_rows, n_rows)
+    pares = _pairs_in_blocks(sub, carry, round_to)
     if probes:
         # a pair sharing several probed clusters meets in each of them;
         # only its lowest shared cluster scores it
@@ -399,7 +400,10 @@ def _with_subblocks(
     cap get ``_nb = 1``: one group, as with no cap. A known input row
     count ``n_rows`` at or under the cap bounds every cluster (a row
     lands in a cluster at most once), so the size aggregate is
-    skipped.
+    skipped and the assignment stays unpinned. Otherwise the aggregate
+    and the pair stage both read the assignment, so it is pinned
+    first (one eager ``localCheckpoint`` job) and its centroid sweep
+    runs once.
 
     Over-cap clusters hash rows into ``ceil(2·|cluster| / cap)``
     sub-blocks via ``xxhash64(_id)``: expected load cap/2 per
@@ -414,6 +418,7 @@ def _with_subblocks(
     cap = max(1, int(max_cluster_rows))
     if n_rows is not None and n_rows <= cap:
         return assigned.withColumn("_nb", F.lit(1)).withColumn("_sb", F.lit(0))
+    assigned = assigned.localCheckpoint(eager=True)
     sizes = assigned.groupBy("_blk").agg(F.count(F.lit(1)).alias("_cnt"))
     return (
         assigned.join(F.broadcast(sizes), "_blk")
@@ -429,20 +434,17 @@ def _with_subblocks(
 
 
 def _pairs_in_blocks(
-    assigned: DataFrame,
-    carry: tuple[str, ...],
-    max_cluster_rows: int,
-    n_rows: int | None,
-    round_to: int | None,
+    sub: DataFrame, carry: tuple[str, ...], round_to: int | None
 ) -> DataFrame:
-    """Every unordered pair of distinct-id rows of a ``_blk``-assigned
-    frame that share a ``_blk``, as ``(_blk, a, b, _cos)``: ``a`` and
-    ``b`` are structs of ``_id``, ``_vec``, ``_norm`` and ``carry`` in
-    arbitrary side order, ``_cos`` their cosine. The pair stage of
-    ``cluster_cosine_pairs`` and ``semdedup_flags``.
+    """Every unordered pair of distinct-id rows of a sub-blocked
+    (``_with_subblocks``) assignment that share a ``_blk``, as
+    ``(_blk, a, b, _cos)``: ``a`` and ``b`` are structs of ``_id``,
+    ``_vec``, ``_norm`` and ``carry`` in arbitrary side order, ``_cos``
+    their cosine. The pair stage of ``cluster_cosine_pairs`` and
+    ``semdedup_flags``.
 
-    ONE hash exchange of the unpinned assignment on the block key. A
-    row of sub-block ``s`` of ``_nb`` (``_with_subblocks``) goes out to
+    ONE hash exchange of the assignment on the block key. A row of
+    sub-block ``s`` of ``_nb`` goes out to
     the triangle keys ``(least(s, k), greatest(s, k))``, k < ``_nb``;
     each ``(_blk, ki, kj)`` group collects its ``ki`` rows (``_lo``)
     and, off the diagonal, its ``kj`` rows (``_hi``). A diagonal group
@@ -450,7 +452,6 @@ def _pairs_in_blocks(
     cross group each ``_lo`` row with every ``_hi`` row: every pair
     meets once, nothing is enumerated and discarded, and no group
     holds more than two sub-blocks."""
-    sub = _with_subblocks(assigned, max_cluster_rows, n_rows)
     keyed = sub.select(
         "_blk",
         "_sb",
@@ -509,15 +510,16 @@ def semdedup_flags(
     per-cluster ranking window (which would sort a whole cluster in
     one task) exists anywhere in the plan. The within-cluster pairs
     come from ``_pairs_in_blocks``, the pair stage of
-    ``cluster_cosine_pairs``: no pin, one hash exchange on the cluster
-    key, and a pathological giant cluster spread over replicated
-    sub-block keys instead of one straggler group; ``n_rows`` gates
-    the sub-block size aggregate as there. Work is Σ|cluster|²/2 ≈
-    n^1.5 with ~sqrt(n) centroids. Following the paper, assignment is
-    single-probe: a boundary-straddling duplicate pair may be missed
-    (the documented recall trade `dedup_blocking_recall` measures);
-    the admission-time answer at 100 TB is the same frozen-centroid
-    incremental path the near-dup family uses.
+    ``cluster_cosine_pairs``: one hash exchange on the cluster key,
+    and a pathological giant cluster spread over replicated sub-block
+    keys instead of one straggler group; ``n_rows`` gates the
+    sub-block size aggregate and its assignment pin as there. Work is
+    Σ|cluster|²/2 ≈ n^1.5 with ~sqrt(n) centroids. Following the
+    paper, assignment is single-probe: a boundary-straddling duplicate
+    pair may be missed (the documented recall trade
+    `dedup_blocking_recall` measures); the admission-time answer at
+    100 TB is the same frozen-centroid incremental path the near-dup
+    family uses.
 
     ``centroid_fit`` as in ``cluster_cosine_pairs``: ``"kmeans"``
     (library default, real sampled fit) or ``"lowest_id"``
@@ -531,9 +533,9 @@ def semdedup_flags(
     ).withColumn("_norm", F.sqrt(_dot("_vec", "_vec")))
     cent = _centroids(df, base, id_col, vec_col, n_centroids, centroid_fit)
     assigned = assign_to_centroids(base, cent, round_to, 1)
-    pares = _pairs_in_blocks(
-        assigned, ("_cos_cent",), max_cluster_rows, n_rows, round_to
-    )
+    # the flag join reads the same (over the cap: pinned) assignment
+    sub = _with_subblocks(assigned, max_cluster_rows, n_rows)
+    pares = _pairs_in_blocks(sub, ("_cos_cent",), round_to)
     ca, cb = F.col("a._cos_cent"), F.col("b._cos_cent")
     ida, idb = F.col("a._id"), F.col("b._id")
     # unordered dup pairs; the LATER keeper-priority endpoint is the victim
@@ -547,9 +549,7 @@ def semdedup_flags(
         .distinct()
     )
     return (
-        assigned.join(
-            vitimas, assigned["_id"] == vitimas["_vid"], "left"
-        )
+        sub.join(vitimas, sub["_id"] == vitimas["_vid"], "left")
         .select(
             F.col("_id").alias(id_col),
             F.col("_blk").alias("cluster"),

@@ -80,7 +80,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import checkpoint_parquet, load, read_parquet
-from agrobr_spark.normalize.expressions import tokens
+from agrobr_spark.normalize.expressions import tokens, tokens_sql
 from agrobr_spark.operators.allpairs import _dot, assign_to_centroids
 from agrobr_spark.operators.components import connected_components
 from agrobr_spark.queries import register
@@ -455,9 +455,8 @@ _ADMIT_CTE = f"""
                FROM alc_c GROUP BY id),
     toks AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-        string_split_regex(trim(text), '\\s+') AS t
+        len({tokens_sql()}) AS n_tokens,
+        {tokens_sql()} AS t
       FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,
@@ -702,9 +701,8 @@ def _text_admit_oracle() -> str:
                FROM alc_c GROUP BY id),
     toks5 AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-        string_split_regex(trim(text), '\\s+') AS t
+        len({tokens_sql()}) AS n_tokens,
+        {tokens_sql()} AS t
       FROM documents),
     sh5 AS (
       SELECT DISTINCT doc_id,
@@ -1058,9 +1056,8 @@ def _lsh_oracle(final_select: str | None = None) -> str:
                FROM alc_c GROUP BY id),
     toks AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-        string_split_regex(trim(text), '\\s+') AS t
+        len({tokens_sql()}) AS n_tokens,
+        {tokens_sql()} AS t
       FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,

@@ -22,7 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import load
-from agrobr_spark.normalize.expressions import tokens
+from agrobr_spark.normalize.expressions import tokens, tokens_sql
 from agrobr_spark.queries import register
 
 N_HASHES = 8
@@ -67,12 +67,12 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return word_shingles(docs, 3, "doc_id", "source")
 
 
-_SHINGLES_SQL = r"""
+_SHINGLES_SQL = rf"""
     sh AS (
       SELECT DISTINCT doc_id, source,
              md5(concat_ws(' ', t[i], t[i+1], t[i+2])) AS shingle
       FROM (SELECT doc_id, source,
-                   string_split_regex(trim(text), '\s+') AS t
+                   {tokens_sql()} AS t
             FROM documents) toks,
            unnest(range(1, len(t) - 1)) AS r(i)
       WHERE len(t) >= 3)
@@ -1219,11 +1219,9 @@ def _survivors_quality_oracle() -> str:
     qualidade AS (
       SELECT doc_id,
         round(CAST(len(list_filter(
-            CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                 ELSE string_split_regex(trim(text), '\\s+') END,
+            {tokens_sql()},
             w -> w IN ({_STOP_SQL}))) AS DOUBLE)
-          / CAST(greatest(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END, 1)
+          / CAST(greatest(len({tokens_sql()}), 1)
             AS DOUBLE), 6) AS q
       FROM documents),
     ranqueado AS (

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from agrobr_spark.io import load, observed
-from agrobr_spark.normalize.expressions import n_tokens, tokens
+from agrobr_spark.normalize.expressions import has_tokens, n_tokens, tokens, tokens_sql
 from agrobr_spark.queries import register
 from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.store.posting import term_rows, term_tf
@@ -26,10 +26,9 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 @register(
     "text_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id, lang,
-      CASE WHEN length(trim(text)) = 0 THEN 0
-           ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+      len({tokens_sql()}) AS n_tokens,
       length(text) AS n_chars_real
     FROM documents
     """,
@@ -48,15 +47,12 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality_score",
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
       SELECT doc_id, text, length(text) AS n_chars,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+        len({tokens_sql()}) AS n_tokens,
         length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(list_filter(string_split_regex(trim(text), '\s+'),
-                      w -> w IN (%s))) END AS n_stop
+        len(list_filter({tokens_sql()}, w -> w IN (%s))) AS n_stop
       FROM documents)
     SELECT doc_id, n_chars, n_tokens, n_punct, n_stop,
       CAST(n_punct AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) AS punct_ratio,
@@ -104,11 +100,7 @@ LANG_MARKERS = {
 
 def _lang_hits_sql(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
-    return (
-        "CASE WHEN length(trim(text)) = 0 THEN 0 "
-        r"ELSE len(list_filter(string_split_regex(lower(trim(text)), '\s+'), "
-        f"w -> w IN ({words}))) END"
-    )
+    return f"len(list_filter({tokens_sql('lower(text)')}, w -> w IN ({words})))"
 
 
 @register(
@@ -219,9 +211,7 @@ CHUNK_STRIDE = 40  # 10-token overlap between consecutive chunks
     oracle=rf"""
     WITH t AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0
-             THEN CAST([] AS VARCHAR[])
-             ELSE string_split_regex(trim(text), '\s+') END AS toks
+        {tokens_sql()} AS toks
       FROM documents),
     s AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
     c AS (
@@ -339,9 +329,9 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ngram_topk",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, {tokens_sql()} AS t
       FROM documents),
     bigramas AS (
       SELECT lang, concat(t[i], ' ', t[i + 1]) AS bigrama
@@ -390,9 +380,9 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_contamination",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, {tokens_sql()} AS t
       FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,
@@ -442,9 +432,8 @@ def _gates_cte() -> str:
     perdedores AS (SELECT doc_id FROM ranqueado WHERE rk > 1),
     toks AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-        string_split_regex(trim(text), '\\s+') AS t
+        len({tokens_sql()}) AS n_tokens,
+        {tokens_sql()} AS t
       FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,
@@ -539,8 +528,7 @@ _BPE_PAT_SQL = _BPE_PAT.replace("'", "''")
     SELECT doc_id, lang,
       CAST(len(regexp_extract_all(text, '{_BPE_PAT_SQL}')) AS INT)
         AS n_tokens_bpe,
-      CASE WHEN length(trim(text)) = 0 THEN 0
-           ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens_ws
+      len({tokens_sql()}) AS n_tokens_ws
     FROM documents
     """,
     tags=("TEXT", "TOKENIZE", "BPE"),
@@ -734,10 +722,10 @@ def text_token_count_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_rarity_score",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, unnest({tokens_sql()}) AS tok
+      FROM documents WHERE len({tokens_sql()}) > 0),
     freq AS (SELECT tok, count(*) AS f FROM toks GROUP BY tok)
     SELECT t.doc_id,
       CAST(count(*) AS BIGINT) AS n_tokens,
@@ -764,7 +752,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE picks broadcast vs shuffle join at runtime; everything else is
     map-side partial aggregation."""
     d = load(spark, sf_dir, "documents")
-    toks = d.filter(F.length(F.trim("text")) > 0).select(
+    toks = d.filter(has_tokens("text")).select(
         "doc_id", F.explode(tokens("text")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("f"))
@@ -793,9 +781,9 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_overlap_matrix",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, source, {tokens_sql()} AS t
       FROM documents),
     sh AS (
       SELECT DISTINCT source,
@@ -879,8 +867,8 @@ TFIDF_TOPK = 5
     "text_tfidf_topk",
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) > 0),
     tf AS (
       SELECT doc_id, lower(tok) AS termo, count(*) AS tf
       FROM toks, unnest(t) AS u(tok) GROUP BY 1, 2),
@@ -980,11 +968,11 @@ def pipeline_keep_set_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_surprise",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT d.doc_id, lower(u.tok) AS termo
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT doc_id, {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     freq AS (SELECT termo, count(*) AS c FROM toks GROUP BY termo),
     tot AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM toks),
@@ -1043,11 +1031,11 @@ def text_unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_perplexity_buckets",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT d.doc_id, lower(u.tok) AS termo
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT doc_id, {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     freq AS (SELECT termo, count(*) AS c FROM toks GROUP BY termo),
     tot AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM toks),
@@ -1182,8 +1170,8 @@ KL_VOCAB_SIZE = 500
     oracle=rf"""
     WITH toks AS (
       SELECT d.source, lower(u.tok) AS termo
-      FROM (SELECT source, string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT source, {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     contagens AS (
       SELECT source, termo, count(*) AS cs
@@ -1291,8 +1279,8 @@ _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
 #: oracle here and the RRF hybrid-fusion oracle in ``similarity.py``
 #: so both engines score from one SQL definition.
 BM25_SCORES_CTE = rf"""docs AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) > 0),
     toks AS (
       SELECT doc_id, len(t) AS dl, lower(tok) AS termo
       FROM docs, unnest(t) AS u(tok)),
@@ -1355,7 +1343,7 @@ def bm25_scores(
         terms,
     )
     got = observed(obs) or (
-        docs.filter(F.length(F.trim("text")) > 0)
+        docs.filter(has_tokens("text"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(n_tokens("text")).alias("sum_dl"),
@@ -1583,8 +1571,8 @@ FUZZY_RRF_K = 60
     "text_contamination_fuzzy",
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE len(string_split_regex(trim(text), '\s+')) >= 5),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) >= 5),
     sh AS (
       SELECT DISTINCT doc_id,
              md5(concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4]))
@@ -1753,8 +1741,8 @@ HH_SUPPORT = 0.02  # report tokens covering >= 2% of the token stream
     oracle=rf"""
     WITH toks AS (
       SELECT lower(u.tok) AS termo
-      FROM (SELECT string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM toks)
     SELECT termo, CAST(count(*) AS BIGINT) AS n,
@@ -1831,8 +1819,7 @@ _PHRASE_VALUES = ", ".join(
 _PHRASE_ORACLE = rf"""
     WITH toksl AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-             ELSE string_split_regex(trim(text), '\s+') END AS t
+        {tokens_sql()} AS t
       FROM documents),
     toks AS (
       SELECT doc_id, CAST(i AS BIGINT) AS pos, t[i] AS tok
@@ -1971,9 +1958,7 @@ _GOPHER_APPROVE_SQL = "(" + " AND ".join(_GOPHER_RULES_SQL) + ")"
     oracle=rf"""
     WITH base AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0
-             THEN CAST([] AS VARCHAR[])
-             ELSE string_split_regex(trim(text), '\s+') END AS toks,
+        {tokens_sql()} AS toks,
         string_split(text, chr(10)) AS linhas,
         length(text) - length(replace(text, '#', '')) AS n_hash,
         (length(text) - length(replace(text, '...', ''))) / 3 AS n_pontos
@@ -1981,7 +1966,8 @@ _GOPHER_APPROVE_SQL = "(" + " AND ".join(_GOPHER_RULES_SQL) + ")"
     sinais AS (
       SELECT doc_id,
         CAST(len(toks) AS BIGINT) AS n_palavras,
-        round(CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE)
+        round(CAST(coalesce(list_sum(list_transform(toks, w -> len(w))), 0)
+                   AS DOUBLE)
               / CAST(greatest(len(toks), 1) AS DOUBLE), 6) AS comp_medio,
         round(CAST(n_hash + n_pontos AS DOUBLE)
               / CAST(greatest(len(toks), 1) AS DOUBLE), 6) AS razao_simbolo,
@@ -2139,8 +2125,8 @@ _CLS_W_SQL = ", ".join(
       SELECT * FROM (VALUES {_CLS_W_SQL}) AS t(balde, peso)),
     toks AS (
       SELECT d.doc_id, lower(u.tok) AS termo
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT doc_id, {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     pontua AS (
       SELECT t.doc_id,
@@ -2218,8 +2204,7 @@ SNIPPET_WINDOW = 20  # snippet width in tokens
     oracle=rf"""
     WITH docs AS (
       SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-             ELSE string_split_regex(trim(text), '\s+') END AS t
+        {tokens_sql()} AS t
       FROM documents),
     toks AS (
       SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, lower(t[i]) AS termo
@@ -2643,8 +2628,7 @@ _C4_TERMINAL = '[.!?"]$'
       SELECT doc_id, linhas,
         list_filter(linhas, l ->
           regexp_matches(rtrim(l), '{_C4_TERMINAL}')
-          AND len(string_split_regex(trim(l), '\s+')) >= {C4_MIN_WORDS}
-          AND length(trim(l)) > 0
+          AND len({tokens_sql("l")}) >= {C4_MIN_WORDS}
           AND NOT contains(lower(l), 'javascript')) AS mantidas,
         NOT (contains(lower(text), 'lorem ipsum')
              OR contains(text, '{{')) AS pagina_ok
@@ -2653,8 +2637,8 @@ _C4_TERMINAL = '[.!?"]$'
       CAST(len(linhas) AS INT) AS n_linhas,
       CAST(len(mantidas) AS INT) AS n_linhas_mantidas,
       CAST(CASE WHEN len(mantidas) = 0 THEN 0 ELSE
-        len(string_split_regex(trim(array_to_string(mantidas, chr(10))),
-                               '\s+')) END AS BIGINT) AS n_tokens_limpo,
+        len({tokens_sql("array_to_string(mantidas, chr(10))")}) END AS BIGINT)
+        AS n_tokens_limpo,
       pagina_ok,
       CASE WHEN len(mantidas) = 0 THEN ''
            ELSE array_to_string(mantidas, chr(10)) END AS texto_limpo
@@ -2697,7 +2681,6 @@ def text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         linhas,
         lambda l: F.rtrim(l).rlike(_C4_TERMINAL)
         & (F.size(tokens(l)) >= C4_MIN_WORDS)
-        & (F.length(F.trim(l)) > 0)
         & ~F.lower(l).contains("javascript"),
     )
     texto_limpo = F.array_join(F.col("mantidas"), "\n")
@@ -2735,12 +2718,12 @@ text_line_filter.__doc__ = text_line_filter.__doc__.format(w=C4_MIN_WORDS)
 
 @register(
     "text_bigram_surprise",
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
       SELECT doc_id,
-        list_transform(string_split_regex(trim(text), '\s+'),
+        list_transform({tokens_sql()},
                        x -> lower(x)) AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      FROM documents WHERE len({tokens_sql()}) > 0),
     toks AS (SELECT doc_id, u.tok AS termo FROM base, unnest(t) AS u(tok)),
     c1 AS (SELECT termo, count(*) AS c FROM toks GROUP BY termo),
     tot AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM toks),
@@ -2788,9 +2771,7 @@ def text_bigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,6) (the unigram discipline), counts are exact ints,
     and the c2/c1 quotient casts both sides to double before the log
     in BOTH engines."""
-    d = load(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
+    d = load(spark, sf_dir, "documents").filter(has_tokens("text"))
     base = d.select(
         "doc_id",
         F.transform(tokens("text"), lambda x: F.lower(x)).alias("t"),
@@ -2848,12 +2829,12 @@ def text_bigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "retrieval_index_freshness",
-    oracle=r"""
+    oracle=rf"""
     WITH corpus AS (
       SELECT CAST(count(*) AS BIGINT) AS n_docs_corpus,
-        CAST(sum(len(string_split_regex(trim(text), '\s+')))
+        CAST(sum(len({tokens_sql()}))
           AS BIGINT) AS n_tokens_corpus
-      FROM documents WHERE length(trim(text)) > 0)
+      FROM documents WHERE len({tokens_sql()}) > 0)
     SELECT n_docs_corpus AS n_docs_indice,
       n_tokens_corpus AS soma_dl_indice,
       n_docs_corpus, n_tokens_corpus,
@@ -2892,7 +2873,7 @@ def retrieval_index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = read_stats(_bm25_index_dir(spark, sf_dir))
     corpus = (
         load(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
+        .filter(has_tokens("text"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs_corpus"),
             F.sum(n_tokens("text"))
@@ -3050,9 +3031,7 @@ _PT_REG["text_bm25_rm3_indexed"].oracle = _PT_REG["text_bm25_rm3"].oracle
       SELECT lang, source,
         CAST(len(regexp_extract_all(text, '{_BPE_PAT_SQL}')) AS BIGINT)
           AS bpe,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+'))
-             END AS palavras,
+        len({tokens_sql()}) AS palavras,
         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
       FROM documents)
     SELECT lang, source,

@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from agrobr_spark.io import read_parquet, write_parquet
-from agrobr_spark.normalize.expressions import n_tokens
+from agrobr_spark.normalize.expressions import has_tokens, n_tokens, tokens_sql
 from agrobr_spark.queries import register
 from agrobr_spark.session import run_concurrently
 from agrobr_spark.store.fs import scratch_dir
@@ -952,12 +952,11 @@ def stream_knn_graph_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_export_shards",
-    oracle=r"""
+    oracle=rf"""
     WITH lim AS (SELECT CAST(floor(0.8 * (max(doc_id) + 1)) AS BIGINT)
                  AS corte FROM documents)
     SELECT doc_id, source,
-      CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-           ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+      CAST(len({tokens_sql()}) AS BIGINT)
         AS n_tokens
     FROM documents, lim WHERE doc_id >= corte
     """,
@@ -1135,7 +1134,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_source_divergence",
-    oracle=r"""
+    oracle=rf"""
     WITH lim AS (
       SELECT CAST(floor(0.8 * (max(doc_id) + 1)) AS BIGINT) AS corte,
              CAST(max(doc_id) AS BIGINT) AS mx
@@ -1146,8 +1145,8 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lim),
     toks AS (
       SELECT d.doc_id, lower(u.tok) AS termo
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT doc_id, {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     corpus AS (
       SELECT termo, CAST(count(*) AS BIGINT) AS cc
@@ -1275,8 +1274,8 @@ def _stream_hh_oracle() -> str:
     return rf"""
     WITH toks AS (
       SELECT lower(u.tok) AS termo
-      FROM (SELECT string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+      FROM (SELECT {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM toks)
     SELECT termo, CAST(count(*) AS BIGINT) AS n,
@@ -1318,7 +1317,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir(spark, "stream_hh_") as store_dir:
         docs = (
             load(spark, sf_dir, "documents")
-            .filter(F.length(F.trim("text")) > 0)
+            .filter(has_tokens("text"))
             .select("doc_id", "text")
         )
 
@@ -1405,8 +1404,8 @@ def _stream_dsir_oracle() -> str:
     toks AS (
       SELECT d.doc_id, d.alvo, lower(u.tok) AS termo
       FROM (SELECT doc_id, lang = '{DSIR_TARGET_LANG}' AS alvo,
-                   string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+                   {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     db AS (
       SELECT doc_id, alvo, {_DSIR_B_DUCK} AS balde,

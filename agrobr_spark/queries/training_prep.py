@@ -35,17 +35,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
-from agrobr_spark.normalize.expressions import WS_CHARS, WS_RUN, n_tokens, tokens
+from agrobr_spark.normalize.expressions import n_tokens, tokens, tokens_sql
 from agrobr_spark.queries import register
 from agrobr_spark.queries.dedup import word_shingles
-
-# the DuckDB oracles' spelling of normalize/expressions.tokens, on
-# the same whitespace class
-_WS_DUCK = " || ".join(f"chr({ord(c)})" for c in WS_CHARS)
-_TOKS_DUCK = (
-    f"CASE WHEN length(trim(text, {_WS_DUCK})) = 0 THEN []::VARCHAR[] "
-    f"ELSE string_split_regex(trim(text, {_WS_DUCK}), '{WS_RUN}') END"
-)
 
 # -- within-doc repetition (Gopher §A1.1: duplicate mass / top n-gram) --
 
@@ -57,7 +49,7 @@ TOP_BIGRAM_MAX = 0.18  # flag when the most common bigram covers >18%
     "text_repetition_filter",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS t FROM documents),
+      SELECT doc_id, {tokens_sql()} AS t FROM documents),
     tok_counts AS (
       SELECT doc_id, tok, count(*) AS c
       FROM toks, unnest(t) AS u(tok) GROUP BY doc_id, tok),
@@ -180,7 +172,7 @@ SHARE_MAX = 0.50  # flag when half the doc's spans exist elsewhere
     "text_span_dedup",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS t FROM documents),
+      SELECT doc_id, {tokens_sql()} AS t FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,
         md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')) AS s
@@ -286,8 +278,7 @@ _W_CASE = (
     oracle=rf"""
     WITH tok AS (
       SELECT doc_id, source,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens,
         md5(CAST(doc_id AS VARCHAR)) AS k
       FROM documents),
@@ -388,8 +379,7 @@ CHUNK_TOKENS = 512  # trainer sequence length in (whitespace) tokens
     oracle=rf"""
     WITH tok AS (
       SELECT doc_id,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens
       FROM documents),
     cum AS (
@@ -546,11 +536,10 @@ def o6_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_corpus_report",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
       SELECT source, lang,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens,
         CAST(n_chars AS BIGINT) AS n_chars
       FROM documents)
@@ -606,7 +595,7 @@ def pipeline_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_containment",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS_DUCK} AS t FROM documents),
+      SELECT doc_id, {tokens_sql()} AS t FROM documents),
     sh AS (
       SELECT DISTINCT doc_id,
         md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')) AS s
@@ -680,11 +669,10 @@ def containment_candidates(docs: DataFrame) -> DataFrame:
 
 @register(
     "text_quality_deciles",
-    oracle=r"""
+    oracle=rf"""
     WITH q AS (
       SELECT doc_id, source,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens
       FROM documents)
     SELECT doc_id, source, n_tokens,
@@ -772,11 +760,10 @@ def quality_deciles_approx(d: DataFrame) -> DataFrame:
     # Spark side joins its approx deciles to its own exact ntile twin
     # and emits the per-doc boolean; the oracle pins the all-TRUE
     # frame on the (already hash-verified) exact ntile row set.
-    oracle=r"""
+    oracle=rf"""
     WITH q AS (
       SELECT doc_id, source,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens
       FROM documents)
     SELECT doc_id, source, n_tokens, TRUE AS dentro_1_decil
@@ -869,8 +856,7 @@ def pipeline_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH q AS (
       SELECT doc_id, source,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens
       FROM documents),
     decis AS (
@@ -927,10 +913,9 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_length_histogram",
-    oracle=r"""
+    oracle=rf"""
     WITH q AS (
-      SELECT CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+      SELECT CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens
       FROM documents)
     SELECT CAST(CASE WHEN n_tokens = 0 THEN 0
@@ -984,8 +969,7 @@ CHUNK_STRIDE = 384  # window start step; overlap = CHUNK_TOKENS - stride
     "pipeline_chunk_overlap",
     oracle=rf"""
     WITH q AS (
-      SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-           ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+      SELECT doc_id, CAST(len({tokens_sql()}) AS BIGINT)
         AS n
       FROM documents),
     spans AS (
@@ -1064,8 +1048,7 @@ def pipeline_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH tok AS (
       SELECT doc_id, source,
-        CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
+        CAST(len({tokens_sql()}) AS BIGINT)
           AS n_tokens,
         md5(CAST(doc_id AS VARCHAR)) AS k
       FROM documents),
@@ -1161,8 +1144,8 @@ _DSIR_B_DUCK = (
     WITH toks AS (
       SELECT d.doc_id, d.alvo, lower(u.tok) AS termo
       FROM (SELECT doc_id, lang = '{DSIR_TARGET_LANG}' AS alvo,
-                   string_split_regex(trim(text), '\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0) d,
+                   {tokens_sql()} AS t
+            FROM documents WHERE len({tokens_sql()}) > 0) d,
            unnest(d.t) AS u(tok)),
     db AS (
       SELECT doc_id, alvo, {_DSIR_B_DUCK} AS balde,
@@ -1440,8 +1423,8 @@ TOKEN_BUDGET = 10_000  # catalog pin; library callers pass their own
     "pipeline_token_budget",
     oracle=rf"""
     WITH contagem AS (
-      SELECT doc_id, {_TOKS_DUCK.replace(chr(10), ' ')} AS toks,
-        CAST(len({_TOKS_DUCK.replace(chr(10), ' ')}) AS BIGINT) AS n_tokens,
+      SELECT doc_id, {tokens_sql()} AS toks,
+        CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens,
         text
       FROM documents),
     q AS (
@@ -1556,9 +1539,7 @@ _SHARD_H_TXT_DUCK = (
     WITH base AS (
       SELECT {_SHARD_H_ID_DUCK} % {N_SHARDS} AS shard,
         doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+'))
-             END AS n_tokens,
+        len({tokens_sql()}) AS n_tokens,
         {_SHARD_H_TXT_DUCK} AS h_txt
       FROM documents)
     SELECT CAST(shard AS INT) AS shard,

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from agrobr_spark.io import load
+from agrobr_spark.normalize.expressions import has_tokens, tokens_sql
 from agrobr_spark.queries import register
 from agrobr_spark.store.fs import scratch_dir
 from agrobr_spark.store.posting import term_rows, term_tf
@@ -126,10 +127,10 @@ def update_df_index(
 
 @register(
     "pipeline_df_index_update",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) > 0),
     tf AS (
       SELECT DISTINCT doc_id, lower(tok) AS termo
       FROM toks, unnest(t) AS u(tok))
@@ -183,12 +184,12 @@ def tfidf_from_index(
 
 @register(
     "pipeline_tfidf_incremental",
-    oracle=r"""
+    oracle=rf"""
     WITH lim AS (SELECT CAST(floor(0.8 * (max(doc_id) + 1)) AS BIGINT)
                  AS corte FROM documents),
     toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) > 0),
     dfx AS (
       SELECT termo, count(*) AS df FROM (
         SELECT DISTINCT tk.doc_id, lower(tok) AS termo
@@ -197,7 +198,7 @@ def tfidf_from_index(
       GROUP BY termo),
     n_idx AS (
       SELECT count(*) AS n FROM documents, lim
-      WHERE doc_id < lim.corte AND length(trim(text)) > 0),
+      WHERE doc_id < lim.corte AND len({tokens_sql()}) > 0),
     tf AS (
       SELECT tk.doc_id, lower(tok) AS termo, count(*) AS tf
       FROM toks tk, unnest(t) AS u(tok), lim
@@ -232,7 +233,7 @@ def pipeline_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") < cut)
     with scratch_dir(spark, "vocab_tfidf_") as store_dir:
         build_df_index(spark, corpus, store_dir)
-        n_corpus = corpus.filter(F.length(F.trim("text")) > 0).count()
+        n_corpus = corpus.filter(has_tokens("text")).count()
         out = tfidf_from_index(
             spark,
             docs.filter(F.col("doc_id") >= cut),
@@ -249,8 +250,8 @@ STOPWORD_DF_FRAC = 0.30  # a term in >=30% of docs is a stopword candidate
     "text_stopword_discovery",
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
+      SELECT doc_id, {tokens_sql()} AS t
+      FROM documents WHERE len({tokens_sql()}) > 0),
     n_docs AS (SELECT count(*) AS n FROM toks),
     dfx AS (
       SELECT termo, count(*) AS df FROM (
@@ -277,7 +278,7 @@ def text_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (build_df_index/update_df_index)."""
     docs = load(spark, sf_dir, "documents")
     n_docs = (
-        docs.filter(F.length(F.trim("text")) > 0)
+        docs.filter(has_tokens("text"))
         .groupBy()
         .agg(F.count(F.lit(1)).alias("n"))
     )

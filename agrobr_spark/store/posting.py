@@ -81,7 +81,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from agrobr_spark.io import observed, pin, read_parquet, write_parquet
-from agrobr_spark.normalize.expressions import TOKENIZER_VERSION, tokens
+from agrobr_spark.normalize.expressions import TOKENIZER_VERSION, has_tokens, tokens
 
 DEFAULT_BUCKETS = 64
 
@@ -102,7 +102,7 @@ def term_rows(docs: DataFrame, *keep: str, text_col: str = "text",
     counts), so the corpus statistics ride whatever job consumes the
     rows instead of a second pass. Exact when the rows of ``docs``
     are one per document."""
-    pre = docs.filter(F.length(F.trim(text_col)) > 0).select(
+    pre = docs.filter(has_tokens(text_col)).select(
         *keep, tokens(text_col).alias("_t")
     )
     if obs is not None:
@@ -807,7 +807,7 @@ def tokenize_positional(docs: DataFrame, id_col: str = "doc_id",
     the empty-text filter, before the posexplode) collecting ``n`` —
     a nonempty trimmed text always yields >= 1 token, so n == 0 is
     exactly "no posting rows" without a separate probe job (r14)."""
-    pre = docs.filter(F.length(F.trim(text_col)) > 0)
+    pre = docs.filter(has_tokens(text_col))
     if count_obs is not None:
         pre = pre.observe(
             count_obs, F.count(F.lit(1)).cast("bigint").alias("n")

@@ -287,17 +287,15 @@ def test_pairs_in_blocks_match_the_self_join(spark):
         assigned = assign_to_centroids(base, cent, 6, n_probe)
         carry = ("_x_label", "_probes")
         for cap, n_rows in ((16, None), (1_000_000, len(rows))):
+            sub = _with_subblocks(assigned, cap, n_rows)
             got = sorted(
                 canon(
                     r["_blk"], r["a"]["_id"], r["b"]["_id"],
                     [r["a"][c] for c in carry], [r["b"][c] for c in carry],
                     r["_cos"],
                 )
-                for r in _pairs_in_blocks(
-                    assigned, carry, cap, n_rows, 6
-                ).collect()
+                for r in _pairs_in_blocks(sub, carry, 6).collect()
             )
-            sub = _with_subblocks(assigned, cap)
             ref = _pairs_by_self_join(sub, ("_vec", "_norm", *carry)).withColumn(
                 "_cos", _cosine("a_vec", "b_vec", "a_norm", "b_norm", 6)
             )
@@ -316,13 +314,15 @@ def test_pairs_in_blocks_match_the_self_join(spark):
             assert (max(nb) > 1) == (cap == 16), (cap, nb)
 
 
-def test_pair_stage_is_one_block_exchange_with_no_pin(spark):
-    """Building a blocked pair frame runs no job (no pin, no
-    ``localCheckpoint``); its plan has exactly one hash exchange keyed
-    on the block key; and the triangle sub-block key explode has one
-    definition in the package, in ``_pairs_in_blocks``."""
+def test_pair_stage_pins_only_for_the_size_aggregate(spark):
+    """Under the cap (the caller's row count) building a blocked pair
+    frame runs no job and pins nothing; over it the assignment is
+    pinned at build time, so the size aggregate, the pair stage and
+    SemDeDup's flag join share one centroid sweep (none is left in the
+    plan). The triangle sub-block key explode has one definition in
+    the package, in ``_pairs_in_blocks``. The exchange shape is
+    asserted in tests/test_plans.py."""
     import ast
-    import re
 
     from agrobr_spark.io import load
     from agrobr_spark.operators.allpairs import (
@@ -332,20 +332,23 @@ def test_pair_stage_is_one_block_exchange_with_no_pin(spark):
     from tests.test_concurrency import PACKAGE, _enclosing_functions
 
     e = load(spark, SF_SMOKE, "embeddings")
-    n = e.count()
-    kw = dict(n_centroids=8, centroid_fit="lowest_id", n_rows=n)
+    kw = dict(n_centroids=8, centroid_fit="lowest_id", n_rows=e.count())
     sched = spark.sparkContext._jsc.sc().dagScheduler()
-    for build in (
-        lambda: cluster_cosine_pairs(e, "vec_id", "embedding", 0.45, n_probe=2, **kw),
-        lambda: semdedup_flags(e, "vec_id", "embedding", 0.45, **kw),
+    for op, extra in (
+        (cluster_cosine_pairs, dict(n_probe=2)),
+        (semdedup_flags, {}),
     ):
-        before = sched.nextJobId()
-        df = build()
-        assert sched.nextJobId() == before
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" not in plan, plan
-        keys = re.findall(r"hashpartitioning\((\w+)#", plan)
-        assert keys.count("_blk") == 1, plan
+        for cap in (8192, 16):
+            before = sched.nextJobId()
+            df = op(e, "vec_id", "embedding", 0.45, max_cluster_rows=cap, **extra, **kw)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            if cap == 8192:
+                assert sched.nextJobId() == before, op
+                assert "ExistingRDD" not in plan, plan
+            else:
+                assert sched.nextJobId() > before, op
+                assert "ExistingRDD" in plan, plan
+                assert "BroadcastNestedLoopJoin" not in plan, plan
 
     owners = []
     for f in sorted(PACKAGE.rglob("*.py")):

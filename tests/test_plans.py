@@ -135,20 +135,40 @@ class TestJoinStrategy:
         )
         _assert_one_block_exchange(plan_of(df))
 
+    def test_semdedup_pair_stage_is_one_block_exchange(self, spark):
+        # SemDeDup's pairs come from the same one-exchange pair stage;
+        # its victim DISTINCT adds the one ``_vid`` exchange, and its
+        # flag join re-reads the unpinned assignment (a second sweep)
+        from agrobr_spark.io import load
+        from agrobr_spark.operators.allpairs import semdedup_flags
 
-def _assert_one_block_exchange(plan):
+        e = load(spark, SF_SMOKE, "embeddings")
+        df = semdedup_flags(
+            e,
+            id_col="vec_id",
+            vec_col="embedding",
+            threshold=0.45,
+            n_centroids=8,
+            centroid_fit="lowest_id",
+            n_rows=e.count(),
+        )
+        _assert_one_block_exchange(plan_of(df), also=("_vid",), sweeps=2)
+
+
+def _assert_one_block_exchange(plan, also=(), sweeps=1):
     """The blocked pair stage's shape: one ``hashpartitioning``
-    exchange, keyed on the block key; the only nested loop is the
-    centroid sweep against its broadcast build side; no
-    ``CartesianProduct``."""
+    exchange, keyed on the block key (then only the ``also`` keys);
+    the only nested loops are the ``sweeps`` centroid sweeps against
+    their broadcast build side; no ``CartesianProduct``."""
     assert "CartesianProduct" not in plan, plan
     keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
-    assert keys == ["_blk"], plan
+    assert keys == ["_blk", *also], plan
     tree_nlj = [
         ln for ln in plan.splitlines()
         if "BroadcastNestedLoopJoin" in ln and "Build" in ln
     ]
-    assert len(tree_nlj) == 1 and "BuildRight" in tree_nlj[0], plan
+    assert len(tree_nlj) == sweeps, plan
+    assert all("BuildRight" in ln for ln in tree_nlj), plan
 
 
 class TestSortAndAggShape:

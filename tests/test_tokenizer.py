@@ -1,20 +1,25 @@
 """The one whitespace tokenizer: ``normalize/expressions.tokens`` is
-the only Spark whitespace split, ``store/posting.term_rows`` the only
-lowered term-row explode, and the Spark tokenizer agrees with the
-DuckDB oracles' ``_TOKS_DUCK`` spelling on whitespace edge cases."""
+the only Spark whitespace split, ``has_tokens`` the only blank filter,
+``store/posting.term_rows`` the only lowered term-row explode, every
+oracle tokenizes through ``tokens_sql``, and the engines agree on
+whitespace edge cases."""
 
 from __future__ import annotations
 
 import ast
+import os
 import re
 
 import pytest
 
-from agrobr_spark.normalize.expressions import WS_RUN
+from agrobr_spark.normalize.expressions import WS_RUN, tokens_sql
+from agrobr_spark.queries import catalog
+from tests.conftest import SF_SMOKE
 from tests.test_concurrency import PACKAGE, _enclosing_functions
 
 _OWNERS = {
     "whitespace split": ("normalize/expressions.py", "tokens"),
+    "blank filter": ("normalize/expressions.py", "has_tokens"),
     "lowered term-row explode": ("store/posting.py", "term_rows"),
 }
 
@@ -68,6 +73,8 @@ def _matches(src):
             or any(isinstance(a, ast.Name) and a.id == "WS_RUN" for a in node.args)
         ):
             yield "whitespace split", node.lineno
+        if _f_call(node, "length") and node.args and _f_call(node.args[0], "trim"):
+            yield "blank filter", node.lineno
         text = _literal_text(node)
         if text is not None and _SQL_SPLIT.search(text):
             yield "whitespace split", node.lineno
@@ -90,8 +97,9 @@ def _matches(src):
 
 def test_tokenizer_has_one_definition():
     """A Spark whitespace split (``F.split(…, r"\\s+")`` or a SQL
-    ``split(…, '\\\\s+')``) outside ``tokens``, or a lowered term-row
-    explode outside ``term_rows``, fails with its file:line."""
+    ``split(…, '\\\\s+')``) outside ``tokens``, a blank filter
+    (``F.length(F.trim(…))``) outside ``has_tokens``, or a lowered
+    term-row explode outside ``term_rows``, fails with its file:line."""
     offenders, owners_seen = [], set()
     for f in sorted(PACKAGE.rglob("*.py")):
         rel = f.relative_to(PACKAGE).as_posix()
@@ -138,9 +146,87 @@ def test_whitespace_only_text_has_no_tokens(spark_tokens):
 def test_tokens_match_the_oracle_tokenizer(spark_tokens, text):
     import duckdb
 
-    from agrobr_spark.queries.training_prep import _TOKS_DUCK
-
     want = duckdb.execute(
-        f"SELECT {_TOKS_DUCK} FROM (SELECT ?::VARCHAR AS text)", [text]
+        f"SELECT {tokens_sql()} FROM (SELECT ?::VARCHAR AS text)", [text]
     ).fetchone()[0]
     assert spark_tokens[text] == list(want)
+
+
+#: one ``tokens_sql(col)`` spelling, whatever ``col`` is
+_TOKENS_SQL = re.compile(
+    re.escape(tokens_sql("\0"))
+    .replace(re.escape("\0"), "(?P<col>.+?)", 1)
+    .replace(re.escape("\0"), "(?P=col)"),
+    re.S,
+)
+
+
+def test_every_oracle_tokenizes_through_tokens_sql():
+    """Once every ``tokens_sql`` spelling is cut out, no oracle SQL
+    splits or blank-tests text any other way: a bare
+    ``string_split_regex(trim(text), '\\s+')`` or ``length(trim(text))``
+    fails naming the query."""
+    offenders = []
+    for name, entry in sorted(catalog().items()):
+        rest = _TOKENS_SQL.sub("", entry.oracle or "")
+        if "string_split_regex" in rest or re.search(r"length\(\s*trim\(", rest):
+            offenders.append(name)
+    assert not offenders, "oracle tokenizer copy in: " + ", ".join(offenders)
+
+
+#: text-oracle queries run over a whitespace-edge copy of the smoke
+#: documents: token counts, blank-document filters, DF/n_docs, BM25
+#: lengths, line-level word counts and empty-token-list signals
+_EDGE_QUERIES = [
+    "text_token_count",
+    "text_quality_score",
+    "text_lang_id",
+    "text_gopher_rules",
+    "text_line_filter",
+    "text_bigram_surprise",
+    "text_bm25_topk",
+    "text_stopword_discovery",
+    "pipeline_tfidf_incremental",
+    "retrieval_index_freshness",
+]
+
+
+@pytest.fixture(scope="module")
+def edge_sf(tmp_path_factory):
+    """SF_SMOKE with a trailing LF, a leading TAB, VT for spaces, a
+    trailing CRLF, and tab-only, NBSP-only and VT/FF-only documents."""
+    import duckdb
+
+    d = tmp_path_factory.mktemp("ws_edges")
+    for f in os.listdir(SF_SMOKE):
+        if f != "documents.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), d / f)
+    duckdb.execute(f"""
+        COPY (SELECT doc_id, t AS text, lang, source,
+                     CAST(length(t) AS BIGINT) AS n_chars
+              FROM (SELECT doc_id, lang, source, CASE
+                      WHEN doc_id = 3 THEN chr(9)
+                      WHEN doc_id = 4 THEN chr(160)
+                      WHEN doc_id = 5 THEN chr(11) || chr(12)
+                      WHEN doc_id % 6 = 0 THEN text || chr(10)
+                      WHEN doc_id % 6 = 1 THEN chr(9) || text
+                      WHEN doc_id % 6 = 2 THEN replace(text, ' ', chr(11))
+                      WHEN doc_id % 6 = 3 THEN text || ' ' || chr(13) || chr(10)
+                      ELSE text END AS t
+                    FROM read_parquet('{SF_SMOKE}/documents.parquet'))
+              ORDER BY doc_id)
+        TO '{d / "documents.parquet"}' (FORMAT parquet)""")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", _EDGE_QUERIES)
+def test_text_oracles_agree_on_whitespace_edges(spark, edge_sf, name):
+    from tests.oracle_harness import compare_query, duckdb_con
+
+    entry = catalog()[name]
+    con = duckdb_con(edge_sf)
+    try:
+        r = compare_query(spark, con, name, entry.fn, entry.oracle, edge_sf)
+    finally:
+        con.close()
+    assert r.ok and r.spark_rows > 0, f"{name}: {r.detail}"
